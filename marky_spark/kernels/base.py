@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import base64
 import binascii
+import re
 
 Segment = tuple[str, str, str]
 
@@ -90,3 +91,22 @@ def decode_binary_payload(text: str) -> bytes:
         return base64.b64decode(text, validate=True)
     except (binascii.Error, ValueError) as exc:
         raise ConvertError(f"invalid base64 payload: {exc}") from exc
+
+
+# a comment, CDATA section or PI (each running to its terminator or, when
+# unterminated, to the end, so the scan stays linear), else a bare '<!'
+_XML_MARKUP = re.compile(
+    r"<(?:!--.*?(?:-->|\Z)|!\[CDATA\[.*?(?:\]\]>|\Z)|\?.*?(?:\?>|\Z)|(!))",
+    re.S)
+_XML_MARKUP_B = re.compile(_XML_MARKUP.pattern.encode(), re.S)
+
+
+def has_dtd(xml: str | bytes) -> bool:
+    """True when an XML document carries a markup declaration
+    (``<!DOCTYPE`` / ``<!ENTITY``) anywhere: the whole prolog, however
+    long, with the XML declaration, comments and PIs skipped, and the body
+    too, with CDATA sections skipped. xml.etree offers no entity-expansion
+    limits, and the formats that call this never carry DTDs, so an
+    internal subset is hostile by construction."""
+    pattern = _XML_MARKUP if isinstance(xml, str) else _XML_MARKUP_B
+    return any(m.group(1) for m in pattern.finditer(xml))

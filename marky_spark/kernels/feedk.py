@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
-from .base import ConvertError, Segment, md, merge_markdown
+from .base import ConvertError, Segment, has_dtd, md, merge_markdown
 from .htmlk import convert_html
 from .mdtable import _escape
 
@@ -70,10 +70,7 @@ def convert_feed(text: str) -> list[Segment]:
     """RSS/Atom XML text → markdown segments (registry kernel)."""
     if not looks_like_feed(text):
         raise ConvertError("not a feed (no <rss>/<feed> root)")
-    head = text[:4096]
-    if "<!DOCTYPE" in head or "<!ENTITY" in head:
-        # xml.etree offers no entity-expansion limits; real feeds never
-        # carry internal DTD subsets
+    if has_dtd(text):
         raise ConvertError("feed carries a DTD (rejected)")
     try:
         root = ET.fromstring(text)

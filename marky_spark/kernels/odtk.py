@@ -40,6 +40,7 @@ from .base import (
     ConvertError,
     Segment,
     decode_binary_payload,
+    has_dtd,
     image,
     md,
     merge_markdown,
@@ -63,9 +64,7 @@ def _q(prefix: str, local: str) -> str:
 
 
 def _parse_xml(data: bytes) -> ET.Element:
-    # xml.etree offers no entity-expansion limits; ODF writers never
-    # emit DTDs, so an internal subset is hostile by construction
-    if b"<!DOCTYPE" in data[:4096] or b"<!ENTITY" in data[:4096]:
+    if has_dtd(data):
         raise ConvertError("content.xml carries a DTD (rejected)")
     try:
         return ET.fromstring(data)

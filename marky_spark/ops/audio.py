@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .multimodal import MEDIA_SCHEMA
+from .multimodal import MEDIA_SCHEMA, codec_for
 
 AUDIO_FEATURES_SCHEMA = StructType([
     StructField("media_ref", StringType()),
@@ -70,38 +70,30 @@ def audio_features(media: DataFrame) -> DataFrame:
       counts the interpolation grid lands exactly on source samples, so
       the resampler's output is exact decimation — SQL-reconstructible)
 
-    WAV (PCM, G.711 mu/A-law, IMA ADPCM) and FLAC containers are sniffed
-    by signature and really decoded; other payloads and recognized-but-
-    unimplemented
+    WAV (PCM, G.711 mu/A-law, IMA ADPCM) and FLAC containers are claimed
+    by their rows of the ops/multimodal codec table and really decoded;
+    other payloads and recognized-but-unimplemented
     encodings (float, extensible, exotic FLAC depths) become
     ``codec_unavailable`` rows; malformed containers isolate per blob into
     ``error: ...`` rows (poison-pill contract). Arrow-batched
     ``mapInPandas``: no shuffle, no driver collect."""
     import numpy as np
 
-    from .flaccodec import FlacError, flac_decode, looks_like_flac
-    from .wavcodec import (
-        WavError,
-        looks_like_wav,
-        wav_decode,
-        wav_resample_linear,
-    )
+    from .flaccodec import FlacError
+    from .wavcodec import WavError, wav_resample_linear
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 blob = bytes(payload) if payload is not None else b""
-                if looks_like_wav(blob):
-                    decode = wav_decode
-                elif looks_like_flac(blob):
-                    decode = flac_decode
-                else:
+                codec = codec_for(blob)
+                if codec is None or codec.samples is None:
                     rows.append((ref,) + (None,) * 10
                                 + ("codec_unavailable",))
                     continue
                 try:
-                    rate, ch, bits, samples = decode(blob)
+                    rate, ch, bits, samples = codec.samples(blob)
                     ds = wav_resample_linear(samples, rate, max(rate // 2, 1))
                 except NotImplementedError:
                     rows.append((ref,) + (None,) * 10
@@ -155,15 +147,10 @@ def wav_feature_vec(blob: bytes, dim: int = 16) -> list[float] | None:
     for audio-shaped-but-bad payloads (caller isolates per blob)."""
     import numpy as np
 
-    from .flaccodec import flac_decode, looks_like_flac
-    from .wavcodec import looks_like_wav, wav_decode
-
-    if looks_like_wav(blob):
-        rate, ch, bits, samples = wav_decode(blob)
-    elif looks_like_flac(blob):
-        rate, ch, bits, samples = flac_decode(blob)
-    else:
+    codec = codec_for(blob)
+    if codec is None or codec.samples is None:
         return None
+    rate, ch, bits, samples = codec.samples(blob)
     norm = samples.astype(np.float64) / float(1 << (bits - 1))
     means = [float(norm[:, c].mean()) for c in range(min(ch, 4))]
     buckets = np.minimum(((norm.ravel() + 1.0) * 4.0).astype(np.int64), 7)

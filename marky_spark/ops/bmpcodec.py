@@ -12,10 +12,10 @@ format; BMP is the other format that appears there uncompressed).
 
 ``looks_like_bmp`` is deliberately strict — header size, plane count,
 bit depth, compression and dimensions must all be plausible — because
-:func:`marky_spark.ops.multimodal.auto_decode` sniffs arbitrary binary
-payloads (including document text bytes that may happen to start with
-"BM") and must never reroute a non-BMP blob away from the deterministic
-fake path.
+the codec table in :mod:`marky_spark.ops.multimodal` sniffs arbitrary
+binary payloads (including document text bytes that may happen to start
+with "BM") and must never reroute a non-BMP blob away from the
+deterministic fake path.
 """
 
 from __future__ import annotations

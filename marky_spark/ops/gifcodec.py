@@ -17,8 +17,9 @@ structure raises :class:`GifError` so the operators isolate the blob into a
 per-row error instead of failing the task.
 
 ``looks_like_gif`` is strict (signature + version + plausible descriptor)
-because :func:`marky_spark.ops.multimodal.auto_decode` sniffs arbitrary
-binary payloads and must never reroute a non-GIF blob off the fake path.
+because the codec table in :mod:`marky_spark.ops.multimodal` sniffs
+arbitrary binary payloads and must never reroute a non-GIF blob off the
+fake path.
 """
 
 from __future__ import annotations
@@ -209,7 +210,7 @@ def _iter_frames(data: bytes):
 def gif_decode_indexed(data: bytes) -> tuple[int, int, bytes, bytes]:
     """GIF bytes → (width, height, palette indices rows top-down,
     RGB color table) of the first frame — the palette-domain form
-    :func:`gif_resize_nearest` resamples in (index resampling cannot
+    :func:`gif_resize_indexed` resamples in (index resampling cannot
     invent colors, so the original palette stays valid)."""
     for _left, _top, w, h, idx, table, _disp, _tr in _iter_frames(data):
         return w, h, idx.tobytes(), table
@@ -293,7 +294,8 @@ def gif_resize_indexed(data: bytes, out_w: int,
     """Nearest-neighbor resample in the palette-index domain → (source
     width, source height, GIF bytes with the ORIGINAL color table — no
     color quantization needed). The source dims come free from the single
-    decode, which is why the fused resize path uses this form."""
+    decode, which is why the GIF row of the multimodal codec table uses
+    this form as its resize encoder."""
     import numpy as np
 
     w, h, indices, table = gif_decode_indexed(data)
@@ -304,11 +306,6 @@ def gif_resize_indexed(data: bytes, out_w: int,
     ys = np.arange(out_h) * h // out_h
     xs = np.arange(out_w) * w // out_w
     return w, h, gif_encode(idx[ys][:, xs].tobytes(), out_w, out_h, table)
-
-
-def gif_resize_nearest(data: bytes, out_w: int, out_h: int) -> bytes:
-    """See :func:`gif_resize_indexed`; this form drops the source dims."""
-    return gif_resize_indexed(data, out_w, out_h)[2]
 
 
 def _lzw_encode(min_code_size: int, indices: bytes) -> bytes:

@@ -1,31 +1,29 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 The Spark-side plumbing is real and tested — schema, partitioning, Arrow
-batch shape, ``mapInPandas`` signatures. The codec layer is split:
+batch shape, ``mapInPandas`` signatures. The codec layer is one ordered
+table (:func:`codec_table`) that every media operator here and in
+ops/audio routes through:
 
-- **PNG, uncompressed BMP, GIF, JPEG (baseline + progressive), baseline
-  TIFF and Netpbm are real image codecs** (ops/pngcodec: chunk walk, CRC
-  verify, inflate, filter reconstruction, palette expansion;
-  ops/bmpcodec: BGR(A) row grid; ops/gifcodec: real LZW, color tables,
-  interlacing; ops/jpegcodec: DCT, Huffman, 4:2:0; ops/tiffcodec: IFD
-  walk, strips, PackBits + TIFF-LZW, predictor; ops/pnmcodec: P4/P5/P6 —
-  all pure stdlib+numpy), and the audio/video side is real too
-  (ops/wavcodec: PCM + G.711 + IMA ADPCM; ops/flaccodec; ops/avicodec:
-  MJPEG). Payloads of those formats (signature/structure-sniffed)
-  decode/resize for real by default, and media_features computes
-  content-derived statistics from their decoded samples.
-- Payloads with no in-sandbox codec (lossy compressed audio, exotic
-  modes) keep the deterministic digest-derived fake via
-  ``auto_decode``/``auto_resize``; recognized-but-unimplemented modes
-  (arithmetic/12-bit JPEG, tiled/16-bit TIFF)
-  classify as ``codec_unavailable`` rows (each codec's Unsupported error
-  is a NotImplementedError); ``decoder=``/``resizer=`` accept real
-  codecs (e.g. PIL-based) in production through the same batch shape.
+- **PNG, BMP, GIF, JPEG (baseline + progressive), TIFF, Netpbm, WebP and
+  ICO are real image codecs** (ops/pngcodec, ops/bmpcodec, ops/gifcodec,
+  ops/jpegcodec, ops/tiffcodec, ops/pnmcodec, ops/webpcodec,
+  ops/icocodec — all pure stdlib+numpy), and the audio/video side is
+  real too (ops/wavcodec: PCM + G.711 + IMA ADPCM; ops/flaccodec;
+  ops/avicodec: MJPEG). Each row holds one format's signature/structure
+  sniff and decoder, plus an optional resize encoder and frame walker;
+  the sniffs check distinct magics, so at most one row claims a payload.
+- Payloads no row claims (lossy compressed audio, MP4, text) keep the
+  deterministic digest-derived stand-ins (``fake_decode`` /
+  ``fake_resize``), and so does an operator whose hook a row leaves
+  empty; recognized-but-unimplemented modes (arithmetic JPEG, interlaced
+  APNG) classify as ``codec_unavailable`` rows (each codec's Unsupported
+  error is a NotImplementedError).
 
 Operators:
 - ``attach_media``      — documents × media side-table join (broadcast)
 - ``decode_media``      — binary → (width, height, channels, ok) per blob
-- ``decode_pixels``     — PNG/BMP/GIF/JPEG/TIFF → dims + md5 of decoded samples
+- ``decode_pixels``     — decodable image → dims + md5 of decoded samples
 - ``pixel_features``    — exact-integer pixel statistics (oracle-checkable)
 - ``resize_media``      — binary → target-dim payload + source dims
 - ``frame_sample``      — "video" payloads → N evenly-spaced frame rows
@@ -34,8 +32,10 @@ Operators:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -68,48 +68,155 @@ DECODED_SCHEMA = StructType([
 ])
 
 
-def _real_decode(payload: bytes, mime: str) -> tuple[int, int, int]:
-    """Real codec: PNG, uncompressed BMP, GIF, baseline+progressive
-    JPEG and baseline TIFF are fully implemented in pure stdlib+numpy
-    (ops/pngcodec, ops/bmpcodec, ops/gifcodec, ops/jpegcodec,
-    ops/tiffcodec); other formats (lossy audio, arithmetic/12-bit JPEG,
-    tiled/16-bit TIFF) have no in-sandbox codec and raise
-    NotImplementedError, which the operators surface as
-    ``codec_unavailable`` rows."""
-    from .bmpcodec import bmp_decode, looks_like_bmp
-    from .gifcodec import gif_decode, looks_like_gif
-    from .icocodec import ico_decode, looks_like_ico
-    from .jpegcodec import jpeg_decode, looks_like_jpeg
-    from .pngcodec import PNG_SIGNATURE, png_decode
-    from .pnmcodec import looks_like_pnm, pnm_decode
-    from .tiffcodec import looks_like_tiff, tiff_decode
-    from .webpcodec import looks_like_webp, webp_decode
+class Codec(NamedTuple):
+    """One row of the codec table. ``pixels`` → (width, height, channels,
+    samples) or None; ``samples`` → (rate, channels, bits, int array);
+    ``resize`` → (source width, source height, resized payload);
+    ``frames`` → [(frame index, frame payload)] for up to n evenly spaced
+    frames. An operator whose hook is None takes its stand-in for the
+    row's format. ``still`` is False when ``pixels`` is the first frame
+    of a moving image: only the pixel operators see it, while
+    decode_media keeps the digest stand-in."""
+    name: str
+    sniff: Callable[[bytes], bool]
+    pixels: Callable | None = None
+    samples: Callable | None = None
+    resize: Callable | None = None
+    frames: Callable | None = None
+    still: bool = True
 
-    if payload.startswith(PNG_SIGNATURE):
-        width, height, channels, _ = png_decode(payload)
-        return width, height, channels
-    if looks_like_tiff(payload):
-        width, height, channels, _ = tiff_decode(payload)
-        return width, height, channels
-    if looks_like_pnm(payload):
-        width, height, channels, _ = pnm_decode(payload)
-        return width, height, channels
-    if looks_like_bmp(payload):
-        width, height, channels, _ = bmp_decode(payload)
-        return width, height, channels
-    if looks_like_gif(payload):
-        width, height, channels, _ = gif_decode(payload)
-        return width, height, channels
-    if looks_like_jpeg(payload):
-        width, height, channels, _ = jpeg_decode(payload)
-        return width, height, channels
-    if looks_like_webp(payload):
-        width, height, channels, _ = webp_decode(payload)
-        return width, height, channels
-    if looks_like_ico(payload):
-        width, height, channels, _ = ico_decode(payload)
-        return width, height, channels
-    raise NotImplementedError(f"no in-sandbox codec for {mime or 'unknown'}")
+
+def _nearest(pixels: bytes, in_w: int, in_h: int, channels: int,
+             out_w: int, out_h: int) -> bytes:
+    """Nearest-neighbor resample of raw interleaved samples: source pixel
+    for output (x, y) is (x*in_w//out_w, y*in_h//out_h) — integer
+    arithmetic the ANSI-SQL driver oracle reproduces bit-for-bit."""
+    import numpy as np
+
+    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(in_h, in_w, channels)
+    ys = np.arange(out_h) * in_h // out_h
+    xs = np.arange(out_w) * in_w // out_w
+    return arr[ys][:, xs].tobytes()
+
+
+def _resampler(decode, encode):
+    """Resize encoder: one decode feeds both the source dims and the
+    nearest-neighbor resample, re-encoded in the SOURCE format."""
+    def resize(blob: bytes, width: int, height: int):
+        in_w, in_h, ch, px = decode(blob)
+        return in_w, in_h, encode(_nearest(px, in_w, in_h, ch, width, height),
+                                  width, height, ch)
+    return resize
+
+
+def _picks(total: int, n: int) -> list[int]:
+    step = max(total // n, 1)
+    return list(range(0, total, step))[:n]
+
+
+def _canvas_frames(walk):
+    """Frame walker over an animation decoder → (w, h, [RGB canvas]):
+    each sampled frame re-encoded as a standalone PNG."""
+    def frames(blob: bytes, n: int):
+        from .pngcodec import png_encode
+
+        w, h, canvases = walk(blob)
+        return [(k, png_encode(canvases[k], w, h, 3))
+                for k in _picks(len(canvases), n)]
+    return frames
+
+
+def _avi_frames(blob: bytes, n: int):
+    """MJPEG frames pass through as their standalone JPEG payloads."""
+    from .avicodec import avi_decode_frames
+
+    jpegs = avi_decode_frames(blob)[2]
+    return [(k, jpegs[k]) for k in _picks(len(jpegs), n)]
+
+
+def _avi_first_frame(blob: bytes):
+    """An AVI's pixels are its FIRST FRAME — the cheap representative a
+    real pipeline embeds for video."""
+    from .avicodec import avi_decode_frames
+    from .jpegcodec import jpeg_decode
+
+    jpegs = avi_decode_frames(blob)[2]
+    return jpeg_decode(jpegs[0]) if jpegs else None
+
+
+@functools.cache
+def codec_table() -> tuple[Codec, ...]:
+    """The ordered codec table. Every sniff checks a distinct leading
+    magic, so at most one row claims a payload (test_codec_table_routing
+    pins this) and the order only decides which sniffs run first. Codec
+    modules import on first use, not with this module."""
+    from .avicodec import looks_like_avi
+    from .bmpcodec import bmp_decode, bmp_encode, looks_like_bmp
+    from .flaccodec import flac_decode, looks_like_flac
+    from .gifcodec import (
+        gif_decode,
+        gif_decode_frames,
+        gif_resize_indexed,
+        looks_like_gif,
+    )
+    from .icocodec import ico_decode, looks_like_ico
+    from .jpegcodec import jpeg_decode, jpeg_encode, looks_like_jpeg
+    from .pngcodec import (
+        PNG_SIGNATURE,
+        looks_like_apng,
+        png_decode,
+        png_decode_frames,
+        png_encode,
+    )
+    from .pnmcodec import looks_like_pnm, pnm_decode, pnm_encode
+    from .tiffcodec import looks_like_tiff, tiff_decode, tiff_encode
+    from .wavcodec import looks_like_wav, wav_decode
+    from .webpcodec import (
+        looks_like_webp,
+        webp_decode,
+        webp_decode_frames,
+        webp_encode,
+    )
+
+    def apng(blob: bytes):
+        return png_decode_frames(blob) if looks_like_apng(blob) else (0, 0, [])
+
+    return (
+        Codec("png", lambda b: b.startswith(PNG_SIGNATURE), png_decode,
+              resize=_resampler(png_decode, png_encode),
+              frames=_canvas_frames(apng)),
+        Codec("tiff", looks_like_tiff, tiff_decode,
+              resize=_resampler(tiff_decode, tiff_encode)),
+        # P4 bitmaps resize on the expanded gray grid and re-emit as PGM
+        Codec("pnm", looks_like_pnm, pnm_decode,
+              resize=_resampler(pnm_decode, pnm_encode)),
+        Codec("bmp", looks_like_bmp, bmp_decode,
+              resize=_resampler(bmp_decode, bmp_encode)),
+        Codec("gif", looks_like_gif, gif_decode, resize=gif_resize_indexed,
+              frames=_canvas_frames(gif_decode_frames)),
+        Codec("jpeg", looks_like_jpeg, jpeg_decode,
+              resize=_resampler(jpeg_decode, jpeg_encode)),
+        Codec("webp", looks_like_webp, webp_decode,
+              resize=_resampler(webp_decode, webp_encode),
+              frames=_canvas_frames(webp_decode_frames)),
+        Codec("avi", looks_like_avi, _avi_first_frame, frames=_avi_frames,
+              still=False),
+        Codec("ico", looks_like_ico, ico_decode),
+        Codec("wav", looks_like_wav, samples=wav_decode),
+        Codec("flac", looks_like_flac, samples=flac_decode),
+    )
+
+
+def codec_for(blob: bytes) -> Codec | None:
+    """The table row whose sniff claims ``blob``, else None."""
+    return next((c for c in codec_table() if c.sniff(blob)), None)
+
+
+def decode_image(blob: bytes):
+    """→ (width, height, channels, samples) through the claiming row's
+    pixel decoder, else None."""
+    codec = codec_for(blob)
+    return codec.pixels(blob) if codec and codec.pixels else None
 
 
 def fake_decode(payload: bytes, mime: str) -> tuple[int, int, int]:
@@ -121,35 +228,19 @@ def fake_decode(payload: bytes, mime: str) -> tuple[int, int, int]:
     return width, height, channels
 
 
-def auto_decode(payload: bytes, mime: str) -> tuple[int, int, int]:
-    """Default decoder: real decode when the payload IS a PNG, uncompressed
-    BMP, GIF, JPEG or TIFF (signature/structure sniff, not mime trust —
-    the sniffs are strict enough that arbitrary text bytes can never take
-    a real path), digest-derived fake otherwise — other formats keep the
-    deterministic stand-in until their codecs exist in this environment."""
-    from .bmpcodec import looks_like_bmp
-    from .gifcodec import looks_like_gif
-    from .icocodec import looks_like_ico
-    from .jpegcodec import looks_like_jpeg
-    from .pngcodec import PNG_SIGNATURE
-    from .pnmcodec import looks_like_pnm
-    from .tiffcodec import looks_like_tiff
-    from .webpcodec import looks_like_webp
-
-    if (payload.startswith(PNG_SIGNATURE) or looks_like_bmp(payload)
-            or looks_like_gif(payload) or looks_like_jpeg(payload)
-            or looks_like_tiff(payload) or looks_like_pnm(payload)
-            or looks_like_webp(payload) or looks_like_ico(payload)):
-        return _real_decode(payload, mime)
-    return fake_decode(payload, mime)
+def fake_resize(payload: bytes, mime: str, width: int, height: int) -> bytes:
+    """Deterministic stand-in: an ASCII pseudo-bitmap of exactly
+    width×height bytes derived from the payload digest (content-addressed,
+    so downstream dedup/caching over resized media behaves realistically,
+    and the construction is reproducible in ANSI SQL for the oracle)."""
+    h = hashlib.md5(payload or b"").hexdigest()
+    n = width * height
+    return (h * (-(-n // len(h))))[:n].encode("ascii")
 
 
-Decoder = Callable[[bytes, str], tuple[int, int, int]]
-
-
-def decode_media(media: DataFrame,
-                 decoder: Decoder = auto_decode) -> DataFrame:
-    """Arrow-batched decode: binary column in, typed metadata out."""
+def decode_media(media: DataFrame) -> DataFrame:
+    """Arrow-batched decode: binary column in, typed metadata out. Still
+    images decode for real; everything else takes ``fake_decode``."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -158,7 +249,11 @@ def decode_media(media: DataFrame,
                                           pdf["payload"]):
                 blob = bytes(payload) if payload is not None else b""
                 try:
-                    w, h, c = decoder(blob, mime or "")
+                    codec = codec_for(blob)
+                    if codec and codec.pixels and codec.still:
+                        w, h, c, _ = codec.pixels(blob)
+                    else:
+                        w, h, c = fake_decode(blob, mime or "")
                     rows.append((ref, mime, w, h, c, len(blob), "ok"))
                 except NotImplementedError:
                     rows.append((ref, mime, None, None, None, len(blob),
@@ -186,24 +281,16 @@ def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
     fans out to ≤N output rows — the mapInPandas shape a real ffmpeg
     sampler has).
 
-    Animated GIFs are sampled FOR REAL (ops/gifcodec.gif_decode_frames:
-    LZW decode + per-frame compositing with disposal/transparency), each
-    sampled frame re-encoded as a standalone PNG in ``frame_bytes`` with
-    ``frame_offset`` = its index in the animation. MJPEG AVIs are sampled
-    FOR REAL too (ops/avicodec: RIFF LIST walk to the ``movi`` members),
-    each sampled frame emitted as its standalone baseline-JPEG payload —
-    which decode_pixels then really decodes (ops/jpegcodec). Animated
-    WebP is sampled FOR REAL as well (ops/webpcodec.webp_decode_frames:
-    VP8X/ANIM/ANMF walk with per-frame VP8L or VP8 decode and canvas
-    compositing), PNG re-encoded like the GIF path, and so is animated
-    PNG (ops/pngcodec.png_decode_frames: acTL/fcTL/fdAT walk,
-    per-region sub-PNG decode, dispose/blend compositing). Formats with
-    no in-sandbox video codec keep the deterministic byte-slice stand-in
-    (same fan-out shape; frame_offset = byte offset)."""
-    from .avicodec import avi_decode_frames, looks_like_avi
-    from .gifcodec import gif_decode_frames, looks_like_gif
-    from .pngcodec import looks_like_apng, png_decode_frames, png_encode
-    from .webpcodec import looks_like_webp, webp_decode_frames
+    Rows with a frame walker sample FOR REAL, with ``frame_offset`` = the
+    frame's index in the animation: animated GIF (LZW decode + per-frame
+    compositing with disposal/transparency), animated PNG (acTL/fcTL/fdAT
+    walk, dispose/blend compositing) and animated WebP (VP8X/ANIM/ANMF
+    walk, per-frame VP8L or VP8 decode) emit each sampled canvas as a
+    standalone PNG; MJPEG AVI (RIFF LIST walk to the ``movi`` members)
+    emits each sampled frame's standalone baseline-JPEG payload, which
+    decode_pixels then really decodes. Everything else — and any walk
+    that fails or finds no frames — keeps the deterministic byte-slice
+    stand-in (same fan-out shape; frame_offset = byte offset)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -212,57 +299,16 @@ def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
                 blob = bytes(payload) if payload is not None else b""
                 if not blob:
                     continue
-                if looks_like_gif(blob):
-                    try:
-                        w, h, frames = gif_decode_frames(blob)
-                    except Exception:  # noqa: BLE001 — malformed GIF falls
-                        frames = None  # back to the byte-slice path below
-                    if frames is not None:
-                        total = len(frames)
-                        step = max(total // n_frames, 1)
-                        picks = list(range(0, total, step))[:n_frames]
-                        for i, fi in enumerate(picks):
-                            rows.append((ref, i, fi,
-                                         png_encode(frames[fi], w, h, 3)))
-                        continue
-                if looks_like_avi(blob):
-                    try:
-                        _, _, frames = avi_decode_frames(blob)
-                    except Exception:  # noqa: BLE001 — malformed AVI falls
-                        frames = None  # back to the byte-slice path below
-                    if frames:
-                        total = len(frames)
-                        step = max(total // n_frames, 1)
-                        picks = list(range(0, total, step))[:n_frames]
-                        for i, fi in enumerate(picks):
-                            rows.append((ref, i, fi, frames[fi]))
-                        continue
-                if looks_like_apng(blob):
-                    try:
-                        w, h, frames = png_decode_frames(blob)
-                    except Exception:  # noqa: BLE001 — malformed APNG
-                        frames = None  # falls back to the byte slices
-                    if frames:
-                        total = len(frames)
-                        step = max(total // n_frames, 1)
-                        picks = list(range(0, total, step))[:n_frames]
-                        for i, fi in enumerate(picks):
-                            rows.append((ref, i, fi,
-                                         png_encode(frames[fi], w, h, 3)))
-                        continue
-                if looks_like_webp(blob):
-                    try:
-                        w, h, frames = webp_decode_frames(blob)
-                    except Exception:  # noqa: BLE001 — stills / malformed
-                        frames = None  # fall back to the byte-slice path
-                    if frames:
-                        total = len(frames)
-                        step = max(total // n_frames, 1)
-                        picks = list(range(0, total, step))[:n_frames]
-                        for i, fi in enumerate(picks):
-                            rows.append((ref, i, fi,
-                                         png_encode(frames[fi], w, h, 3)))
-                        continue
+                codec = codec_for(blob)
+                try:
+                    picked = codec.frames(blob, n_frames) \
+                        if codec and codec.frames else None
+                except Exception:  # noqa: BLE001 — stills / malformed
+                    picked = None  # fall back to the byte-slice path
+                if picked:
+                    rows += [(ref, i, k, out)
+                             for i, (k, out) in enumerate(picked)]
+                    continue
                 step = max(len(blob) // n_frames, 1)
                 for i in range(min(n_frames, len(blob))):
                     off = i * step
@@ -287,146 +333,12 @@ RESIZED_SCHEMA = StructType([
 ])
 
 
-def _nearest(pixels: bytes, in_w: int, in_h: int, channels: int,
-             out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbor resample of raw interleaved samples."""
-    import numpy as np
-
-    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(in_h, in_w, channels)
-    ys = np.arange(out_h) * in_h // out_h
-    xs = np.arange(out_w) * in_w // out_w
-    return arr[ys][:, xs].tobytes()
-
-
-def _real_resize(payload: bytes, mime: str,
-                 width: int, height: int) -> bytes:
-    """Real resize: decode → nearest-neighbor resample → re-encode in the
-    SOURCE format (PNG stays PNG, BMP stays BMP, TIFF stays TIFF); other
-    formats raise (see _real_decode)."""
-    from .bmpcodec import bmp_decode, bmp_encode, looks_like_bmp
-    from .gifcodec import gif_resize_nearest, looks_like_gif
-    from .jpegcodec import jpeg_decode, jpeg_encode, looks_like_jpeg
-    from .pngcodec import PNG_SIGNATURE, png_resize_nearest
-    from .pnmcodec import looks_like_pnm, pnm_decode, pnm_encode
-    from .tiffcodec import looks_like_tiff, tiff_decode, tiff_encode
-
-    if payload.startswith(PNG_SIGNATURE):
-        return png_resize_nearest(payload, width, height)
-    if looks_like_tiff(payload):
-        in_w, in_h, ch, px = tiff_decode(payload)
-        return tiff_encode(_nearest(px, in_w, in_h, ch, width, height),
-                           width, height, ch)
-    if looks_like_pnm(payload):
-        in_w, in_h, ch, px = pnm_decode(payload)
-        # P4 bitmaps resize on the expanded gray grid and re-emit as PGM
-        return pnm_encode(_nearest(px, in_w, in_h, ch, width, height),
-                          width, height, ch)
-    if looks_like_bmp(payload):
-        in_w, in_h, ch, px = bmp_decode(payload)
-        return bmp_encode(_nearest(px, in_w, in_h, ch, width, height),
-                          width, height, ch)
-    if looks_like_gif(payload):
-        return gif_resize_nearest(payload, width, height)
-    if looks_like_jpeg(payload):
-        in_w, in_h, ch, px = jpeg_decode(payload)
-        return jpeg_encode(_nearest(px, in_w, in_h, ch, width, height),
-                           width, height, ch)
-    raise NotImplementedError(f"no in-sandbox codec for {mime or 'unknown'}")
-
-
-def auto_resize(payload: bytes, mime: str, width: int, height: int) -> bytes:
-    """Default resizer: real resample for PNG/BMP/GIF/JPEG/TIFF
-    payloads (same sniff set as auto_decode, so decode_media and
-    resize_media always agree on which path a blob takes), deterministic
-    fake otherwise."""
-    from .bmpcodec import looks_like_bmp
-    from .gifcodec import looks_like_gif
-    from .jpegcodec import looks_like_jpeg
-    from .pngcodec import PNG_SIGNATURE
-    from .pnmcodec import looks_like_pnm
-    from .tiffcodec import looks_like_tiff
-
-    if (payload.startswith(PNG_SIGNATURE) or looks_like_bmp(payload)
-            or looks_like_gif(payload) or looks_like_jpeg(payload)
-            or looks_like_tiff(payload) or looks_like_pnm(payload)):
-        return _real_resize(payload, mime, width, height)
-    return fake_resize(payload, mime, width, height)
-
-
-def fake_resize(payload: bytes, mime: str, width: int, height: int) -> bytes:
-    """Deterministic stand-in: an ASCII pseudo-bitmap of exactly
-    width×height bytes derived from the payload digest (content-addressed,
-    so downstream dedup/caching over resized media behaves realistically,
-    and the construction is reproducible in ANSI SQL for the oracle)."""
-    h = hashlib.md5(payload or b"").hexdigest()
-    n = width * height
-    return (h * (-(-n // len(h))))[:n].encode("ascii")
-
-
-Resizer = Callable[[bytes, str, int, int], bytes]
-
-
-def _auto_resize_once(blob: bytes, mime: str, width: int,
-                      height: int) -> tuple[int, int, bytes]:
-    """Fused default path: one decode feeds BOTH the source dims and the
-    resample (the split decoder/resizer pair would run the full decode
-    twice per blob). Routes the same format set as auto_decode —
-    PNG/BMP/GIF/baseline-JPEG real, everything else the digest fake — so
-    decode_media and resize_media report consistent metadata for every
-    blob."""
-    from .bmpcodec import bmp_decode, bmp_encode, looks_like_bmp
-    from .gifcodec import gif_resize_indexed, looks_like_gif
-    from .jpegcodec import jpeg_decode, jpeg_encode, looks_like_jpeg
-    from .pngcodec import PNG_SIGNATURE, png_decode, png_encode
-    from .pnmcodec import looks_like_pnm, pnm_decode, pnm_encode
-    from .tiffcodec import looks_like_tiff, tiff_decode, tiff_encode
-
-    if looks_like_pnm(blob):
-        in_w, in_h, ch, pixels = pnm_decode(blob)
-        out = pnm_encode(_nearest(pixels, in_w, in_h, ch, width, height),
-                         width, height, ch)
-        return in_w, in_h, out
-    if looks_like_tiff(blob):
-        in_w, in_h, ch, pixels = tiff_decode(blob)
-        out = tiff_encode(_nearest(pixels, in_w, in_h, ch, width, height),
-                          width, height, ch)
-        return in_w, in_h, out
-    if blob.startswith(PNG_SIGNATURE):
-        in_w, in_h, ch, pixels = png_decode(blob)
-        out = png_encode(_nearest(pixels, in_w, in_h, ch, width, height),
-                         width, height, ch)
-        return in_w, in_h, out
-    if looks_like_bmp(blob):
-        in_w, in_h, ch, pixels = bmp_decode(blob)
-        out = bmp_encode(_nearest(pixels, in_w, in_h, ch, width, height),
-                         width, height, ch)
-        return in_w, in_h, out
-    if looks_like_gif(blob):
-        return gif_resize_indexed(blob, width, height)
-    if looks_like_jpeg(blob):
-        in_w, in_h, ch, pixels = jpeg_decode(blob)
-        out = jpeg_encode(_nearest(pixels, in_w, in_h, ch, width, height),
-                          width, height, ch)
-        return in_w, in_h, out
-    from .webpcodec import looks_like_webp, webp_decode, webp_encode
-
-    if looks_like_webp(blob):
-        in_w, in_h, ch, pixels = webp_decode(blob)
-        out = webp_encode(_nearest(pixels, in_w, in_h, ch, width, height),
-                          width, height, ch)
-        return in_w, in_h, out
-    in_w, in_h, _ = fake_decode(blob, mime)
-    return in_w, in_h, fake_resize(blob, mime, width, height)
-
-
-def resize_media(media: DataFrame, width: int = 32, height: int = 32,
-                 decoder: Decoder = auto_decode,
-                 resizer: Resizer = auto_resize) -> DataFrame:
+def resize_media(media: DataFrame, width: int = 32,
+                 height: int = 32) -> DataFrame:
     """Arrow-batched resize: binary payload in, (target-dim payload +
-    source dims) out; codec failures isolate per blob (ok column). With
-    the default decoder/resizer pair the PNG path is fused into a single
-    decode per blob."""
-    fused = decoder is auto_decode and resizer is auto_resize
+    source dims) out, through the claiming row's resize encoder (one
+    decode per blob); rows without one take the digest stand-ins. Codec
+    failures isolate per blob (ok column)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -435,12 +347,12 @@ def resize_media(media: DataFrame, width: int = 32, height: int = 32,
                                           pdf["payload"]):
                 blob = bytes(payload) if payload is not None else b""
                 try:
-                    if fused:
-                        in_w, in_h, out = _auto_resize_once(
-                            blob, mime or "", width, height)
+                    codec = codec_for(blob)
+                    if codec and codec.resize:
+                        in_w, in_h, out = codec.resize(blob, width, height)
                     else:
-                        in_w, in_h, _ = decoder(blob, mime or "")
-                        out = resizer(blob, mime or "", width, height)
+                        in_w, in_h, _ = fake_decode(blob, mime or "")
+                        out = fake_resize(blob, mime or "", width, height)
                     rows.append((ref, width, height, in_w, in_h, out, "ok"))
                 except NotImplementedError:
                     rows.append((ref, width, height, None, None, None,
@@ -468,13 +380,13 @@ PIXELS_SCHEMA = StructType([
 
 
 def decode_pixels(media: DataFrame) -> DataFrame:
-    """Full real decode: PNG payload → dimensions + a content digest of the
-    raw decoded samples (the image-content identity exact image dedup keys
-    on — two differently-compressed PNGs of the same pixels collide here,
-    while byte-level md5 of the files would not — and a BMP and a PNG of
-    the same pixels collide too, since the digest is over the decoded
-    samples). Arrow-batched; per-blob failures isolate into the ``ok``
-    column."""
+    """Full real decode: image payload → dimensions + a content digest of
+    the raw decoded samples (the image-content identity exact image dedup
+    keys on — two differently-compressed PNGs of the same pixels collide
+    here, while byte-level md5 of the files would not — and a BMP and a
+    PNG of the same pixels collide too, since the digest is over the
+    decoded samples). Arrow-batched; per-blob failures isolate into the
+    ``ok`` column."""
     from .pngcodec import PngError, png_decode
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -483,11 +395,10 @@ def decode_pixels(media: DataFrame) -> DataFrame:
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 blob = bytes(payload) if payload is not None else b""
                 try:
-                    decoded = _try_decode_pixels(blob)
+                    decoded = decode_image(blob)
                     if decoded is None:
-                        # not PNG/BMP/GIF: run the PNG decoder anyway for
-                        # its diagnostic PngError message (parity with the
-                        # pre-GIF behavior of this operator)
+                        # no pixel decoder claims the blob: run the PNG
+                        # decoder anyway for its diagnostic PngError
                         decoded = png_decode(blob)
                     w, h, c, px = decoded
                     # pixel_dec_md5: the samples rendered as 3-digit
@@ -528,60 +439,19 @@ FEATURES_SCHEMA = StructType([
 ])
 
 
-def _try_decode_pixels(blob: bytes):
-    """→ (width, height, channels, samples) for formats with a real
-    in-sandbox codec (PNG / uncompressed BMP / GIF / JPEG / TIFF /
-    Netpbm / lossless WebP / ICO favicons; an MJPEG AVI contributes its
-    FIRST FRAME — the cheap representative a real pipeline embeds for
-    video), else None. The weak ICO magic sniffs LAST (a full-directory
-    validation, but still the least distinctive signature in the
-    chain)."""
-    from .avicodec import avi_decode_frames, looks_like_avi
-    from .bmpcodec import bmp_decode, looks_like_bmp
-    from .gifcodec import gif_decode, looks_like_gif
-    from .icocodec import ico_decode, looks_like_ico
-    from .jpegcodec import jpeg_decode, looks_like_jpeg
-    from .pngcodec import PNG_SIGNATURE, png_decode
-    from .pnmcodec import looks_like_pnm, pnm_decode
-    from .tiffcodec import looks_like_tiff, tiff_decode
-    from .webpcodec import looks_like_webp, webp_decode
-
-    if blob.startswith(PNG_SIGNATURE):
-        return png_decode(blob)
-    if looks_like_tiff(blob):
-        return tiff_decode(blob)
-    if looks_like_pnm(blob):
-        return pnm_decode(blob)
-    if looks_like_bmp(blob):
-        return bmp_decode(blob)
-    if looks_like_gif(blob):
-        return gif_decode(blob)
-    if looks_like_jpeg(blob):
-        return jpeg_decode(blob)
-    if looks_like_webp(blob):
-        return webp_decode(blob)
-    if looks_like_avi(blob):
-        _, _, frames = avi_decode_frames(blob)
-        return jpeg_decode(frames[0]) if frames else None
-    if looks_like_ico(blob):
-        return ico_decode(blob)
-    return None
-
-
 def media_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
     """Fixed-width feature vector per blob.
 
-    For formats the repo can actually decode, the vector is computed from
-    the DECODED CONTENT — images (PNG / uncompressed BMP / GIF / baseline
-    JPEG, and MJPEG AVI via its first frame): [w/1024, h/1024, ch/4,
-    global mean/255, 4 per-channel means/255 (zero-padded), 8 brightness-
-    histogram fractions]; audio (RIFF/WAVE PCM + G.711, FLAC): the
-    mirrored layout over
-    full-scale-normalized samples (ops/audio.wav_feature_vec) — a real,
-    content-derived signal (two encodings of the same pixels/samples embed
-    identically). Formats with no in-sandbox codec keep the deterministic
-    digest-based stand-in (production swaps in a real embedding model via
-    the same batch shape)."""
+    For payloads a table row decodes, the vector is computed from the
+    DECODED CONTENT — images (an MJPEG AVI via its first frame): [w/1024,
+    h/1024, ch/4, global mean/255, 4 per-channel means/255 (zero-padded),
+    8 brightness-histogram fractions]; audio (WAV, FLAC): the mirrored
+    layout over full-scale-normalized samples (ops/audio.wav_feature_vec)
+    — a real, content-derived signal (two encodings of the same
+    pixels/samples embed identically). Everything else, including
+    payloads whose decode fails, keeps the deterministic digest-based
+    stand-in (production swaps in a real embedding model via the same
+    batch shape)."""
     import numpy as np
 
     from .audio import wav_feature_vec
@@ -591,11 +461,11 @@ def media_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
             rows = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 blob = bytes(payload) if payload is not None else b""
-                vec = None
                 try:
-                    decoded = _try_decode_pixels(blob)
+                    decoded = decode_image(blob)
+                    vec = None if decoded else wav_feature_vec(blob, dim)
                 except Exception:  # noqa: BLE001 — poison isolation
-                    decoded = None
+                    decoded = vec = None
                 if decoded is not None:
                     w, h, ch, px = decoded
                     arr = np.frombuffer(px, dtype=np.uint8)
@@ -606,11 +476,6 @@ def media_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
                             float(arr.mean()) / 255.0]
                            + (means + [0.0] * 4)[:4] + hist.tolist())
                     vec = (vec + [0.0] * dim)[:dim]
-                else:
-                    try:
-                        vec = wav_feature_vec(blob, dim)
-                    except Exception:  # noqa: BLE001 — poison isolation
-                        vec = None
                 if vec is None:
                     digest = hashlib.sha256(blob).digest()
                     vec = [(digest[i % 32] - 128) / 128.0 for i in range(dim)]
@@ -657,11 +522,9 @@ def pixel_features(media: DataFrame) -> DataFrame:
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
                 blob = bytes(payload) if payload is not None else b""
                 try:
-                    decoded = _try_decode_pixels(blob)
+                    decoded = decode_image(blob)
                 except NotImplementedError:
-                    rows.append((ref,) + (None,) * 11
-                                + ("codec_unavailable",))
-                    continue
+                    decoded = None
                 except Exception as exc:  # noqa: BLE001 — poison isolation
                     rows.append((ref,) + (None,) * 11
                                 + (f"error: {exc}",))
@@ -969,9 +832,6 @@ def scan_features(media: DataFrame) -> DataFrame:
     from .tiffcodec import TiffUnsupportedError, tiff_decode
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        global _DEC3
-        if _DEC3 is None:
-            _DEC3 = np.array([b"%03d" % v for v in range(256)], dtype="S3")
         for pdf in it:
             rows = []
             for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
@@ -979,9 +839,8 @@ def scan_features(media: DataFrame) -> DataFrame:
                 try:
                     w, h, ch, px = tiff_decode(blob)
                     arr = np.frombuffer(px, dtype=np.uint8)
-                    dec = _DEC3[arr].tobytes()
                     rows.append((ref, w, h, ch, arr.size,
-                                 hashlib.md5(dec).hexdigest(),
+                                 hashlib.md5(_dec3(px)).hexdigest(),
                                  int((arr == 0).sum()), "ok"))
                 except TiffUnsupportedError:
                     rows.append((ref, None, None, None, None, "", None,

@@ -17,8 +17,6 @@ This module implements both directions:
   per-row filter types cycle 0..4 so a decoder must implement every filter
   to round-trip (a filter bug cannot hide behind an all-None encoder);
   ``depth=16`` / ``interlace=True`` write the matching inverse shapes.
-- :func:`png_resize_nearest` — decode → nearest-neighbor resample
-  (vectorized numpy index select) → re-encode.
 
 Scale note: these run per-blob inside Arrow-batched ``mapInPandas``
 stages (ops/multimodal) — zlib is C-speed; None/Up/Sub unfiltering is
@@ -369,23 +367,6 @@ def _oriented(w: int, h: int, ch: int, px: bytes, orientation: int):
     from .jpegcodec import _exif_apply
 
     return _exif_apply((w, h, ch, px), orientation)
-
-
-def png_resize_nearest(data: bytes, out_w: int, out_h: int) -> bytes:
-    """Decode → nearest-neighbor resample → re-encode.
-
-    Source pixel for output (x, y) is (x*in_w//out_w, y*in_h//out_h) —
-    integer arithmetic, so the mapping is reproducible bit-for-bit in the
-    ANSI-SQL driver oracle.
-    """
-    import numpy as np
-
-    in_w, in_h, channels, pixels = png_decode(data)
-    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(in_h, in_w, channels)
-    ys = np.arange(out_h) * in_h // out_h
-    xs = np.arange(out_w) * in_w // out_w
-    out = arr[ys][:, xs]
-    return png_encode(out.tobytes(), out_w, out_h, channels)
 
 
 # ------------------------------------------------------------- APNG

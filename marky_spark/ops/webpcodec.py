@@ -1008,9 +1008,11 @@ def webp_decode_frames(data: bytes) -> tuple[int, int, list[bytes]]:
     bits — blending (0 = alpha-blend onto the canvas, 1 = overwrite)
     and disposal (1 = fill the rect with the ANIM background color
     after the frame is rendered).  Frame payloads are plain VP8L
-    (ops above) or VP8 (ops/vp8codec) still chunks; ALPH alpha planes
-    are a typed :class:`WebpUnsupportedError`.  Non-animated files
-    raise :class:`WebpError` (callers fall back to ``webp_decode``)."""
+    (ops above) or VP8 (ops/vp8codec) still chunks; a VP8 frame's ALPH
+    alpha plane is decoded via ``_decode_alpha`` and alpha-blended onto
+    the canvas per the ANMF blend flag (ALPH before a VP8L frame is a
+    :class:`WebpError`).  Non-animated files raise :class:`WebpError`
+    (callers fall back to ``webp_decode``)."""
     if not looks_like_webp(data):
         raise WebpError("not a WebP (no RIFF/WEBP signature)")
     (riff_size,) = struct.unpack_from("<I", data, 4)

@@ -12,8 +12,9 @@ This module is the *streaming substrate* a continuously-fed corpus needs:
   event stream (late data dropped past the watermark), the standard
   monitoring side-channel for a long-running ingestion job.
 
-Both default to ``trigger(availableNow=True)`` so they run-to-completion in
-tests and backfills while remaining genuine streaming queries.
+The streaming queries run under ``trigger(availableNow=True)`` so they run
+to completion in tests and backfills while remaining genuine streaming
+queries.
 """
 
 from __future__ import annotations
@@ -31,25 +32,18 @@ def stream_convert(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Streaming conversion: parquet file source → convert kernel → parquet
     sink with exactly-once checkpointing."""
-    reader = spark.readStream.schema(INPUT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    out = convert(stream)
-    writer = (
-        out.writeStream.format("parquet")
+    stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
+    return (
+        convert(stream).writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_convert_dedup(

@@ -212,6 +212,14 @@ def test_feed_dtd_is_rejected():
                      "<channel><title>t</title></channel></rss>")
 
 
+def test_feed_cdata_doctype_still_converts():
+    md = "".join(s[1] for s in convert_feed(
+        '<rss version="2.0"><channel><title>t</title><item><title>i</title>'
+        "<description><![CDATA[<!DOCTYPE html><p>hello</p>]]></description>"
+        "</item></channel></rss>"))
+    assert "hello" in md
+
+
 def test_mbox_single_huge_line_is_bounded():
     """A multi-MB physical line streams in bounded fragments — the walk
     never buffers a whole unterminated line, and a 'From ' appearing at

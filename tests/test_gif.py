@@ -19,7 +19,7 @@ from marky_spark.ops.gifcodec import (
     gif_decode,
     gif_decode_indexed,
     gif_encode,
-    gif_resize_nearest,
+    gif_resize_indexed,
     looks_like_gif,
 )
 
@@ -131,7 +131,9 @@ def test_resize_preserves_palette():
     rng = random.Random(3)
     palette = bytes(rng.randrange(256) for _ in range(nc * 3))
     idx = bytes(rng.randrange(nc) for _ in range(w * h))
-    small = gif_resize_nearest(gif_encode(idx, w, h, palette), 4, 3)
+    src_w, src_h, small = gif_resize_indexed(
+        gif_encode(idx, w, h, palette), 4, 3)
+    assert (src_w, src_h) == (w, h)
     sw, sh, sidx, spal = gif_decode_indexed(small)
     assert (sw, sh) == (4, 3)
     # stored tables are zero-padded to a power-of-two entry count
@@ -267,7 +269,7 @@ def test_encode_and_resize_u16_dimension_guard():
     palette = bytes(range(12))
     good = gif_encode(bytes([0, 1, 2, 3]), 2, 2, palette)
     with pytest.raises(GifError, match="dimensions"):
-        gif_resize_nearest(good, 70000, 1)
+        gif_resize_indexed(good, 70000, 1)
     with pytest.raises(GifError, match="u16"):
         gif_encode(bytes(70000), 70000, 1, palette)
 

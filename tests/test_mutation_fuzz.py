@@ -103,7 +103,7 @@ def test_image_codec_mutations_stay_typed():
     from marky_spark.ops.bmpcodec import bmp_encode
     from marky_spark.ops.gifcodec import gif_encode
     from marky_spark.ops.jpegcodec import jpeg_encode, jpeg_encode_progressive
-    from marky_spark.ops.multimodal import _try_decode_pixels
+    from marky_spark.ops.multimodal import decode_image
     from marky_spark.ops.pngcodec import MAX_PIXELS, png_encode
 
     rng = random.Random(0xF00D)
@@ -160,7 +160,7 @@ def test_image_codec_mutations_stay_typed():
         for _ in range(n):
             blob = _mutate(rng, data)
             try:
-                decoded = _try_decode_pixels(blob)
+                decoded = decode_image(blob)
             except (ValueError, NotImplementedError):
                 continue  # typed rejection — the contract
             if decoded is not None:

@@ -238,3 +238,17 @@ def test_dtd_content_is_rejected():
                     '<!DOCTYPE x [<!ENTITY a "bbb">]><x>&a;</x>')
     with pytest.raises(ConvertError, match="DTD"):
         convert_odt(b64(buf.getvalue()))
+
+
+def test_dtd_after_long_comment_is_rejected():
+    """The DTD check covers the whole prolog, not a fixed-size prefix."""
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("content.xml",
+                    '<?xml version="1.0"?><!--' + "x" * 5000 + "-->"
+                    '<!DOCTYPE x [<!ENTITY a "bbb">]><x>&a;</x>')
+    with pytest.raises(ConvertError, match="DTD"):
+        convert_odt(b64(buf.getvalue()))

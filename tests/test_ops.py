@@ -231,8 +231,76 @@ def _media_df(spark):
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
+_ROW_FOR_MIME = {
+    "image/png": "png", "image/apng": "png", "image/tiff": "tiff",
+    "image/x-portable-pixmap": "pnm", "image/bmp": "bmp",
+    "image/gif": "gif", "image/jpeg": "jpeg", "image/webp": "webp",
+    "video/avi": "avi", "image/x-icon": "ico", "audio/wav": "wav",
+    "audio/flac": "flac",
+}
+
+
+def test_codec_table_routing(spark):
+    """Every synthetic corpus payload is claimed by exactly one codec table
+    row (the sniffs are disjoint, so their order never decides), and for
+    each row with a resize encoder decode_media, decode_pixels and
+    resize_media agree on the source dims."""
+    from marky_spark.ops import multimodal as mm
+    from marky_spark.ops.audio import synth_wav_media
+    from marky_spark.ops.icocodec import ico_encode
+
+    ids = spark.range(0, 20).withColumnRenamed("id", "doc_id")
+    gens = [mm.synth_png_media, mm.synth_gif_media, mm.synth_agif_media,
+            mm.synth_avi_media, mm.synth_bmp_media, mm.synth_cmyk_media,
+            mm.synth_apng_media, mm.synth_awebp_media, mm.synth_vp8_media,
+            mm.synth_scan_media, synth_wav_media]
+    rows = [(r["media_ref"], r["mime"], bytes(r["payload"]))
+            for g in gens for r in g(ids).collect()]
+    px = bytes(range(8 * 6 * 4))
+    rows.append(("ico", "image/x-icon",
+                 ico_encode([(px[:8 * 6 * 3], 8, 6, 3, "png"),
+                             (px, 8, 6, 4, "dib")])))
+    claimed = {}
+    for ref, mime, blob in rows:
+        names = [c.name for c in mm.codec_table() if c.sniff(blob)]
+        assert names == [_ROW_FOR_MIME[mime]], (ref, names)
+        claimed[ref] = mm.codec_for(blob)
+    assert {c.name for c in claimed.values()} == set(_ROW_FOR_MIME.values())
+
+    media = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
+    dec = {r["media_ref"]: r for r in mm.decode_media(media).collect()}
+    pix = {r["media_ref"]: r for r in mm.decode_pixels(media).collect()}
+    rsz = {r["media_ref"]: r for r in mm.resize_media(media, 5, 3).collect()}
+    resizable = [ref for ref, c in claimed.items() if c.resize]
+    assert {claimed[ref].name for ref in resizable} == {
+        "png", "tiff", "pnm", "bmp", "gif", "jpeg", "webp"}
+    n_ok = 0
+    for ref in resizable:
+        d, p, r = dec[ref], pix[ref], rsz[ref]
+        assert d["ok"] == p["ok"] == r["ok"], (ref, d["ok"], p["ok"])
+        if d["ok"] == "ok":
+            n_ok += 1
+            assert (d["width"], d["height"]) == (p["width"], p["height"]) \
+                == (r["in_width"], r["in_height"]), ref
+    assert n_ok > len(resizable) // 2
+
+
+def test_media_operator_imports_leave_codecs_unloaded():
+    import os
+    import subprocess
+    import sys
+
+    code = ("import sys, marky_spark.ops.audio; print(sorted(m for m in "
+            "sys.modules if m.startswith('marky_spark.ops.') "
+            "and m.endswith('codec')))")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, check=True,
+                         capture_output=True, text=True).stdout
+    assert out.strip() == "[]"
+
+
 def test_decode_media_fake_and_stub(spark):
-    from marky_spark.ops.multimodal import _real_decode, decode_media, fake_decode
+    from marky_spark.ops.multimodal import decode_media, fake_decode
 
     media = _media_df(spark)
     got = {r["media_ref"]: r for r in decode_media(media).collect()}
@@ -240,11 +308,6 @@ def test_decode_media_fake_and_stub(spark):
     assert (got["m1"]["width"], got["m1"]["height"], got["m1"]["channels"]) == (w, h, c)
     assert got["m1"]["ok"] == "ok"
     assert got["m2"]["n_bytes"] == 12
-
-    # the real codec hook is an explicit stub in this sandbox
-    stubbed = {r["media_ref"]: r["ok"]
-               for r in decode_media(media, decoder=_real_decode).collect()}
-    assert set(stubbed.values()) == {"codec_unavailable"}
 
 
 def test_frame_sample_fanout(spark):
@@ -492,7 +555,7 @@ def test_knn_join_ivf_recall(spark, emb):
 def test_resize_media_fake_and_stub(spark):
     import hashlib
 
-    from marky_spark.ops.multimodal import _real_resize, resize_media
+    from marky_spark.ops.multimodal import resize_media
 
     media = spark.createDataFrame(
         [("m1", "image/png", bytearray(b"payload-bytes")),
@@ -508,10 +571,6 @@ def test_resize_media_fake_and_stub(spark):
     assert bytes(r1["payload"]) == (h * 1)[:32].encode()
     assert r1["ok"] == "ok" and r1["in_width"] is not None
     assert rows["m2"]["ok"] == "ok"  # empty payload still resizes
-
-    # the real-codec stub surfaces as codec_unavailable, not a crash
-    stub = resize_media(media, resizer=_real_resize).collect()
-    assert all(r["ok"] == "codec_unavailable" for r in stub)
 
 
 def test_rolling_hashes_match_pure_python(spark, docs):

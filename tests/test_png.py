@@ -13,12 +13,7 @@ import zlib
 import numpy as np
 import pytest
 
-from marky_spark.ops.pngcodec import (
-    PngError,
-    png_decode,
-    png_encode,
-    png_resize_nearest,
-)
+from marky_spark.ops.pngcodec import PngError, png_decode, png_encode
 
 # The canonical 1×1 semi-transparent red PNG (RGBA), produced by an
 # external encoder — spec-conformance pin, not a round-trip tautology.
@@ -106,11 +101,17 @@ def test_absurd_ihdr_dimensions_capped():
         png_decode(huge)
 
 
-def test_resize_nearest_mapping():
+def test_resize_nearest_mapping(spark):
+    from marky_spark.ops.multimodal import MEDIA_SCHEMA, resize_media
+
     w, h, ch = 8, 4, 3
     px = bytes(((y * w + x) * 3 + c) & 0xFF
                for y in range(h) for x in range(w) for c in range(ch))
-    out = png_decode(png_resize_nearest(png_encode(px, w, h, ch), 4, 2))
+    media = spark.createDataFrame(
+        [("m", "image/png", bytearray(png_encode(px, w, h, ch)))],
+        schema=MEDIA_SCHEMA)
+    row = resize_media(media, width=4, height=2).collect()[0]
+    out = png_decode(bytes(row["payload"]))
     arr = np.frombuffer(px, np.uint8).reshape(h, w, ch)
     exp = arr[(np.arange(2) * h // 2)][:, (np.arange(4) * w // 4)].tobytes()
     assert out == (4, 2, 3, exp)
