@@ -3,7 +3,7 @@
 
 Env knobs:
 - ``SPARK_GRAFT_SF_DIR``   (default /root/testdata/sf0.1)
-- ``SPARK_GRAFT_CPUS``     (default 32)
+- ``SPARK_GRAFT_CPUS``     (default: the CPUs this process may run on)
 - ``SPARK_GRAFT_BENCH_DOCS`` (default 50000) — synthetic span-corpus size
 
 The headline number is documents/sec through the full conversion pipeline
@@ -22,7 +22,7 @@ import time
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "50000"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 

@@ -1,0 +1,4 @@
+"""spark-marky: document-to-markdown conversion on Spark."""
+from . import zipcache
+
+zipcache.install()

@@ -8,6 +8,9 @@ Tuned for the 100 TB design point (SURVEY.md §4.2) while remaining correct on
   (the kernel is per-document; batch size only controls Arrow buffering);
 - shuffle partition count sized for the local core count — on a real cluster
   this is overridden by AQE + ``spark.sql.shuffle.partitions`` at submit time.
+
+The master is the caller's ``master=``, else the one ``spark-submit`` launched
+this driver with, else ``local[$SPARK_GRAFT_CPUS or the CPUs we may use]``.
 """
 
 from __future__ import annotations
@@ -41,10 +44,11 @@ DEFAULT_CONFS: dict[str, str] = {
 
 def get_spark(app: str = "marky-spark", master: str | None = None,
               confs: dict[str, str] | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app).master(
-        master or f"local[{cpus}]"
-    )
+    builder = SparkSession.builder.appName(app)
+    # spark-submit hands its driver a JVM (and this variable) with its master
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        builder = builder.master(master or f"local[{cpus}]")
     merged = dict(DEFAULT_CONFS)
     if confs:
         merged.update(confs)
