@@ -111,11 +111,11 @@ def write_output(df: DataFrame, spark: SparkSession, out: str,
     try:
         (bucketed.write.mode("append").partitionBy("bucket")
          .parquet(os.path.join(out, "out_spans")))
-        buckets = [r["bucket"]
-                   for r in bucketed.select("bucket").distinct().collect()]
-        n = bucketed.count()
+        # the bucket list and the row count in one job
+        counts = bucketed.groupBy("bucket").count().collect()
     finally:
         bucketed.unpersist()
-    SnapshotStore(out).commit(buckets, {"n_docs": n,
-                                        "writer": "write_output"})
+    SnapshotStore(out).commit([r["bucket"] for r in counts],
+                              {"n_docs": sum(r["count"] for r in counts),
+                               "writer": "write_output"})
     return "parquet"

@@ -18,7 +18,10 @@ over 10^12 documents, evidenced locally:
   round-robin repartitioned so no hash partition serializes several
   multi-GB documents, while the small-doc bulk keeps cheap hash partitioning.
 - **Lineage + metrics**: per-partition lineage rows (task-level audit) and
-  per-kind metrics aggregates are written next to each wave.
+  per-kind metrics come from one aggregate per wave, written by the driver
+  just before the commit. They become visible with the commit: a resume
+  deletes the stats of waves whose commit never landed, with their orphaned
+  bucket files, so a crash never counts a wave twice.
 """
 
 from __future__ import annotations
@@ -29,6 +32,8 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -149,12 +154,12 @@ def run_convert_job(
 
     # exactly-once across crash+resume: a wave that wrote files but died
     # before its manifest commit left orphans in still-pending bucket
-    # partitions; re-running without clearing them would double those rows.
+    # partitions and stats files numbered >= wave_base (wave ids count
+    # snapshots); re-running without clearing them would double those rows.
     # (Iceberg needs no equivalent — uncommitted files are invisible to the
     # snapshot; this restores that semantic for the parquet stand-in.)
-    _clean_uncommitted(out_dir, pending)
-    # lineage/metrics wave ids stay unique across resumed runs
     wave_base = len(store.read()["snapshots"])
+    _clean_uncommitted(out_dir, pending, wave_base)
 
     per_wave = max(1, -(-len(pending) // waves))
     for w in range(0, len(pending), per_wave):
@@ -177,40 +182,35 @@ def run_convert_job(
                 .write.mode("append")
                 .partitionBy("bucket")
                 .parquet(os.path.join(out_dir, "out_spans")))
-
-            lineage = out.groupBy("_pid").agg(
+            # lineage (per task) and metrics (per kind × status) in ONE
+            # aggregate over the persisted frame: a few hundred rows
+            stats = out.groupingSets(
+                [["_pid"], ["conv_kind", "status"]],
+                "_pid", "conv_kind", "status",
+            ).agg(
+                F.grouping_id().alias("_gid"),
                 F.count(F.lit(1)).alias("n_docs"),
-                F.sum((F.col("status") != "ok").cast("int")).alias("n_errors"),
+                F.sum((F.col("status") != "ok").cast("long")).alias("n_errors"),
                 F.sum("md_chars").alias("md_chars"),
                 F.min("doc_id").alias("min_doc_id"),
                 F.max("doc_id").alias("max_doc_id"),
-            ).withColumn("wave", F.lit(wave_id))
-            lineage.write.mode("append").parquet(
-                os.path.join(out_dir, "lineage")
-            )
-            metrics = out.groupBy("conv_kind", "status").agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("md_chars").alias("md_chars"),
-            ).withColumn("wave", F.lit(wave_id))
-            metrics.write.mode("append").parquet(
-                os.path.join(out_dir, "metrics")
-            )
-
-            agg = out.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("status") != "ok").cast("int")).alias("e"),
-            ).collect()[0]
+            ).collect()
         finally:
             out.unpersist()
             wave_df.unpersist()
 
+        # grouping_id sets one bit per column a set leaves out, _pid highest
+        lineage = [r for r in stats if r["_gid"] == 0b011]
+        n = sum(r["n_docs"] for r in lineage)
+        e = sum(r["n_errors"] for r in lineage)
+        _write_wave_stats(out_dir, "lineage", lineage, wave_id)
+        _write_wave_stats(out_dir, "metrics",
+                          [r for r in stats if r["_gid"] == 0b100], wave_id)
         dt = time.time() - t0
         store.commit(wave_buckets, {
-            "n_docs": agg["n"], "n_errors": agg["e"],
-            "seconds": round(dt, 3),
+            "n_docs": n, "n_errors": e, "seconds": round(dt, 3),
         })
-        results.append(WaveResult(wave_id, wave_buckets,
-                                  agg["n"], agg["e"], dt))
+        results.append(WaveResult(wave_id, wave_buckets, n, e, dt))
         if fail_after_wave is not None and len(results) >= fail_after_wave:
             raise RuntimeError(f"injected failure after wave {len(results)}")
     return results
@@ -239,14 +239,50 @@ def append_op_metrics(spark: SparkSession, out_dir: str, source: str,
      .write.mode("append").parquet(os.path.join(out_dir, "metrics_ops")))
 
 
-def _clean_uncommitted(out_dir: str, pending_buckets: list[int]) -> None:
-    """Remove orphaned bucket partitions left by a wave that crashed after
-    writing files but before its manifest commit."""
+#: driver-written per-wave stats files: the column names and types the
+#: Spark ``groupBy`` writes produced (lineage matches ``lineage_table_ddl``)
+STATS_SCHEMAS = {
+    "lineage": pa.schema([
+        ("_pid", pa.int32()), ("n_docs", pa.int64()),
+        ("n_errors", pa.int64()), ("md_chars", pa.int64()),
+        ("min_doc_id", pa.string()), ("max_doc_id", pa.string()),
+        ("wave", pa.int32())]),
+    "metrics": pa.schema([
+        ("conv_kind", pa.string()), ("status", pa.string()),
+        ("n_docs", pa.int64()), ("md_chars", pa.int64()),
+        ("wave", pa.int32())]),
+}
+
+
+def _write_wave_stats(out_dir: str, table: str, rows: list, wave_id: int
+                      ) -> None:
+    """Write ``table/wave-<id>.parquet`` from the driver (no Spark job);
+    the ``_``-prefixed temp name keeps a torn file invisible to readers."""
+    d = os.path.join(out_dir, table)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f"_wave-{wave_id:05d}.tmp")
+    pq.write_table(pa.Table.from_pylist(  # keeps only the schema's columns
+        [{**r.asDict(), "wave": wave_id} for r in rows],
+        schema=STATS_SCHEMAS[table]), tmp)
+    os.replace(tmp, os.path.join(d, f"wave-{wave_id:05d}.parquet"))
+
+
+def _clean_uncommitted(out_dir: str, pending_buckets: list[int],
+                       n_snapshots: int) -> None:
+    """Remove what a wave that crashed before its manifest commit left
+    behind: orphaned bucket partitions and its ``wave-<id>`` stats files
+    (``id >= n_snapshots``)."""
     base = os.path.join(out_dir, "out_spans")
     for b in pending_buckets:
         d = os.path.join(base, f"bucket={b}")
         if os.path.isdir(d):
             shutil.rmtree(d)
+    for table in STATS_SCHEMAS:
+        d = os.path.join(out_dir, table)
+        for name in os.listdir(d) if os.path.isdir(d) else ():
+            if (name.startswith("wave-")
+                    and int(name[5:].split(".")[0]) >= n_snapshots):
+                os.remove(os.path.join(d, name))
 
 
 def compact_output(spark: SparkSession, out_dir: str,

@@ -40,7 +40,12 @@ def test_write_routing_falls_back_to_parquet(spark, tmp_path):
     written = spark.read.parquet(out + "/out_spans")
     assert written.count() == 5
     assert "bucket" in written.columns
-    assert SnapshotStore(out).committed_buckets()  # snapshot was committed
+    # the manifest commits exactly the written buckets and their row count
+    manifest = SnapshotStore(out).read()
+    assert manifest["committed_buckets"] == sorted(
+        r["bucket"] for r in written.select("bucket").distinct().collect())
+    assert manifest["snapshots"][-1]["stats"] == {"n_docs": 5,
+                                                  "writer": "write_output"}
 
 
 def test_cli_driver_end_to_end(tmp_path):

@@ -62,6 +62,79 @@ def test_lineage_and_metrics_written(spark, tmp_path):
     assert all(status == "ok" for (_, status) in rows)
 
 
+def test_commit_crash_does_not_double_count_stats(spark, tmp_path,
+                                                 monkeypatch):
+    """A wave whose manifest commit fails after its files are written must
+    leave no stats behind once the job resumes: lineage, metrics and the
+    committed output each count every input doc exactly once."""
+    out_dir = str(tmp_path / "commitcrash")
+    corpus = spark_corpus(spark, 800, partitions=4)
+    real_commit = SnapshotStore.commit
+    calls = []
+
+    def crashing_commit(self, bucket_ids, stats):
+        calls.append(bucket_ids)
+        if len(calls) == 2:
+            raise RuntimeError("injected commit crash")
+        return real_commit(self, bucket_ids, stats)
+
+    monkeypatch.setattr(SnapshotStore, "commit", crashing_commit)
+    with pytest.raises(RuntimeError, match="injected commit crash"):
+        run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4,
+                        partitions=4)
+    monkeypatch.undo()
+    assert len(SnapshotStore(out_dir).read()["snapshots"]) == 1
+
+    run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4,
+                    partitions=4)
+    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    metrics = spark.read.parquet(f"{out_dir}/metrics")
+    assert lineage.groupBy().sum("n_docs").collect()[0][0] == 800
+    assert metrics.groupBy().sum("n_docs").collect()[0][0] == 800
+    assert read_output(spark, out_dir).count() == 800
+
+
+def test_wave_runs_at_most_eight_spark_jobs(spark, tmp_path):
+    """The wave's bookkeeping (lineage, metrics, commit totals) rides one
+    aggregate: skew split, parquet write and stats fit in 8 jobs a wave."""
+    corpus = spark_corpus(spark, 200, partitions=4).persist()
+    corpus.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("wave-job-count", "run_convert_job")
+    try:
+        results = run_convert_job(spark, corpus, str(tmp_path / "jobs"),
+                                  n_buckets=4, waves=2, partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        corpus.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup("wave-job-count")
+    assert len(results) == 2
+    assert len(jobs) <= 8 * len(results), len(jobs)
+
+
+def test_stats_tables_match_production_schema(spark, tmp_path):
+    """The driver-written stats read back with the lineage columns of the
+    production Iceberg DDL and the metrics columns Spark used to write."""
+    from marky_spark.iceberg import lineage_table_ddl
+
+    out_dir = str(tmp_path / "schema")
+    run_convert_job(spark, spark_corpus(spark, 40, partitions=2), out_dir,
+                    n_buckets=2, waves=2, partitions=2)
+    ddl = lineage_table_ddl()
+    columns = ddl[ddl.index("(") + 1:ddl.index(")")].split(",")
+    expected = {name: typ.lower()
+                for name, typ in (c.split() for c in columns)}
+    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    assert {f.name: f.dataType.simpleString()
+            for f in lineage.schema.fields} == expected
+    metrics = spark.read.parquet(f"{out_dir}/metrics")
+    assert metrics.schema.simpleString() == (
+        "struct<conv_kind:string,status:string,n_docs:bigint,"
+        "md_chars:bigint,wave:int>")
+    assert sorted(r["wave"] for r in
+                  lineage.select("wave").distinct().collect()) == [0, 1]
+
+
 def test_skew_balanced_splits_mega_docs(spark):
     from marky_spark.schema import INPUT_SCHEMA
 
