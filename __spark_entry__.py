@@ -503,9 +503,8 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (content_md5 = md5 of the slice, which the oracle recomputes from the
     text bytes); branch 'aw' (round-5) = REAL animated WebP
     (ops/webpcodec.webp_decode_frames: VP8X/ANIM/ANMF walk with
-    full-canvas compositing), whose frames ALTERNATE between VP8L
-    lossless and lossy VP8 keyframes (ops/vp8codec) — the one oracle row
-    pins the container walk, both still decoders, the compositing
+    full-canvas compositing) of VP8L lossless frames — the one oracle
+    row pins the container walk, the VP8L decoder, the compositing
     identity and the PNG round-trip. Branch 'ap' (round-5) = REAL
     animated PNG (ops/pngcodec.png_decode_frames: acTL/fcTL/fdAT walk,
     per-region sub-PNG decode, dispose/blend compositing) —
@@ -713,24 +712,17 @@ def _q_scan_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (synth_cmyk_media) — decoded through decode_pixels; the oracle
     rebuilds the ink→RGB conversion (round(ink*k/255) /
     round((255-ink)*(255-k)/255)) per doc_id, so the APP14 walk and
-    both ink conventions must be spec-correct. Branch 'v8' (round-5)
-    adds LOSSY WebP — real RFC 6386 VP8 keyframes (ops/vp8codec:
-    bool decoder, kf mode trees, DCT tokens across 1/2/4/8 partitions,
-    dequant, inverse WHT + DCT, B_PRED / DC_PRED-16 predictor chains) —
-    whose flat-per-block luma the oracle rebuilds as doc_id arithmetic;
-    the md5 only matches when the whole entropy+transform+predictor
-    walk is exact. Branch 'bm' (round-5) adds palettized / RLE legacy BMPs
-    (ops/bmpcodec: 4/8-bit color tables, BI_RLE4/BI_RLE8 run-absolute-
-    delta escapes); the oracle rebuilds each decoded sample from the
-    md5-hex index arithmetic (8-bit: the char's ASCII code; 4-bit: 17x
-    the hex digit)."""
+    both ink conventions must be spec-correct. Branch 'bm' (round-5)
+    adds palettized / RLE legacy BMPs (ops/bmpcodec: 4/8-bit color
+    tables, BI_RLE4/BI_RLE8 run-absolute-delta escapes); the oracle
+    rebuilds each decoded sample from the md5-hex index arithmetic
+    (8-bit: the char's ASCII code; 4-bit: 17x the hex digit)."""
     from marky_spark.ops.multimodal import (
         decode_pixels,
         scan_features,
         synth_bmp_media,
         synth_cmyk_media,
         synth_scan_media,
-        synth_vp8_media,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -740,10 +732,9 @@ def _q_scan_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long").alias("black_n"),
             "ok")
     cmyk = decode_pixels(synth_cmyk_media(docs)).select(*cols)
-    vp8 = decode_pixels(synth_vp8_media(docs)).select(*cols)
     bmp = decode_pixels(synth_bmp_media(docs)).select(*cols)
     return (scan_features(synth_scan_media(docs))
-            .unionByName(cmyk).unionByName(vp8).unionByName(bmp))
+            .unionByName(cmyk).unionByName(bmp))
 
 
 def _q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1807,32 +1798,6 @@ def oracle_sql() -> dict[str, str]:
                     FROM m)
             )
             UNION ALL
-            -- branch 'v8': LOSSY WebP (real VP8 keyframes, ops/vp8codec).
-            -- Luma is flat per coding block: divisor 16 on doc_id%4=3
-            -- (DC_PRED-16 through Y2/WHT), else 4 (B_PRED); value =
-            -- (i*7 + (y//d)*13 + (x//d)*31) % 256, chroma 128 so
-            -- RGB = (Y,Y,Y) exactly. The md5 only matches when the
-            -- bool-decode / token / dequant / WHT / iDCT / predictor
-            -- walk is bit-exact.
-            SELECT 'v8' || doc_id AS media_ref,
-                   CAST(w AS INT) AS width,
-                   CAST(h AS INT) AS height,
-                   CAST(3 AS INT) AS channels,
-                   CAST(w*h*3 AS BIGINT) AS n_samples,
-                   md5(array_to_string(list_transform(range(0, (w*h)::INT),
-                       j -> repeat(lpad(((doc_id*7 + ((j // w) // d)*13
-                                          + ((j % w) // d)*31)
-                                         % 256)::VARCHAR, 3, '0'),
-                                   3)), '')) AS sample_md5,
-                   CAST(0 AS BIGINT) AS black_n,
-                   'ok' AS ok
-            FROM (
-                SELECT doc_id,
-                       4 * (1 + doc_id % 5) AS w,
-                       4 * (1 + doc_id % 3) AS h,
-                       CASE WHEN doc_id % 4 = 3 THEN 16 ELSE 4 END AS d
-                FROM documents)
-            UNION ALL
             -- branch 'bm': palettized / RLE legacy BMPs. Index stream =
             -- md5(i) hex over w*h; even ids: 8-bit gray palette →
             -- sample = the char's ASCII code; odd ids: 4-bit palette →
@@ -2274,28 +2239,18 @@ def oracle_sql() -> dict[str, str]:
             FROM vp
             UNION ALL
             -- branch 'aw': real animated-WebP sampling (full-canvas
-            -- overwrite frames, so composite k == frame k). Even frames
-            -- are VP8L lossless of md5('i:k') hex ASCII taken straight
-            -- as the RGB raster; odd frames are lossy VP8 flat 4x4
-            -- blocks v = 48 + (i*7 + k*11 + (y//4)*13 + (x//4)*31) % 55
-            -- (ASCII range, chroma 128 → RGB = (v,v,v)).
+            -- overwrite frames, so composite k == frame k). Every frame
+            -- is VP8L lossless of md5('i:k') hex ASCII taken straight
+            -- as the RGB raster.
             SELECT 'aw' || doc_id AS media_ref,
                    'aw' AS branch,
                    i AS frame_idx,
                    fo AS frame_offset,
                    CAST(w * h * 3 AS BIGINT) AS n_bytes,
-                   md5(CASE WHEN (doc_id + fo) % 2 = 0 THEN
-                       substr(repeat(md5(doc_id::VARCHAR || ':' ||
+                   md5(substr(repeat(md5(doc_id::VARCHAR || ':' ||
                                          fo::VARCHAR),
                                      ((w*h*3) // 32 + 1)::INT),
-                              1, (w*h*3)::INT)
-                   ELSE
-                       array_to_string(list_transform(range(0, (w*h)::INT),
-                           j -> repeat(chr((48 + (doc_id*7 + fo*11
-                                 + ((j // w) // 4)*13
-                                 + ((j % w) // 4)*31) % 55)::INT),
-                                       3)), '')
-                   END) AS content_md5
+                              1, (w*h*3)::INT)) AS content_md5
             FROM (
                 SELECT doc_id, w, h, i, i * step AS fo
                 FROM (

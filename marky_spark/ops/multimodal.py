@@ -17,8 +17,8 @@ ops/audio routes through:
   deterministic digest-derived stand-ins (``fake_decode`` /
   ``fake_resize``), and so does an operator whose hook a row leaves
   empty; recognized-but-unimplemented modes (arithmetic JPEG, interlaced
-  APNG) classify as ``codec_unavailable`` rows (each codec's Unsupported
-  error is a NotImplementedError).
+  APNG, lossy VP8 WebP) classify as ``codec_unavailable`` rows (each
+  codec's Unsupported error is a NotImplementedError).
 
 Operators:
 - ``attach_media``      — documents × media side-table join (broadcast)
@@ -285,7 +285,7 @@ def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
     frame's index in the animation: animated GIF (LZW decode + per-frame
     compositing with disposal/transparency), animated PNG (acTL/fcTL/fdAT
     walk, dispose/blend compositing) and animated WebP (VP8X/ANIM/ANMF
-    walk, per-frame VP8L or VP8 decode) emit each sampled canvas as a
+    walk, per-frame VP8L decode) emit each sampled canvas as a
     standalone PNG; MJPEG AVI (RIFF LIST walk to the ``movi`` members)
     emits each sampled frame's standalone baseline-JPEG payload, which
     decode_pixels then really decodes. Everything else — and any walk
@@ -1070,18 +1070,11 @@ def synth_awebp_media(docs: DataFrame) -> DataFrame:
     full-canvas overwrite frames (no alpha, blend bit set), so the
     composited canvas for frame k IS frame k's own content and the SQL
     oracle reconstructs each sampled frame with no WebP library.  Frame
-    codecs ALTERNATE per frame:
-
-    - (i + k) even: VP8L lossless of md5(f"{i}:{k}") hex ASCII repeated
-      over w*h*3 bytes (same construction as the GIF/PNG corpora),
-    - (i + k) odd: lossy VP8 (ops/vp8codec) with flat 4x4 luma blocks
-      v = 48 + (i*7 + k*11 + (y//4)*13 + (x//4)*31) % 55 — ASCII-range
-      values, so the oracle renders them with chr() — chroma 128.
-
-    One animation therefore pins BOTH still decoders plus the
-    VP8X/ANIM/ANMF walk and the compositing identity."""
-    from .vp8codec import vp8_encode_flat
-    from .webpcodec import _webp_payload, webp_encode, webp_encode_anim
+    k is VP8L lossless of md5(f"{i}:{k}") hex ASCII repeated over w*h*3
+    bytes (same construction as the GIF/PNG corpora), so one animation
+    pins the VP8X/ANIM/ANMF walk, the per-frame VP8L decode and the
+    compositing identity."""
+    from .webpcodec import webp_encode, webp_encode_anim
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1091,69 +1084,13 @@ def synth_awebp_media(docs: DataFrame) -> DataFrame:
                 w = 4 * (1 + i % 4)
                 h = 4 * (1 + i % 2)
                 n = w * h * 3
-                frames = []
+                stills = []
                 for k in range(5 + i % 8):
-                    if (i + k) % 2 == 0:
-                        hexs = hashlib.md5(f"{i}:{k}".encode()).hexdigest()
-                        px = (hexs * (-(-n // len(hexs))))[:n]
-                        still = webp_encode(px.encode("ascii"), w, h, 3)
-                        frames.append(_webp_payload(still)[:2])
-                    else:
-                        mb_w, mb_h = (w + 15) >> 4, (h + 15) >> 4
-                        grid = [[48 + (i * 7 + k * 11 + by * 13 + bx * 31)
-                                 % 55 for bx in range(mb_w * 4)]
-                                for by in range(mb_h * 4)]
-                        frames.append((b"VP8 ",
-                                       vp8_encode_flat(grid, w, h)))
+                    hexs = hashlib.md5(f"{i}:{k}".encode()).hexdigest()
+                    px = (hexs * (-(-n // len(hexs))))[:n]
+                    stills.append(webp_encode(px.encode("ascii"), w, h, 3))
                 rows.append((f"aw{i}", "image/webp",
-                             webp_encode_anim(w, h, frames)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
-
-
-def synth_vp8_media(docs: DataFrame) -> DataFrame:
-    """Deterministic LOSSY-WebP (VP8, ops/vp8codec) corpus derived from
-    doc ids.  Luma is flat per coding block with values that are pure
-    doc_id arithmetic, which is exactly the subset the RFC 6386 encoder
-    reproduces bit-exactly (DC-only residual construction, module
-    docstring) — so the driver SQL oracle rebuilds every decoded RGB
-    sample WITHOUT a VP8 library while the decoder must run the real
-    bool decoder / tree walk / dequant / WHT / iDCT / predictor chain:
-
-    - i % 4 != 3: B_PRED path, 4x4-flat blocks,
-      pixel(x, y) = (i*7 + (y//4)*13 + (x//4)*31) % 256
-    - i % 4 == 3: DC_PRED-16 path through Y2 / inverse WHT,
-      pixel(x, y) = (i*7 + (y//16)*13 + (x//16)*31) % 256
-    - token partition count rotates 1/2/4/8 by i % 4; the
-      mb_no_coeff_skip flag rotates by i % 2; chroma is constant 128 so
-      RGB = (Y, Y, Y) exactly through the BT.601 integer conversion.
-
-    Dimensions (w = 4*(1 + i%5), h = 4*(1 + i%3)) include
-    non-macroblock-multiples, so the padded-grid crop is always in
-    play."""
-    from .vp8codec import vp8_encode_flat, wrap_webp_vp8
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w = 4 * (1 + i % 5)
-                h = 4 * (1 + i % 3)
-                mb_w, mb_h = (w + 15) >> 4, (h + 15) >> 4
-                mb16 = i % 4 == 3
-                rows_n = mb_h if mb16 else mb_h * 4
-                cols_n = mb_w if mb16 else mb_w * 4
-                grid = [[(i * 7 + by * 13 + bx * 31) % 256
-                         for bx in range(cols_n)] for by in range(rows_n)]
-                stream = vp8_encode_flat(
-                    grid, w, h, mb16=mb16,
-                    n_partitions=(1, 2, 4, 8)[i % 4],
-                    skip_enabled=i % 2 == 0)
-                rows.append((f"v8{i}", "image/webp",
-                             wrap_webp_vp8(stream)))
+                             webp_encode_anim(w, h, stills)))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
 

@@ -12,10 +12,13 @@ RIFF container layout (both published by Google under CC-BY; datatracker
 RFC 9649 carries the same text):
 
 - RIFF walk: 'RIFF' size 'WEBP', then chunks; 'VP8L' is the lossless
-  payload, 'VP8 ' (lossy VP8) routes to ops/vp8codec's RFC 6386
-  keyframe decoder, 'ANMF' (animation frames) is a typed
-  :class:`WebpUnsupportedError`, 'VP8X' extended headers are walked for
-  the embedded still.
+  payload, 'VP8X' extended headers are walked for the embedded still,
+  and 'VP8 ' (lossy VP8, with or without its 'ALPH' plane) and
+  'ANIM'/'ANMF' (animation, see :func:`webp_decode_frames`) are a typed
+  :class:`WebpUnsupportedError`. Lossy VP8 is deliberately not decoded:
+  with no reference decoder or real VP8 fixture in reach, its pixels
+  could not be verified. 'ALPH' is defined only for a 'VP8 ' image, so
+  'ALPH' before 'VP8L' is a :class:`WebpError`.
 - VP8L header: 0x2f signature, 14-bit w-1 / h-1, alpha hint, version 0.
   All reads are LSB-first within little-endian bytes; prefix-code bits
   are consumed MSB-of-code-first (the DEFLATE convention).
@@ -43,10 +46,10 @@ hand-assembled bit-level vectors in tests/test_webp.py, and the driver's
 SQL pixel oracle pin the decode.
 
 Hostile input raises :class:`WebpError`; recognized-but-unimplemented
-modes (animation, VP8 interframes) raise :class:`WebpUnsupportedError`
-— the
-usual poison-pill / codec_unavailable contract. Dimensions are capped
-before any allocation.
+modes (lossy VP8, animation as a still) raise
+:class:`WebpUnsupportedError` — the usual poison-pill /
+codec_unavailable contract. Dimensions are capped before any
+allocation.
 """
 from __future__ import annotations
 
@@ -537,12 +540,9 @@ def _predict(mode: int, out: list, pos: int, w: int) -> int:
 
 
 # ------------------------------------------------------------ container
-def _webp_payload(data: bytes) -> tuple[bytes, bytes, bytes | None]:
-    """RIFF walk → ``(kind, payload, alph_or_None)`` for the still
-    image: ``b"VP8L"`` (lossless) or ``b"VP8 "`` (lossy, ops/vp8codec),
-    plus the ALPH chunk payload when the VP8X container carries a
-    separate alpha plane.  Typed errors for animated / malformed
-    containers."""
+def _webp_payload(data: bytes) -> bytes:
+    """RIFF walk → the VP8L chunk payload of the still image.  Typed
+    errors for lossy, animated and malformed containers."""
     if not looks_like_webp(data):
         raise WebpError("not a WebP (no RIFF/WEBP signature)")
     (riff_size,) = struct.unpack_from("<I", data, 4)
@@ -550,7 +550,7 @@ def _webp_payload(data: bytes) -> tuple[bytes, bytes, bytes | None]:
         raise WebpError("RIFF size field outside the file")
     at = 12
     end = 8 + riff_size
-    alph = None
+    alph = False
     while at + 8 <= end:
         fourcc = data[at:at + 4]
         (size,) = struct.unpack_from("<I", data, at + 4)
@@ -558,9 +558,14 @@ def _webp_payload(data: bytes) -> tuple[bytes, bytes, bytes | None]:
         if payload_at + size > end:
             raise WebpError(f"chunk {fourcc!r} overruns the container")
         if fourcc == b"ALPH":
-            alph = data[payload_at:payload_at + size]
-        elif fourcc in (b"VP8L", b"VP8 "):
-            return fourcc, data[payload_at:payload_at + size], alph
+            alph = True
+        elif fourcc == b"VP8 ":
+            raise WebpUnsupportedError("lossy VP8 WebP not implemented")
+        elif fourcc == b"VP8L":
+            if alph:
+                raise WebpError(
+                    "ALPH chunk with a VP8L image (VP8L has alpha)")
+            return data[payload_at:payload_at + size]
         elif fourcc == b"ANMF" or fourcc == b"ANIM":
             raise WebpUnsupportedError("animated WebP not implemented")
         at = payload_at + size + (size & 1)
@@ -573,27 +578,7 @@ def webp_decode(data: bytes) -> tuple[int, int, int, bytes]:
     decode_pixels keys on)."""
     import numpy as np
 
-    kind, payload, alph = _webp_payload(data)
-    if kind == b"VP8 ":
-        # lossy still: the RFC 6386 keyframe decoder (ops/vp8codec);
-        # its typed errors inherit ValueError / NotImplementedError so
-        # the decode_pixels error contract is unchanged
-        from .vp8codec import vp8_decode
-
-        w, h, ch, rgb = vp8_decode(payload)
-        if alph is None:
-            return w, h, ch, rgb
-        plane = _decode_alpha(alph, w, h)
-        if plane == b"\xff" * (w * h):
-            return w, h, 3, rgb
-        rgba = bytearray(w * h * 4)
-        rgba[0::4] = rgb[0::3]
-        rgba[1::4] = rgb[1::3]
-        rgba[2::4] = rgb[2::3]
-        rgba[3::4] = plane
-        return w, h, 4, bytes(rgba)
-    if alph is not None:
-        raise WebpError("ALPH chunk with a VP8L image (VP8L has alpha)")
+    payload = _webp_payload(data)
     br = _BitReader(payload)
     if br.read(8) != 0x2F:
         raise WebpError("bad VP8L signature byte")
@@ -994,8 +979,8 @@ MAX_ANIM_OUT_BYTES = 256 << 20  # and a total-output bound: 64 frames of
 MAX_ANIM_PIXELS = 1 << 20       # animated canvases cap far below the
                                 # still-image cap: compositing runs
                                 # per-pixel in Python, so this cap IS
-                                # the per-blob time bound (the vp8codec
-                                # argument); real animations are small
+                                # the per-blob time bound; real
+                                # animations are small
 
 
 def webp_decode_frames(data: bytes) -> tuple[int, int, list[bytes]]:
@@ -1007,12 +992,11 @@ def webp_decode_frames(data: bytes) -> tuple[int, int, list[bytes]]:
     (x/2, y/2, w-1, h-1 as 24-bit fields), a duration, and two flag
     bits — blending (0 = alpha-blend onto the canvas, 1 = overwrite)
     and disposal (1 = fill the rect with the ANIM background color
-    after the frame is rendered).  Frame payloads are plain VP8L
-    (ops above) or VP8 (ops/vp8codec) still chunks; a VP8 frame's ALPH
-    alpha plane is decoded via ``_decode_alpha`` and alpha-blended onto
-    the canvas per the ANMF blend flag (ALPH before a VP8L frame is a
-    :class:`WebpError`).  Non-animated files raise :class:`WebpError`
-    (callers fall back to ``webp_decode``)."""
+    after the frame is rendered).  A frame's subchunks take the still
+    walk (``webp_decode``), so only a VP8L frame decodes: a lossy VP8
+    frame raises :class:`WebpUnsupportedError` and ALPH before a VP8L
+    frame raises :class:`WebpError`.  Non-animated files raise
+    :class:`WebpError` (callers fall back to ``webp_decode``)."""
     if not looks_like_webp(data):
         raise WebpError("not a WebP (no RIFF/WEBP signature)")
     (riff_size,) = struct.unpack_from("<I", data, 4)
@@ -1074,48 +1058,11 @@ def webp_decode_frames(data: bytes) -> tuple[int, int, list[bytes]]:
             if fx + fw > canvas_w or fy + fh > canvas_h:
                 raise WebpError("ANMF frame outside the canvas")
             sub = payload[16:]
-            if len(sub) < 8:
-                raise WebpError("ANMF without a frame payload")
-            sc = sub[0:4]
-            (ssize,) = struct.unpack_from("<I", sub, 4)
-            if 8 + ssize > len(sub):
-                raise WebpError("ANMF frame payload overruns the chunk")
-            body = sub[8:8 + ssize]
-            frame_alph = None
-            if sc == b"ALPH":
-                frame_alph = body
-                sub = sub[8 + ssize + (ssize & 1):]
-                if len(sub) < 8:
-                    raise WebpError("ANMF alpha without an image chunk")
-                sc = sub[0:4]
-                (ssize,) = struct.unpack_from("<I", sub, 4)
-                if 8 + ssize > len(sub):
-                    raise WebpError(
-                        "ANMF frame payload overruns the chunk")
-                body = sub[8:8 + ssize]
-            if sc == b"VP8L":
-                pw, ph, ch, px = webp_decode(
-                    b"RIFF" + (12 + ((ssize + 1) & ~1)).to_bytes(4, "little")
-                    + b"WEBP" + b"VP8L" + ssize.to_bytes(4, "little")
-                    + body + (b"\x00" if ssize & 1 else b""))
-            elif sc == b"VP8 ":
-                from .vp8codec import vp8_decode
-
-                pw, ph, ch, px = vp8_decode(body)
-            else:
-                raise WebpError(f"unexpected ANMF subchunk {sc!r}")
+            pw, ph, ch, px = webp_decode(
+                b"RIFF" + (4 + len(sub)).to_bytes(4, "little") + b"WEBP"
+                + sub)
             if (pw, ph) != (fw, fh):
                 raise WebpError("ANMF frame dims disagree with payload")
-            if frame_alph is not None:
-                if ch == 4:
-                    raise WebpError("ANMF ALPH with a VP8L frame")
-                plane = _decode_alpha(frame_alph, fw, fh)
-                rgba_px = bytearray(fw * fh * 4)
-                rgba_px[0::4] = px[0::3]
-                rgba_px[1::4] = px[1::3]
-                rgba_px[2::4] = px[2::3]
-                rgba_px[3::4] = plane
-                px, ch = bytes(rgba_px), 4
             # composite the rect
             for r in range(fh):
                 dst = ((fy + r) * canvas_w + fx) * 4
@@ -1159,15 +1106,13 @@ def webp_decode_frames(data: bytes) -> tuple[int, int, list[bytes]]:
     return canvas_w, canvas_h, frames_out
 
 
-def webp_encode_anim(width: int, height: int,
-                     frames: list[tuple[bytes, bytes]],
+def webp_encode_anim(width: int, height: int, stills: list[bytes],
                      duration_ms: int = 40) -> bytes:
-    """Assemble an animated WebP from already-encoded full-canvas still
-    chunks: ``frames`` is a list of ``(fourcc, chunk_payload)`` with
-    fourcc ``b"VP8L"`` or ``b"VP8 "``.  Frames overwrite the canvas
-    (blend bit set), disposal none — the compositing identity the synth
-    corpus and its SQL oracle lean on."""
-    if not frames:
+    """Assemble an animated WebP from full-canvas VP8L stills
+    (``webp_encode`` output), one frame each.  Frames overwrite the
+    canvas (blend bit set), disposal none — the compositing identity the
+    synth corpus and its SQL oracle lean on."""
+    if not stills:
         raise WebpError("animated WebP needs at least one frame")
     body = bytearray()
     vp8x = bytes((0x02, 0, 0, 0)) \
@@ -1176,10 +1121,9 @@ def webp_encode_anim(width: int, height: int,
     body += b"VP8X" + len(vp8x).to_bytes(4, "little") + vp8x
     anim = bytes((255, 255, 255, 255)) + (0).to_bytes(2, "little")
     body += b"ANIM" + len(anim).to_bytes(4, "little") + anim
-    for fourcc, payload in frames:
-        if fourcc not in (b"VP8L", b"VP8 "):
-            raise WebpError(f"bad animation frame fourcc {fourcc!r}")
-        sub = fourcc + len(payload).to_bytes(4, "little") + payload
+    for still in stills:
+        payload = _webp_payload(still)
+        sub = b"VP8L" + len(payload).to_bytes(4, "little") + payload
         if len(payload) & 1:
             sub += b"\x00"
         anmf = ((0).to_bytes(3, "little")          # x/2
@@ -1194,113 +1138,3 @@ def webp_encode_anim(width: int, height: int,
             body += b"\x00"
     return (b"RIFF" + (4 + len(body)).to_bytes(4, "little")
             + b"WEBP" + bytes(body))
-
-
-# ----------------------------------------------------------- alpha plane
-def _unfilter_alpha(filt: int, w: int, h: int, data: bytearray) -> None:
-    """In-place ALPH filtering inverse (libwebp filter semantics: the
-    first pixel of a row predicts from the pixel above; the top row
-    degrades to horizontal)."""
-    if filt == 0:
-        return
-    for y in range(h):
-        row = y * w
-        if y == 0 or filt == 1:                    # horizontal
-            pred = data[row - w] if y else 0
-            for x in range(w):
-                pred = data[row + x] = (data[row + x] + pred) & 0xFF
-        elif filt == 2:                            # vertical
-            for x in range(w):
-                data[row + x] = (data[row + x] + data[row - w + x]) & 0xFF
-        else:                                      # gradient
-            top_left = left = data[row - w]
-            for x in range(w):
-                top = data[row - w + x]
-                g = left + top - top_left
-                g = 0 if g < 0 else (255 if g > 255 else g)
-                left = data[row + x] = (data[row + x] + g) & 0xFF
-                top_left = top
-
-
-def _filter_alpha(filt: int, w: int, h: int, plane: bytes) -> bytes:
-    """The encode-side inverse of :func:`_unfilter_alpha`."""
-    if filt == 0:
-        return plane
-    out = bytearray(w * h)
-    for y in range(h):
-        row = y * w
-        for x in range(w):
-            if y == 0 or filt == 1:
-                pred = plane[row + x - 1] if x else \
-                    (plane[row - w] if y else 0)
-            elif filt == 2:
-                pred = plane[row - w + x]
-            else:
-                if x == 0:
-                    pred = plane[row - w]
-                else:
-                    g = (plane[row + x - 1] + plane[row - w + x]
-                         - plane[row - w + x - 1])
-                    pred = 0 if g < 0 else (255 if g > 255 else g)
-            out[row + x] = (plane[row + x] - pred) & 0xFF
-    return bytes(out)
-
-
-def _decode_alpha(payload: bytes, w: int, h: int) -> bytes:
-    """ALPH chunk → w*h alpha plane.  Header byte (MSB→LSB): 2 reserved,
-    2 preprocessing (decoder no-op), 2 filtering, 2 compression (0 raw,
-    1 headerless VP8L with alpha in the green channel)."""
-    if not payload:
-        raise WebpError("empty ALPH chunk")
-    comp = payload[0] & 3
-    filt = (payload[0] >> 2) & 3
-    if comp == 0:
-        if len(payload) - 1 < w * h:
-            raise WebpError("raw ALPH plane shorter than the image")
-        plane = bytearray(payload[1:1 + w * h])
-    elif comp == 1:
-        br = _BitReader(payload[1:])
-        px = _decode_image(br, w, h, True)
-        if len(px) != w * h:
-            raise WebpError("ALPH lossless plane size mismatch")
-        plane = bytearray((p >> 8) & 0xFF for p in px)
-    else:
-        raise WebpError(f"reserved ALPH compression {comp}")
-    _unfilter_alpha(filt, w, h, plane)
-    return bytes(plane)
-
-
-def _encode_alpha_stream(plane: bytes) -> bytes:
-    """Headerless VP8L stream carrying ``plane`` in the green channel —
-    the compressed-ALPH payload body (transform bit 0, no cache, no
-    meta-prefix, one literal group)."""
-    bw = _BitWriter()
-    bw.write(0, 1)  # no transforms
-    bw.write(0, 1)  # no color cache
-    bw.write(0, 1)  # no meta-prefix image
-    g_freq: dict[int, int] = {}
-    for a in plane:
-        g_freq[a] = g_freq.get(a, 0) + 1
-    codes = []
-    for freq, alphabet in ((g_freq, 256 + 24), ({0: 1}, 256),
-                           ({0: 1}, 256), ({255: 1}, 256), ({0: 1}, 40)):
-        lengths = _pad_to_complete(_huffman_lengths(freq, 15), alphabet, 15)
-        codes.append(_write_prefix_code(bw, lengths, alphabet))
-    gc, rc, bc, ac, _ = codes
-    for a in plane:
-        code, ln = gc[a]
-        bw.write_code(code, ln)
-        for table, sym in ((rc, 0), (bc, 0), (ac, 255)):
-            code, ln = table[sym]
-            bw.write_code(code, ln)
-    return bw.tobytes()
-
-
-def encode_alpha_chunk(plane: bytes, w: int, h: int, *,
-                       filtering: int = 0, lossless: bool = True) -> bytes:
-    """Build an ALPH chunk payload for tests / the synth corpus."""
-    filtered = _filter_alpha(filtering, w, h, plane)
-    hdr = (filtering << 2) | (1 if lossless else 0)
-    if lossless:
-        return bytes((hdr,)) + _encode_alpha_stream(filtered)
-    return bytes((hdr,)) + filtered

@@ -58,7 +58,6 @@ def main() -> int:
         synth_cmyk_media,
         synth_gif_media,
         synth_png_media,
-        synth_vp8_media,
     )
     from marky_spark.pipeline import (
         SnapshotStore,
@@ -74,14 +73,13 @@ def main() -> int:
     })
     spark.sparkContext.setLogLevel("ERROR")
 
-    # corpus plan: 7 real-encoder branches over disjoint doc_id ranges
-    # (~30% png/tiff/ppm/vp8l-webp rotation, ~20% gif, ~10% cmyk-jpeg,
-    # ~10% lossy VP8, ~10% palettized/RLE BMP, ~5%+5% animated
-    # WebP/APNG through frame_sample, ~5% audio — the slow pure-Python
-    # paths get presence, not half the budget)
-    n_png = int(n_blobs * 0.30)
+    # corpus plan: 6 real-encoder branches over disjoint doc_id ranges
+    # (~40% png/tiff/ppm/vp8l-webp rotation, ~20% gif, ~10% cmyk-jpeg,
+    # ~10% palettized/RLE BMP, ~5%+5% animated WebP/APNG through
+    # frame_sample, ~5% audio — the slow pure-Python paths get presence,
+    # not half the budget)
+    n_png = int(n_blobs * 0.40)
     n_gif = int(n_blobs * 0.20)
-    n_vp8 = int(n_blobs * 0.10)
     n_bmp = int(n_blobs * 0.10)
     n_awebp = int(n_blobs * 0.05)
     n_apng = int(n_blobs * 0.05)
@@ -89,7 +87,7 @@ def main() -> int:
     # ADPCM) — halve the id range so the blob budget holds
     n_wav_ids = int(n_blobs * 0.05) // 2
     n_audio = 2 * n_wav_ids
-    n_cmyk = (n_blobs - n_png - n_gif - n_vp8 - n_bmp
+    n_cmyk = (n_blobs - n_png - n_gif - n_bmp
               - n_awebp - n_apng - n_audio)
 
     def ids(n: int) -> "F.DataFrame":
@@ -111,7 +109,6 @@ def main() -> int:
                   synth_gif_media(ids(n_gif)).select(
                       "media_ref", "mime", "payload")))
               .unionByName(poisoned(synth_cmyk_media(ids(n_cmyk))))
-              .unionByName(poisoned(synth_vp8_media(ids(n_vp8))))
               .unionByName(poisoned(synth_bmp_media(ids(n_bmp)))))
     # animations stay unpoisoned: a malformed animation FALLS BACK to
     # byte-slice frames by design (no error row), so it would skew the
@@ -119,20 +116,11 @@ def main() -> int:
     anims = (synth_awebp_media(ids(n_awebp))
              .unionByName(synth_apng_media(ids(n_apng))))
     audio = synth_wav_media(ids(n_wav_ids))
-    # the poison predicate keys on the media_ref's TRAILING DIGITS (the
-    # same regexp the job uses); prefixes that themselves end in digits
-    # ("v8", and "sk" does not but "v8{i}" reads as 8{i}) shift the
-    # extracted number, so count plants with the identical extraction
-    import re as _re
-
-    def _tail(ref: str) -> int:
-        return int(_re.search(r"(\d+)$", ref).group(1))
-
-    n_poison = sum(
-        sum(1 for i in range(n)
-            if _tail(f"{prefix}{i}") % POISON_EVERY == 0)
-        for prefix, n in (("p", n_png), ("a", n_gif), ("sk", n_cmyk),
-                          ("v8", n_vp8), ("bm", n_bmp)))
+    # the poison predicate keys on the media_ref's trailing digits (the
+    # same regexp the job uses); no image prefix (p, a, sk, bm) ends in a
+    # digit, so each branch plants ids 0, POISON_EVERY, 2*POISON_EVERY, …
+    n_poison = sum(-(-n // POISON_EVERY)
+                   for n in (n_png, n_gif, n_cmyk, n_bmp))
 
     n_buckets, waves = 32, 4
     store = SnapshotStore(out_dir)
@@ -144,7 +132,7 @@ def main() -> int:
             n_buckets).persist(StorageLevel.MEMORY_AND_DISK)
         committed = {b for b in store.committed_buckets()}
         pending = [b for b in range(n_buckets) if b not in committed]
-        _clean_uncommitted(out_dir, pending)
+        _clean_uncommitted(out_dir, pending, len(store.read()["snapshots"]))
         per_wave = max(1, -(-len(pending) // waves))
         done = 0
         for w in range(0, len(pending), per_wave):
@@ -275,7 +263,7 @@ def main() -> int:
         "metric": "media blobs decoded/sec (decode_pixels + "
                   "audio_features, crash+resume)",
         "n_blobs": n_blobs,
-        "n_images": n_png + n_gif + n_cmyk + n_vp8 + n_bmp,
+        "n_images": n_png + n_gif + n_cmyk + n_bmp,
         "n_anims": n_awebp + n_apng,
         "n_audio": n_audio,
         "n_poison_planted": n_poison,

@@ -148,6 +148,8 @@ def test_image_codec_mutations_stay_typed():
                     color_cache_bits=4, lz77=True),
         webp_encode(pal_px, 16, 12, 3, palette=True),
     ]
+    from tests.test_webp import vp8_routed_webps
+    samples += vp8_routed_webps().values()
     cmyk = bytes((i * 31) % 256 for i in range(16 * 12 * 4))
     samples += [
         jpeg_encode(cmyk, 16, 12, 4),

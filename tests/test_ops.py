@@ -252,8 +252,8 @@ def test_codec_table_routing(spark):
     ids = spark.range(0, 20).withColumnRenamed("id", "doc_id")
     gens = [mm.synth_png_media, mm.synth_gif_media, mm.synth_agif_media,
             mm.synth_avi_media, mm.synth_bmp_media, mm.synth_cmyk_media,
-            mm.synth_apng_media, mm.synth_awebp_media, mm.synth_vp8_media,
-            mm.synth_scan_media, synth_wav_media]
+            mm.synth_apng_media, mm.synth_awebp_media, mm.synth_scan_media,
+            synth_wav_media]
     rows = [(r["media_ref"], r["mime"], bytes(r["payload"]))
             for g in gens for r in g(ids).collect()]
     px = bytes(range(8 * 6 * 4))

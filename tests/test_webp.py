@@ -1,8 +1,9 @@
 """WebP lossless codec (ops/webpcodec): hand-assembled bit-level
 vectors (independent of the encoder), round-trips across the VP8L
 feature matrix, decoder-only transform paths (predictor, cross-color,
-meta prefix groups) crafted bit by bit, container walking, and hostile
-inputs."""
+meta prefix groups) crafted bit by bit, container walking, hostile
+inputs, and hand-built lossy VP8 containers that must stay typed
+unsupported."""
 from __future__ import annotations
 
 import struct
@@ -24,11 +25,18 @@ def _px(w, h, ch=3, seed=0):
 
 
 # ------------------------------------------------------------ container
+def _chunk(fourcc: bytes, payload: bytes) -> bytes:
+    chunk = fourcc + struct.pack("<I", len(payload)) + payload
+    return chunk + b"\x00" if len(payload) & 1 else chunk
+
+
+def _riff(*chunks: bytes) -> bytes:
+    body = b"".join(chunks)
+    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
+
+
 def _wrap(payload: bytes) -> bytes:
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+    return _riff(_chunk(b"VP8L", payload))
 
 
 class _W:
@@ -90,6 +98,52 @@ def _trivial_trees(bw, g, r, b, a):
     _simple_code(bw, [b])
     _simple_code(bw, [a])
     _simple_code(bw, [0])  # distance, unused
+
+
+def _flat_vp8l(w, h, v):
+    """Hand-assembled VP8L payload of one opaque gray value."""
+    bw = _header(w, h)
+    bw.b(0, 1).b(0, 1).b(0, 1)  # no transforms / color cache / meta
+    _trivial_trees(bw, g=v, r=v, b=v, a=255)
+    return bw.bytes()
+
+
+def _vp8x(flags, w, h):
+    return _chunk(b"VP8X", bytes((flags, 0, 0, 0))
+                  + (w - 1).to_bytes(3, "little")
+                  + (h - 1).to_bytes(3, "little"))
+
+
+def _anim(w, h, *frames, blend=False):
+    """Animated WebP whose full-canvas ANMF frames carry the given
+    subchunk bytes (ALPH / VP8L / VP8 chunks)."""
+    return _riff(_vp8x(0x02, w, h),
+                 _chunk(b"ANIM", b"\xff" * 4 + b"\x00\x00"),
+                 *(_chunk(b"ANMF", b"\x00" * 6
+                          + (w - 1).to_bytes(3, "little")
+                          + (h - 1).to_bytes(3, "little")
+                          + (40).to_bytes(3, "little")
+                          + bytes((0x00 if blend else 0x02,)) + f)
+                   for f in frames))
+
+
+# lossy VP8 keyframe header alone (RFC 6386 §9.1): frame tag (key frame,
+# version 0, shown, first partition size 0), start code 9d 01 2a, 14-bit
+# width 8 and height 8 with no scaling
+_VP8_KEYFRAME_8X8 = bytes.fromhex("100000" "9d012a" "0800" "0800")
+
+
+def vp8_routed_webps() -> dict[str, bytes]:
+    """The three containers whose image is lossy VP8, built by hand: a
+    plain still, a VP8X + ALPH + VP8 still, and an animation whose
+    second frame is VP8 (its first is a VP8L frame that decodes)."""
+    vp8 = _chunk(b"VP8 ", _VP8_KEYFRAME_8X8)
+    return {
+        "still": _riff(vp8),
+        "alph_still": _riff(_vp8x(0x10, 8, 8),
+                            _chunk(b"ALPH", b"\x00" + b"\x80" * 64), vp8),
+        "anim": _anim(8, 8, _chunk(b"VP8L", _flat_vp8l(8, 8, 10)), vp8),
+    }
 
 
 def test_hand_assembled_1x1():
@@ -452,25 +506,47 @@ def test_hostile_inputs_are_typed():
         webp_decode(_wrap(bytes(raw) + b"\x00" * 8))
 
 
-def test_lossy_routes_and_animated_is_codec_unavailable():
-    # a VP8 chunk now routes to ops/vp8codec: a 4-byte payload is a
-    # malformed stream (typed Vp8Error, a ValueError), an interframe is
-    # typed-unsupported
-    from marky_spark.ops.vp8codec import Vp8Error, Vp8UnsupportedError
+def test_lossy_routes_and_animated_is_codec_unavailable(spark):
+    """Lossy VP8 is a typed unsupported mode, never pixels: webp_decode /
+    decode_image raise WebpUnsupportedError, decode_pixels and
+    pixel_features give codec_unavailable rows with null dims, and
+    frame_sample falls back to its byte-slice rows."""
+    from marky_spark.ops.multimodal import (
+        MEDIA_SCHEMA,
+        decode_image,
+        decode_pixels,
+        frame_sample,
+        pixel_features,
+    )
+    from marky_spark.ops.webpcodec import webp_decode_frames
 
-    lossy = (b"RIFF" + struct.pack("<I", 16) + b"WEBP"
-             + b"VP8 " + struct.pack("<I", 4) + b"\x00" * 4)
-    with pytest.raises(Vp8Error):
-        webp_decode(lossy)
-    inter = (b"RIFF" + struct.pack("<I", 22) + b"WEBP"
-             + b"VP8 " + struct.pack("<I", 10)
-             + b"\x01" + b"\x00" * 9)
-    with pytest.raises(Vp8UnsupportedError):
-        webp_decode(inter)
+    blobs = vp8_routed_webps()
+    for blob in blobs.values():
+        with pytest.raises(WebpUnsupportedError):
+            decode_image(blob)
+    with pytest.raises(WebpUnsupportedError, match="lossy VP8"):
+        webp_decode_frames(blobs["anim"])
     anim = (b"RIFF" + struct.pack("<I", 16) + b"WEBP"
             + b"ANIM" + struct.pack("<I", 4) + b"\x00" * 4)
     with pytest.raises(WebpUnsupportedError):
         webp_decode(anim)
+
+    media = spark.createDataFrame(
+        [(ref, "image/webp", blob) for ref, blob in blobs.items()],
+        schema=MEDIA_SCHEMA)
+    for op in (decode_pixels, pixel_features):
+        rows = op(media).collect()
+        assert sorted(r["media_ref"] for r in rows) == sorted(blobs)
+        for r in rows:
+            assert r["ok"] == "codec_unavailable", (op.__name__, r)
+            assert r["width"] is None and r["height"] is None
+    got = sorted((r["media_ref"], r["frame_idx"], r["frame_offset"],
+                  bytes(r["frame_bytes"]))
+                 for r in frame_sample(media, n_frames=4).collect())
+    step = {ref: len(blob) // 4 for ref, blob in blobs.items()}
+    assert got == sorted((ref, i, i * step[ref],
+                          blob[i * step[ref]:(i + 1) * step[ref]])
+                         for ref, blob in blobs.items() for i in range(4))
 
 
 def test_vp8x_container_walks_to_vp8l():
@@ -591,28 +667,23 @@ def test_decode_pixels_routes_webp(spark):
 # ------------------------------------------------------------- animation
 
 def test_animated_webp_mixed_codecs_roundtrip():
-    """Full-canvas overwrite frames: composite k == frame k, alternating
-    VP8L lossless and lossy-VP8 keyframes."""
-    from marky_spark.ops.vp8codec import vp8_encode_flat
-    from marky_spark.ops.webpcodec import (
-        _webp_payload,
-        webp_decode_frames,
-        webp_encode,
-        webp_encode_anim,
-    )
+    """Full-canvas overwrite frames: composite k == frame k for VP8L
+    frames; one lossy VP8 frame makes the whole animation typed
+    unsupported rather than partially decoded."""
+    from marky_spark.ops.webpcodec import webp_decode_frames, webp_encode_anim
 
     w, h = 8, 8
     px0 = bytes((48 + i % 55) for i in range(w * h * 3))
-    f0 = _webp_payload(webp_encode(px0, w, h, 3))[:2]
-    grid = [[60 + (bx * 31 + by * 13) % 40 for bx in range(4)]
-            for by in range(4)]
-    f1 = (b"VP8 ", vp8_encode_flat(grid, w, h))
-    cw, ch_, frames = webp_decode_frames(webp_encode_anim(w, h, [f0, f1]))
+    px1 = bytes((60 + i % 40) for i in range(w * h * 3))
+    cw, ch_, frames = webp_decode_frames(webp_encode_anim(
+        w, h, [webp_encode(px0, w, h, 3), webp_encode(px1, w, h, 3)]))
     assert (cw, ch_) == (w, h) and len(frames) == 2
-    assert frames[0] == px0
-    exp = bytes(v for y in range(h) for x in range(w)
-                for v in [grid[y // 4][x // 4]] * 3)
-    assert frames[1] == exp
+    assert frames == [px0, px1]
+    vp8 = _chunk(b"VP8 ", _VP8_KEYFRAME_8X8)
+    for order in ((vp8, _chunk(b"VP8L", _flat_vp8l(w, h, 10))),
+                  (_chunk(b"VP8L", _flat_vp8l(w, h, 10)), vp8)):
+        with pytest.raises(WebpUnsupportedError):
+            webp_decode_frames(_anim(w, h, *order))
 
 
 def test_animated_webp_partial_frame_composites():
@@ -626,13 +697,11 @@ def test_animated_webp_partial_frame_composites():
     )
     import struct
 
-    base = _webp_payload(webp_encode(bytes([10]) * (8 * 8 * 3), 8, 8, 3))[:2]
-    small = _webp_payload(webp_encode(bytes([200]) * (4 * 4 * 3), 4, 4, 3))[:2]
+    base = webp_encode(bytes([10]) * (8 * 8 * 3), 8, 8, 3)
+    small = _webp_payload(webp_encode(bytes([200]) * (4 * 4 * 3), 4, 4, 3))
     blob = webp_encode_anim(8, 8, [base])
     # hand-add a 4x4 frame at (2, 2): x/2 = 1, y/2 = 1
-    sub = b"VP8L" + len(small[1]).to_bytes(4, "little") + small[1]
-    if len(small[1]) & 1:
-        sub += b"\x00"
+    sub = _chunk(b"VP8L", small)
     anmf = ((1).to_bytes(3, "little") + (1).to_bytes(3, "little")
             + (3).to_bytes(3, "little") + (3).to_bytes(3, "little")
             + (40).to_bytes(3, "little") + bytes((0x02,)) + sub)
@@ -651,13 +720,7 @@ def test_animated_webp_partial_frame_composites():
 
 
 def test_animated_webp_hostile_is_typed():
-    from marky_spark.ops.webpcodec import (
-        WebpError,
-        webp_decode_frames,
-        webp_encode_anim,
-        webp_encode,
-        _webp_payload,
-    )
+    from marky_spark.ops.webpcodec import webp_decode_frames, webp_encode_anim
 
     with pytest.raises(WebpError):
         webp_decode_frames(b"RIFF\x04\x00\x00\x00WEBP")
@@ -667,7 +730,7 @@ def test_animated_webp_hostile_is_typed():
     with pytest.raises(WebpError):
         webp_decode_frames(still)
     # declared rect disagreeing with the payload dims
-    f = _webp_payload(webp_encode(bytes([1]) * (8 * 8 * 3), 8, 8, 3))[:2]
+    f = webp_encode(bytes([1]) * (8 * 8 * 3), 8, 8, 3)
     blob = webp_encode_anim(4, 4, [f])
     with pytest.raises(WebpError, match="disagree"):
         webp_decode_frames(blob)
@@ -683,113 +746,26 @@ def test_animated_webp_hostile_is_typed():
 
 
 # ----------------------------------------------------------- alpha plane
-
-def _vp8x_alpha_still(w, h, vp8_stream, alph):
-    body = bytearray()
-    vp8x = bytes((0x12, 0, 0, 0)) + (w - 1).to_bytes(3, "little") \
-        + (h - 1).to_bytes(3, "little")
-    body += b"VP8X" + len(vp8x).to_bytes(4, "little") + vp8x
-    body += b"ALPH" + len(alph).to_bytes(4, "little") + alph
-    if len(alph) & 1:
-        body += b"\x00"
-    body += b"VP8 " + len(vp8_stream).to_bytes(4, "little") + vp8_stream
-    if len(vp8_stream) & 1:
-        body += b"\x00"
-    return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WEBP" \
-        + bytes(body)
-
-
-@pytest.mark.parametrize("filt", [0, 1, 2, 3])
-@pytest.mark.parametrize("lossless", [False, True])
-def test_alph_filters_roundtrip(filt, lossless):
-    """ALPH plane round-trips through every filtering method, both raw
-    and headerless-VP8L compression."""
-    import random
-
-    from marky_spark.ops.vp8codec import vp8_encode_flat
-    from marky_spark.ops.webpcodec import encode_alpha_chunk
-
-    rng = random.Random(100 * filt + lossless)
-    w, h = 8, 8
-    grid = [[rng.randrange(256) for _ in range(4)] for _ in range(4)]
-    plane = bytes(rng.randrange(256) for _ in range(w * h))
-    blob = _vp8x_alpha_still(
-        w, h, vp8_encode_flat(grid, w, h),
-        encode_alpha_chunk(plane, w, h, filtering=filt, lossless=lossless))
-    dw, dh, ch, px = webp_decode(blob)
-    assert (dw, dh, ch) == (w, h, 4)
-    assert bytes(px[3::4]) == plane
-    for y in range(h):
-        for x in range(w):
-            assert px[(y * w + x) * 4] == grid[y // 4][x // 4]
-
-
-def test_alph_opaque_collapses_to_rgb():
-    from marky_spark.ops.vp8codec import vp8_encode_flat
-    from marky_spark.ops.webpcodec import encode_alpha_chunk
-
-    blob = _vp8x_alpha_still(8, 8, vp8_encode_flat([[5] * 4] * 4, 8, 8),
-                             encode_alpha_chunk(b"\xff" * 64, 8, 8))
-    assert webp_decode(blob)[2] == 3
-
+# ALPH is defined only for a lossy VP8 image: before VP8L it is malformed
 
 def test_alph_with_vp8l_is_typed_error():
-    from marky_spark.ops.webpcodec import encode_alpha_chunk
-
-    still = webp_encode(bytes(64 * 3), 8, 8, 3)
-    vp8l_chunk = still[12:]
-    alph = encode_alpha_chunk(b"\x80" * 64, 8, 8)
-    body = bytearray()
-    body += b"ALPH" + len(alph).to_bytes(4, "little") + alph
-    if len(alph) & 1:
-        body += b"\x00"
-    body += vp8l_chunk
-    blob = b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WEBP" \
-        + bytes(body)
+    blob = _riff(_chunk(b"ALPH", b"\x00" + b"\x80" * 64),
+                 _chunk(b"VP8L", _flat_vp8l(8, 8, 0)))
     with pytest.raises(WebpError, match="ALPH"):
         webp_decode(blob)
 
 
-def test_anmf_alpha_frame_composites():
-    """An ANMF frame carrying ALPH + VP8: alpha 0 pixels leave the
-    previous canvas content visible when the frame alpha-blends."""
-    import struct as _s
+def test_anmf_alph_with_vp8l_frame_is_typed_error():
+    """An opaque VP8L frame after a half-transparent ALPH plane is
+    malformed, not an alpha-blended composite."""
+    from marky_spark.ops.webpcodec import webp_decode_frames
 
-    from marky_spark.ops.vp8codec import vp8_encode_flat
-    from marky_spark.ops.webpcodec import (
-        _webp_payload,
-        encode_alpha_chunk,
-        webp_decode_frames,
-        webp_encode_anim,
-    )
-
-    w = h = 8
-    base = _webp_payload(webp_encode(bytes([10]) * (w * h * 3), w, h, 3))[:2]
-    blob = bytearray(webp_encode_anim(w, h, [base]))
-    # frame 2: VP8 value 200 everywhere, alpha = 0 on the top half,
-    # 255 on the bottom half, BLENDING on (flags bit1 = 0)
-    plane = bytes([0]) * (w * h // 2) + bytes([255]) * (w * h // 2)
-    alph = encode_alpha_chunk(plane, w, h)
-    vp8s = vp8_encode_flat([[200] * ((w + 15) // 16 * 4)] *
-                           ((h + 15) // 16 * 4), w, h)
-    sub = b"ALPH" + len(alph).to_bytes(4, "little") + alph
-    if len(alph) & 1:
-        sub += b"\x00"
-    sub += b"VP8 " + len(vp8s).to_bytes(4, "little") + vp8s
-    if len(vp8s) & 1:
-        sub += b"\x00"
-    anmf = ((0).to_bytes(3, "little") * 2
-            + (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
-            + (40).to_bytes(3, "little") + bytes((0x00,)) + sub)
-    blob += b"ANMF" + len(anmf).to_bytes(4, "little") + anmf
-    if len(anmf) & 1:
-        blob += b"\x00"
-    blob = blob[:4] + _s.pack("<I", len(blob) - 8) + blob[8:]
-    cw, ch_, frames = webp_decode_frames(bytes(blob))
-    assert len(frames) == 2
-    f = frames[1]
-    assert f[0] == 10                      # transparent top: base shows
-    assert f[(w * h - 1) * 3] == 200       # opaque bottom: new frame
+    plane = b"\x00" * 32 + b"\xff" * 32
+    blob = _anim(8, 8, _chunk(b"VP8L", _flat_vp8l(8, 8, 10)),
+                 _chunk(b"ALPH", b"\x00" + plane)
+                 + _chunk(b"VP8L", _flat_vp8l(8, 8, 200)), blend=True)
+    with pytest.raises(WebpError, match="ALPH"):
+        webp_decode_frames(blob)
 
 
 def test_animation_frame_count_is_capped():
@@ -797,12 +773,10 @@ def test_animation_frame_count_is_capped():
     the first MAX_ANIM_FRAMES (O(frames x canvas) bound)."""
     from marky_spark.ops.webpcodec import (
         MAX_ANIM_FRAMES,
-        _webp_payload,
         webp_decode_frames,
-        webp_encode,
         webp_encode_anim,
     )
 
-    f = _webp_payload(webp_encode(bytes([7]) * (4 * 4 * 3), 4, 4, 3))[:2]
+    f = webp_encode(bytes([7]) * (4 * 4 * 3), 4, 4, 3)
     w, h, frames = webp_decode_frames(webp_encode_anim(4, 4, [f] * 300))
     assert len(frames) == MAX_ANIM_FRAMES
