@@ -16,13 +16,11 @@ equivalent.
 from __future__ import annotations
 
 import argparse
-import base64
 import io
 import json
 import sys
 import zipfile
 
-BINARY_KINDS = frozenset({"docx", "xlsx", "pptx", "epub", "pdf"})
 
 def _ext_kind_map() -> dict[str, str]:
     """Extension→kind from the registry's reference-verbatim metadata
@@ -166,6 +164,7 @@ def sniff_kind(path: str, data: bytes) -> str | None:
 def convert_file(path: str) -> str:
     """path → Markdown string, or raise ConvertError (marky.go:27-41)."""
     from .kernels import REGISTRY, ConvertError, segments_text
+    from .kernels.base import encode_payload
 
     with open(path, "rb") as f:
         data = f.read()
@@ -176,11 +175,7 @@ def convert_file(path: str) -> str:
         mime = sniff_mime_unsupported(data)
         detail = f"detected type {mime}" if mime else f"file {path!r}"
         raise ConvertError(f"no converter found for {detail}")
-    if kind in BINARY_KINDS:
-        payload = base64.b64encode(data).decode("ascii")
-    else:
-        payload = data.decode("utf-8", "replace")
-    return segments_text(REGISTRY[kind](payload))
+    return segments_text(REGISTRY[kind](encode_payload(kind, data)))
 
 
 def _write_file_0644(path: str, text: str) -> None:

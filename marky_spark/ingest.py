@@ -3,28 +3,33 @@ INPUT_SCHEMA, one composition per corpus layout.
 
 The reference converts one file at a time from the CLI
 (cmd/marky/main.go:15-51); at 100 TB the unit of input is a directory
-(or bucket prefix) of crawl WARCs, archive bundles, or loose documents.
-These three loaders are the distributed generalization — each one
-lists files with Spark's ``binaryFile`` source and turns them into the
-same ``(doc_id, spans)`` rows :func:`marky_spark.convert.convert` eats,
-so ``spark.read`` → convert → curate → sink is one declarative plan.
+(or bucket prefix) of crawl WARCs, archive bundles, mail archives, or
+loose documents. These loaders are the distributed generalization —
+each one lists files with Spark's ``binaryFile`` source and turns them
+into the same ``(doc_id, spans)`` rows
+:func:`marky_spark.convert.convert` eats, so ``spark.read`` → convert →
+curate → sink is one declarative plan.
 
-- :func:`docs_from_warc_dir` — ``.warc`` / ``.warc.gz`` crawl files,
-  streamed record-at-a-time with O(record) worker memory (only the
-  path rides through Spark; a ~1 GiB Common Crawl file never
-  materializes).
+- :func:`docs_from_warc_dir` — ``.warc`` / ``.warc.gz`` crawl files
+  (ops/warc), one doc per ``response`` record, doc_id = target URI.
 - :func:`docs_from_archive_dir` — ``.zip`` / ``.tar[.gz|.bz2|.xz]`` /
-  ``.7z`` bundles, streamed member-at-a-time the same way (7z's
-  tail-header layout makes the container whole-read like zip's central
-  directory; folder output stays capped inside ops/sevenzip).
+  ``.7z`` bundles (ops/archive), one doc per member, doc_id =
+  ``<file>/<member>``.
+- :func:`docs_from_mbox_dir` — mbox mail archives (ops/mbox), one
+  ``eml`` doc per message, doc_id = ``<file>#<idx>``.
 - :func:`docs_from_dir` — loose documents (the reference's own input
-  shape): binaryFile loads each file's bytes, the CLI's content sniff
-  routes it, binary container kinds ride base64 (the wire convention
-  kernels/base.decode_binary_payload expects).
+  shape), one doc per file.
 
-Scale notes: all three return un-shuffled plans (listing → mapInPandas
-fan-out); partitioning is one file per task for the streaming loaders
-and Spark's own file-split packing (maxPartitionBytes) for loose docs.
+The three container doors share :func:`file_docs`: only the file path
+rides through Spark (one round-robin ``repartition`` of the listing,
+then ONE ``mapInPandas`` straight to INPUT_SCHEMA), and each worker
+streams its file with the source's ``_stream_rows`` parser in
+O(record) memory. Whatever a walk cannot produce — an unopenable path,
+a stream truncation, a cap breach, a non-archive — becomes one
+``{uri}#drop`` doc of kind ``_drop_<source>``, which convert turns
+into an error row, so the metrics sink accounts for it. Every door
+builds its span text with kernels/base.encode_payload (binary kinds
+ride base64, the rest UTF-8), the same rule as the CLI.
 """
 from __future__ import annotations
 
@@ -32,18 +37,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    StringType,
-    StructField,
-    StructType,
-)
 
-#: kinds whose kernels expect base64 span text (zip containers + pdf)
-# kinds whose kernels expect base64 payloads (zip/PDF containers);
-# text kinds (rtf/eml/feed/html/...) travel as their own source text
-BINARY_KINDS = ("docx", "xlsx", "pptx", "epub", "pdf",
-                "odt", "ods", "odp")
+from .cli import sniff_kind
+from .kernels.base import encode_payload
+from .ops import archive, mbox, warc
+from .schema import INPUT_SCHEMA
 
 #: per-file cap for the loose-document loader: a single DOCUMENT past
 #: this is almost certainly mislabeled bulk data (the archive/warc
@@ -51,87 +49,105 @@ BINARY_KINDS = ("docx", "xlsx", "pptx", "epub", "pdf",
 #: an executor OOM
 MAX_DOC_BYTES = 1 << 28
 
+#: source → (stream parser yielding row chunks whose last field is the
+#: ``ok`` status, ok row → ``(doc_id, kind, bytes)`` or None to skip)
+_SOURCES = {
+    "warc": (warc._stream_rows, warc.row_doc),
+    "archive": (lambda ref, f: archive._stream_rows(ref, f, sniff_kind),
+                archive.row_doc),
+    "mbox": (mbox._stream_rows, mbox.row_doc),
+}
 
-def docs_from_warc_dir(spark: SparkSession, path: str,
-                       glob: str = "*.warc*",
-                       include_drops: bool = True) -> DataFrame:
-    """Directory of WARC crawl files → INPUT_SCHEMA docs (response
-    records only, doc_id = target URI). Drops (truncations, cap
-    breaches) ride along as ``_drop_warc`` marker docs by default so
-    the job's metrics sink accounts for them.
 
-    FUSED single Python stage: stream-parse, HTTP split, content sniff,
-    and doc shaping all happen in one ``mapInPandas`` pass — the
-    composable two-operator chain (``warc_records_from_dir`` →
-    ``records_to_docs``) crosses the JVM↔Python boundary twice more
-    with the full payload bytes, which measured ~2× slower on the
-    720k-doc pinned-core scaling runs."""
-    from .cli import sniff_kind
-    from .ops.warc import _local_path, _stream_rows, list_binary_files
+def _doc(doc_id: str, kind: str, data: bytes) -> tuple:
+    return doc_id, [(kind, encode_payload(kind, data), None, 0)]
 
-    files = list_binary_files(spark, path, glob=glob)
 
-    def doc_row(row: tuple) -> tuple | None:
-        (ref, _idx, wtype, uri, _ct, _status, payload, _n, ok) = row
-        if ok == "ok":
-            if wtype != "response":
-                return None
-            body = bytes(payload) if payload is not None else b""
-            kind = sniff_kind(uri or "", body) or "unknown"
-            return (uri or f"{ref}/record",
-                    [{"kind": kind, "text": body.decode("utf-8", "replace"),
-                      "media_ref": None, "offset": 0}])
-        if not include_drops:
-            return None
-        return (f"{ref}#drop",
-                [{"kind": "_drop_warc", "text": ok,
-                  "media_ref": None, "offset": 0}])
+def _drop(ref: str, source: str, reason: str) -> tuple:
+    return f"{ref}#drop", [(f"_drop_{source}", reason, None, 0)]
+
+
+def _local_path(uri: str) -> str:
+    """binaryFile path URIs → worker-openable paths. Plain and file:
+    schemes open directly (POSIX / NFS / fuse mounts — the common
+    cluster layouts); other schemes (s3a://, hdfs://) would go through
+    an fsspec-style client and are rejected typed here."""
+    if uri.startswith("file:"):
+        path = uri[5:]
+        while path.startswith("//"):  # file:///x and file://host/x forms
+            path = path[1:]
+        return path
+    if "://" in uri:
+        raise ValueError(f"unsupported path scheme for streaming: {uri!r}")
+    return uri
+
+
+def file_docs(uri: str, source: str) -> Iterator[list[tuple]]:
+    """One container file → bounded chunks of INPUT_SCHEMA rows, with
+    every non-ok walk row (and an unopenable path) as a drop doc."""
+    stream_rows, row_doc = _SOURCES[source]
+    try:
+        f = open(_local_path(uri), "rb")  # noqa: SIM115 — closed below
+    except (ValueError, OSError) as exc:
+        yield [_drop(uri, source, f"error: {exc}")]
+        return
+    with f:
+        for rows in stream_rows(uri, f):
+            docs = []
+            for row in rows:
+                if row[-1] != "ok":
+                    docs.append(_drop(row[0], source, row[-1]))
+                elif (doc := row_doc(row)) is not None:
+                    docs.append(_doc(*doc))
+            if docs:
+                yield docs
+
+
+def _listing(spark: SparkSession, path: str, glob: str | None) -> DataFrame:
+    reader = spark.read.format("binaryFile") \
+        .option("recursiveFileLookup", "true")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    return reader.load(path)
+
+
+def _stream_dir(spark: SparkSession, path: str, glob: str | None,
+                source: str) -> DataFrame:
+    """Directory → INPUT_SCHEMA docs in one Python stage. Only the path
+    column is selected, so binaryFile never loads file contents; the
+    listing is round-robined (hashing paths would distribute
+    binomially) at 2 tasks/core so a slow file doesn't straggle."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             for uri in pdf["path"]:
-                try:
-                    f = open(_local_path(str(uri)), "rb")  # noqa: SIM115
-                except (ValueError, OSError) as exc:
-                    if include_drops:
-                        yield pd.DataFrame(
-                            [(f"{uri}#drop",
-                              [{"kind": "_drop_warc",
-                                "text": f"error: {exc}",
-                                "media_ref": None, "offset": 0}])],
-                            columns=["doc_id", "spans"])
-                    continue
-                with f:
-                    for rows in _stream_rows(str(uri), f):
-                        docs = [d for d in map(doc_row, rows)
-                                if d is not None]
-                        if docs:
-                            yield pd.DataFrame(
-                                docs, columns=["doc_id", "spans"])
-
-    from .schema import INPUT_SCHEMA
+                for docs in file_docs(str(uri), source):
+                    yield pd.DataFrame(docs, columns=["doc_id", "spans"])
 
     n = max(spark.sparkContext.defaultParallelism * 2, 1)
-    return files.repartition(n).mapInPandas(batches, schema=INPUT_SCHEMA)
+    return _listing(spark, path, glob).select("path").repartition(n) \
+        .mapInPandas(batches, schema=INPUT_SCHEMA)
+
+
+def docs_from_warc_dir(spark: SparkSession, path: str,
+                       glob: str = "*.warc*") -> DataFrame:
+    """Directory of WARC crawl files → INPUT_SCHEMA docs (response
+    records only, doc_id = target URI, kind sniffed from the HTTP body)."""
+    return _stream_dir(spark, path, glob, "warc")
 
 
 def docs_from_archive_dir(spark: SparkSession, path: str,
-                          glob: str | None = None,
-                          include_drops: bool = True) -> DataFrame:
+                          glob: str | None = None) -> DataFrame:
     """Directory of archive bundles → INPUT_SCHEMA docs
-    (doc_id = ``<file>/<member>``); drops ride along as
-    ``_drop_archive`` marker docs by default."""
-    from .ops.archive import archive_members_from_dir, members_to_docs
-
-    return members_to_docs(archive_members_from_dir(spark, path, glob=glob),
-                           include_drops=include_drops)
+    (doc_id = ``<file>/<member>``, kind sniffed from the member)."""
+    return _stream_dir(spark, path, glob, "archive")
 
 
-_SNIFFED = StructType([
-    StructField("doc_id", StringType()),
-    StructField("kind", StringType()),
-    StructField("text", StringType()),
-])
+def docs_from_mbox_dir(spark: SparkSession, path: str,
+                       glob: str | None = None) -> DataFrame:
+    """Directory of mbox mail archives → INPUT_SCHEMA docs (one ``eml``
+    doc per message, doc_id = ``<file>#<idx>``)."""
+    return _stream_dir(spark, path, glob or "*.mbox*", "mbox")
 
 
 def docs_from_dir(spark: SparkSession, path: str,
@@ -140,61 +156,26 @@ def docs_from_dir(spark: SparkSession, path: str,
 
     ``binaryFile`` loads (path, content); the CLI's magic-byte sniff
     (marky.go:29 parity — never trust extensions alone) routes each
-    file; binary kinds are re-encoded base64 for the kernel wire
-    convention. Spark packs small files into tasks via its own
-    file-split planning, so a million 10 KB documents do not become a
-    million tasks."""
-    import base64
-
-    from .cli import sniff_kind
-
-    reader = spark.read.format("binaryFile") \
-        .option("recursiveFileLookup", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    files = reader.load(path).select("path", "content")
+    file. Spark packs small files into tasks via its own file-split
+    planning, so a million 10 KB documents do not become a million
+    tasks."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = []
+            docs = []
             for uri, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content) if content is not None else b""
+                uri, data = str(uri), bytes(content or b"")
                 if len(data) > MAX_DOC_BYTES:
-                    rows.append((str(uri), "_drop_binary",
-                                 f"error: file is {len(data)} bytes "
-                                 f"(cap {MAX_DOC_BYTES})"))
-                    continue
-                kind = sniff_kind(str(uri), data) or "unknown"
-                if kind in BINARY_KINDS:
-                    text = base64.b64encode(data).decode("ascii")
+                    docs.append(_drop(uri, "binary",
+                                      f"error: file is {len(data)} bytes "
+                                      f"(cap {MAX_DOC_BYTES})"))
                 else:
-                    text = data.decode("utf-8", "replace")
-                rows.append((str(uri), kind, text))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _SNIFFED.fields])
+                    docs.append(_doc(uri, sniff_kind(uri, data) or "unknown",
+                                     data))
+            yield pd.DataFrame(docs, columns=["doc_id", "spans"])
 
-    sniffed = files.mapInPandas(batches, schema=_SNIFFED)
-    return sniffed.select(
-        "doc_id",
-        F.array(F.struct(
-            F.col("kind"),
-            F.col("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )).alias("spans"),
-    )
-
-
-def docs_from_mbox_dir(spark: SparkSession, path: str,
-                       glob: str | None = None) -> DataFrame:
-    """Directory of mbox mail archives → INPUT_SCHEMA docs (one per
-    message, kind ``eml``), streaming with drop accounting
-    (ops/mbox)."""
-    from .ops.mbox import mbox_messages_from_dir, messages_to_docs
-
-    return messages_to_docs(
-        mbox_messages_from_dir(spark, path, glob=glob or "*.mbox*"),
-        include_drops=True)
+    return _listing(spark, path, glob).select("path", "content") \
+        .mapInPandas(batches, schema=INPUT_SCHEMA)
 
 
 LOADERS = {

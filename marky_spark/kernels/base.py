@@ -83,8 +83,24 @@ def segments_text(segments: list[Segment]) -> str:
     return "".join(s[1] for s in segments)
 
 
+#: kinds whose kernels take base64 span text (the zip containers and PDF);
+#: every other kind travels as its own UTF-8 source text
+BINARY_KINDS = frozenset({"docx", "xlsx", "pptx", "epub", "pdf",
+                          "odt", "ods", "odp"})
+
+
+def encode_payload(kind: str, data: bytes) -> str:
+    """Raw file bytes → the span ``text`` the ``kind`` kernel expects: the
+    inverse of :func:`decode_binary_payload` for binary kinds, UTF-8
+    (undecodable bytes replaced) for the rest. Every ingest door and the
+    CLI build their spans through this one rule."""
+    if kind in BINARY_KINDS:
+        return base64.b64encode(data).decode("ascii")
+    return data.decode("utf-8", "replace")
+
+
 def decode_binary_payload(text: str) -> bytes:
-    """Binary formats (docx/xlsx/pptx/epub/pdf) travel base64-encoded in the
+    """Binary formats (:data:`BINARY_KINDS`) travel base64-encoded in the
     span ``text`` field (the input table is all-string per the reference's
     type system, SURVEY.md §1.2)."""
     try:

@@ -17,11 +17,13 @@ Operators:
   257), bzip2, xz, and 7z (ops/sevenzip: Copy/LZMA/LZMA2/BZip2
   single-coder folders, encoded headers). Non-archives pass through
   as a ``not_archive`` row (callers route them to convert directly).
-- ``archive_members_from_dir`` — the file front door: a directory of
-  real .zip/.tar/.tar.gz/... files → the same member rows, each file
-  opened as a STREAM on the worker (zip members read one at a time via
-  the central directory; tar/tgz walked in ``r|*`` streaming mode), so
-  memory stays bounded per member no matter how large the archive.
+- ``row_doc`` — an ``ok`` member row → the ingest door's
+  ``(doc_id, kind, bytes)``; ``ingest.docs_from_archive_dir`` streams a
+  directory of real .zip/.tar/.tar.gz/... files through
+  ``_stream_rows`` with it, each file opened as a STREAM on the worker
+  (zip members read one at a time via the central directory; tar/tgz
+  walked in ``r|*`` streaming mode), so memory stays bounded per
+  member no matter how large the archive.
 - ``synth_archive_media`` — deterministic archive corpus over doc ids
   (each doc's text wrapped as zip / gzip / tar / 7z rotating by doc_id),
   the fixture the driver oracle pins: extraction must recover EXACTLY
@@ -380,85 +382,12 @@ def explode_archive(media: DataFrame) -> DataFrame:
         batches, schema=MEMBER_SCHEMA)
 
 
-def archive_members_from_dir(spark, path: str,
-                             glob: str | None = None) -> DataFrame:
-    """A directory of real archive files → member rows.
-
-    The streaming front door: only (path, length) rides through Spark
-    (binaryFile listing with the content column pruned); each worker
-    opens its file and walks members with O(member) memory — zip via
-    the central directory member-at-a-time, tar/tgz/tbz2/txz in
-    forward-only ``r|*`` mode — so a multi-GiB bundle ingests without
-    ever being held whole. One file = one task."""
-    from ..cli import sniff_kind
-    from .warc import _local_path, list_binary_files
-
-    files = list_binary_files(spark, path, glob=glob)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for uri in pdf["path"]:
-                try:
-                    local = _local_path(str(uri))
-                    f = open(local, "rb")  # noqa: SIM115 — closed below
-                except (ValueError, OSError) as exc:
-                    yield _to_pdf([(str(uri), None, None, None, None, None,
-                                    f"error: {exc}")])
-                    continue
-                with f:
-                    for rows in _stream_rows(str(uri), f, sniff_kind):
-                        yield _to_pdf(rows)
-
-    # round-robin the FILE LIST (hashing paths would distribute
-    # binomially); 2 tasks/core so a slow file doesn't straggle the wave
-    n = max(spark.sparkContext.defaultParallelism * 2, 1)
-    return files.repartition(n).mapInPandas(
-        batches, schema=MEMBER_SCHEMA)
-
-
-_BINARY_KINDS = ("docx", "xlsx", "pptx", "epub", "pdf")
-
-
-def members_to_docs(members: DataFrame,
-                    include_drops: bool = False) -> DataFrame:
-    """Exploded ``ok`` member rows → the engine's INPUT_SCHEMA shape, so an
-    archive corpus flows straight into :func:`marky_spark.convert.convert`:
-    doc_id = ``<archive_ref>/<member_name>``, one span whose text is the
-    member bytes — UTF-8 for textual kinds, base64 for the zip-container
-    binary kinds (the same wire convention the binary kernels decode,
-    kernels/base.decode_binary_payload). Entirely JVM-side: no Python, no
-    shuffle — explode → convert is one fused stage chain.
-
-    ``include_drops=True`` additionally emits one ``_drop_archive``
-    marker doc per non-ok row (truncation / cap breach / non-archive
-    file), which convert turns into an error row — the metrics sink
-    then accounts for every member the walk could not produce."""
-    from pyspark.sql import functions as F
-
-    ok = members.where(F.col("ok") == "ok")
-    is_binary = F.col("kind").isin(*_BINARY_KINDS)
-    out = ok.select(
-        F.concat_ws("/", "media_ref", "member_name").alias("doc_id"),
-        F.array(F.struct(
-            F.coalesce(F.col("kind"), F.lit("unknown")).alias("kind"),
-            F.when(is_binary, F.translate(F.base64("payload"), "\r\n", ""))
-            .otherwise(F.decode("payload", "UTF-8")).alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )).alias("spans"),
-    )
-    if include_drops:
-        drops = members.where(F.col("ok") != "ok").select(
-            F.concat(F.col("media_ref"), F.lit("#drop")).alias("doc_id"),
-            F.array(F.struct(
-                F.lit("_drop_archive").alias("kind"),
-                F.col("ok").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )).alias("spans"),
-        )
-        out = out.unionByName(drops)
-    return out
+def row_doc(row: tuple) -> tuple[str, str, bytes]:
+    """An ``ok`` member row → ``(doc_id, kind, bytes)`` for the ingest
+    door: doc_id = ``<archive_ref>/<member_name>``, kind the member's
+    sniffed kind."""
+    ref, name, _idx, kind, data, _n, _ok = row
+    return f"{ref}/{name}", kind or "unknown", data
 
 
 def synth_archive_media(docs: DataFrame) -> DataFrame:

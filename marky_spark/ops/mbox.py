@@ -1,10 +1,11 @@
-"""MBOX streaming front door — a mail archive becomes one doc per
-message, the same bounded-memory contract as ops/warc.
+"""MBOX streaming walk — a mail archive becomes one doc per message,
+the same bounded-memory contract as ops/warc.
 
 Mail corpora ship as mbox files (one file, many RFC 5322 messages,
 ``From `` separator lines — RFC 4155).  The reference converts single
-documents (marky.go:27-41); this module is the crawl-scale ingest that
-feeds its EML kernel (kernels/emlk), mirroring warc_records_from_dir:
+documents (marky.go:27-41); this module is the crawl-scale walk that
+feeds its EML kernel (kernels/emlk) through
+``ingest.docs_from_mbox_dir``:
 
 - messages parse ONE AT A TIME from a buffered line stream (transparent
   gzip); peak memory is O(message), never O(file),
@@ -14,27 +15,13 @@ feeds its EML kernel (kernels/emlk), mirroring warc_records_from_dir:
   ``>`` stripped from ``>+From `` at line start),
 - mid-stream corruption SALVAGES the valid prefix: the messages already
   parsed survive, ONE typed error row marks the truncation point,
-- ``mbox_messages_from_dir`` lists (path, length) via binaryFile with
-  the content column pruned — workers stream their own files,
-- ``messages_to_docs`` shapes rows into INPUT_SCHEMA (kind ``eml``) so
-  an archive flows straight into marky_spark.convert.convert, with
-  ``include_drops=True`` emitting ``_drop_mbox`` markers so the metrics
-  sink accounts for everything the run skipped.
+- ``row_doc`` maps each ``ok`` message row to the door's
+  ``(doc_id, kind, bytes)``; the door turns error rows into
+  ``_drop_mbox`` docs so the metrics sink accounts for them.
 """
 from __future__ import annotations
 
 from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 MAX_MESSAGE_BYTES = 1 << 26     # 64 MiB per message
 MAX_MESSAGES = 1 << 20          # per file
@@ -44,16 +31,6 @@ CHUNK_BYTES = 32 << 20
 
 class MboxError(ValueError):
     """Malformed / hostile mbox input."""
-
-
-MESSAGE_SCHEMA = StructType([
-    StructField("media_ref", StringType()),
-    StructField("msg_idx", IntegerType()),
-    StructField("from_line", StringType()),
-    StructField("payload", BinaryType()),
-    StructField("n_bytes", LongType()),
-    StructField("ok", StringType()),
-])
 
 
 def _open_stream(f):
@@ -153,62 +130,8 @@ def _stream_rows(ref: str, raw) -> Iterator[list[tuple]]:
         yield rows
 
 
-def _to_pdf(rows: list[tuple]) -> pd.DataFrame:
-    return pd.DataFrame(rows,
-                        columns=[f.name for f in MESSAGE_SCHEMA.fields])
-
-
-def mbox_messages_from_dir(spark, path: str,
-                           glob: str = "*.mbox*") -> DataFrame:
-    """A directory of mbox / mbox.gz files → message rows, streaming
-    (only (path, length) rides through Spark; workers open their own
-    files — the warc_records_from_dir shape)."""
-    from .warc import _local_path, list_binary_files
-
-    files = list_binary_files(spark, path, glob=glob)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for uri in pdf["path"]:
-                try:
-                    local = _local_path(str(uri))
-                    f = open(local, "rb")  # noqa: SIM115 — closed below
-                except OSError as exc:
-                    yield _to_pdf([(str(uri), None, None, None, None,
-                                    f"error: {exc}")])
-                    continue
-                with f:
-                    for rows in _stream_rows(str(uri), f):
-                        yield _to_pdf(rows)
-
-    n = max(spark.sparkContext.defaultParallelism * 2, 1)
-    return files.repartition(n).mapInPandas(
-        batches, schema=MESSAGE_SCHEMA)
-
-
-def messages_to_docs(messages: DataFrame,
-                     include_drops: bool = False) -> DataFrame:
-    """Message rows → INPUT_SCHEMA docs: doc_id = ``{file}#{idx}``, one
-    ``eml`` span carrying the raw message text.  ``include_drops=True``
-    emits ``_drop_mbox`` marker docs for non-ok rows so the metrics sink
-    accounts for every skipped file/truncation."""
-    from ..schema import INPUT_SCHEMA  # the shared doc shape
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, idx, payload, ok in zip(
-                    pdf["media_ref"], pdf["msg_idx"], pdf["payload"],
-                    pdf["ok"]):
-                if ok != "ok":
-                    if include_drops:
-                        rows.append((f"{ref}#drop",
-                                     [("_drop_mbox", str(ok), "", 0)]))
-                    continue
-                text = bytes(payload).decode("utf-8", "replace")
-                rows.append((f"{ref}#{int(idx)}",
-                             [("eml", text, "", 0)]))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    cols = messages.select("media_ref", "msg_idx", "payload", "ok")
-    return cols.mapInPandas(batches, schema=INPUT_SCHEMA)
+def row_doc(row: tuple) -> tuple[str, str, bytes]:
+    """An ``ok`` message row → ``(doc_id, kind, bytes)`` for the ingest
+    door: doc_id = ``{file}#{idx}``, one ``eml`` doc per message."""
+    ref, idx, _from_line, payload, _n, _ok = row
+    return f"{ref}#{idx}", "eml", payload

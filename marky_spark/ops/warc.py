@@ -15,10 +15,11 @@ Implemented from the public WARC 1.0/1.1 grammar:
   (member-per-record or whole-file, both appear in the wild) are
   inflated INCREMENTALLY. ``mapInPandas`` fan-out — no shuffle, no
   driver collect, same shape as explode_archive.
-- ``warc_records_from_dir`` — the file front door: a directory of real
-  ``.warc`` / ``.warc.gz`` files → the same record rows, reading each
-  file as a STREAM so memory stays bounded per record no matter how
-  large the file (a ~1 GiB Common Crawl WARC never materializes).
+- ``row_doc`` — an ``ok`` record row → the ingest door's
+  ``(doc_id, kind, body)``; ``ingest.docs_from_warc_dir`` streams a
+  directory of real ``.warc`` / ``.warc.gz`` files through
+  ``_stream_rows`` with it (a ~1 GiB Common Crawl WARC never
+  materializes).
 - ``synth_warc_media`` — deterministic WARC corpus over doc ids: each
   doc's text becomes the HTTP body of one ``response`` record (plus a
   ``warcinfo`` header record), so the driver oracle pins the record
@@ -249,131 +250,18 @@ def warc_records(media: DataFrame) -> DataFrame:
         batches, schema=RECORD_SCHEMA)
 
 
-def _local_path(uri: str) -> str:
-    """binaryFile path URIs → worker-openable paths. Plain and file:
-    schemes open directly (POSIX / NFS / fuse mounts — the common
-    cluster layouts); other schemes (s3a://, hdfs://) would go through
-    an fsspec-style client and are rejected typed here."""
-    if uri.startswith("file:"):
-        path = uri[5:]
-        while path.startswith("//"):  # file:///x and file://host/x forms
-            path = path[1:]
-        return path
-    if "://" in uri:
-        raise WarcError(f"unsupported path scheme for streaming: {uri!r}")
-    return uri
-
-
-def list_binary_files(spark, path: str, glob: str | None = None,
-                      recursive: bool = True) -> DataFrame:
-    """Directory → (path, length) listing via the binaryFile source with
-    the CONTENT COLUMN PRUNED — Spark's binaryFile reader only loads
-    ``content`` when selected, so this is a pure metadata listing no
-    matter how large the files are. The scale path: list centrally,
-    fan file paths out to workers, stream each file worker-side."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.load(path).select("path", "length")
-
-
-def warc_records_from_dir(spark, path: str,
-                          glob: str = "*.warc*") -> DataFrame:
-    """A directory of real ``.warc`` / ``.warc.gz`` files → record rows.
-
-    The true streaming front door: only (path, length) rides through
-    Spark; each worker opens its file and iterates records with
-    O(record) memory, so a ~1 GiB compressed / multi-GiB raw Common
-    Crawl file ingests without ever being held whole. One file = one
-    task (the listing is repartitioned by path) so big crawls spread
-    across the cluster."""
-    files = list_binary_files(spark, path, glob=glob)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for uri in pdf["path"]:
-                try:
-                    local = _local_path(str(uri))
-                    f = open(local, "rb")  # noqa: SIM115 — closed below
-                except (WarcError, OSError) as exc:
-                    yield _to_pdf([(str(uri), None, None, None, None, None,
-                                    None, None, f"error: {exc}")])
-                    continue
-                with f:
-                    for rows in _stream_rows(str(uri), f):
-                        yield _to_pdf(rows)
-
-    # round-robin the FILE LIST (hashing paths would distribute
-    # binomially); 2 tasks/core so a slow file doesn't straggle the wave
-    n = max(spark.sparkContext.defaultParallelism * 2, 1)
-    return files.repartition(n).mapInPandas(
-        batches, schema=RECORD_SCHEMA)
-
-
-def records_to_docs(records: DataFrame,
-                    include_drops: bool = False) -> DataFrame:
-    """``response`` record rows → the engine's INPUT_SCHEMA shape, so a
-    crawl archive flows straight into marky_spark.convert.convert:
-    doc_id = the record's target URI (the natural crawl key), one span
-    whose kind is sniffed from the HTTP body by the same content sniff
-    the CLI uses (never trusting Content-Type headers — crawls lie).
-    Arrow-batched mapInPandas for the sniff (it needs the body bytes);
-    no shuffle, no driver collect.
-
-    ``include_drops=True`` additionally emits one ``_drop_warc`` marker
-    doc per non-ok row (truncation / not-WARC), which convert turns into
-    an error row — so the job's metrics sink accounts for every record
-    the walk could not produce (nothing dropped silently)."""
+def row_doc(row: tuple) -> tuple[str, str, bytes] | None:
+    """An ``ok`` record row → ``(doc_id, kind, body)`` for the ingest
+    door, or None for non-``response`` records: doc_id = the target URI
+    (the natural crawl key), kind sniffed from the HTTP body by the
+    CLI's content sniff (never trusting Content-Type — crawls lie)."""
     from ..cli import sniff_kind
 
-    out_schema = StructType([
-        StructField("media_ref", StringType()),
-        StructField("doc_id", StringType()),
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-    ])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, uri, payload in zip(pdf["media_ref"],
-                                         pdf["target_uri"], pdf["payload"]):
-                body = bytes(payload) if payload is not None else b""
-                kind = sniff_kind(uri or "", body) or "unknown"
-                rows.append((ref, uri or f"{ref}/record",
-                             kind, body.decode("utf-8", "replace")))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in out_schema.fields])
-
-    from pyspark.sql import functions as F
-
-    ok = records.where((F.col("ok") == "ok")
-                       & (F.col("warc_type") == "response"))
-    docs = ok.select("media_ref", "target_uri", "payload").mapInPandas(
-        batches, schema=out_schema)
-    out = docs.select(
-        "doc_id",
-        F.array(F.struct(
-            F.col("kind"),
-            F.col("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).alias("offset"),
-        )).alias("spans"),
-    )
-    if include_drops:
-        drops = records.where(F.col("ok") != "ok").select(
-            F.concat(F.col("media_ref"), F.lit("#drop")).alias("doc_id"),
-            F.array(F.struct(
-                F.lit("_drop_warc").alias("kind"),
-                F.col("ok").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )).alias("spans"),
-        )
-        out = out.unionByName(drops)
-    return out
+    ref, _idx, wtype, uri, _ctype, _status, body, _n, _ok = row
+    if wtype != "response":
+        return None
+    kind = sniff_kind(uri or "", body) or "unknown"
+    return uri or f"{ref}/record", kind, body
 
 
 def synth_warc_media(docs: DataFrame) -> DataFrame:

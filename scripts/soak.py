@@ -2,7 +2,7 @@
 
 Round-4 protocol (extends the 1M/2M span-table soaks that predate the
 file front door): real ``.warc.gz`` crawl files on disk → streaming
-record walk (``warc_records_from_dir``, O(record) memory) → convert via
+record walk (``ingest.docs_from_warc_dir``, O(record) memory) → convert via
 the bucketed resumable job (one INJECTED CRASH mid-run + resume) →
 exactly-once verification → small-file compaction → the curate chain
 (quality + lang-id + exact dedup + sampling) over the same crawl.
@@ -152,7 +152,7 @@ def main() -> int:
     from marky_spark.ops.curate import curate
 
     t2 = time.time()
-    curated = curate(docs_from_warc_dir(spark, crawl, include_drops=False),
+    curated = curate(docs_from_warc_dir(spark, crawl),
                      rates={"en": 1.0}, default_rate=1.0,
                      min_quality_bp=1000).count()
     curate_sec = time.time() - t2

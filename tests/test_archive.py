@@ -198,25 +198,25 @@ def test_archive_mutations_stay_typed():
         assert sum(len(d) for _, d in members) <= 1 << 28
 
 
-def test_archive_to_convert_end_to_end(spark):
-    """The full ingest composition: archive blob → explode → INPUT_SCHEMA
-    adapter → convert kernels → ordered Markdown, including a real binary
-    member (the reference's own test.docx) riding the base64 wire
-    convention. Plan check: no Exchange anywhere below the kernels."""
+def test_archive_to_convert_end_to_end(spark, tmp_path):
+    """The full ingest composition: archive file → member walk →
+    INPUT_SCHEMA docs → convert kernels → ordered Markdown, including a
+    real binary member (the reference's own test.docx) riding the base64
+    wire convention. The door is one Python stage, and convert adds no
+    Exchange above its round-robin."""
     from marky_spark.convert import convert
-    from marky_spark.ops.archive import members_to_docs
+    from marky_spark.ingest import docs_from_archive_dir
 
     docx = open("/root/reference/test_files/test.docx", "rb").read()
-    arc = _zip_of({
+    (tmp_path / "arc0.zip").write_bytes(_zip_of({
         "page.html": b"<html><body><h1>Title</h1><p>body text</p></body></html>",
         "table.csv": b"a,b\n1,2",
         "doc.docx": docx,
         "broken.csv": b'a,b\n1,2,3',  # uneven row -> per-doc error row
-    })
-    media = spark.createDataFrame([("arc0", bytearray(arc))],
-                                  "media_ref string, payload binary")
-    docs = members_to_docs(explode_archive(media))
-    out = {r["doc_id"]: r for r in convert(docs).collect()}
+    }))
+    docs = docs_from_archive_dir(spark, str(tmp_path))
+    out = {"arc0/" + r["doc_id"].rsplit("/", 1)[-1]: r
+           for r in convert(docs).collect()}
     assert out["arc0/page.html"]["status"] == "ok"
     assert "# Title" in out["arc0/page.html"]["markdown"]
     assert out["arc0/table.csv"]["markdown"].startswith("| a | b |")
@@ -224,8 +224,10 @@ def test_archive_to_convert_end_to_end(spark):
     assert out["arc0/doc.docx"]["conv_kind"] == "docx"
     assert len(out["arc0/doc.docx"]["markdown"]) > 100
     assert out["arc0/broken.csv"]["status"] == "error"
+    door = docs._jdf.queryExecution().executedPlan().toString()
+    assert door.count("MapInPandas") == 1 and "Union" not in door
     plan = convert(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # explode -> adapt -> convert: one chain
+    assert plan.count("Exchange") == door.count("Exchange") == 1
 
 
 def test_bzip2_and_xz_members():
@@ -268,14 +270,14 @@ def test_bzip2_xz_spark_routing(spark):
     assert bytes(rows["x"]["payload"]) == b"xz body"
 
 
-def test_archive_members_from_dir_streams_real_files(spark, tmp_path):
+def test_archive_dir_streams_real_files(spark, tmp_path):
     """The binaryFile front door: a directory of real .zip / .tar.gz /
-    .tar.xz bundles → member rows → convert. Only (path, length) rides
+    .tar.xz bundles → member docs → convert. Only the path rides
     through Spark; each worker streams its file member-at-a-time."""
     import lzma
 
     from marky_spark.convert import convert
-    from marky_spark.ops.archive import archive_members_from_dir, members_to_docs
+    from marky_spark.ingest import docs_from_archive_dir
 
     (tmp_path / "book.zip").write_bytes(_zip_of({
         "ch1.html": b"<html><body><h1>One</h1><p>alpha</p></body></html>",
@@ -285,16 +287,16 @@ def test_archive_members_from_dir_streams_real_files(spark, tmp_path):
     (tmp_path / "bundle.tar.gz").write_bytes(gzip.compress(tar))
     (tmp_path / "bundle.tar.xz").write_bytes(lzma.compress(tar))
 
-    members = archive_members_from_dir(spark, str(tmp_path))
-    rows = {(r["media_ref"].rsplit("/", 1)[-1], r["member_name"]): r
-            for r in members.where("ok = 'ok'").collect()}
-    assert bytes(rows[("book.zip", "data.csv")]["payload"]) == b"a,b\n1,2"
+    docs = docs_from_archive_dir(spark, str(tmp_path))
+    rows = {tuple(r["doc_id"].rsplit("/", 2)[-2:]): r["spans"][0]
+            for r in docs.collect()}
+    assert rows[("book.zip", "data.csv")]["text"] == "a,b\n1,2"
     assert rows[("book.zip", "ch1.html")]["kind"] == "html"
-    assert bytes(rows[("bundle.tar.gz", "notes.txt")]["payload"]) \
-        == b"plain member text"
-    assert bytes(rows[("bundle.tar.xz", "notes.txt")]["payload"]) \
-        == b"plain member text"
-    out = convert(members_to_docs(members)).where("status = 'ok'")
+    assert rows[("bundle.tar.gz", "notes.txt")]["text"] \
+        == "plain member text"
+    assert rows[("bundle.tar.xz", "notes.txt")]["text"] \
+        == "plain member text"
+    out = convert(docs).where("status = 'ok'")
     got = {r["doc_id"].rsplit("/", 1)[-1]: r["markdown"]
            for r in out.collect()}
     assert "# One" in got["ch1.html"]

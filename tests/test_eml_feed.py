@@ -180,10 +180,7 @@ class TestMbox:
         import gzip
 
         from marky_spark.convert import convert
-        from marky_spark.ops.mbox import (
-            mbox_messages_from_dir,
-            messages_to_docs,
-        )
+        from marky_spark.ingest import docs_from_mbox_dir
 
         def msg(i):
             return (f"From s{i}@e.c Mon Aug 17 10:00:00 2026\n"
@@ -194,9 +191,7 @@ class TestMbox:
             f.write("".join(msg(10 + i) for i in range(5)))
         (tmp_path / "c.mbox").write_text("garbage, not a mailbox\n")
 
-        docs = messages_to_docs(
-            mbox_messages_from_dir(spark, str(tmp_path)),
-            include_drops=True)
+        docs = docs_from_mbox_dir(spark, str(tmp_path))
         out = convert(docs).toPandas()
         assert (out.status == "ok").sum() == 13
         assert (out.status == "error").sum() == 1

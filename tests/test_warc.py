@@ -238,12 +238,12 @@ def test_midstream_corruption_salvages_prefix():
 
 def test_records_from_dir_streams_real_files(spark, tmp_path):
     """The binaryFile front door: a directory of real .warc / .warc.gz
-    files (one bigger than a yield chunk) → record rows → convert.
-    Only (path, length) rides through Spark; payload bytes never do."""
+    files (one bigger than a yield chunk) → docs → convert. Only the
+    path rides through Spark; payload bytes never do."""
     import gzip
 
     from marky_spark.convert import convert
-    from marky_spark.ops.warc import records_to_docs, warc_records_from_dir
+    from marky_spark.ingest import docs_from_warc_dir
 
     def page(i: int) -> bytes:
         html = (f"<html><body><h1>Page {i}</h1><p>body text {i}</p>"
@@ -264,22 +264,21 @@ def test_records_from_dir_streams_real_files(spark, tmp_path):
     # decoy that must not match the glob
     (tmp_path / "notes.txt").write_bytes(b"not a warc")
 
-    recs = warc_records_from_dir(spark, str(tmp_path))
-    assert recs.where("ok = 'ok'").count() == 605
-    docs = records_to_docs(recs)
+    docs = docs_from_warc_dir(spark, str(tmp_path))
+    assert docs.where("doc_id NOT LIKE '%#drop'").count() == 605
     out = convert(docs).where("status = 'ok'")
     assert out.count() == 605
     one = out.where("doc_id = 'http://site/42'").collect()[0]
     assert "# Page 42" in one["markdown"]
 
 
-def test_warc_to_convert_end_to_end(spark):
-    """The crawl composition: WARC blob → record walk → INPUT_SCHEMA
-    adapter → convert kernels → Markdown with boilerplate stripped, the
-    exact shape of a Common-Crawl text-extraction job. No Exchange in
-    the whole plan."""
+def test_warc_to_convert_end_to_end(spark, tmp_path):
+    """The crawl composition: WARC file → record walk → INPUT_SCHEMA
+    docs → convert kernels → Markdown with boilerplate stripped, the
+    exact shape of a Common-Crawl text-extraction job. The door is one
+    Python stage, and convert adds no Exchange above its round-robin."""
     from marky_spark.convert import convert
-    from marky_spark.ops.warc import records_to_docs
+    from marky_spark.ingest import docs_from_warc_dir
 
     html = (b"<html><head><script>junk()</script></head><body>"
             b"<h1>Crawl Title</h1><p>real body text</p>"
@@ -295,9 +294,8 @@ def test_warc_to_convert_end_to_end(spark):
                       b"HTTP/1.1 200 OK\r\n\r\n" + csv_body,
                       b"WARC-Target-URI: http://site/data.csv\r\n"
                       b"Content-Type: application/http;msgtype=response\r\n"))
-    media = spark.createDataFrame([("crawl0", bytearray(blob))],
-                                  "media_ref string, payload binary")
-    docs = records_to_docs(warc_records(media))
+    (tmp_path / "crawl0.warc").write_bytes(blob)
+    docs = docs_from_warc_dir(spark, str(tmp_path))
     out = {r["doc_id"]: r for r in convert(docs).collect()}
     page = out["http://site/page"]
     assert page["status"] == "ok" and page["conv_kind"] == "html"
@@ -307,18 +305,20 @@ def test_warc_to_convert_end_to_end(spark):
     data = out["http://site/data.csv"]
     assert data["status"] == "ok" and data["conv_kind"] == "csv"
     assert data["markdown"].startswith("| x | y |")
+    door = docs._jdf.queryExecution().executedPlan().toString()
+    assert door.count("MapInPandas") == 1 and "Union" not in door
     plan = convert(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert plan.count("Exchange") == door.count("Exchange") == 1
 
 
-def test_crawl_to_curated_corpus_end_to_end(spark):
+def test_crawl_to_curated_corpus_end_to_end(spark, tmp_path):
     """THE pipeline this engine exists for, in one chain: WARC crawl
     archives → record walk → convert (boilerplate stripped) → curate
     (quality filter + lang-id + exact dedup + sampling) → training rows.
     Exact duplicates across different URLs collapse; junk pages filter."""
     from marky_spark.convert import convert
+    from marky_spark.ingest import docs_from_warc_dir
     from marky_spark.ops.curate import curate
-    from marky_spark.ops.warc import records_to_docs
 
     page = (b"<html><body><h1>The Quick Study</h1>"
             + b"<p>the quick brown fox jumps over the lazy dog and the "
@@ -338,9 +338,8 @@ def test_crawl_to_curated_corpus_end_to_end(spark):
             "response", b"HTTP/1.1 200 OK\r\n\r\n" + body,
             f"WARC-Target-URI: {uri}\r\n".encode()
             + b"Content-Type: application/http;msgtype=response\r\n"))
-    media = spark.createDataFrame([("crawl", bytearray(b"".join(recs)))],
-                                  "media_ref string, payload binary")
-    docs = records_to_docs(warc_records(media))
+    (tmp_path / "crawl.warc").write_bytes(b"".join(recs))
+    docs = docs_from_warc_dir(spark, str(tmp_path))
     out = curate(docs, rates={"en": 1.0}, default_rate=1.0,
                  min_quality_bp=1500)
     rows = {r["doc_id"]: r for r in out.collect()}
