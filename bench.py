@@ -72,21 +72,33 @@ def main() -> None:
         load_documents,
     )
     from marky_spark.ops.curate import curate as curate_op
-    from marky_spark.pipeline import skew_balanced
+    from marky_spark.pipeline import (
+        bucket_sizes,
+        plan_wave,
+        skew_balanced,
+        with_bucket,
+    )
 
     corpus = spark_corpus(spark, n_docs).persist()
     corpus.count()  # materialize generation outside the timed window
 
     # adversarial byte skew: every 50th doc is 100x the median (~2% of docs
-    # hold ~2/3 of all bytes) — exercises pipeline.skew_balanced's p99 split
-    # + round-robin isolation of the mega tail, the path that keeps a 100 TB
-    # wave from serializing multi-GB documents into one hash partition
+    # hold ~2/3 of all bytes) — exercises the durable job's sizing aggregate
+    # + byte-budget plan + round-robin isolation of the mega tail, the path
+    # that keeps a 100 TB wave from serializing multi-GB documents into one
+    # task
     skew_n = max(n_docs // 10, 2000)
     skewed = spark_corpus(spark, skew_n, mega_every=50,
                           mega_factor=100).persist()
     skewed.count()
 
     counts: dict[str, int] = {}
+
+    def run_convert_skewed() -> int:
+        # sized and planned as one wave, as run_convert_job plans each wave
+        wave = plan_wave(spark, bucket_sizes(with_bucket(skewed, 1)).values())
+        return convert(skew_balanced(skewed, wave)) \
+            .where("status = 'ok'").count()
 
     def run_convert_corpus() -> None:
         out = convert(corpus)
@@ -113,9 +125,7 @@ def main() -> None:
         docs_to_spans(load_documents(spark, sf_dir)),
         rates=entry_mod._CURATE_RATES, default_rate=0.25,
         min_quality_bp=entry_mod._CURATE_MIN_BP).count()))
-    plan.append(("convert_skewed",
-                 lambda: convert(skew_balanced(skewed, cpus * 2))
-                 .where("status = 'ok'").count()))
+    plan.append(("convert_skewed", run_convert_skewed))
 
     # ---- INTERLEAVED min-of-N: one full pass over all queries per round,
     # so a degraded window hits every query equally instead of wiping out

@@ -13,10 +13,14 @@ over 10^12 documents, evidenced locally:
   visible (atomic rename). Restart skips committed buckets — resume costs one
   metadata read + a partition-pruned filter, NOT an anti-join against 10^12
   output rows.
-- **Skew**: per-doc payload bytes are computed JVM-side
-  (``aggregate(spans, ...)``); the mega-doc tail (> ``skew_factor`` × p99) is
-  round-robin repartitioned so no hash partition serializes several
-  multi-GB documents, while the small-doc bulk keeps cheap hash partitioning.
+- **Skew**: one JVM-side aggregate per job sizes every pending bucket
+  (payload bytes and largest doc, from ``aggregate(spans, ...)``); each
+  wave is then planned from those rows with no Spark job. The task count
+  comes from Spark's own per-task byte budget
+  (``spark.sql.files.maxPartitionBytes``, at least ``defaultParallelism``
+  tasks); a doc over ``1/skew_factor`` of a task's share is tail and is
+  round-robin repartitioned, so no task serializes several multi-GB
+  documents, while the bulk flows into conversion narrowly.
 - **Lineage + metrics**: per-partition lineage rows (task-level audit) and
   per-kind metrics come from one aggregate per wave, written by the driver
   just before the commit. They become visible with the commit: a resume
@@ -30,13 +34,13 @@ import json
 import os
 import shutil
 import time
-from dataclasses import dataclass
+from collections.abc import Iterable
+from dataclasses import asdict, dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .convert import convert
 
@@ -82,40 +86,76 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def skew_balanced(df: DataFrame, partitions: int,
-                  skew_factor: float = 4.0) -> DataFrame:
-    """Split the mega-doc tail off the bulk — WITHOUT shuffling the bulk.
+#: per-doc payload bytes, evaluated JVM-side. A SQL string, not a module-level
+#: ``F.expr``: building a Column needs an active SparkContext.
+DOC_BYTES = ("coalesce(aggregate(spans, 0L,"
+             " (a, s) -> a + length(coalesce(s.text, ''))), 0L)")
 
-    Threshold = skew_factor × p99 of per-doc payload bytes (computed from
-    span text lengths JVM-side — no Python). Only documents over the
-    threshold are round-robin repartitioned (perfect byte balance for the
-    tail); the bulk keeps its incoming partitioning and flows into the
-    conversion map narrowly. Reshuffling 100 TB to redistribute a <1%
-    tail would make the skew fix itself the bottleneck — measured locally,
-    the bulk shuffle capped 4→16-core scaling efficiency at ~0.37, vs
-    ≥0.8 with the tail-only shuffle.
 
-    The bulk is only repartitioned (round-robin, no key needed before a
-    narrow map) when the input has too few partitions to use the executors.
+@dataclass(frozen=True)
+class WavePlan:
+    """How one wave is laid over tasks; see :func:`plan_wave`."""
+
+    tasks: int
+    threshold_bytes: int    # a doc over this is a tail doc
+    max_doc_bytes: int      # the wave's largest doc
+
+
+def bucket_sizes(bucketed: DataFrame) -> dict[int, tuple[int, int]]:
+    """``bucket -> (payload bytes, largest doc bytes)`` from one JVM-side
+    aggregate; buckets holding no doc are absent."""
+    size = F.expr(DOC_BYTES)
+    rows = bucketed.groupBy("bucket").agg(F.sum(size), F.max(size)).collect()
+    return {r[0]: (r[1], r[2]) for r in rows}
+
+
+def plan_wave(spark: SparkSession, sizes: Iterable[tuple[int, int]],
+              skew_factor: float = 4.0) -> WavePlan:
+    """Plan a wave from its buckets' ``(bytes, largest doc)`` rows with no
+    Spark job.
+
+    ``tasks = max(defaultParallelism, ceil(bytes / maxPartitionBytes))``:
+    Spark's own per-task byte budget for file scans, so a small wave does
+    not pay the per-task floor more often than it has cores and a big wave
+    gets a task per budget. A doc is tail when it holds more than
+    ``1 / skew_factor`` of a task's fair share (``bytes / tasks``), however
+    many such docs the wave has.
     """
-    sized = df.withColumn(
-        "_doc_bytes",
-        F.expr("aggregate(spans, 0L, (a, s) -> a + length(coalesce(s.text, '')))"),
-    )
-    p99 = sized.stat.approxQuantile("_doc_bytes", [0.99], 0.01)
-    threshold = (p99[0] if p99 else 0.0) * skew_factor
+    sizes = list(sizes)
+    wave_bytes = sum(b for b, _ in sizes)
+    budget = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    tasks = max(spark.sparkContext.defaultParallelism, -(-wave_bytes // budget))
+    return WavePlan(tasks, int(wave_bytes / tasks / skew_factor),
+                    max((m for _, m in sizes), default=0))
+
+
+def skew_balanced(df: DataFrame, plan: WavePlan) -> DataFrame:
+    """Lay ``df`` over ``plan.tasks`` partitions, splitting the tail off the
+    bulk WITHOUT shuffling the bulk.
+
+    Docs over ``plan.threshold_bytes`` (per-doc payload bytes, computed
+    JVM-side, no Python) are round-robin repartitioned over ``plan.tasks``
+    partitions: byte balance for the tail. The bulk flows into the
+    conversion map narrowly: ``coalesce`` when the input has more
+    partitions than tasks, a round-robin only when it has fewer.
+    Reshuffling 100 TB to redistribute a <1% tail would make the skew fix
+    itself the bottleneck: measured locally, the bulk shuffle capped
+    4→16-core scaling efficiency at ~0.37, vs ≥0.8 with the tail-only
+    shuffle. A wave whose largest doc is under the threshold plans with no
+    filter, ``Union`` or ``Exchange``.
+    """
     in_parts = df.rdd.getNumPartitions()
-    if threshold <= 0:
-        return df if in_parts >= partitions else df.repartition(partitions)
-    small = sized.where(F.col("_doc_bytes") <= threshold).drop("_doc_bytes")
-    if in_parts < partitions:
-        small = small.repartition(partitions)
-    big = (
-        sized.where(F.col("_doc_bytes") > threshold)
-        .drop("_doc_bytes")
-        .repartition(max(partitions // 4, 1))  # round-robin: byte balance
-    )
-    return small.unionByName(big)
+
+    def bulk(d: DataFrame) -> DataFrame:
+        if in_parts > plan.tasks:
+            return d.coalesce(plan.tasks)
+        return d.repartition(plan.tasks) if in_parts < plan.tasks else d
+
+    if plan.max_doc_bytes <= plan.threshold_bytes:
+        return bulk(df)
+    size = F.expr(DOC_BYTES)
+    tail = df.where(size > plan.threshold_bytes).repartition(plan.tasks)
+    return bulk(df.where(size <= plan.threshold_bytes)).unionByName(tail)
 
 
 @dataclass
@@ -133,18 +173,19 @@ def run_convert_job(
     out_dir: str,
     n_buckets: int = 64,
     waves: int = 4,
-    partitions: int | None = None,
     skew_factor: float = 4.0,
     fail_after_wave: int | None = None,
 ) -> list[WaveResult]:
     """Bucketed, wave-committed, resumable conversion job.
 
-    ``fail_after_wave`` injects a crash after N committed waves (tests the
-    resume contract).
+    The pending buckets are sized once (:func:`bucket_sizes`) and every
+    wave is planned from those rows (:func:`plan_wave`); each wave filters
+    ``input_df`` again, so callers persist an input that is costly to
+    recompute. ``fail_after_wave`` injects a crash after N committed waves
+    (tests the resume contract).
     """
     store = SnapshotStore(out_dir)
     committed = store.committed_buckets()
-    parts = partitions or spark.sparkContext.defaultParallelism * 2
 
     bucketed = with_bucket(input_df, n_buckets)
     pending = [b for b in range(n_buckets) if b not in committed]
@@ -160,20 +201,17 @@ def run_convert_job(
     # snapshot; this restores that semantic for the parquet stand-in.)
     wave_base = len(store.read()["snapshots"])
     _clean_uncommitted(out_dir, pending, wave_base)
+    sizes = bucket_sizes(bucketed.where(F.col("bucket").isin(pending)))
 
     per_wave = max(1, -(-len(pending) // waves))
     for w in range(0, len(pending), per_wave):
         wave_buckets = pending[w:w + per_wave]
         wave_id = wave_base + w // per_wave
-        t0 = time.time()
-        # persist the wave slice: the skew quantile plus the small/big split
-        # would otherwise rescan the input three times per wave
-        wave_df = (
-            bucketed.where(F.col("bucket").isin(wave_buckets))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        out = convert(skew_balanced(wave_df.drop("bucket"), parts,
-                                    skew_factor))
+        t0 = time.perf_counter()
+        plan = plan_wave(spark, [sizes.get(b, (0, 0)) for b in wave_buckets],
+                         skew_factor)
+        wave_df = bucketed.where(F.col("bucket").isin(wave_buckets))
+        out = convert(skew_balanced(wave_df.drop("bucket"), plan))
         out = with_bucket(out, n_buckets)
         out = out.withColumn("_pid", F.spark_partition_id())
         out.persist()
@@ -197,7 +235,6 @@ def run_convert_job(
             ).collect()
         finally:
             out.unpersist()
-            wave_df.unpersist()
 
         # grouping_id sets one bit per column a set leaves out, _pid highest
         lineage = [r for r in stats if r["_gid"] == 0b011]
@@ -206,9 +243,10 @@ def run_convert_job(
         _write_wave_stats(out_dir, "lineage", lineage, wave_id)
         _write_wave_stats(out_dir, "metrics",
                           [r for r in stats if r["_gid"] == 0b100], wave_id)
-        dt = time.time() - t0
+        dt = time.perf_counter() - t0
         store.commit(wave_buckets, {
             "n_docs": n, "n_errors": e, "seconds": round(dt, 3),
+            **asdict(plan),
         })
         results.append(WaveResult(wave_id, wave_buckets, n, e, dt))
         if fail_after_wave is not None and len(results) >= fail_after_wave:

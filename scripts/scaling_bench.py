@@ -69,8 +69,9 @@ def worker(cores: int, n_docs: int, repeats: int = 3,
     # is identical at both levels; the only variable is the core count
     if skew:
         # adversarial byte skew: every 50th doc 100x the median (~2% of
-        # docs, ~2/3 of bytes) — the timed job includes skew_balanced's
-        # p99 quantile + tail isolation, as a production wave would
+        # docs, ~2/3 of bytes) — the timed job includes the sizing
+        # aggregate + byte-budget plan + tail isolation, as a production
+        # wave would; the plan coalesces the 256 input partitions to its tasks
         corpus = spark_corpus(spark, n_docs, partitions=256,
                               mega_every=50, mega_factor=100).persist()
     else:
@@ -81,9 +82,15 @@ def worker(cores: int, n_docs: int, repeats: int = 3,
     def job():
         df = corpus
         if skew:
-            from marky_spark.pipeline import skew_balanced
+            from marky_spark.pipeline import (
+                bucket_sizes,
+                plan_wave,
+                skew_balanced,
+                with_bucket,
+            )
 
-            df = skew_balanced(corpus, cores * 2)
+            sizes = bucket_sizes(with_bucket(corpus, 1))
+            df = skew_balanced(corpus, plan_wave(spark, sizes.values()))
         return convert(df).where("status = 'ok'").count()
 
     best = None

@@ -1,14 +1,21 @@
 """Resumable bucketed job: crash → restart → complete, no dupes, no loss."""
 
 import pytest
+from pyspark.sql import functions as F
 
+from marky_spark import pipeline
 from marky_spark.corpus import spark_corpus
 from marky_spark.pipeline import (
+    DOC_BYTES,
     SnapshotStore,
+    bucket_sizes,
+    plan_wave,
     read_output,
     run_convert_job,
     skew_balanced,
+    with_bucket,
 )
+from marky_spark.schema import INPUT_SCHEMA
 
 N_DOCS = 240
 
@@ -20,7 +27,7 @@ def test_crash_resume_completes_without_dupes(spark, tmp_path):
     # first run crashes after 1 committed wave
     with pytest.raises(RuntimeError, match="injected failure"):
         run_convert_job(spark, corpus, out_dir, n_buckets=16, waves=4,
-                        partitions=4, fail_after_wave=1)
+                        fail_after_wave=1)
     committed_1 = SnapshotStore(out_dir).committed_buckets()
     assert 0 < len(committed_1) < 16
     partial = read_output(spark, out_dir)
@@ -28,8 +35,7 @@ def test_crash_resume_completes_without_dupes(spark, tmp_path):
     assert 0 < n_partial < N_DOCS
 
     # restart: only remaining buckets are processed
-    results = run_convert_job(spark, corpus, out_dir, n_buckets=16, waves=4,
-                              partitions=4)
+    results = run_convert_job(spark, corpus, out_dir, n_buckets=16, waves=4)
     done = sum(r.n_docs for r in results)
     assert done == N_DOCS - n_partial  # no recomputation of committed work
 
@@ -38,13 +44,26 @@ def test_crash_resume_completes_without_dupes(spark, tmp_path):
     assert final.select("doc_id").distinct().count() == N_DOCS  # no dupes
     assert SnapshotStore(out_dir).committed_buckets() == set(range(16))
 
+    # every snapshot explains its own split: the plan read back from the
+    # manifest is the one the wave's payload bytes give
+    sized = with_bucket(corpus, 16).withColumn("_bytes", F.expr(DOC_BYTES))
+    cores = spark.sparkContext.defaultParallelism
+    for snap in SnapshotStore(out_dir).read()["snapshots"]:
+        stats = snap["stats"]
+        wave_bytes, max_doc = sized.where(
+            F.col("bucket").isin(snap["buckets"])
+        ).agg(F.sum("_bytes"), F.max("_bytes")).first()
+        assert stats["tasks"] == cores  # far under one task's byte budget
+        assert stats["threshold_bytes"] == int(wave_bytes / cores / 4.0)
+        assert stats["max_doc_bytes"] == max_doc
+        assert stats["seconds"] > 0
+
 
 def test_rerun_on_complete_job_is_noop(spark, tmp_path):
     out_dir = str(tmp_path / "job2")
     corpus = spark_corpus(spark, 60, partitions=2)
-    run_convert_job(spark, corpus, out_dir, n_buckets=4, waves=2, partitions=2)
-    again = run_convert_job(spark, corpus, out_dir, n_buckets=4, waves=2,
-                            partitions=2)
+    run_convert_job(spark, corpus, out_dir, n_buckets=4, waves=2)
+    again = run_convert_job(spark, corpus, out_dir, n_buckets=4, waves=2)
     assert again == []
     assert read_output(spark, out_dir).count() == 60
 
@@ -52,7 +71,7 @@ def test_rerun_on_complete_job_is_noop(spark, tmp_path):
 def test_lineage_and_metrics_written(spark, tmp_path):
     out_dir = str(tmp_path / "job3")
     corpus = spark_corpus(spark, 80, partitions=2)
-    run_convert_job(spark, corpus, out_dir, n_buckets=4, waves=1, partitions=2)
+    run_convert_job(spark, corpus, out_dir, n_buckets=4, waves=1)
 
     lineage = spark.read.parquet(f"{out_dir}/lineage")
     assert lineage.groupBy().sum("n_docs").collect()[0][0] == 80
@@ -80,13 +99,11 @@ def test_commit_crash_does_not_double_count_stats(spark, tmp_path,
 
     monkeypatch.setattr(SnapshotStore, "commit", crashing_commit)
     with pytest.raises(RuntimeError, match="injected commit crash"):
-        run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4,
-                        partitions=4)
+        run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4)
     monkeypatch.undo()
     assert len(SnapshotStore(out_dir).read()["snapshots"]) == 1
 
-    run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4,
-                    partitions=4)
+    run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4)
     lineage = spark.read.parquet(f"{out_dir}/lineage")
     metrics = spark.read.parquet(f"{out_dir}/metrics")
     assert lineage.groupBy().sum("n_docs").collect()[0][0] == 800
@@ -95,21 +112,45 @@ def test_commit_crash_does_not_double_count_stats(spark, tmp_path,
 
 
 def test_wave_runs_at_most_eight_spark_jobs(spark, tmp_path):
-    """The wave's bookkeeping (lineage, metrics, commit totals) rides one
-    aggregate: skew split, parquet write and stats fit in 8 jobs a wave."""
+    """One sizing aggregate per call (2 jobs); a wave is its parquet write
+    plus the stats aggregate (3 jobs). A wave that splits a tail adds the
+    tail's round-robin shuffle and the adaptive plan's stage over the
+    cached output (2 jobs)."""
     corpus = spark_corpus(spark, 200, partitions=4).persist()
     corpus.count()
+    out_dir = str(tmp_path / "jobs")
     sc = spark.sparkContext
     sc.setJobGroup("wave-job-count", "run_convert_job")
     try:
-        results = run_convert_job(spark, corpus, str(tmp_path / "jobs"),
-                                  n_buckets=4, waves=2, partitions=4)
+        results = run_convert_job(spark, corpus, out_dir, n_buckets=4,
+                                  waves=2)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         corpus.unpersist()
     jobs = sc.statusTracker().getJobIdsForGroup("wave-job-count")
     assert len(results) == 2
-    assert len(jobs) <= 8 * len(results), len(jobs)
+    split = sum(s["stats"]["max_doc_bytes"] > s["stats"]["threshold_bytes"]
+                for s in SnapshotStore(out_dir).read()["snapshots"])
+    assert len(jobs) <= 2 + 3 * len(results) + 2 * split, (len(jobs), split)
+
+
+def test_sizing_aggregate_runs_once_per_call(spark, tmp_path, monkeypatch):
+    """Waves are planned from one sizing pass over the pending buckets,
+    however many waves the call runs."""
+    corpus = spark_corpus(spark, 120, partitions=4)
+    calls = []
+
+    def counting(bucketed):
+        calls.append(1)
+        return bucket_sizes(bucketed)
+
+    monkeypatch.setattr(pipeline, "bucket_sizes", counting)
+    for waves in (1, 4):
+        calls.clear()
+        results = run_convert_job(spark, corpus, str(tmp_path / f"w{waves}"),
+                                  n_buckets=4, waves=waves)
+        assert len(results) == waves
+        assert len(calls) == 1, (waves, len(calls))
 
 
 def test_stats_tables_match_production_schema(spark, tmp_path):
@@ -119,7 +160,7 @@ def test_stats_tables_match_production_schema(spark, tmp_path):
 
     out_dir = str(tmp_path / "schema")
     run_convert_job(spark, spark_corpus(spark, 40, partitions=2), out_dir,
-                    n_buckets=2, waves=2, partitions=2)
+                    n_buckets=2, waves=2)
     ddl = lineage_table_ddl()
     columns = ddl[ddl.index("(") + 1:ddl.index(")")].split(",")
     expected = {name: typ.lower()
@@ -135,21 +176,47 @@ def test_stats_tables_match_production_schema(spark, tmp_path):
                   lineage.select("wave").distinct().collect()) == [0, 1]
 
 
-def test_skew_balanced_splits_mega_docs(spark):
-    from marky_spark.schema import INPUT_SCHEMA
+def _text_docs(spark, sizes):
+    return spark.createDataFrame(
+        [{"doc_id": f"d{i:04d}",
+          "spans": [{"kind": "text", "text": "x" * n, "media_ref": "",
+                     "offset": 0}]}
+         for i, n in enumerate(sizes)], schema=INPUT_SCHEMA)
 
-    rows = [
-        {"doc_id": f"s{i}",
-         "spans": [{"kind": "text", "text": "x" * 100, "media_ref": "",
-                    "offset": 0}]}
-        for i in range(200)
-    ]
-    rows.append({"doc_id": "mega",
-                 "spans": [{"kind": "text", "text": "y" * 2_000_000,
-                            "media_ref": "", "offset": 0}]})
-    df = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
-    balanced = skew_balanced(df, partitions=8, skew_factor=4.0)
-    assert balanced.count() == 201  # no loss through the split/union
+
+def _plan(spark, df):
+    return plan_wave(spark, bucket_sizes(with_bucket(df, 1)).values())
+
+
+def test_skew_balanced_splits_mega_docs(spark):
+    # a doc with null spans still converts to a row: the split keeps it
+    nospans = spark.createDataFrame([("nospans", None)], schema=INPUT_SCHEMA)
+    df = _text_docs(spark, [100] * 200 + [2_000_000]).unionByName(nospans)
+    plan = _plan(spark, df)
+    assert plan.max_doc_bytes == 2_000_000 > plan.threshold_bytes
+    balanced = skew_balanced(df, plan)
+    assert balanced.count() == 202  # no loss through the split/union
+
+
+def test_dense_tail_is_isolated(spark):
+    """5% of docs at 100x the rest: 4 x p99 of doc bytes fell inside such
+    a tail and isolated nothing. Every doc over a quarter of a task's byte
+    share is round-robined over the wave's tasks, after the bulk's."""
+    sizes = [10_000 if i % 20 == 0 else 100 for i in range(200)]
+    df = _text_docs(spark, sizes)
+    plan = _plan(spark, df)
+    assert plan.tasks == spark.sparkContext.defaultParallelism
+    assert plan.threshold_bytes == int(sum(sizes) / plan.tasks / 4.0)
+    out = skew_balanced(df, plan)
+    assert out.rdd.getNumPartitions() == 2 * plan.tasks
+    by_part = out.withColumn("_pid", F.spark_partition_id()).collect()
+    tail = [r for r in by_part if r["_pid"] >= plan.tasks]
+    assert sorted(r["doc_id"] for r in tail) == [
+        f"d{i:04d}" for i, n in enumerate(sizes) if n == 10_000]
+    per_task = [sum(r["_pid"] == p for r in tail)
+                for p in range(plan.tasks, 2 * plan.tasks)]
+    assert max(per_task) - min(per_task) <= 1  # round-robin balance
+    assert len(by_part) == 200
 
 
 def test_resume_cleans_orphans_from_mid_wave_crash(spark, tmp_path):
@@ -319,7 +386,7 @@ def test_resume_after_compaction_crash_exactly_once(spark, tmp_path):
     corpus = spark_corpus(spark, N_DOCS, partitions=4)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4,
-                        partitions=4, fail_after_wave=2)
+                        fail_after_wave=2)
     committed = sorted(SnapshotStore(out_dir).committed_buckets())
     assert committed and len(committed) < 8
 
@@ -332,7 +399,7 @@ def test_resume_after_compaction_crash_exactly_once(spark, tmp_path):
               os.path.join(scratch, f"bucket={b}.old"))
 
     # resume the job (processes only pending buckets), then read
-    run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4, partitions=4)
+    run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4)
     final = read_output(spark, out_dir)
     assert final.count() == N_DOCS
     assert final.select("doc_id").distinct().count() == N_DOCS
@@ -365,8 +432,7 @@ def test_ingest_drops_land_in_metrics_sink(spark, tmp_path):
 
     docs = docs_from_warc_dir(spark, str(crawl))
     out_dir = str(tmp_path / "job_drops")
-    results = run_convert_job(spark, docs, out_dir, n_buckets=2, waves=1,
-                              partitions=2)
+    results = run_convert_job(spark, docs, out_dir, n_buckets=2, waves=1)
     assert sum(r.n_docs for r in results) == 2  # 1 converted + 1 drop row
     assert sum(r.n_errors for r in results) == 1
 

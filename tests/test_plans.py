@@ -236,18 +236,54 @@ def test_skew_balanced_does_not_shuffle_the_bulk(spark, tmp_path):
     must flow narrowly (a corpus-wide shuffle to fix a <1% tail was the
     measured 4→16 scaling bottleneck)."""
     from marky_spark.corpus import spark_corpus
-    from marky_spark.pipeline import skew_balanced
+    from marky_spark.pipeline import (
+        bucket_sizes,
+        plan_wave,
+        skew_balanced,
+        with_bucket,
+    )
 
     path = str(tmp_path / "skewspans")
     spark_corpus(spark, 300, partitions=8, mega_every=50,
                  mega_factor=100).write.parquet(path)
     df = spark.read.parquet(path)
-    out = skew_balanced(df, partitions=4)  # input parts (>=8) >= target 4
-    plan = plan_of(out)
+    wave = plan_wave(spark, bucket_sizes(with_bucket(df, 1)).values())
+    assert wave.max_doc_bytes > wave.threshold_bytes  # the tail is split
+    assert df.rdd.getNumPartitions() >= wave.tasks  # bulk needs no shuffle
+    plan = plan_of(skew_balanced(df, wave))
     # union of two branches: exactly ONE exchange — the numbered round-robin
     # repartition of the tail; the bulk branch contributes none
     assert plan.count("Exchange") == 1, plan
     assert "REPARTITION_BY_NUM" in plan, plan
+
+
+def test_skew_balanced_without_tail_is_narrow(spark):
+    """A wave whose largest doc is under the threshold is coalesced to
+    its task count: no filter, no Union, no Exchange."""
+    from pyspark.sql import functions as F
+
+    from marky_spark.pipeline import (
+        bucket_sizes,
+        plan_wave,
+        skew_balanced,
+        with_bucket,
+    )
+
+    span = F.struct(F.lit("text").alias("kind"),
+                    F.repeat(F.lit("x"), 100).alias("text"),
+                    F.lit("").alias("media_ref"),
+                    F.lit(0).alias("offset"))
+    df = spark.range(0, 400, numPartitions=8).select(
+        F.format_string("d%d", "id").alias("doc_id"),
+        F.array(span).alias("spans"))
+    wave = plan_wave(spark, bucket_sizes(with_bucket(df, 1)).values())
+    assert wave.max_doc_bytes == 100 <= wave.threshold_bytes
+    out = skew_balanced(df, wave)
+    plan = plan_of(out)
+    for op in ("Exchange", "Union", "Filter"):
+        assert op not in plan, plan
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert out.count() == 400
 
 
 def test_gif_pipeline_is_fully_narrow(spark):
