@@ -23,8 +23,17 @@ from .base import (
     segments_text,
 )
 from .csvk import convert_csv, convert_tsv
+from .docxk import convert_docx
+from .emlk import convert_eml
+from .epubk import convert_epub
+from .feedk import convert_feed
 from .htmlk import convert_html
 from .ipynbk import convert_ipynb
+from .odtk import convert_odp, convert_ods, convert_odt
+from .pdfk import convert_pdf
+from .pptxk import convert_pptx
+from .rtfk import convert_rtf
+from .xlsxk import convert_xlsx
 
 Kernel = Callable[[str], list[Segment]]
 
@@ -35,12 +44,24 @@ def _convert_text(text: str) -> list[Segment]:
 
 
 # Ordered to mirror lib.go:14-21 (csv, docx, epub, xlsx, html, ipynb, pdf,
-# pptx); binary kinds are appended by their modules on import below.
+# pptx); the beyond-the-reference kinds append after the reference's eight,
+# like RegisterConverter would.
 REGISTRY: dict[str, Kernel] = {
     "csv": convert_csv,
-    "tsv": convert_tsv,
+    "docx": convert_docx,
+    "epub": convert_epub,
+    "xlsx": convert_xlsx,
     "html": convert_html,
     "ipynb": convert_ipynb,
+    "pdf": convert_pdf,
+    "pptx": convert_pptx,
+    "rtf": convert_rtf,
+    "odt": convert_odt,
+    "ods": convert_ods,
+    "odp": convert_odp,
+    "eml": convert_eml,
+    "feed": convert_feed,
+    "tsv": convert_tsv,
     "text": _convert_text,
     "markdown": _convert_text,
 }
@@ -151,50 +172,6 @@ def register(kind: str, kernel: Kernel) -> None:
     """Extension point — reference parity: Marky.RegisterConverter (marky.go:21-23)."""
     REGISTRY[kind] = kernel
 
-
-def _late_bind() -> None:
-    """Bind binary-format kernels; kept separate so pure-text use never pays
-    their import cost and a broken optional kernel can't kill the registry."""
-    from .docxk import convert_docx
-    from .epubk import convert_epub
-    from .emlk import convert_eml
-    from .feedk import convert_feed
-    from .odtk import convert_odp, convert_ods, convert_odt
-    from .pdfk import convert_pdf
-    from .pptxk import convert_pptx
-    from .rtfk import convert_rtf
-    from .xlsxk import convert_xlsx
-
-    # insertion order rebuilt to mirror lib.go precedence; the
-    # beyond-the-reference kinds (rtf, odt) append after the
-    # reference's eight, like RegisterConverter would
-    ordered = {
-        "csv": REGISTRY["csv"],
-        "docx": convert_docx,
-        "epub": convert_epub,
-        "xlsx": convert_xlsx,
-        "html": REGISTRY["html"],
-        "ipynb": REGISTRY["ipynb"],
-        "pdf": convert_pdf,
-        "pptx": convert_pptx,
-        "rtf": convert_rtf,
-        "odt": convert_odt,
-        "ods": convert_ods,
-        "odp": convert_odp,
-        "eml": convert_eml,
-        "feed": convert_feed,
-        "tsv": REGISTRY["tsv"],
-        "text": _convert_text,
-        "markdown": _convert_text,
-    }
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-try:  # binary kernels land incrementally during the build
-    _late_bind()
-except ImportError:  # pragma: no cover
-    pass
 
 __all__ = [
     "REGISTRY",

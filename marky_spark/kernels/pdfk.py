@@ -18,6 +18,7 @@ from __future__ import annotations
 import re
 import zlib
 
+from ..ops.bitio import lzw_decode
 from .base import ConvertError, Segment, decode_binary_payload, md
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
@@ -219,6 +220,7 @@ class _Pdf:
         self._cache: dict[int, object] = {}
         self._crypt = None           # StdSecurityHandler when /Encrypt
         self._crypt_exempt: set[int] = set()
+        self._budget = _MAX_DECODED_BYTES  # decoded stream bytes still allowed
         self._load_xref()
         enc = self.trailer.get("/Encrypt")
         if enc is not None:
@@ -444,30 +446,55 @@ class _Pdf:
         for s in streams:
             s = self.resolve(s)
             if isinstance(s, _Stream):
-                chunks.append(s.decoded())
+                chunks.append(self.decoded(s))
         return b"\n".join(chunks)
+
+    def decoded(self, stream: "_Stream") -> bytes:
+        """The stream's bytes through its /Filter chain. Every stream of
+        the document draws on one decoded-bytes budget, so a flate or LZW
+        bomb stays bounded. /DecodeParms is a dict or an array parallel
+        to /Filter; a /Predictor is not applied, so it is an error."""
+        filters = self.resolve(stream.info.get("/Filter"))
+        if not isinstance(filters, list):
+            filters = [filters] if filters else []
+        parms = self.resolve(stream.info.get("/DecodeParms"))
+        if not isinstance(parms, list):
+            parms = [parms] * len(filters)
+        data = stream.raw
+        for i, f in enumerate(filters):
+            f = self.resolve(f)
+            if f is None:
+                continue
+            if f not in ("/FlateDecode", "/LZWDecode"):
+                raise ConvertError(f"unsupported PDF filter {f}")
+            parm = self.resolve(parms[i]) if i < len(parms) else None
+            parm = parm if isinstance(parm, dict) else {}
+            predictor = self.resolve(parm.get("/Predictor", 1))
+            if predictor != 1:
+                raise ConvertError(f"unsupported PDF predictor {predictor}")
+            if f == "/FlateDecode":
+                d = zlib.decompressobj()
+                try:
+                    data = d.decompress(data, self._budget + 1)
+                except zlib.error as exc:
+                    raise ConvertError(f"FlateDecode failed: {exc}") from exc
+                if not d.eof and len(data) <= self._budget:
+                    raise ConvertError(
+                        "FlateDecode failed: incomplete or truncated stream")
+            else:
+                early = 0 if self.resolve(parm.get("/EarlyChange")) == 0 else 1
+                data = lzw_decode(data, 8, True, early, self._budget + 1,
+                                  ConvertError)
+            if len(data) > self._budget:
+                raise ConvertError("PDF streams exceed the decoded-bytes budget")
+            self._budget -= len(data)
+        return bytes(data)
 
 
 class _Stream:
     def __init__(self, info: dict, raw: bytes):
         self.info = info
         self.raw = raw
-
-    def decoded(self) -> bytes:
-        filt = self.info.get("/Filter")
-        filters = filt if isinstance(filt, list) else [filt] if filt else []
-        data = self.raw
-        for f in filters:
-            if f == "/FlateDecode":
-                try:
-                    data = zlib.decompress(data)
-                except zlib.error as exc:
-                    raise ConvertError(f"FlateDecode failed: {exc}") from exc
-            elif f is None:
-                continue
-            else:
-                raise ConvertError(f"unsupported PDF filter {f}")
-        return data
 
 
 # ---------------------------------------------------------------------------
@@ -493,6 +520,7 @@ def _decode_pdf_text(raw: bytes) -> str:
 # ---------------------------------------------------------------------------
 
 _MAX_CMAP_ENTRIES = 1 << 17  # hostile-CMap guard: bfrange can demand 2^31
+_MAX_DECODED_BYTES = 1 << 26  # decoded stream bytes one document may hold
 
 
 def _byte_table(codec: str) -> tuple[str, ...]:
@@ -801,7 +829,7 @@ def _font_decoder(pdf: "_Pdf", font: dict) -> _FontDecoder:
     tu = pdf.resolve(font.get("/ToUnicode"))
     if isinstance(tu, _Stream):
         try:
-            cmap, cs_bytes = _parse_tounicode(tu.decoded())
+            cmap, cs_bytes = _parse_tounicode(pdf.decoded(tu))
             if font.get("/Subtype") != "/Type0":
                 nbytes = cs_bytes
             if not cmap:

@@ -29,6 +29,8 @@ mid-row, and oversized dimensions are all typed errors, never crashes.
 """
 from __future__ import annotations
 
+from .bitio import MsbReader
+
 MAX_FAX_PIXELS = 1 << 26
 
 
@@ -143,40 +145,7 @@ _MAX_RUN_CODE_LEN = 13   # longest run code (black make-ups)
 _MAX_MODE_CODE_LEN = 7   # longest vertical code
 
 
-class _BitReader:
-    """MSB-first bit reader over the fax stream."""
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # absolute bit position
-
-    def bits_left(self) -> int:
-        return len(self.data) * 8 - self.pos
-
-    def read_bit(self) -> int:
-        p = self.pos
-        if p >= len(self.data) * 8:
-            raise FaxError("fax stream ran out of bits")
-        self.pos = p + 1
-        return (self.data[p >> 3] >> (7 - (p & 7))) & 1
-
-    def peek12(self) -> int:
-        """Next 12 bits zero-padded (for EOL scanning)."""
-        v = 0
-        p = self.pos
-        end = len(self.data) * 8
-        for k in range(12):
-            v <<= 1
-            if p + k < end:
-                v |= (self.data[(p + k) >> 3] >> (7 - ((p + k) & 7))) & 1
-        return v
-
-    def align_byte(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-
-def _read_run(br: _BitReader, white: bool, max_run: int) -> int:
+def _read_run(br: MsbReader, white: bool, max_run: int) -> int:
     """One complete run length: zero or more make-ups + one terminating
     code (make-ups are multiples of 64; terminating codes are 0..63).
     ``max_run`` (the row width) bounds the make-up chain — a legal run
@@ -188,7 +157,7 @@ def _read_run(br: _BitReader, white: bool, max_run: int) -> int:
         value = 0
         run = None
         while length < _MAX_RUN_CODE_LEN:
-            value = (value << 1) | br.read_bit()
+            value = (value << 1) | br.read(1)
             length += 1
             run = dec.get((length, value))
             if run is not None:
@@ -204,11 +173,11 @@ def _read_run(br: _BitReader, white: bool, max_run: int) -> int:
             return total
 
 
-def _read_mode(br: _BitReader):
+def _read_mode(br: MsbReader):
     length = 0
     value = 0
     while length < _MAX_MODE_CODE_LEN:
-        value = (value << 1) | br.read_bit()
+        value = (value << 1) | br.read(1)
         length += 1
         mode = _MODE_DEC.get((length, value))
         if mode is not None:
@@ -229,7 +198,7 @@ def _transitions(row: bytearray) -> list[int]:
     return out
 
 
-def _decode_2d_row(br: _BitReader, ref: list[int],
+def _decode_2d_row(br: MsbReader, ref: list[int],
                    width: int) -> tuple[bytearray, list[int]]:
     """Decode ONE two-dimensionally coded line against the reference
     line's changing elements — the walk shared verbatim by T.6 (G4,
@@ -296,12 +265,12 @@ def g4_decode(data: bytes, width: int, height: int, *,
     coded line starts on a byte boundary."""
     if width < 1 or height < 1 or width * height > MAX_FAX_PIXELS:
         raise FaxError(f"bad fax dimensions {width}x{height}")
-    br = _BitReader(data)
+    br = MsbReader(data, FaxError)
     out = bytearray()
     ref: list[int] = []  # changing elements of the reference line
     for _y in range(height):
         if byte_align:
-            br.align_byte()
+            br.align()
         row, cur = _decode_2d_row(br, ref, width)
         out += row
         ref = cur
@@ -405,35 +374,35 @@ def mh_decode(data: bytes, width: int, height: int, *,
     run code collides with it)."""
     if width < 1 or height < 1 or width * height > MAX_FAX_PIXELS:
         raise FaxError(f"bad fax dimensions {width}x{height}")
-    br = _BitReader(data)
+    br = MsbReader(data, FaxError)
     out = bytearray()
     for y in range(height):
         if eol:
             _scan_eol(br, y)
         elif byte_align:
             if y:
-                br.align_byte()
+                br.align()
         else:
-            while br.bits_left() >= 12 and br.peek12() == 1:
-                br.pos += 12
+            while br.bits_left() >= 12 and br.peek(12) == 1:
+                br.consume(12)
         out += _decode_1d_row(br, width, y)
     return bytes(out)
 
 
-def _scan_eol(br: _BitReader, y: int) -> None:
+def _scan_eol(br: MsbReader, y: int) -> None:
     """Scan forward over fill bits to the 000000000001 EOL marker. T.4
     fill (inserted to meet minimum scan-line transmission time in real
     fax captures) is UNBOUNDED zero bits — consumption is naturally
     bounded by the stream length."""
-    while br.peek12() != 1:
+    while br.peek(12) != 1:
         if br.bits_left() < 12:
             raise FaxError(f"missing EOL before row {y}")
-        if br.read_bit():
+        if br.read(1):
             raise FaxError("non-zero fill bit before EOL")
-    br.pos += 12
+    br.consume(12)
 
 
-def _decode_1d_row(br: _BitReader, width: int, y: int) -> bytearray:
+def _decode_1d_row(br: MsbReader, width: int, y: int) -> bytearray:
     row = bytearray(width)
     x = 0
     white = True
@@ -456,12 +425,12 @@ def g3_2d_decode(data: bytes, width: int, height: int) -> bytes:
     vertical/horizontal/pass walk as G4."""
     if width < 1 or height < 1 or width * height > MAX_FAX_PIXELS:
         raise FaxError(f"bad fax dimensions {width}x{height}")
-    br = _BitReader(data)
+    br = MsbReader(data, FaxError)
     out = bytearray()
     ref: list[int] = []
     for y in range(height):
         _scan_eol(br, y)
-        if br.read_bit():  # tag bit 1 → 1-D line
+        if br.read(1):  # tag bit 1 → 1-D line
             row = _decode_1d_row(br, width, y)
             cur = _transitions(row)
         else:              # tag bit 0 → 2-D line vs the previous row

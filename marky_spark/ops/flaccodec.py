@@ -34,6 +34,8 @@ from __future__ import annotations
 import hashlib
 import struct
 
+from .bitio import MsbReader, MsbWriter
+
 MAX_SAMPLES = 1 << 26  # total samples (frames x channels) a decode may allocate
 MAX_CHANNELS = 8
 MAX_RATE = 1_000_000
@@ -98,89 +100,13 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _BitReader:
-    """MSB-first bit reader over bytes, tracking the byte span consumed
-    (for CRC verification)."""
-
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        """n-bit unsigned big-endian field."""
-        v = 0
-        pos, bit, data = self.pos, self.bit, self.data
-        need = n
-        while need > 0:
-            if pos >= len(data):
-                raise FlacError("truncated inside a frame")
-            avail = 8 - bit
-            take = min(avail, need)
-            chunk = (data[pos] >> (avail - take)) & ((1 << take) - 1)
-            v = (v << take) | chunk
-            need -= take
-            bit += take
-            if bit == 8:
-                bit = 0
-                pos += 1
-        self.pos, self.bit = pos, bit
-        return v
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v & (1 << (n - 1)) else v
-
-    def read_unary(self) -> int:
-        """Count of 0 bits before the next 1 bit (FLAC's rice quotient)."""
-        q = 0
-        while True:
-            if self.read(1):
-                return q
-            q += 1
-            if q > (1 << 22):
-                raise FlacError("unary run exceeds sanity bound")
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
+def _read_signed(br: MsbReader, n: int) -> int:
+    """``n``-bit two's-complement field."""
+    v = br.read(n)
+    return v - (1 << n) if v >> (n - 1) else v
 
 
-class _BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int) -> None:
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a one
-
-    def align(self) -> None:
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.out)
-
-
-def _read_utf8_number(br: _BitReader) -> int:
+def _read_utf8_number(br: MsbReader) -> int:
     """UTF-8-style variable-length number (frame/sample index), extended
     to the 7-byte/36-bit form the spec allows."""
     b0 = br.read(8)
@@ -202,7 +128,7 @@ def _read_utf8_number(br: _BitReader) -> int:
     return v
 
 
-def _write_utf8_number(bw: _BitWriter, v: int) -> None:
+def _write_utf8_number(bw: MsbWriter, v: int) -> None:
     if v < 0x80:
         bw.write(v, 8)
         return
@@ -217,7 +143,7 @@ def _write_utf8_number(bw: _BitWriter, v: int) -> None:
         bw.write(0x80 | ((v >> (6 * k)) & 0x3F), 8)
 
 
-def _decode_residual(br: _BitReader, block_size: int, pred_order: int):
+def _decode_residual(br: MsbReader, block_size: int, pred_order: int):
     """Rice-coded residual section → list of ints (length
     block_size - pred_order)."""
     method = br.read(2)
@@ -240,7 +166,7 @@ def _decode_residual(br: _BitReader, block_size: int, pred_order: int):
             if raw == 0:
                 out.extend([0] * count)
             else:
-                out.extend(br.read_signed(raw) for _ in range(count))
+                out.extend(_read_signed(br, raw) for _ in range(count))
         else:
             for _ in range(count):
                 q = br.read_unary()
@@ -249,7 +175,7 @@ def _decode_residual(br: _BitReader, block_size: int, pred_order: int):
     return out
 
 
-def _encode_residual(bw: _BitWriter, residual: list[int]) -> None:
+def _encode_residual(bw: MsbWriter, residual: list[int]) -> None:
     """Single-partition 4-bit rice coding with a simple mean-based
     parameter choice (the fixture encoder's inverse of
     :func:`_decode_residual`)."""
@@ -268,7 +194,7 @@ def _encode_residual(bw: _BitWriter, residual: list[int]) -> None:
         bw.write(u & ((1 << param) - 1), param)
 
 
-def _decode_subframe(br: _BitReader, block_size: int, bits: int):
+def _decode_subframe(br: MsbReader, block_size: int, bits: int):
     """One subframe → list of ints (block_size samples)."""
     if br.read(1):
         raise FlacError("subframe header pad bit set")
@@ -292,15 +218,15 @@ def _decode_subframe(br: _BitReader, block_size: int, bits: int):
 
     eff = bits - wasted
     if stype == 0:          # CONSTANT
-        v = br.read_signed(eff)
+        v = _read_signed(br, eff)
         samples = [v] * block_size
     elif stype == 1:        # VERBATIM
-        samples = [br.read_signed(eff) for _ in range(block_size)]
+        samples = [_read_signed(br, eff) for _ in range(block_size)]
     elif 8 <= stype <= 12:  # FIXED, order = stype - 8
         order = stype - 8
         if order > block_size:
             raise FlacError("fixed order exceeds block size")
-        samples = [br.read_signed(eff) for _ in range(order)]
+        samples = [_read_signed(br, eff) for _ in range(order)]
         residual = _decode_residual(br, block_size, order)
         coefs = _FIXED_COEFFS[order]
         for r in residual:
@@ -312,15 +238,15 @@ def _decode_subframe(br: _BitReader, block_size: int, bits: int):
         order = (stype & 31) + 1
         if order > block_size:
             raise FlacError("LPC order exceeds block size")
-        samples = [br.read_signed(eff) for _ in range(order)]
+        samples = [_read_signed(br, eff) for _ in range(order)]
         prec = br.read(4)
         if prec == 15:
             raise FlacError("invalid LPC coefficient precision")
         prec += 1
-        shift = br.read_signed(5)
+        shift = _read_signed(br, 5)
         if shift < 0:
             raise FlacError("negative LPC shift")
-        coefs = [br.read_signed(prec) for _ in range(order)]
+        coefs = [_read_signed(br, prec) for _ in range(order)]
         residual = _decode_residual(br, block_size, order)
         for r in residual:
             acc = 0
@@ -380,8 +306,9 @@ def flac_decode(data: bytes):
 
     out = []
     n_out = 0
+    br = MsbReader(data, FlacError)
+    br.seek(pos << 3)
     while pos < len(data):
-        br = _BitReader(data, pos)
         sync = br.read(14)
         if sync != 0b11111111111110:
             raise FlacError(f"bad frame sync {sync:#016b} at byte {pos}")
@@ -438,7 +365,7 @@ def flac_decode(data: bytes):
             raise FlacError(f"reserved channel assignment {ch_code}")
         if frame_ch != channels:
             raise FlacError("frame channel count disagrees with STREAMINFO")
-        header_end = br.pos + (1 if br.bit else 0)
+        header_end = (br.tell() + 7) >> 3
         crc8 = br.read(8)
         if _crc8(data[pos:header_end]) != crc8:
             raise FlacError("frame header CRC-8 mismatch")
@@ -456,11 +383,11 @@ def flac_decode(data: bytes):
                 ch_bits += 1  # the side channel carries one extra bit
             chans.append(_decode_subframe(br, block_size, ch_bits))
         br.align()
-        frame_end = br.pos
+        frame_end = br.tell() >> 3
         crc16 = br.read(16)
         if _crc16(data[pos:frame_end]) != crc16:
             raise FlacError("frame CRC-16 mismatch")
-        pos = br.pos
+        pos = br.tell() >> 3
 
         if assignment == "left_side":
             left, side = chans
@@ -486,7 +413,7 @@ def flac_decode(data: bytes):
     return rate, channels, bits, samples.astype(np.int32)
 
 
-def _encode_subframe(bw: _BitWriter, samples: list[int], bits: int,
+def _encode_subframe(bw: MsbWriter, samples: list[int], bits: int,
                      strategy: str) -> None:
     if all(s == samples[0] for s in samples):
         bw.write(0, 1); bw.write(0, 6); bw.write(0, 1)
@@ -538,7 +465,7 @@ def flac_encode(samples, sample_rate: int, bits: int = 16,
     for fi, start in enumerate(range(0, n_frames, block_size)):
         block = arr[start:start + block_size]
         bs = block.shape[0]
-        bw = _BitWriter()
+        bw = MsbWriter()
         bw.write(0b11111111111110, 14)
         bw.write(0, 1)  # reserved
         bw.write(0, 1)  # fixed blocking: number is the frame index
@@ -556,13 +483,13 @@ def flac_encode(samples, sample_rate: int, bits: int = 16,
         else:
             bw.write(bs - 1, 16)
         bw.align()
-        header = bw.bytes()
-        bw = _BitWriter()
+        header = bw.getvalue()
+        bw = MsbWriter()
         for c in range(channels):
             _encode_subframe(bw, [int(v) for v in block[:, c]], bits,
                              strategy)
         bw.align()
-        body = header + bytes([_crc8(header)]) + bw.bytes()
+        body = header + bytes([_crc8(header)]) + bw.getvalue()
         frames += body + struct.pack(">H", _crc16(body))
 
     md5 = hashlib.md5()

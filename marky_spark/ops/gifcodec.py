@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import lzw_decode, lzw_encode
 from .pngcodec import MAX_PIXELS
 
 GIF_SIGNATURES = (b"GIF87a", b"GIF89a")
@@ -65,59 +66,6 @@ def _skip_subblocks(data: bytes, pos: int) -> int:
         pos += n
         if pos > len(data):
             raise GifError("truncated sub-block")
-
-
-def _lzw_decode(min_code_size: int, blob: bytes, max_out: int) -> bytearray:
-    """GIF LZW → index stream, bounded at ``max_out`` indices."""
-    # literals are byte-valued palette indices, so the minimum code size
-    # can never exceed 8 — a larger value would put codes > 255 in the
-    # literal range (fuzz-found: bytes([i]) blew up untyped at 9-11)
-    if not 2 <= min_code_size <= 8:
-        raise GifError(f"bad LZW minimum code size {min_code_size}")
-    clear = 1 << min_code_size
-    end = clear + 1
-    out = bytearray()
-    # dictionary: code → byte sequence; reset on clear
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-
-    table = list(base)
-    code_size = min_code_size + 1
-    prev: bytes | None = None
-    acc = 0
-    nbits = 0
-    for byte in blob:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= code_size:
-            code = acc & ((1 << code_size) - 1)
-            acc >>= code_size
-            nbits -= code_size
-            if code == clear:
-                table = list(base)
-                code_size = min_code_size + 1
-                prev = None
-                continue
-            if code == end:
-                return out
-            if prev is None:
-                if code >= len(table):
-                    raise GifError(f"first LZW code {code} out of range")
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):  # the KwKwK case
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise GifError(f"LZW code {code} out of range")
-            out += entry
-            if len(out) >= max_out:
-                return out  # bomb guard: never outgrow the declared frame
-            prev = entry
-            if len(table) == (1 << code_size) and code_size < 12:
-                code_size += 1
-    return out
 
 
 def _iter_frames(data: bytes):
@@ -184,7 +132,14 @@ def _iter_frames(data: bytes):
                 raise GifError("truncated image sub-block")
             chunks.append(data[pos:pos + n])
             pos += n
-        indices = _lzw_decode(min_code, b"".join(chunks), w * h)
+        # literals are byte-valued palette indices, so the minimum code
+        # size can never exceed 8 — a larger value would put codes > 255
+        # in the literal range (fuzz-found: bytes([i]) blew up untyped at
+        # 9-11)
+        if not 2 <= min_code <= 8:
+            raise GifError(f"bad LZW minimum code size {min_code}")
+        indices = lzw_decode(b"".join(chunks), min_code, False, 0, w * h,
+                             GifError)
         if len(indices) < w * h:
             raise GifError(
                 f"LZW stream yields {len(indices)} indices, want {w * h}")
@@ -308,54 +263,6 @@ def gif_resize_indexed(data: bytes, out_w: int,
     return w, h, gif_encode(idx[ys][:, xs].tobytes(), out_w, out_h, table)
 
 
-def _lzw_encode(min_code_size: int, indices: bytes) -> bytes:
-    """Real GIF LZW compression (dictionary build, clear on overflow)."""
-    clear = 1 << min_code_size
-    end = clear + 1
-
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, size: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = end + 1
-    code_size = min_code_size + 1
-    emit(clear, code_size)
-    run = b""
-    for b in indices:
-        cand = run + bytes([b])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run], code_size)
-        if next_code < 4096:
-            table[cand] = next_code
-            if next_code == (1 << code_size) and code_size < 12:
-                code_size += 1
-            next_code += 1
-        else:
-            emit(clear, code_size)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = end + 1
-            code_size = min_code_size + 1
-        run = bytes([b])
-    if run:
-        emit(table[run], code_size)
-    emit(end, code_size)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
 def gif_encode_animated(screen_w: int, screen_h: int, palette: bytes,
                         frames: list[tuple[bytes, int, int, int, int]],
                         disposals: list[int] | None = None,
@@ -395,7 +302,7 @@ def gif_encode_animated(screen_w: int, screen_h: int, palette: bytes,
         out += (b"\x21\xf9\x04" + bytes([packed]) + b"\x00\x00"
                 + bytes([transparent or 0]) + b"\x00")
         out += b"\x2c" + struct.pack("<HHHHB", left, top, w, h, 0)
-        compressed = _lzw_encode(min_code, indices)
+        compressed = lzw_encode(indices, min_code, False, 0)
         out.append(min_code)
         for i in range(0, len(compressed), 255):
             part = compressed[i:i + 255]
@@ -425,7 +332,7 @@ def gif_encode(indices: bytes, width: int, height: int,
     bits = max(1, (max(n_colors - 1, 1)).bit_length())
     table = palette + b"\x00" * (3 * (2 << (bits - 1)) - len(palette))
     min_code = max(2, bits)
-    compressed = _lzw_encode(min_code, indices)
+    compressed = lzw_encode(indices, min_code, False, 0)
     blocks = bytearray()
     for i in range(0, len(compressed), 255):
         part = compressed[i:i + 255]

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import MsbReader, MsbWriter
 from .pngcodec import MAX_PIXELS  # noqa: F401 — re-exported cap family
 
 JPEG_SOI = b"\xff\xd8"
@@ -87,61 +88,6 @@ def _dct_matrix():
     return m  # coef = M @ spatial @ M.T ; spatial = M.T @ coef @ M
 
 
-class _BitReader:
-    """MSB-first bit reader over the byte-unstuffed entropy segment.
-
-    Buffers whole bytes in an int accumulator; ``peek16`` exposes the next
-    16 bits (zero-padded at stream end) for LUT-based Huffman decoding, and
-    ``consume`` advances — raising only when consumption would pass the
-    true end of data (identical semantics to a bit-at-a-time reader)."""
-
-    __slots__ = ("data", "pos", "acc", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def peek16(self) -> int:
-        while self.nbits < 16 and self.pos < len(self.data):
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        if self.nbits >= 16:
-            return (self.acc >> (self.nbits - 16)) & 0xFFFF
-        return (self.acc << (16 - self.nbits)) & 0xFFFF
-
-    def consume(self, n: int) -> None:
-        if n > self.nbits:
-            raise JpegError("entropy data exhausted")
-        self.nbits -= n
-        self.acc &= (1 << self.nbits) - 1
-
-    def read_bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        while self.nbits < n and self.pos < len(self.data):
-            self.acc = (self.acc << 8) | self.data[self.pos]
-            self.pos += 1
-            self.nbits += 8
-        if n > self.nbits:
-            raise JpegError("entropy data exhausted")
-        self.nbits -= n
-        v = self.acc >> self.nbits
-        self.acc &= (1 << self.nbits) - 1
-        return v
-
-    def align(self) -> None:
-        """Drop the remainder of the partially-read byte and return wholly
-        buffered unread bytes to the stream (pos → next unread byte)."""
-        self.nbits -= self.nbits % 8
-        self.acc &= (1 << self.nbits) - 1
-        self.pos -= self.nbits // 8
-        self.acc = 0
-        self.nbits = 0
-
-
 def _build_huffman(counts: bytes, symbols: bytes) -> tuple[dict, list]:
     """Canonical JPEG assignment → ((length, code) → symbol, plus a
     256-entry fast LUT for codes of ≤8 bits keyed by the next byte)."""
@@ -169,9 +115,9 @@ def _build_huffman(counts: bytes, symbols: bytes) -> tuple[dict, list]:
     return table, fast8
 
 
-def _huff_decode(reader: _BitReader, huff: tuple[dict, list]) -> int:
+def _huff_decode(reader: MsbReader, huff: tuple[dict, list]) -> int:
     table, fast8 = huff
-    v16 = reader.peek16()
+    v16 = reader.peek(16)
     hit = fast8[v16 >> 8]
     if hit is not None:
         reader.consume(hit[1])
@@ -410,7 +356,7 @@ def jpeg_decode(data: bytes) -> tuple[int, int, int, bytes]:
 
     # byte-unstuff the entropy segment, recording restart-marker positions
     stream, rst_points, _ = _unstuff(data, entropy_start)
-    reader = _BitReader(stream)
+    reader = MsbReader(stream, JpegError)
 
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
@@ -444,9 +390,9 @@ def jpeg_decode(data: bytes) -> tuple[int, int, int, bytes]:
             # align to the recorded restart boundary
             reader.align()
             if next_rst is not None:
-                if reader.pos > next_rst:
+                if reader.tell() > next_rst << 3:
                     raise JpegError("restart marker overrun")
-                reader.pos = next_rst
+                reader.seek(next_rst << 3)
                 next_rst = next(rst_iter, None)
             preds = [0] * len(comps)
         for ci, (cid, hs, vs, tq) in enumerate(comps):
@@ -459,7 +405,7 @@ def jpeg_decode(data: bytes) -> tuple[int, int, int, bytes]:
                 t = _huff_decode(reader, dc_t)
                 if t > 15:
                     raise JpegError(f"bad DC category {t}")
-                diff = _extend(reader.read_bits(t), t) if t else 0
+                diff = _extend(reader.read(t), t) if t else 0
                 preds[ci] += diff
                 row[0] = preds[ci]
                 k = 1
@@ -474,7 +420,7 @@ def jpeg_decode(data: bytes) -> tuple[int, int, int, bytes]:
                     k += r
                     if k > 63:
                         raise JpegError("AC run past block end")
-                    row[zz[k]] = _extend(reader.read_bits(s), s)
+                    row[zz[k]] = _extend(reader.read(s), s)
                     k += 1
 
     # batched dequantize + IDCT + scatter (pure reshape/transpose: blocks
@@ -646,7 +592,7 @@ def _decode_prog_scan(data: bytes, entropy_start: int, frame, geom,
     else:
         segments = [stream]
     seg_iter = iter(segments)
-    reader = _BitReader(next(seg_iter))
+    reader = MsbReader(next(seg_iter), JpegError)
 
     p1 = 1 << al
     preds = [0] * len(comps)
@@ -658,7 +604,7 @@ def _decode_prog_scan(data: bytes, entropy_start: int, frame, geom,
             nxt = next(seg_iter, None)
             if nxt is None:
                 raise JpegError("missing restart segment")
-            reader = _BitReader(nxt)
+            reader = MsbReader(nxt, JpegError)
             state["eobrun"] = 0
             for i in range(len(preds)):
                 preds[i] = 0
@@ -666,19 +612,19 @@ def _decode_prog_scan(data: bytes, entropy_start: int, frame, geom,
     def refine_nonzero(row, k: int) -> None:
         # correction bit: add 1<<al toward larger magnitude if set and the
         # bit is not already present (two's-complement & matches C ints)
-        if reader.read_bits(1) and (int(row[k]) & p1) == 0:
+        if reader.read(1) and (int(row[k]) & p1) == 0:
             row[k] += p1 if row[k] >= 0 else -p1
 
     def dc_first(row, ci: int, dc_t) -> None:
         t = _huff_decode(reader, dc_t)
         if t > 15:
             raise JpegError(f"bad DC category {t}")
-        diff = _extend(reader.read_bits(t), t) if t else 0
+        diff = _extend(reader.read(t), t) if t else 0
         preds[ci] += diff
         row[0] = preds[ci] << al
 
     def dc_refine(row) -> None:
-        if reader.read_bits(1):
+        if reader.read(1):
             row[0] = int(row[0]) | p1
 
     def ac_first(row, ac_t) -> None:
@@ -693,13 +639,13 @@ def _decode_prog_scan(data: bytes, entropy_start: int, frame, geom,
                 k += r
                 if k > se:
                     raise JpegError("AC run past band end")
-                row[k] = _extend(reader.read_bits(s), s) << al
+                row[k] = _extend(reader.read(s), s) << al
                 k += 1
             else:
                 if r < 15:
                     state["eobrun"] = (1 << r) - 1
                     if r:
-                        state["eobrun"] += reader.read_bits(r)
+                        state["eobrun"] += reader.read(r)
                     return
                 k += 16  # ZRL
 
@@ -714,13 +660,13 @@ def _decode_prog_scan(data: bytes, entropy_start: int, frame, geom,
                     if r < 15:
                         state["eobrun"] = 1 << r
                         if r:
-                            state["eobrun"] += reader.read_bits(r)
+                            state["eobrun"] += reader.read(r)
                         break
                     # r == 15 (ZRL): descend over 16 zero-history slots
                 else:
                     if s != 1:
                         raise JpegError("invalid refinement magnitude")
-                    newval = p1 if reader.read_bits(1) else -p1
+                    newval = p1 if reader.read(1) else -p1
                 # advance over nonzero-history coefficients (reading their
                 # correction bits) and r still-zero coefficients
                 while k <= se:
@@ -882,28 +828,13 @@ def _encode_huffman_codes(counts: bytes, symbols: bytes) -> dict:
     return enc
 
 
-class _BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.nbits = 0
-
-    def flush(self) -> None:
-        if self.nbits:
-            self.write((1 << (8 - self.nbits)) - 1, 8 - self.nbits)  # pad 1s
+def _close_segment(writer: MsbWriter, out: bytearray) -> None:
+    """Append the entropy-coded bytes written so far to ``out``: the last
+    byte padded with 1 bits, a 0x00 stuffed after each 0xFF (T.81
+    F.1.2.3)."""
+    writer.align(1)
+    out += writer.out.replace(b"\xff", b"\xff\x00")
+    writer.out.clear()
 
 
 def _quality_scale(q: list, quality: int):
@@ -999,7 +930,8 @@ def jpeg_encode(pixels: bytes, width: int, height: int,
     ac_enc = [_encode_huffman_codes(*ac_tabs[0]),
               _encode_huffman_codes(*ac_tabs[1])]
 
-    writer = _BitWriter()
+    writer = MsbWriter()
+    entropy = bytearray()
     preds = [0] * channels
     n_mcu = 0
     rst_idx = 0
@@ -1016,8 +948,8 @@ def jpeg_encode(pixels: bytes, width: int, height: int,
     for my in range(bh // 8):
         for mx in range(bw // 8):
             if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                writer.flush()
-                writer.out += bytes([0xFF, 0xD0 + rst_idx])
+                _close_segment(writer, entropy)
+                entropy += bytes([0xFF, 0xD0 + rst_idx])
                 rst_idx = (rst_idx + 1) % 8
                 preds = [0] * channels
             n_mcu += 1
@@ -1063,7 +995,7 @@ def jpeg_encode(pixels: bytes, width: int, height: int,
                 if last_nz < 63:
                     code, ln = ac_enc[ti][0x00]  # EOB
                     writer.write(code, ln)
-    writer.flush()
+    _close_segment(writer, entropy)
 
     def seg(marker: int, body: bytes) -> bytes:
         return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
@@ -1095,7 +1027,7 @@ def jpeg_encode(pixels: bytes, width: int, height: int,
         sos += bytes([c + 1, 0x00 if c == 0 else 0x11])
     sos += b"\x00\x3f\x00"
     out += seg(0xDA, sos)
-    out += writer.out
+    out += entropy
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -1388,7 +1320,7 @@ def jpeg_encode_progressive(pixels: bytes, width: int, height: int,
             sos += bytes([ci + 1, (t << 4) | t])
         sos += bytes([ss, se, (ah << 4) | al])
         out += seg(0xDA, sos)
-        writer = _BitWriter()
+        writer = MsbWriter()
         rst_idx = 0
         for op in ops:
             if op[0] == "s":
@@ -1397,10 +1329,9 @@ def jpeg_encode_progressive(pixels: bytes, width: int, height: int,
             elif op[0] == "b":
                 writer.write(op[1], op[2])
             else:  # rst
-                writer.flush()
-                writer.out += bytes([0xFF, 0xD0 + rst_idx])
+                _close_segment(writer, out)
+                out += bytes([0xFF, 0xD0 + rst_idx])
                 rst_idx = (rst_idx + 1) % 8
-        writer.flush()
-        out += writer.out
+        _close_segment(writer, out)
     out += b"\xff\xd9"
     return bytes(out)

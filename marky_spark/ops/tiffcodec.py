@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import lzw_decode, lzw_encode
+
 MAX_PIXELS = 1 << 26  # total samples (w*h*channels) a decode may allocate
 
 TIFF_LITTLE = b"II*\x00"
@@ -137,124 +139,6 @@ def _packbits_encode(src: bytes) -> bytes:
     return bytes(out)
 
 
-class _MsbReader:
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            if self.pos >= len(self.data):
-                raise TiffError("LZW strip ran out of bits")
-            v = (v << 1) | ((self.data[self.pos] >> (7 - self.bit)) & 1)
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return v
-
-
-_LZW_CLEAR, _LZW_EOI = 256, 257
-
-
-def _lzw_decode(src: bytes, expect: int) -> bytes:
-    """TIFF-variant LZW: MSB-first code packing, 9→12-bit widths with the
-    spec's EARLY code-width change (the width bumps when the next free
-    slot is (1<<width)-1, one code sooner than GIF)."""
-    br = _MsbReader(src)
-    out = bytearray()
-    table: list[bytes] = []
-    width = 9
-    prev: bytes | None = None
-
-    def reset():
-        nonlocal table, width, prev
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-        prev = None
-
-    reset()
-    while len(out) < expect:
-        code = br.read(width)
-        if code == _LZW_EOI:
-            break
-        if code == _LZW_CLEAR:
-            reset()
-            continue
-        if prev is None:
-            if code >= 256:
-                raise TiffError("LZW first code after clear not a literal")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-        elif code == len(table):
-            entry = prev + prev[:1]
-        else:
-            raise TiffError(f"LZW code {code} beyond table")
-        out += entry
-        if len(out) > expect:
-            raise TiffError("LZW strip exceeds declared size")
-        if prev is not None:
-            table.append(prev + entry[:1])
-            # early change, one code EARLIER than the writer's own bump:
-            # the writer has already assigned the entry for the code the
-            # reader is about to process, so its count runs one ahead
-            if len(table) == (1 << width) - 2 and width < 12:
-                width += 1
-        prev = entry
-    if len(out) != expect:
-        raise TiffError(f"LZW strip decoded {len(out)} bytes, want {expect}")
-    return bytes(out)
-
-
-def _lzw_encode(src: bytes) -> bytes:
-    """TIFF-variant LZW writer (the fixture inverse of :func:`_lzw_decode`)."""
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, width: int):
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append((acc >> nbits) & 0xFF)
-        acc &= (1 << nbits) - 1
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
-    nxt = 258
-    width = 9
-    emit(_LZW_CLEAR, width)
-    run = b""
-    for b in src:
-        cand = run + bytes([b])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run], width)
-        table[cand] = nxt
-        nxt += 1
-        if nxt == (1 << width) - 1 and width < 12:
-            width += 1  # early change, mirrored in the decoder
-        if nxt == 4094:
-            emit(_LZW_CLEAR, width)
-            table = {bytes([i]): i for i in range(256)}
-            nxt = 258
-            width = 9
-        run = bytes([b])
-    if run:
-        emit(table[run], width)
-    emit(_LZW_EOI, width)
-    if nbits:
-        emit(0, 8 - nbits)
-    return bytes(out)
-
-
 def _zlib_decode(src: bytes, expect: int) -> bytes:
     import zlib
     try:
@@ -281,7 +165,10 @@ def _decompress(raw: bytes, expect: int, compression: int,
         return _packbits_decode(raw, expect)
     if compression in (8, 32946):  # Deflate (new + old code)
         return _zlib_decode(raw, expect)
-    return _lzw_decode(raw, expect)
+    out = lzw_decode(raw, 8, True, 1, expect, TiffError)  # LZW
+    if len(out) != expect:
+        raise TiffError(f"LZW strip decoded {len(out)} bytes, want {expect}")
+    return bytes(out)
 
 
 def _unpack_bilevel(strip: bytes, rows: int, width: int,
@@ -796,7 +683,7 @@ def tiff_encode(pixels: bytes, width: int, height: int, channels: int = 3,
         if comp_tag == 8:
             import zlib
             return zlib.compress(plane_bytes, 6)
-        return _lzw_encode(plane_bytes)
+        return lzw_encode(plane_bytes, 8, True, 1)
 
     n_planes = channels if planar == 2 else 1
     plane_views = (np.transpose(grid, (2, 0, 1))[:, :, :, None]

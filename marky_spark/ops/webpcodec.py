@@ -55,6 +55,8 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import LsbReader, LsbWriter
+
 MAX_WEBP_PIXELS = 1 << 26
 _HASH_MUL = 0x1E35A7BD
 
@@ -73,45 +75,10 @@ def looks_like_webp(data: bytes) -> bool:
             and data[8:12] == b"WEBP")
 
 
-# --------------------------------------------------------------- bit io
-class _BitReader:
-    """LSB-first bit reader (VP8L convention)."""
-    __slots__ = ("d", "pos")
-
-    def __init__(self, data: bytes):
-        self.d = data
-        self.pos = 0  # absolute bit position
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        if p + n > len(self.d) * 8:
-            raise WebpError("VP8L stream ran out of bits")
-        v = 0
-        for k in range(n):
-            v |= ((self.d[(p + k) >> 3] >> ((p + k) & 7)) & 1) << k
-        self.pos = p + n
-        return v
-
-
-class _BitWriter:
-    __slots__ = ("bits", "n")
-
-    def __init__(self):
-        self.bits = 0
-        self.n = 0
-
-    def write(self, v: int, n: int) -> None:
-        """n bits of v, LSB-first on the wire."""
-        self.bits |= (v & ((1 << n) - 1)) << self.n
-        self.n += n
-
-    def write_code(self, code: int, length: int) -> None:
-        """A prefix code: its bits go out MSB-of-code first."""
-        for k in range(length - 1, -1, -1):
-            self.write((code >> k) & 1, 1)
-
-    def tobytes(self) -> bytes:
-        return self.bits.to_bytes((self.n + 7) // 8, "little")
+def _write_code(bw: LsbWriter, code: int, length: int) -> None:
+    """A prefix code: its bits go out MSB-of-code first."""
+    for k in range(length - 1, -1, -1):
+        bw.write((code >> k) & 1, 1)
 
 
 # --------------------------------------------------------- prefix codes
@@ -154,12 +121,15 @@ class _PrefixCode:
         for sym, (code, ln) in _canonical_codes(lengths).items():
             self.table[(ln, code)] = sym
 
-    def read(self, br: _BitReader) -> int:
+    def read(self, br: LsbReader) -> int:
+        bits = br.peek(self.max_len)
         code = 0
         for ln in range(1, self.max_len + 1):
-            code = (code << 1) | br.read(1)
+            code = (code << 1) | (bits & 1)
+            bits >>= 1
             sym = self.table.get((ln, code))
             if sym is not None:
+                br.consume(ln)
                 return sym
         raise WebpError("invalid prefix code in VP8L stream")
 
@@ -172,7 +142,7 @@ class _SimpleCode:
     def __init__(self, syms: list[int]):
         self.syms = syms
 
-    def read(self, br: _BitReader) -> int:
+    def read(self, br: LsbReader) -> int:
         if len(self.syms) == 1:
             return self.syms[0]
         return self.syms[br.read(1)]
@@ -182,7 +152,7 @@ _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8,
              9, 10, 11, 12, 13, 14, 15, 16)
 
 
-def _read_prefix_code(br: _BitReader, alphabet: int):
+def _read_prefix_code(br: LsbReader, alphabet: int):
     """One prefix code: the simple path or the code-length-coded path
     (spec §6.2.2 'Decoding of meta prefix codes' / 'Prefix code
     lengths')."""
@@ -242,7 +212,7 @@ def _read_prefix_code(br: _BitReader, alphabet: int):
 
 
 # ------------------------------------------------------ lz77 primitives
-def _prefix_value(br: _BitReader, code: int) -> int:
+def _prefix_value(br: LsbReader, code: int) -> int:
     """Length/distance prefix decoding (spec §6.2.3): small codes are
     literal, larger split into (offset, extra bits)."""
     if code < 4:
@@ -288,7 +258,7 @@ def _plane_to_dist(code: int, xsize: int) -> int:
 _GREEN, _RED, _BLUE, _ALPHA, _DIST = range(5)
 
 
-def _read_group(br: _BitReader, cache_size: int) -> list:
+def _read_group(br: LsbReader, cache_size: int) -> list:
     sizes = (256 + 24 + cache_size, 256, 256, 256, 40)
     return [_read_prefix_code(br, s) for s in sizes]
 
@@ -297,7 +267,7 @@ def _sub_size(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
 
 
-def _decode_image(br: _BitReader, w: int, h: int, level0: bool,
+def _decode_image(br: LsbReader, w: int, h: int, level0: bool,
                   depth: int = 0) -> list:
     """One VP8L-coded ARGB image → flat list of uint32, applying the
     inverse transforms when ``level0``."""
@@ -579,7 +549,7 @@ def webp_decode(data: bytes) -> tuple[int, int, int, bytes]:
     import numpy as np
 
     payload = _webp_payload(data)
-    br = _BitReader(payload)
+    br = LsbReader(payload, WebpError)
     if br.read(8) != 0x2F:
         raise WebpError("bad VP8L signature byte")
     w = br.read(14) + 1
@@ -653,7 +623,7 @@ def _pad_to_complete(lengths: dict[int, int], alphabet: int,
     return lengths
 
 
-def _write_prefix_code(bw: _BitWriter, lengths: dict[int, int],
+def _write_prefix_code(bw: LsbWriter, lengths: dict[int, int],
                        alphabet: int) -> dict[int, tuple[int, int]]:
     """Emit one prefix code; returns {symbol: (code, len)} for payload
     emission. Uses the simple path when possible."""
@@ -751,7 +721,7 @@ def _write_prefix_code(bw: _BitWriter, lengths: dict[int, int],
         bw.write(0, 1)  # token stream covers the whole alphabet
     for t, extra, ebits in tokens:
         code, ln = cl_codes[t]
-        bw.write_code(code, ln)
+        _write_code(bw, code, ln)
         if ebits:
             bw.write(extra, ebits)
     return _canonical_codes(full)
@@ -786,7 +756,7 @@ def webp_encode(pixels: bytes, width: int, height: int,
              else np.full(len(arr), 255, dtype=np.uint32))
     argb = ((a << 24) | (r << 16) | (g << 8) | b).tolist()
 
-    bw = _BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(width - 1, 14)
     bw.write(height - 1, 14)
@@ -912,24 +882,24 @@ def webp_encode(pixels: bytes, width: int, height: int,
             px = tok[1]
             for table, sh in ((gc, 8), (rc, 16), (bc, 0), (ac, 24)):
                 code, ln = table[(px >> sh) & 0xFF]
-                bw.write_code(code, ln)
+                _write_code(bw, code, ln)
         elif tok[0] == "cache":
             code, ln = gc[280 + tok[1]]
-            bw.write_code(code, ln)
+            _write_code(bw, code, ln)
         else:
             _, run, dist_code = tok
             lcode, extra, ebits = _prefix_token(run)
             code, ln = gc[256 + lcode]
-            bw.write_code(code, ln)
+            _write_code(bw, code, ln)
             if ebits:
                 bw.write(extra, ebits)
             dcode, dextra, debits = _prefix_token(dist_code)
             code, ln = dc[dcode]
-            bw.write_code(code, ln)
+            _write_code(bw, code, ln)
             if debits:
                 bw.write(dextra, debits)
 
-    payload = bw.tobytes()
+    payload = bw.getvalue()
     chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
     if len(payload) & 1:
         chunk += b"\x00"
@@ -944,7 +914,7 @@ def _sub_pixels(a: int, b: int) -> int:
     return out
 
 
-def _encode_subimage(bw: _BitWriter, argb: list) -> None:
+def _encode_subimage(bw: LsbWriter, argb: list) -> None:
     """A sub-image (palette rows etc.): no transforms bit is NOT
     present for sub-images; no cache, no meta — just one group of
     literal codes."""
@@ -967,7 +937,7 @@ def _encode_subimage(bw: _BitWriter, argb: list) -> None:
     for px in argb:
         for table, sh in ((gc, 8), (rc, 16), (bc, 0), (ac, 24)):
             code, ln = table[(px >> sh) & 0xFF]
-            bw.write_code(code, ln)
+            _write_code(bw, code, ln)
 
 
 # ----------------------------------------------------------- animation

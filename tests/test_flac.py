@@ -15,11 +15,11 @@ import struct
 import numpy as np
 import pytest
 
+from marky_spark.ops.bitio import MsbWriter
 from marky_spark.ops.flaccodec import (
     MAX_SAMPLES,
     FlacError,
     FlacUnsupportedError,
-    _BitWriter,
     _crc8,
     _crc16,
     flac_decode,
@@ -45,7 +45,7 @@ def _streaminfo(rate: int, ch: int, bits: int, total: int) -> bytes:
 def _frame(body_bits, rate_code=0, bs_code=6, bs_extra=None, ch_code=0,
            ss_code=4, block_size=4) -> bytes:
     """Assemble one frame: header (+CRC8), body bits, CRC16."""
-    bw = _BitWriter()
+    bw = MsbWriter()
     bw.write(0b11111111111110, 14)
     bw.write(0, 2)  # reserved + fixed blocking
     bw.write(bs_code, 4)
@@ -57,11 +57,11 @@ def _frame(body_bits, rate_code=0, bs_code=6, bs_extra=None, ch_code=0,
     if bs_extra is not None:
         bw.write(*bs_extra)
     bw.align()
-    header = bw.bytes()
-    bw = _BitWriter()
+    header = bw.getvalue()
+    bw = MsbWriter()
     body_bits(bw)
     bw.align()
-    body = header + bytes([_crc8(header)]) + bw.bytes()
+    body = header + bytes([_crc8(header)]) + bw.getvalue()
     return body + struct.pack(">H", _crc16(body))
 
 

@@ -344,13 +344,11 @@ def test_min_code_size_over_8_is_typed():
     """LZW minimum code size is a byte-valued-literal parameter, so 9-11
     must be typed errors (fuzz-found: they previously escaped as
     ValueError from bytes([code]) with code > 255)."""
-    from marky_spark.ops.gifcodec import GifError, _lzw_decode, gif_decode
+    from marky_spark.ops.gifcodec import GifError, gif_decode
 
-    for mcs in (9, 10, 11, 12, 0, 1):
-        with pytest.raises(GifError, match="minimum code size"):
-            _lzw_decode(mcs, b"\x00\x00", 4)
     blob = bytearray(gif_encode(bytes([1, 0, 1, 0]), 2, 2, bytes(range(6))))
     at = blob.index(b"\x2c")  # image descriptor; min code size is +10
-    blob[at + 10] = 11
-    with pytest.raises(GifError):
-        gif_decode(bytes(blob))
+    for mcs in (9, 10, 11, 12, 0, 1):
+        blob[at + 10] = mcs
+        with pytest.raises(GifError, match="minimum code size"):
+            gif_decode(bytes(blob))

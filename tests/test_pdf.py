@@ -224,3 +224,88 @@ def test_hostile_cmaps_stay_bounded():
     garbage = b"\x00\xffnot a cmap at all <zz> beginbfchar <1"
     blob = _one_page_pdf(content, font, extra={6: _stream_obj(garbage)})
     extract_pdf_text(blob)  # no crash is the assertion
+
+
+# ---------------------------------------------------------------------------
+# stream filters: LZWDecode (ISO 32000-1 §7.4.4), filter chains, /DecodeParms
+# and the per-document decoded-bytes budget
+# ---------------------------------------------------------------------------
+
+_LINES = [(72, 760 - 14 * i, f"line {i}: the quick brown fox")
+          for i in range(12)]
+
+
+def _content_pdf(filters: str, body: bytes, parms: str = "") -> bytes:
+    """The fixture PDF of ``_LINES`` with its page content replaced by
+    ``body`` under ``/Filter filters``."""
+    from marky_spark.fixtures import pdf_assemble
+
+    objects = fx.pdf_objects([_LINES], compress=False)
+    objects[4] = (f"<< /Length {len(body)} /Filter {filters} {parms}>>"
+                  .encode() + b"\nstream\n" + body + b"\nendstream")
+    return pdf_assemble(objects)
+
+
+def _content() -> bytes:
+    raw = fx.pdf_objects([_LINES], compress=False)[4]
+    return raw[raw.index(b"stream\n") + 7:raw.rindex(b"\nendstream")]
+
+
+def test_lzw_content_stream_matches_flate_twin():
+    """Content packed by hand (tests/test_bitio.lzw_literals, > 254 codes,
+    so it crosses 9→10 bits) converts like the FlateDecode fixture, with
+    /EarlyChange from a /DecodeParms dict or array."""
+    import zlib
+
+    from tests.test_bitio import lzw_literals
+
+    body = _content()
+    assert len(body) > 300
+    flate_md = convert_pdf(_b64(fx.pdf_bytes([_LINES], compress=True)))
+    for blob in (
+            _content_pdf("/LZWDecode", lzw_literals(body)),
+            _content_pdf("/LZWDecode", lzw_literals(body, 0),
+                         "/DecodeParms << /EarlyChange 0 >> "),
+            _content_pdf("[/LZWDecode]", lzw_literals(body, 0),
+                         "/DecodeParms [<< /EarlyChange 0 >>] "),
+            # chain, applied in order: LZW first, then Flate
+            _content_pdf("[/LZWDecode /FlateDecode]",
+                         lzw_literals(zlib.compress(body)))):
+        assert convert_pdf(_b64(blob)) == flate_md
+
+
+def test_predictor_is_a_typed_error():
+    import zlib
+
+    blob = _content_pdf("/FlateDecode", zlib.compress(_content()),
+                        "/DecodeParms << /Predictor 12 /Columns 4 >> ")
+    with pytest.raises(ConvertError, match="predictor 12"):
+        convert_pdf(_b64(blob))
+
+
+def test_stream_bombs_stay_within_the_document_budget(monkeypatch):
+    """A content stream that decodes past the document's budget is one
+    error row, for Flate and LZW alike."""
+    import zlib
+
+    from marky_spark.convert import convert_document
+    from marky_spark.kernels import pdfk
+    from tests.test_bitio import lzw_literals
+
+    monkeypatch.setattr(pdfk, "_MAX_DECODED_BYTES", 4096)
+    pad = b" " * 5000
+    for blob in (_content_pdf("/FlateDecode", zlib.compress(pad + _content())),
+                 _content_pdf("/LZWDecode", lzw_literals(pad))):
+        row = convert_document("bomb", [{"kind": "pdf", "text": _b64(blob),
+                                         "media_ref": "", "offset": 0}])
+        assert row["status"] == "error"
+        assert "budget" in row["error"]
+    # the budget is per document: a stream under it still converts
+    assert convert_pdf(_b64(_content_pdf("/LZWDecode",
+                                         lzw_literals(_content()))))
+
+
+def _b64(blob: bytes) -> str:
+    import base64
+
+    return base64.b64encode(blob).decode()

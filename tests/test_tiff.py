@@ -37,8 +37,10 @@ def test_round_trip(compression, predictor, channels):
 
 def test_lzw_width_bumps_and_clear():
     """A strip long enough to push the code width through 10/11/12 bits
-    and trigger the encoder's mid-stream CLEAR must round-trip exactly
-    (pins the spec's EARLY code-width change on both sides)."""
+    and trigger the encoder's mid-stream CLEAR must round-trip exactly.
+    A round trip cannot pin the width rule (an encoder and decoder that
+    share a wrong rule agree); ``test_lzw_strip_packed_by_hand_decodes``
+    does."""
     rng = random.Random(0x71FF)
     w, h = 200, 120
     px = bytes(rng.randrange(256) for _ in range(w * h * 3))
@@ -47,21 +49,31 @@ def test_lzw_width_bumps_and_clear():
     assert tiff_decode(tiff_encode(runs, w, h, 3))[3] == runs
 
 
-def test_big_endian_decodes():
-    """Hand-built MM (big-endian) uncompressed 3x2 grayscale fixture —
-    the encoder only writes II, so this pins the byte-order handling
-    asymmetrically."""
-    px = bytes([10, 200, 30, 40, 50, 60])
+def test_lzw_strip_packed_by_hand_decodes():
+    """A 50x50 gray strip of 2,500 literal codes packed from an explicit
+    per-code width list (tests/test_bitio.lzw_literals): it crosses
+    9→10→11→12 bits, so a decoder that widens one code early misreads
+    it."""
+    from tests.test_bitio import lzw_literals
+
+    px = bytes(random.Random(0x1A2B).randrange(256) for _ in range(2500))
+    assert tiff_decode(_mm_gray(50, 50, 5, lzw_literals(px))) == (
+        50, 50, 1, px)
+
+
+def _mm_gray(width: int, height: int, compression: int,
+             strip: bytes) -> bytes:
+    """Hand-built MM (big-endian) single-strip 8-bit grayscale TIFF."""
     entries = [
-        (256, 3, 1, 3),    # width (SHORT, inline left-justified)
-        (257, 3, 1, 2),    # height
+        (256, 3, 1, width),  # SHORT, inline left-justified
+        (257, 3, 1, height),
         (258, 3, 1, 8),
-        (259, 3, 1, 1),
+        (259, 3, 1, compression),
         (262, 3, 1, 1),
         (273, 4, 1, None),  # strip offset patched below
         (277, 3, 1, 1),
-        (278, 4, 1, 2),
-        (279, 4, 1, len(px)),
+        (278, 4, 1, height),
+        (279, 4, 1, len(strip)),
     ]
     ifd_off = 8
     strip_off = ifd_off + 2 + 12 * len(entries) + 4
@@ -76,8 +88,15 @@ def test_big_endian_decodes():
         else:
             blob += struct.pack(">I", val)
     blob += struct.pack(">I", 0)
-    blob += px
-    assert tiff_decode(bytes(blob)) == (3, 2, 1, px)
+    return bytes(blob + strip)
+
+
+def test_big_endian_decodes():
+    """Hand-built MM (big-endian) uncompressed 3x2 grayscale fixture —
+    the encoder only writes II, so this pins the byte-order handling
+    asymmetrically."""
+    px = bytes([10, 200, 30, 40, 50, 60])
+    assert tiff_decode(_mm_gray(3, 2, 1, px)) == (3, 2, 1, px)
 
 
 def _with_tag(blob: bytes, tag: int, typ: int, values: list) -> bytes:
