@@ -221,6 +221,7 @@ class _Pdf:
         self._crypt = None           # StdSecurityHandler when /Encrypt
         self._crypt_exempt: set[int] = set()
         self._budget = _MAX_DECODED_BYTES  # decoded stream bytes still allowed
+        self._charged: dict[_Stream, int] = {}  # budget each stream holds
         self._load_xref()
         enc = self.trailer.get("/Encrypt")
         if enc is not None:
@@ -452,14 +453,18 @@ class _Pdf:
     def decoded(self, stream: "_Stream") -> bytes:
         """The stream's bytes through its /Filter chain. Every stream of
         the document draws on one decoded-bytes budget, so a flate or LZW
-        bomb stays bounded. /DecodeParms is a dict or an array parallel
-        to /Filter; a /Predictor is not applied, so it is an error."""
+        bomb stays bounded. A stream holds its largest stage of the budget
+        once, however often it is decoded (a ToUnicode CMap shared by every
+        page). /DecodeParms is a dict or an array parallel to /Filter; a
+        /Predictor is not applied, so it is an error."""
         filters = self.resolve(stream.info.get("/Filter"))
         if not isinstance(filters, list):
             filters = [filters] if filters else []
         parms = self.resolve(stream.info.get("/DecodeParms"))
         if not isinstance(parms, list):
             parms = [parms] * len(filters)
+        allowed = self._budget + self._charged.get(stream, 0)
+        largest = 0
         data = stream.raw
         for i, f in enumerate(filters):
             f = self.resolve(f)
@@ -475,19 +480,22 @@ class _Pdf:
             if f == "/FlateDecode":
                 d = zlib.decompressobj()
                 try:
-                    data = d.decompress(data, self._budget + 1)
+                    data = d.decompress(data, allowed + 1)
                 except zlib.error as exc:
                     raise ConvertError(f"FlateDecode failed: {exc}") from exc
-                if not d.eof and len(data) <= self._budget:
-                    raise ConvertError(
-                        "FlateDecode failed: incomplete or truncated stream")
+                ended = d.eof
             else:
                 early = 0 if self.resolve(parm.get("/EarlyChange")) == 0 else 1
-                data = lzw_decode(data, 8, True, early, self._budget + 1,
-                                  ConvertError)
-            if len(data) > self._budget:
+                data, ended = lzw_decode(data, 8, True, early, allowed + 1,
+                                         ConvertError)
+            if len(data) > allowed:
                 raise ConvertError("PDF streams exceed the decoded-bytes budget")
-            self._budget -= len(data)
+            if not ended:
+                raise ConvertError(f"{f[1:]} failed: incomplete or truncated "
+                                   "stream")
+            largest = max(largest, len(data))
+        self._budget = allowed - largest
+        self._charged[stream] = largest
         return bytes(data)
 
 

@@ -76,8 +76,10 @@ class MsbReader:
         self.nbits = nbits
         return (self.acc >> nbits) & _MASK[n]
 
-    def read_unary(self) -> int:
-        """Count of 0 bits before the next 1 bit; consumes both."""
+    def read_unary(self, limit: int) -> int:
+        """Count of 0 bits before the next 1 bit; consumes both. Raises
+        ``error`` once the count passes ``limit``, so a run of zeros in
+        hostile data stops at the caller's bound, not at the end of data."""
         q = 0
         while True:
             live = self.acc & ((1 << self.nbits) - 1)
@@ -85,12 +87,17 @@ class MsbReader:
                 rest = live.bit_length() - 1  # bits after the 1
                 q += self.nbits - 1 - rest
                 self.nbits = rest
+                if q > limit:
+                    break
                 return q
             q += self.nbits
             self.nbits = 0
+            if q > limit:
+                break
             self._fill()
             if not self.nbits:
                 raise self.error(_TRUNCATED)
+        raise self.error(f"unary run exceeds {limit} bits")
 
     def align(self) -> None:
         """Skip to the next byte boundary."""
@@ -235,12 +242,13 @@ class LsbWriter:
 
 
 def lzw_decode(data: bytes, literal_bits: int, msb: bool, early_change: int,
-               max_out: int, error: type[Exception]) -> bytearray:
+               max_out: int, error: type[Exception]
+               ) -> tuple[bytearray, bool]:
     """LZW codes → bytes. Stops at the end-of-information code, at the end
     of data (a partial last code is dropped) or once ``max_out`` bytes are
-    out (the last entry may pass it), and returns what it decoded: each
-    caller applies its own truncation rule. Raises ``error`` for a code
-    beyond the table."""
+    out (the last entry may pass it), and returns what it decoded and
+    whether it met the end-of-information code: each caller applies its
+    own truncation rule. Raises ``error`` for a code beyond the table."""
     clear = 1 << literal_bits
     eoi = clear + 1
     base = [bytes([i]) for i in range(clear)] + [None, None]  # clear, EOI
@@ -260,7 +268,7 @@ def lzw_decode(data: bytes, literal_bits: int, msb: bool, early_change: int,
             entry = table[code]
             if entry is None:
                 if code == eoi:
-                    break
+                    return out, True
                 table = list(base)
                 width = literal_bits + 1
                 grow_at = (1 << width) - early_change
@@ -277,7 +285,7 @@ def lzw_decode(data: bytes, literal_bits: int, msb: bool, early_change: int,
                 grow_at = (1 << width) - early_change if width < 12 else 0
         out += entry
         prev = entry
-    return out
+    return out, False
 
 
 def lzw_encode(data: bytes, literal_bits: int, msb: bool,

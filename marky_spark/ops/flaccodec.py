@@ -40,6 +40,7 @@ MAX_SAMPLES = 1 << 26  # total samples (frames x channels) a decode may allocate
 MAX_CHANNELS = 8
 MAX_RATE = 1_000_000
 MAX_BLOCK = 1 << 16
+_MAX_RICE_QUOTIENT = 1 << 22  # zero bits one rice quotient may run
 
 FLAC_SIGNATURE = b"fLaC"
 
@@ -169,7 +170,7 @@ def _decode_residual(br: MsbReader, block_size: int, pred_order: int):
                 out.extend(_read_signed(br, raw) for _ in range(count))
         else:
             for _ in range(count):
-                q = br.read_unary()
+                q = br.read_unary(_MAX_RICE_QUOTIENT)
                 u = (q << param) | br.read(param)
                 out.append((u >> 1) ^ -(u & 1))  # rice zigzag unfold
     return out
@@ -201,7 +202,7 @@ def _decode_subframe(br: MsbReader, block_size: int, bits: int):
     stype = br.read(6)
     wasted = 0
     if br.read(1):
-        wasted = 1 + br.read_unary()
+        wasted = 1 + br.read_unary(bits)
         if wasted >= bits:
             raise FlacError("wasted bits exceed sample size")
     # predictor feedback with a hostile coefficient (e.g. LPC coef 2,

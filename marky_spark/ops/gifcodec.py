@@ -138,7 +138,7 @@ def _iter_frames(data: bytes):
         # 9-11)
         if not 2 <= min_code <= 8:
             raise GifError(f"bad LZW minimum code size {min_code}")
-        indices = lzw_decode(b"".join(chunks), min_code, False, 0, w * h,
+        indices, _ = lzw_decode(b"".join(chunks), min_code, False, 0, w * h,
                              GifError)
         if len(indices) < w * h:
             raise GifError(

@@ -165,7 +165,7 @@ def _decompress(raw: bytes, expect: int, compression: int,
         return _packbits_decode(raw, expect)
     if compression in (8, 32946):  # Deflate (new + old code)
         return _zlib_decode(raw, expect)
-    out = lzw_decode(raw, 8, True, 1, expect, TiffError)  # LZW
+    out, _ = lzw_decode(raw, 8, True, 1, expect, TiffError)  # LZW
     if len(out) != expect:
         raise TiffError(f"LZW strip decoded {len(out)} bytes, want {expect}")
     return bytes(out)

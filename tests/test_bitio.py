@@ -78,15 +78,18 @@ def test_msb_and_lsb_read_the_same_bytes_in_mirrored_order():
 
 def test_msb_reader_unary_and_seek():
     r = MsbReader(bytes([0b00010000, 0, 0, 0b00000001, 0b10000000]), _Err)
-    assert r.read_unary() == 3
-    assert r.read_unary() == 27
-    assert r.read_unary() == 0
+    assert r.read_unary(3) == 3
+    assert r.read_unary(27) == 27
+    assert r.read_unary(0) == 0
     r.seek(5)
     assert r.read(3) == 0b000 and r.tell() == 8
     r.seek(0)
     assert r.read(4) == 0b0001
     with pytest.raises(_Err):
-        MsbReader(b"\x00\x00", _Err).read_unary()
+        MsbReader(b"\x00\x00", _Err).read_unary(100)
+    for limit in (0, 2, 63, 64, 65):  # inside and past one 64-bit fill
+        with pytest.raises(_Err, match="unary run"):
+            MsbReader(bytes(9) + b"\x01", _Err).read_unary(limit)
 
 
 # ------------------------------------------------------------------ writers
@@ -122,15 +125,16 @@ def test_lzw_round_trips_through_clears(msb, early, bits):
     data = bytes(rng.randrange(1 << bits) for _ in range(30000))
     data += bytes([1]) * 20000
     packed = lzw_encode(data, bits, msb, early)
-    assert bytes(lzw_decode(packed, bits, msb, early, len(data), _Err)) == data
+    out, ended = lzw_decode(packed, bits, msb, early, len(data) + 1, _Err)
+    assert ended and bytes(out) == data
 
 
 def test_lzw_width_rule_matches_hand_packed_stream():
     data = bytes(random.Random(5).randrange(256) for _ in range(2500))
     for early in (1, 0):
-        out = lzw_decode(lzw_literals(data, early), 8, True, early, 10**6,
-                         _Err)
-        assert bytes(out) == data
+        out, ended = lzw_decode(lzw_literals(data, early), 8, True, early,
+                                10**6, _Err)
+        assert ended and bytes(out) == data
     # every digram distinct: the encoder can only emit literals
     unique = bytes(range(256)) + bytes(3 * k for k in range(1, 60))
     assert lzw_encode(unique, 8, True, 1) == lzw_literals(unique)
@@ -141,10 +145,11 @@ def test_lzw_decode_stops_at_max_out_and_end_of_data(msb):
     data = bytes([7]) * 100000
     early = 1 if msb else 0
     packed = lzw_encode(data, 8, msb, early)
-    out = lzw_decode(packed, 8, msb, early, 1000, _Err)
-    assert 1000 <= len(out) < 1000 + 500 and set(out) == {7}
-    short = lzw_decode(packed[:len(packed) // 2], 8, msb, early, 10**6, _Err)
-    assert 0 < len(short) < len(data)
+    out, ended = lzw_decode(packed, 8, msb, early, 1000, _Err)
+    assert 1000 <= len(out) < 1000 + 500 and set(out) == {7} and not ended
+    short, ended = lzw_decode(packed[:len(packed) // 2], 8, msb, early, 10**6,
+                              _Err)
+    assert 0 < len(short) < len(data) and not ended
 
 
 def test_lzw_decode_rejects_codes_beyond_table():

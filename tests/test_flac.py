@@ -253,6 +253,30 @@ def test_hostile_inputs_raise_typed():
         flac_decode(blob)
 
 
+def test_long_zero_runs_are_typed():
+    """A run of zero bits in the wasted-bits field or in a rice quotient
+    stops at its bound as a FlacError, not at the end of the data."""
+    def wasted(bw):
+        bw.write(0, 1); bw.write(1, 6)
+        bw.write(1, 1)        # wasted-bits flag
+        bw.write(0, 60)       # unary run far past the 16-bit depth
+        bw.write(1, 1)
+        bw.write(0, 14 * 3)
+
+    def rice(bw):
+        bw.write(0, 1); bw.write(8, 6); bw.write(0, 1)  # FIXED order 0
+        bw.write(0, 2); bw.write(0, 4); bw.write(0, 4)  # rice, 1 part, k=0
+        bw.write_unary((1 << 22) + 1)  # one quotient past the bound
+        bw.write_unary(0); bw.write_unary(0); bw.write_unary(0)
+
+    with pytest.raises(FlacError, match="unary run|wasted"):
+        flac_decode(_streaminfo(8000, 1, 16, 3)
+                    + _frame(wasted, bs_extra=(2, 8), block_size=3))
+    with pytest.raises(FlacError, match="unary run exceeds"):
+        flac_decode(_streaminfo(8000, 1, 16, 4)
+                    + _frame(rice, bs_extra=(3, 8)))
+
+
 def test_no_frames_rejected():
     with pytest.raises(FlacError, match="no audio frames"):
         flac_decode(_streaminfo(8000, 1, 16, 0))

@@ -274,6 +274,17 @@ def test_lzw_content_stream_matches_flate_twin():
         assert convert_pdf(_b64(blob)) == flate_md
 
 
+def test_truncated_lzw_stream_is_a_typed_error():
+    """An LZW stream that ends before its EOD code, between codes or
+    inside one, fails as a truncated FlateDecode stream does."""
+    from tests.test_bitio import lzw_literals
+
+    packed = lzw_literals(_content())
+    for cut in (packed[:len(packed) // 2], packed[:-1]):
+        with pytest.raises(ConvertError, match="LZWDecode failed: incomplete"):
+            convert_pdf(_b64(_content_pdf("/LZWDecode", cut)))
+
+
 def test_predictor_is_a_typed_error():
     import zlib
 
@@ -303,6 +314,36 @@ def test_stream_bombs_stay_within_the_document_budget(monkeypatch):
     # the budget is per document: a stream under it still converts
     assert convert_pdf(_b64(_content_pdf("/LZWDecode",
                                          lzw_literals(_content()))))
+
+
+def test_shared_tounicode_is_charged_once(monkeypatch):
+    """A Flate ToUnicode CMap shared by every page decodes once per page
+    but holds the budget once: a budget that fits each stream a single
+    time still converts every page through the CMap."""
+    import re
+    import zlib
+
+    from marky_spark.fixtures import pdf_assemble
+    from marky_spark.kernels import pdfk
+
+    pages = [[(72, 700, f"page {i} \u00e9t\u00e9 caf\u00e9")]
+             for i in range(6)]
+    objects = fx.pdf_objects(pages, compress=True, encoding="cmap")
+    cmap_num = max(objects)
+    cmap = re.search(rb"stream\n(.*)\nendstream", objects[cmap_num],
+                     re.S).group(1)
+    packed = zlib.compress(cmap)
+    objects[cmap_num] = (f"<< /Length {len(packed)} /Filter /FlateDecode >>"
+                         .encode() + b"\nstream\n" + packed + b"\nendstream")
+    contents = sum(len(zlib.decompress(re.search(
+        rb"stream\n(.*)\nendstream", objects[4 + 2 * i], re.S).group(1)))
+        for i in range(len(pages)))
+    monkeypatch.setattr(pdfk, "_MAX_DECODED_BYTES", len(cmap) + contents)
+    assert extract_pdf_text(pdf_assemble(objects)) == "\n\n".join(
+        p[0][2] for p in pages)
+    monkeypatch.setattr(pdfk, "_MAX_DECODED_BYTES", len(cmap) + contents - 1)
+    with pytest.raises(ConvertError, match="budget"):
+        extract_pdf_text(pdf_assemble(objects))
 
 
 def _b64(blob: bytes) -> str:
