@@ -127,8 +127,4 @@ def convert(df: DataFrame, kinds: list[str] | None = None) -> DataFrame:
     """
     if kinds:
         df = df.where(F.arrays_overlap("spans.kind", F.lit(kinds)))
-    # JVM-side defensive ordering: span order is defined by `offset`
-    df = df.withColumn(
-        "spans", F.expr("array_sort(spans, (a, b) -> a.offset - b.offset)")
-    )
     return df.mapInPandas(_convert_batches, schema=OUTPUT_SCHEMA)

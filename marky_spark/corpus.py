@@ -385,7 +385,7 @@ GOLDEN_CASES: list[dict[str, Any]] = [
     },
     # --- mixed converter kinds in ONE document (the interleaved payload
     # case proper): each span dispatches to its own kernel, order defined
-    # by offset (listed shuffled here to pin the array_sort contract) ---
+    # by offset (listed shuffled here to pin convert_document's sort) ---
     {
         "doc_id": "mixed-kind-interleave",
         "spans": [

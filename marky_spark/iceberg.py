@@ -62,7 +62,7 @@ TBLPROPERTIES (
 
 def lineage_table_ddl(table: str = "corpus.conversion_lineage") -> str:
     return f"""CREATE TABLE IF NOT EXISTS {table} (
-  wave INT, _pid INT, n_docs BIGINT, n_errors BIGINT,
+  wave INT, file STRING, n_docs BIGINT, n_errors BIGINT,
   md_chars BIGINT, min_doc_id STRING, max_doc_id STRING
 )
 USING iceberg"""

@@ -17,7 +17,6 @@ per-blob-isolation contract.
 """
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -32,7 +31,6 @@ from pyspark.sql.types import (
 )
 
 MAX_IMAGE_PIXELS = 1 << 26
-MAX_INFLATE = 1 << 28
 
 
 class PdfMediaError(ValueError):
@@ -135,11 +133,13 @@ PDF_IMAGE_SCHEMA = StructType([
 
 def extract_pdf_images(data: bytes) -> list[dict]:
     """PDF bytes → one dict per ``/Subtype /Image`` XObject, in object
-    order. DCTDecode images pass through as JPEG; Flate/raw 8-bit
-    DeviceRGB/DeviceGray images are re-encoded as PNG; CCITTFaxDecode
-    bilevel images (incl. ImageMasks) decode through ops/faxcodec with
-    full /DecodeParms handling (K, Columns, Rows, BlackIs1,
-    EncodedByteAlign) and re-wrap as PNG; remaining encodings (JBIG2,
+    order. DCTDecode images pass through as JPEG; raw, Flate and LZW 8-bit
+    DeviceRGB/DeviceGray/DeviceCMYK images decode through the text
+    kernel's filter chain (``_Pdf.decoded``: one decoded-bytes budget per
+    document, a ``/Predictor`` is a typed error) and re-wrap as PNG;
+    CCITTFaxDecode bilevel images (incl. ImageMasks) decode through
+    ops/faxcodec with full /DecodeParms handling (K, Columns, Rows,
+    BlackIs1, EncodedByteAlign) and re-wrap as PNG; remaining encodings (JBIG2,
     JPX, non-CCITT masks, indexed palettes) are reported with their
     metadata and ``ok='skipped: ...'`` so callers see what was dropped —
     no silent truncation."""
@@ -217,18 +217,17 @@ def extract_pdf_images(data: bytes) -> list[dict]:
                                 "/DeviceCMYK"):
             rec["ok"] = (f"skipped: {rec['pdf_filter']} "
                          f"{rec['colorspace']} {rec['bits']}bpc")
-        elif filters in ([], ["/FlateDecode"]):
+        elif set(filters) <= {"/FlateDecode", "/LZWDecode"}:
             ch = {"/DeviceRGB": 3, "/DeviceGray": 1,
                   "/DeviceCMYK": 4}[str(cs)]
             if rec["width"] * rec["height"] * ch > MAX_IMAGE_PIXELS:
                 rec["ok"] = "error: image exceeds pixel cap"
                 out.append(rec)
                 continue
-            try:
-                samples = (zlib.decompressobj().decompress(
-                    obj.raw, MAX_INFLATE) if filters else obj.raw)
-            except zlib.error as exc:
-                rec["ok"] = f"error: FlateDecode failed: {exc}"
+            try:  # the text kernel's chain and per-document budget
+                samples = pdf.decoded(obj)
+            except ConvertError as exc:
+                rec["ok"] = f"error: {exc}"
                 out.append(rec)
                 continue
             expect = rec["width"] * rec["height"] * ch

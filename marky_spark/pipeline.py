@@ -21,11 +21,12 @@ over 10^12 documents, evidenced locally:
   tasks); a doc over ``1/skew_factor`` of a task's share is tail and is
   round-robin repartitioned, so no task serializes several multi-GB
   documents, while the bulk flows into conversion narrowly.
-- **Lineage + metrics**: per-partition lineage rows (task-level audit) and
-  per-kind metrics come from one aggregate per wave, written by the driver
-  just before the commit. They become visible with the commit: a resume
-  deletes the stats of waves whose commit never landed, with their orphaned
-  bucket files, so a crash never counts a wave twice.
+- **Lineage + metrics**: a view over the committed output, not stored
+  state (:func:`job_stats`): per-file lineage (each output file is one
+  task's share of one bucket) and per-kind metrics, each bucket's wave read
+  from the manifest's snapshots. Built from committed buckets only, they are
+  exactly-once across crash + resume by construction. A commit's totals
+  come from an ``Observation`` on the wave's own write: one Spark job.
 """
 
 from __future__ import annotations
@@ -37,9 +38,7 @@ import time
 from collections.abc import Iterable
 from dataclasses import asdict, dataclass
 
-import pyarrow as pa
-import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .convert import convert
@@ -195,12 +194,11 @@ def run_convert_job(
 
     # exactly-once across crash+resume: a wave that wrote files but died
     # before its manifest commit left orphans in still-pending bucket
-    # partitions and stats files numbered >= wave_base (wave ids count
-    # snapshots); re-running without clearing them would double those rows.
+    # partitions; re-running without clearing them would double those rows.
     # (Iceberg needs no equivalent — uncommitted files are invisible to the
     # snapshot; this restores that semantic for the parquet stand-in.)
     wave_base = len(store.read()["snapshots"])
-    _clean_uncommitted(out_dir, pending, wave_base)
+    _clean_uncommitted(out_dir, pending)
     sizes = bucket_sizes(bucketed.where(F.col("bucket").isin(pending)))
 
     per_wave = max(1, -(-len(pending) // waves))
@@ -212,46 +210,62 @@ def run_convert_job(
                          skew_factor)
         wave_df = bucketed.where(F.col("bucket").isin(wave_buckets))
         out = convert(skew_balanced(wave_df.drop("bucket"), plan))
-        out = with_bucket(out, n_buckets)
-        out = out.withColumn("_pid", F.spark_partition_id())
-        out.persist()
-        try:
-            (out.drop("_pid")
-                .write.mode("append")
-                .partitionBy("bucket")
-                .parquet(os.path.join(out_dir, "out_spans")))
-            # lineage (per task) and metrics (per kind × status) in ONE
-            # aggregate over the persisted frame: a few hundred rows
-            stats = out.groupingSets(
-                [["_pid"], ["conv_kind", "status"]],
-                "_pid", "conv_kind", "status",
-            ).agg(
-                F.grouping_id().alias("_gid"),
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum((F.col("status") != "ok").cast("long")).alias("n_errors"),
-                F.sum("md_chars").alias("md_chars"),
-                F.min("doc_id").alias("min_doc_id"),
-                F.max("doc_id").alias("max_doc_id"),
-            ).collect()
-        finally:
-            out.unpersist()
-
-        # grouping_id sets one bit per column a set leaves out, _pid highest
-        lineage = [r for r in stats if r["_gid"] == 0b011]
-        n = sum(r["n_docs"] for r in lineage)
-        e = sum(r["n_errors"] for r in lineage)
-        _write_wave_stats(out_dir, "lineage", lineage, wave_id)
-        _write_wave_stats(out_dir, "metrics",
-                          [r for r in stats if r["_gid"] == 0b100], wave_id)
+        # the commit's totals come back with the write: one Spark job
+        observed = Observation()
+        (with_bucket(out, n_buckets).observe(observed, *_totals())
+         .write.mode("append")
+         .partitionBy("bucket")
+         .parquet(os.path.join(out_dir, "out_spans")))
+        totals = observed.get
         dt = time.perf_counter() - t0
         store.commit(wave_buckets, {
-            "n_docs": n, "n_errors": e, "seconds": round(dt, 3),
-            **asdict(plan),
+            **totals, "seconds": round(dt, 3), **asdict(plan),
         })
-        results.append(WaveResult(wave_id, wave_buckets, n, e, dt))
+        results.append(WaveResult(wave_id, wave_buckets, totals["n_docs"],
+                                  totals["n_errors"], dt))
         if fail_after_wave is not None and len(results) >= fail_after_wave:
             raise RuntimeError(f"injected failure after wave {len(results)}")
     return results
+
+
+def _totals() -> list:
+    """``n_docs``, ``n_errors`` and ``md_chars`` over output rows; a sum
+    over no rows is null, hence the coalesce."""
+    return [
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum((F.col("status") != "ok").cast("long")),
+                   F.lit(0)).alias("n_errors"),
+        F.coalesce(F.sum("md_chars"), F.lit(0)).alias("md_chars"),
+    ]
+
+
+def job_stats(spark: SparkSession, out_dir: str
+              ) -> tuple[DataFrame, DataFrame]:
+    """``(lineage, metrics)`` of the committed output, computed from it.
+
+    Lineage has one row per output file (``lineage_table_ddl``'s columns);
+    each file is one task's share of one bucket, so it is the task-level
+    audit. Metrics has one row per wave × kind × status. A bucket's
+    ``wave`` is the manifest snapshot that committed it. Nothing here is
+    stored state, so a crash cannot make it count a wave twice and a reader
+    never sees a bucket before its commit; compaction only changes the
+    lineage's files.
+    """
+    snaps = SnapshotStore(out_dir).read()["snapshots"]
+    waves = spark.createDataFrame(
+        [(b, i) for i, s in enumerate(snaps) for b in s["buckets"]],
+        "bucket int, wave int")
+    # the inner join keeps the buckets of the snapshots read here, even if
+    # a commit lands before read_output reads the manifest again
+    out = (read_output(spark, out_dir)
+           .withColumn("file", F.input_file_name())
+           .join(F.broadcast(waves), "bucket"))
+    lineage = out.groupBy("wave", "file").agg(
+        *_totals(), F.min("doc_id").alias("min_doc_id"),
+        F.max("doc_id").alias("max_doc_id"))
+    metrics = out.groupBy("conv_kind", "status", "wave").agg(*_totals())
+    return lineage, metrics.select("conv_kind", "status", "n_docs",
+                                   "md_chars", "wave")
 
 
 def append_op_metrics(spark: SparkSession, out_dir: str, source: str,
@@ -277,50 +291,14 @@ def append_op_metrics(spark: SparkSession, out_dir: str, source: str,
      .write.mode("append").parquet(os.path.join(out_dir, "metrics_ops")))
 
 
-#: driver-written per-wave stats files: the column names and types the
-#: Spark ``groupBy`` writes produced (lineage matches ``lineage_table_ddl``)
-STATS_SCHEMAS = {
-    "lineage": pa.schema([
-        ("_pid", pa.int32()), ("n_docs", pa.int64()),
-        ("n_errors", pa.int64()), ("md_chars", pa.int64()),
-        ("min_doc_id", pa.string()), ("max_doc_id", pa.string()),
-        ("wave", pa.int32())]),
-    "metrics": pa.schema([
-        ("conv_kind", pa.string()), ("status", pa.string()),
-        ("n_docs", pa.int64()), ("md_chars", pa.int64()),
-        ("wave", pa.int32())]),
-}
-
-
-def _write_wave_stats(out_dir: str, table: str, rows: list, wave_id: int
-                      ) -> None:
-    """Write ``table/wave-<id>.parquet`` from the driver (no Spark job);
-    the ``_``-prefixed temp name keeps a torn file invisible to readers."""
-    d = os.path.join(out_dir, table)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f"_wave-{wave_id:05d}.tmp")
-    pq.write_table(pa.Table.from_pylist(  # keeps only the schema's columns
-        [{**r.asDict(), "wave": wave_id} for r in rows],
-        schema=STATS_SCHEMAS[table]), tmp)
-    os.replace(tmp, os.path.join(d, f"wave-{wave_id:05d}.parquet"))
-
-
-def _clean_uncommitted(out_dir: str, pending_buckets: list[int],
-                       n_snapshots: int) -> None:
-    """Remove what a wave that crashed before its manifest commit left
-    behind: orphaned bucket partitions and its ``wave-<id>`` stats files
-    (``id >= n_snapshots``)."""
+def _clean_uncommitted(out_dir: str, pending_buckets: list[int]) -> None:
+    """Remove the bucket partitions a wave that crashed before its manifest
+    commit left behind."""
     base = os.path.join(out_dir, "out_spans")
     for b in pending_buckets:
         d = os.path.join(base, f"bucket={b}")
         if os.path.isdir(d):
             shutil.rmtree(d)
-    for table in STATS_SCHEMAS:
-        d = os.path.join(out_dir, table)
-        for name in os.listdir(d) if os.path.isdir(d) else ():
-            if (name.startswith("wave-")
-                    and int(name[5:].split(".")[0]) >= n_snapshots):
-                os.remove(os.path.join(d, name))
 
 
 def compact_output(spark: SparkSession, out_dir: str,
@@ -438,20 +416,22 @@ def _recover_compaction(out_dir: str, cleanup: bool = False) -> None:
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     """Committed output only (snapshot isolation: uncommitted bucket files
     from a crashed wave are filtered out). Empty result — not an error —
-    when nothing has committed yet."""
+    when nothing has committed yet, or when the committed waves held no
+    document."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     from .schema import OUTPUT_SCHEMA
 
     store = SnapshotStore(out_dir)
     _recover_compaction(out_dir)
     committed = sorted(store.committed_buckets())
     path = os.path.join(out_dir, "out_spans")
+    # copy: StructType.add would mutate the shared OUTPUT_SCHEMA. Given, not
+    # inferred: an output of empty waves has no file to infer it from
+    schema = StructType(
+        list(OUTPUT_SCHEMA.fields) + [StructField("bucket", IntegerType())]
+    )
     if not committed or not os.path.isdir(path):
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        # copy: StructType.add would mutate the shared OUTPUT_SCHEMA
-        schema = StructType(
-            list(OUTPUT_SCHEMA.fields) + [StructField("bucket", IntegerType())]
-        )
         return spark.createDataFrame([], schema)
-    df = spark.read.parquet(path)
+    df = spark.read.schema(schema).parquet(path)
     return df.where(F.col("bucket").isin(committed))

@@ -7,9 +7,11 @@ re-shaped for a cluster: one job over a table, not one process per file).
         --buckets 64 --waves 4 [--kinds html,pdf] [--local N]
 
 Resumable: rerunning with the same --output skips committed buckets
-(manifest snapshot; see marky_spark/pipeline.py). The manifest pins the
-job configuration (--kinds, --buckets): resuming with different values
-is an error, not a silent partial conversion.
+(manifest snapshot; see marky_spark/pipeline.py). Each run ends by
+rewriting lineage/ and metrics/ from the committed output
+(pipeline.job_stats), so they describe exactly what is committed. The
+manifest pins the job configuration (--kinds, --buckets): resuming with
+different values is an error, not a silent partial conversion.
 """
 
 from __future__ import annotations
@@ -84,7 +86,7 @@ def main(argv: list[str] | None = None) -> int:
                   file=sys.stderr)
             return 1
 
-    from marky_spark.pipeline import SnapshotStore, run_convert_job
+    from marky_spark.pipeline import SnapshotStore, job_stats, run_convert_job
     from marky_spark.session import get_spark
 
     spark = get_spark(app="marky-convert",
@@ -134,6 +136,10 @@ def main(argv: list[str] | None = None) -> int:
             from marky_spark.pipeline import compact_output
 
             compaction = compact_output(spark, args.output)
+        for name, stats in zip(("lineage", "metrics"),
+                               job_stats(spark, args.output)):
+            stats.write.mode("overwrite").parquet(
+                os.path.join(args.output, name))
         dt = time.time() - t0
         print(json.dumps({
             **({"compaction": compaction} if compaction is not None else {}),

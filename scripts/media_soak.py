@@ -132,7 +132,7 @@ def main() -> int:
             n_buckets).persist(StorageLevel.MEMORY_AND_DISK)
         committed = {b for b in store.committed_buckets()}
         pending = [b for b in range(n_buckets) if b not in committed]
-        _clean_uncommitted(out_dir, pending, len(store.read()["snapshots"]))
+        _clean_uncommitted(out_dir, pending)
         per_wave = max(1, -(-len(pending) // waves))
         done = 0
         for w in range(0, len(pending), per_wave):

@@ -9,7 +9,7 @@ exactly-once verification → small-file compaction → the curate chain
 
 Every record's HTML body converts ok by construction, and one corrupt
 WARC file is planted so the drop-accounting path (``_drop_warc`` →
-metrics sink) is exercised at scale, not just in unit tests.
+metrics view) is exercised at scale, not just in unit tests.
 
 Usage:
     python scripts/soak.py [n_docs] [n_files] [cores]
@@ -87,6 +87,7 @@ def main() -> int:
     from marky_spark.ingest import docs_from_warc_dir
     from marky_spark.pipeline import (
         compact_output,
+        job_stats,
         read_output,
         run_convert_job,
     )
@@ -136,7 +137,7 @@ def main() -> int:
     assert agg["n"] == n_docs + 1, (agg["n"], n_docs)
     assert agg["d"] == n_docs + 1
     assert agg["ok"] == n_docs and agg["err"] == 1
-    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    metrics = job_stats(spark, out)[1]
     drops = {r["conv_kind"]: r["n"] for r in
              metrics.groupBy("conv_kind")
              .agg(F.sum("n_docs").alias("n")).collect()}

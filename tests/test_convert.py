@@ -76,6 +76,33 @@ def test_poison_pill_isolation(spark):
     assert out["bad"]["error"]
 
 
+def test_extreme_span_offsets_convert_like_local(spark):
+    """Span offsets a full int32 range apart order in Python, where no
+    subtraction can overflow: the doc converts to the row convert_document
+    gives, and a null offset sorts as 0, instead of failing the job."""
+    from marky_spark.schema import INPUT_SCHEMA
+
+    docs = {
+        "wide": [
+            {"kind": "text", "text": "last", "media_ref": "", "offset": 1},
+            {"kind": "text", "text": "first", "media_ref": "",
+             "offset": -2**31},
+            {"kind": "text", "text": "max", "media_ref": "",
+             "offset": 2**31 - 1},
+        ],
+        "null": [
+            {"kind": "text", "text": "b", "media_ref": "", "offset": 1},
+            {"kind": "text", "text": "a", "media_ref": "", "offset": None},
+        ],
+    }
+    df = spark.createDataFrame(list(docs.items()), schema=INPUT_SCHEMA)
+    got = {r["doc_id"]: r.asDict(recursive=True)
+           for r in convert(df).collect()}
+    for doc_id, spans in docs.items():
+        assert got[doc_id] == convert_document(doc_id, spans), doc_id
+    assert got["wide"]["markdown"] == "first\n\nlast\n\nmax"
+
+
 def test_synth_corpus_deterministic_and_convertible(spark):
     d1, d2 = make_synth_doc(7), make_synth_doc(7)
     assert d1 == d2

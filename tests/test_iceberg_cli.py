@@ -87,6 +87,18 @@ def test_cli_driver_end_to_end(tmp_path):
     result2 = json.loads(proc2.stdout.strip().splitlines()[-1])
     assert result2["resumed"] is True and result2["docs"] == 0
 
+    # each run rewrites lineage/ and metrics/ from the committed output:
+    # one lineage row per output file, and a rerun does not add rows
+    import glob
+
+    import pyarrow.parquet as pq
+
+    for name in ("lineage", "metrics"):
+        assert sum(pq.read_table(f"{out_dir}/{name}")
+                   .column("n_docs").to_pylist()) == 80, name
+    assert pq.read_table(f"{out_dir}/lineage").num_rows == len(
+        glob.glob(f"{out_dir}/out_spans/bucket=*/*.parquet"))
+
 
 def test_cli_missing_input_exits_1():
     proc = subprocess.run(

@@ -363,3 +363,55 @@ def test_flate_cmyk_image_converts_to_rgb():
     out2 = extract_pdf_images(_pdf_with_images([obj2]))
     assert out2[0]["ok"] == "ok"
     assert png_decode(out2[0]["payload"]) == (w, h, 3, exp.tobytes())
+
+
+def _gray_image(w: int, h: int, filters: str, stream: bytes,
+                parms: str = "") -> bytes:
+    return _image_obj(
+        f"<< /Subtype /Image /Width {w} /Height {h} /BitsPerComponent 8 "
+        f"/ColorSpace /DeviceGray /Filter {filters} {parms}"
+        f"/Length {len(stream)} >>", stream)
+
+
+def test_flate_predictor_image_is_a_typed_error():
+    """PNG-predicted rows carry a filter byte per row; kept as samples
+    they gave an ``ok`` image with wrong pixels. Undecoded, the image is
+    one typed row."""
+    rows = b"\x00\x00\x0a\x14\x1e\x00\x00\x0a\x14\x1e"  # filter 0 per row
+    obj = _gray_image(4, 2, "/FlateDecode", zlib.compress(rows),
+                      "/DecodeParms << /Predictor 15 /Columns 4 >> ")
+    (rec,) = extract_pdf_images(_pdf_with_images([obj]))
+    assert rec["ok"] == "error: unsupported PDF predictor 15"
+    assert rec["payload"] is None
+
+
+def test_lzw_image_decodes_to_its_samples():
+    """An /LZWDecode image (and an LZW + Flate chain) decodes through
+    the same chain as content streams."""
+    from marky_spark.ops.pngcodec import png_decode
+    from tests.test_bitio import lzw_literals
+
+    px = bytes((i * 37) % 256 for i in range(20 * 15))
+    chained = zlib.compress(lzw_literals(px))
+    imgs = extract_pdf_images(_pdf_with_images([
+        _gray_image(20, 15, "/LZWDecode", lzw_literals(px)),
+        _gray_image(20, 15, "[/FlateDecode /LZWDecode]", chained)]))
+    assert [r["ok"] for r in imgs] == ["ok", "ok"]
+    for rec in imgs:
+        assert png_decode(rec["payload"]) == (20, 15, 1, px)
+
+
+def test_image_bombs_draw_on_the_document_budget(monkeypatch):
+    """Images share the document's decoded-bytes budget: an image over
+    what is left of it is one typed row, the images before it convert."""
+    from marky_spark.kernels import pdfk
+
+    monkeypatch.setattr(pdfk, "_MAX_DECODED_BYTES", 5000)
+    px = bytes(range(50)) * 60  # 3,000 samples, 50 x 60
+    z = zlib.compress(px)
+    imgs = extract_pdf_images(_pdf_with_images(
+        [_gray_image(50, 60, "/FlateDecode", z)] * 2))
+    assert imgs[0]["ok"] == "ok"
+    assert imgs[1]["ok"] == (
+        "error: PDF streams exceed the decoded-bytes budget")
+    assert imgs[1]["payload"] is None

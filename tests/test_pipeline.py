@@ -9,6 +9,7 @@ from marky_spark.pipeline import (
     DOC_BYTES,
     SnapshotStore,
     bucket_sizes,
+    job_stats,
     plan_wave,
     read_output,
     run_convert_job,
@@ -73,9 +74,8 @@ def test_lineage_and_metrics_written(spark, tmp_path):
     corpus = spark_corpus(spark, 80, partitions=2)
     run_convert_job(spark, corpus, out_dir, n_buckets=4, waves=1)
 
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    lineage, metrics = job_stats(spark, out_dir)
     assert lineage.groupBy().sum("n_docs").collect()[0][0] == 80
-    metrics = spark.read.parquet(f"{out_dir}/metrics")
     rows = {(r["conv_kind"], r["status"]): r["n_docs"] for r in metrics.collect()}
     assert sum(rows.values()) == 80
     assert all(status == "ok" for (_, status) in rows)
@@ -83,9 +83,10 @@ def test_lineage_and_metrics_written(spark, tmp_path):
 
 def test_commit_crash_does_not_double_count_stats(spark, tmp_path,
                                                  monkeypatch):
-    """A wave whose manifest commit fails after its files are written must
-    leave no stats behind once the job resumes: lineage, metrics and the
-    committed output each count every input doc exactly once."""
+    """A wave whose manifest commit fails after its files are written shows
+    in no stats: after the crash the view counts the committed wave only,
+    and after the resume lineage, metrics and the committed output each
+    count every input doc exactly once."""
     out_dir = str(tmp_path / "commitcrash")
     corpus = spark_corpus(spark, 800, partitions=4)
     real_commit = SnapshotStore.commit
@@ -101,21 +102,23 @@ def test_commit_crash_does_not_double_count_stats(spark, tmp_path,
     with pytest.raises(RuntimeError, match="injected commit crash"):
         run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4)
     monkeypatch.undo()
-    assert len(SnapshotStore(out_dir).read()["snapshots"]) == 1
+    (snap,) = SnapshotStore(out_dir).read()["snapshots"]
+    lineage, metrics = job_stats(spark, out_dir)
+    for stats in (lineage, metrics):
+        assert stats.groupBy().sum("n_docs").collect()[0][0] == \
+            snap["stats"]["n_docs"] == read_output(spark, out_dir).count()
 
     run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4)
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
-    metrics = spark.read.parquet(f"{out_dir}/metrics")
+    lineage, metrics = job_stats(spark, out_dir)
     assert lineage.groupBy().sum("n_docs").collect()[0][0] == 800
     assert metrics.groupBy().sum("n_docs").collect()[0][0] == 800
     assert read_output(spark, out_dir).count() == 800
 
 
-def test_wave_runs_at_most_eight_spark_jobs(spark, tmp_path):
-    """One sizing aggregate per call (2 jobs); a wave is its parquet write
-    plus the stats aggregate (3 jobs). A wave that splits a tail adds the
-    tail's round-robin shuffle and the adaptive plan's stage over the
-    cached output (2 jobs)."""
+def test_wave_is_one_spark_job(spark, tmp_path):
+    """One sizing aggregate per call (2 jobs); a wave is its parquet write,
+    which also returns the commit's totals (1 job). A wave that splits a
+    tail adds the tail's round-robin shuffle stage (1 job)."""
     corpus = spark_corpus(spark, 200, partitions=4).persist()
     corpus.count()
     out_dir = str(tmp_path / "jobs")
@@ -131,7 +134,8 @@ def test_wave_runs_at_most_eight_spark_jobs(spark, tmp_path):
     assert len(results) == 2
     split = sum(s["stats"]["max_doc_bytes"] > s["stats"]["threshold_bytes"]
                 for s in SnapshotStore(out_dir).read()["snapshots"])
-    assert len(jobs) <= 2 + 3 * len(results) + 2 * split, (len(jobs), split)
+    assert 0 < split < len(results)  # both kinds of wave are counted
+    assert len(jobs) == 2 + len(results) + split, (len(jobs), split)
 
 
 def test_sizing_aggregate_runs_once_per_call(spark, tmp_path, monkeypatch):
@@ -154,8 +158,8 @@ def test_sizing_aggregate_runs_once_per_call(spark, tmp_path, monkeypatch):
 
 
 def test_stats_tables_match_production_schema(spark, tmp_path):
-    """The driver-written stats read back with the lineage columns of the
-    production Iceberg DDL and the metrics columns Spark used to write."""
+    """The stats view has the lineage columns of the production Iceberg
+    DDL and the metrics columns the job has always reported."""
     from marky_spark.iceberg import lineage_table_ddl
 
     out_dir = str(tmp_path / "schema")
@@ -165,10 +169,9 @@ def test_stats_tables_match_production_schema(spark, tmp_path):
     columns = ddl[ddl.index("(") + 1:ddl.index(")")].split(",")
     expected = {name: typ.lower()
                 for name, typ in (c.split() for c in columns)}
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    lineage, metrics = job_stats(spark, out_dir)
     assert {f.name: f.dataType.simpleString()
             for f in lineage.schema.fields} == expected
-    metrics = spark.read.parquet(f"{out_dir}/metrics")
     assert metrics.schema.simpleString() == (
         "struct<conv_kind:string,status:string,n_docs:bigint,"
         "md_chars:bigint,wave:int>")
@@ -292,6 +295,25 @@ def test_compact_output_reduces_files_preserves_rows(spark, tmp_path):
     assert rows_after == rows_before
     # idempotent: second pass is a no-op
     assert compact_output(spark, out_dir, target_file_bytes=1 << 30)["buckets"] == 0
+
+
+def test_job_stats_follow_compaction(spark, tmp_path):
+    """The stats view reads the committed files as they are: after
+    compaction its totals still equal the committed row count, and its
+    lineage has one row per compacted file."""
+    from marky_spark.pipeline import compact_output
+
+    out_dir = str(tmp_path / "statscompact")
+    run_convert_job(spark, spark_corpus(spark, 200, partitions=4), out_dir,
+                    n_buckets=4, waves=2)
+    compact_output(spark, out_dir, target_file_bytes=1 << 30)
+    lineage, metrics = job_stats(spark, out_dir)
+    rows = read_output(spark, out_dir).count()
+    assert rows == 200
+    for stats in (lineage, metrics):
+        assert stats.groupBy().sum("n_docs").collect()[0][0] == rows
+    assert lineage.count() == 4  # one file per bucket
+    assert sorted(r["wave"] for r in lineage.collect()) == [0, 0, 1, 1]
 
 
 def test_compact_crash_recovery_restores_bucket(spark, tmp_path):
@@ -436,9 +458,8 @@ def test_ingest_drops_land_in_metrics_sink(spark, tmp_path):
     assert sum(r.n_docs for r in results) == 2  # 1 converted + 1 drop row
     assert sum(r.n_errors for r in results) == 1
 
-    metrics = spark.read.parquet(f"{out_dir}/metrics")
     rows = {(r["conv_kind"], r["status"]): r["n_docs"]
-            for r in metrics.collect()}
+            for r in job_stats(spark, out_dir)[1].collect()}
     assert rows[("_drop_warc", "error")] == 1
     # and the drop row in out_spans carries the reason
     drop = read_output(spark, out_dir).where(
@@ -478,3 +499,16 @@ def test_op_metrics_sink_carries_lsh_drop_stats(spark, tmp_path):
                       {"cap_rejected_members": 3})
     rows = spark.read.parquet(f"{out_dir}/metrics_ops")
     assert rows.count() == 3
+
+
+def test_job_of_empty_waves_reads_back_empty(spark, tmp_path):
+    """A committed wave that held no document writes no data file; the
+    output and the stats view still read back empty, as they do before
+    the first commit."""
+    out_dir = str(tmp_path / "empty")
+    assert [s.count() for s in job_stats(spark, out_dir)] == [0, 0]
+    empty = spark.createDataFrame([], schema=INPUT_SCHEMA)
+    results = run_convert_job(spark, empty, out_dir, n_buckets=2, waves=1)
+    assert [(r.n_docs, r.n_errors) for r in results] == [(0, 0)]
+    assert read_output(spark, out_dir).count() == 0
+    assert [s.count() for s in job_stats(spark, out_dir)] == [0, 0]
