@@ -8,8 +8,9 @@ has no Iceberg runtime jar (SURVEY.md §7.0), so this module:
   is the only missing piece;
 - detects at runtime whether an Iceberg catalog is configured and routes
   writes to ``writeTo(...).append()`` (Iceberg, atomic snapshot) or to the
-  partitioned-parquet + JSON-manifest stand-in (pipeline.SnapshotStore, same
-  resume semantics — committed buckets are the snapshot).
+  parquet + JSON-manifest stand-in (pipeline.SnapshotStore, same resume
+  semantics — committed buckets are the snapshot, and each snapshot's
+  files are one ``out_spans/wave=<k>`` directory, one file per task).
 """
 
 from __future__ import annotations
@@ -95,27 +96,32 @@ def write_output(df: DataFrame, spark: SparkSession, out: str,
     """Route to Iceberg (atomic snapshot append) or the local parquet +
     manifest stand-in. Returns the mode used ('iceberg' | 'parquet').
 
-    The fallback writes the SAME layout the pipeline commits — bucket-
-    partitioned parquet under ``out/out_spans`` plus a SnapshotStore
-    manifest commit — so ``pipeline.read_output`` and resume semantics
-    work identically on both paths."""
+    The fallback writes the SAME layout the pipeline commits — the next
+    ``out/out_spans/wave=<k>`` directory with a ``bucket`` column, then a
+    SnapshotStore manifest commit — so ``pipeline.read_output`` and resume
+    semantics work identically on both paths. The commit's bucket list and
+    row count come from an ``Observation`` on the write: one Spark job."""
     if iceberg_available(spark):
         df.writeTo(out).append()
         return "iceberg"
-    import os
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
-    from .pipeline import SnapshotStore, with_bucket
+    from .pipeline import (
+        SnapshotStore,
+        clean_uncommitted,
+        wave_dir,
+        with_bucket,
+    )
 
+    store = SnapshotStore(out)
+    wave = clean_uncommitted(out)
     bucketed = df if "bucket" in df.columns else with_bucket(df, n_buckets)
-    bucketed = bucketed.persist()
-    try:
-        (bucketed.write.mode("append").partitionBy("bucket")
-         .parquet(os.path.join(out, "out_spans")))
-        # the bucket list and the row count in one job
-        counts = bucketed.groupBy("bucket").count().collect()
-    finally:
-        bucketed.unpersist()
-    SnapshotStore(out).commit([r["bucket"] for r in counts],
-                              {"n_docs": sum(r["count"] for r in counts),
-                               "writer": "write_output"})
+    observed = Observation()
+    (bucketed.observe(observed, F.count(F.lit(1)).alias("n_docs"),
+                      F.collect_set("bucket").alias("buckets"))
+     .write.parquet(wave_dir(out, wave)))
+    got = observed.get
+    store.commit(sorted(got["buckets"]),
+                 {"n_docs": got["n_docs"], "writer": "write_output"})
     return "parquet"

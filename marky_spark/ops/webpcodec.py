@@ -103,9 +103,19 @@ def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
     return out
 
 
+_ROOT_BITS = 8
+
+
 class _PrefixCode:
-    """Decoder for one canonical prefix code (bit-by-bit walk)."""
-    __slots__ = ("table", "max_len")
+    """Decoder for one canonical prefix code: one table lookup per symbol.
+
+    The table is indexed by the next bits as ``peek`` returns them (the
+    code's first bit lowest). A root table covers ``_ROOT_BITS``; a code
+    longer than that has a root entry ``~i`` naming second-level table
+    ``i``, indexed by the bits past the root, as libwebp builds it. An
+    entry is ``symbol << 4 | length``. The Kraft check makes the code
+    complete, so every entry is filled."""
+    __slots__ = ("root", "sub", "max_len", "root_bits", "root_mask")
 
     def __init__(self, lengths: list[int]):
         used = [ln for ln in lengths if ln]
@@ -117,21 +127,36 @@ class _PrefixCode:
                 "prefix code is not complete "
                 f"(kraft {kraft}/{1 << 15} over {len(used)} symbols)")
         self.max_len = max(used)
-        self.table = {}
+        root_bits = self.root_bits = min(self.max_len, _ROOT_BITS)
+        self.root_mask = (1 << root_bits) - 1
+        self.root = root = [0] * (1 << root_bits)
+        long_codes: dict[int, list[tuple[int, int, int]]] = {}
         for sym, (code, ln) in _canonical_codes(lengths).items():
-            self.table[(ln, code)] = sym
+            rev = int(f"{code:0{ln}b}"[::-1], 2)  # first code bit lowest
+            if ln <= root_bits:
+                for i in range(rev, len(root), 1 << ln):
+                    root[i] = sym << 4 | ln
+            else:
+                long_codes.setdefault(rev & self.root_mask, []).append(
+                    (rev >> root_bits, ln - root_bits, sym << 4 | ln))
+        self.sub = []
+        for prefix, codes in long_codes.items():
+            width = max(ln for _, ln, _ in codes)
+            table = [0] * (1 << width)
+            for rest, ln, entry in codes:
+                for i in range(rest, len(table), 1 << ln):
+                    table[i] = entry
+            root[prefix] = ~len(self.sub)
+            self.sub.append((len(table) - 1, table))
 
     def read(self, br: LsbReader) -> int:
         bits = br.peek(self.max_len)
-        code = 0
-        for ln in range(1, self.max_len + 1):
-            code = (code << 1) | (bits & 1)
-            bits >>= 1
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                br.consume(ln)
-                return sym
-        raise WebpError("invalid prefix code in VP8L stream")
+        entry = self.root[bits & self.root_mask]
+        if entry < 0:
+            mask, table = self.sub[~entry]
+            entry = table[(bits >> self.root_bits) & mask]
+        br.consume(entry & 15)
+        return entry >> 4
 
 
 class _SimpleCode:

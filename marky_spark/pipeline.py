@@ -4,18 +4,24 @@ Scale design (SURVEY.md §3.4, §4.2) — written for a 1000-executor cluster
 over 10^12 documents, evidenced locally:
 
 - **Bucketing**: documents hash into ``n_buckets`` stable buckets
-  (``pmod(xxhash64(doc_id), B)``); output parquet is partitioned by bucket.
-  In production this is an Iceberg table with a ``bucket(B, doc_id)``
-  partition transform; locally a partitioned parquet dir + a JSON manifest
-  plays the snapshot role (same resume logic either way — §7.0).
-- **Waves + snapshot commit**: buckets are processed in waves; after each
-  wave's files are durably written the manifest commit makes those buckets
-  visible (atomic rename). Restart skips committed buckets — resume costs one
-  metadata read + a partition-pruned filter, NOT an anti-join against 10^12
-  output rows.
-- **Skew**: one JVM-side aggregate per job sizes every pending bucket
-  (payload bytes and largest doc, from ``aggregate(spans, ...)``); each
-  wave is then planned from those rows with no Spark job. The task count
+  (``pmod(xxhash64(doc_id), B)``), kept as the output's ``bucket``
+  column. In production this is an Iceberg table with a
+  ``bucket(B, doc_id)`` partition transform; locally a parquet dir + a
+  JSON manifest plays the snapshot role (same resume logic either way —
+  §7.0).
+- **Waves + snapshot commit**: buckets are processed in waves. Wave ``k``
+  (the index of the snapshot that commits it) is one unpartitioned parquet
+  write to ``out_spans/wave=<k>/``, one file per task; after the files are
+  durably written the manifest commit makes the wave visible (atomic
+  rename). Readers prune to ``wave <`` the snapshot count, so a wave that
+  crashed before its commit is invisible even before a resume deletes its
+  directory. Restart skips committed buckets — resume costs one metadata
+  read + a bucket filter, NOT an anti-join against 10^12 output rows.
+- **Skew**: the first call of a job sizes every pending bucket with one
+  JVM-side aggregate (payload bytes and largest doc, from
+  ``aggregate(spans, ...)``) and records the rows in the manifest before
+  its first wave; a resume plans from those rows with no sizing job. Each
+  wave is planned from the rows with no Spark job. The task count
   comes from Spark's own per-task byte budget
   (``spark.sql.files.maxPartitionBytes``, at least ``defaultParallelism``
   tasks); a doc over ``1/skew_factor`` of a task's share is tail and is
@@ -23,10 +29,10 @@ over 10^12 documents, evidenced locally:
   documents, while the bulk flows into conversion narrowly.
 - **Lineage + metrics**: a view over the committed output, not stored
   state (:func:`job_stats`): per-file lineage (each output file is one
-  task's share of one bucket) and per-kind metrics, each bucket's wave read
-  from the manifest's snapshots. Built from committed buckets only, they are
-  exactly-once across crash + resume by construction. A commit's totals
-  come from an ``Observation`` on the wave's own write: one Spark job.
+  task's share of one wave) and per-kind metrics, each row's wave read
+  from its path. Built from committed waves only, they are exactly-once
+  across crash + resume by construction. A commit's totals come from an
+  ``Observation`` on the wave's own write: one Spark job.
 """
 
 from __future__ import annotations
@@ -47,8 +53,8 @@ from .convert import convert
 class SnapshotStore:
     """Manifest-based local snapshot (Iceberg-semantics stand-in).
 
-    ``manifest.json`` holds the committed bucket list; commits are atomic via
-    write-to-temp + ``os.replace``.
+    ``manifest.json`` holds the committed bucket list and one snapshot per
+    committed wave; every manifest write is atomic (:meth:`write`).
     """
 
     def __init__(self, out_dir: str):
@@ -65,6 +71,13 @@ class SnapshotStore:
     def committed_buckets(self) -> set[int]:
         return set(self.read()["committed_buckets"])
 
+    def write(self, manifest: dict) -> None:
+        """Replace the manifest atomically: write-to-temp + ``os.replace``."""
+        tmp = self.manifest_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1)
+        os.replace(tmp, self.manifest_path)
+
     def commit(self, bucket_ids: list[int], stats: dict) -> None:
         manifest = self.read()
         manifest["committed_buckets"] = sorted(
@@ -73,10 +86,30 @@ class SnapshotStore:
         manifest["snapshots"].append(
             {"buckets": sorted(bucket_ids), "stats": stats}
         )
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self.manifest_path)
+        self.write(manifest)
+
+
+def wave_dir(out_dir: str, wave: int) -> str:
+    """The directory of wave ``wave``: the files snapshot ``wave`` commits."""
+    return os.path.join(out_dir, "out_spans", f"wave={wave}")
+
+
+def clean_uncommitted(out_dir: str) -> int:
+    """Delete the wave directories no snapshot committed: files a wave
+    wrote before a crash kept it from its commit. Returns the next wave's
+    index, the snapshot count.
+
+    Iceberg needs no equivalent (uncommitted files are invisible to the
+    snapshot); readers of the stand-in already prune them, and this frees
+    the directory for the wave that re-runs those buckets."""
+    n_waves = len(SnapshotStore(out_dir).read()["snapshots"])
+    base = os.path.join(out_dir, "out_spans")
+    if os.path.isdir(base):
+        for name in os.listdir(base):
+            key, _, k = name.partition("=")
+            if key == "wave" and int(k) >= n_waves:
+                shutil.rmtree(os.path.join(base, name))
+    return n_waves
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -177,14 +210,17 @@ def run_convert_job(
 ) -> list[WaveResult]:
     """Bucketed, wave-committed, resumable conversion job.
 
-    The pending buckets are sized once (:func:`bucket_sizes`) and every
-    wave is planned from those rows (:func:`plan_wave`); each wave filters
+    The first call sizes the pending buckets (:func:`bucket_sizes`) and
+    records the rows in the manifest; a later call plans from them when
+    every pending bucket has one, and sizes once otherwise. Every wave is
+    planned from those rows (:func:`plan_wave`); each wave filters
     ``input_df`` again, so callers persist an input that is costly to
     recompute. ``fail_after_wave`` injects a crash after N committed waves
     (tests the resume contract).
     """
     store = SnapshotStore(out_dir)
-    committed = store.committed_buckets()
+    manifest = store.read()
+    committed = set(manifest["committed_buckets"])
 
     bucketed = with_bucket(input_df, n_buckets)
     pending = [b for b in range(n_buckets) if b not in committed]
@@ -193,39 +229,60 @@ def run_convert_job(
         return results
 
     # exactly-once across crash+resume: a wave that wrote files but died
-    # before its manifest commit left orphans in still-pending bucket
-    # partitions; re-running without clearing them would double those rows.
-    # (Iceberg needs no equivalent — uncommitted files are invisible to the
-    # snapshot; this restores that semantic for the parquet stand-in.)
-    wave_base = len(store.read()["snapshots"])
-    _clean_uncommitted(out_dir, pending)
-    sizes = bucket_sizes(bucketed.where(F.col("bucket").isin(pending)))
+    # before its manifest commit left an orphan wave directory, which the
+    # wave that re-runs its buckets writes afresh
+    wave_base = clean_uncommitted(out_dir)
+    sizes = _pending_sizes(store, manifest, bucketed, pending)
 
     per_wave = max(1, -(-len(pending) // waves))
     for w in range(0, len(pending), per_wave):
         wave_buckets = pending[w:w + per_wave]
         wave_id = wave_base + w // per_wave
         t0 = time.perf_counter()
-        plan = plan_wave(spark, [sizes.get(b, (0, 0)) for b in wave_buckets],
-                         skew_factor)
+        plan = plan_wave(spark, [sizes[b] for b in wave_buckets], skew_factor)
         wave_df = bucketed.where(F.col("bucket").isin(wave_buckets))
         out = convert(skew_balanced(wave_df.drop("bucket"), plan))
         # the commit's totals come back with the write: one Spark job
         observed = Observation()
+        t_write = time.perf_counter()
         (with_bucket(out, n_buckets).observe(observed, *_totals())
-         .write.mode("append")
-         .partitionBy("bucket")
-         .parquet(os.path.join(out_dir, "out_spans")))
+         .write.parquet(wave_dir(out_dir, wave_id)))
         totals = observed.get
-        dt = time.perf_counter() - t0
+        t1 = time.perf_counter()
+        dt = t1 - t0
         store.commit(wave_buckets, {
-            **totals, "seconds": round(dt, 3), **asdict(plan),
+            **totals, "seconds": round(dt, 3),
+            "write_s": round(t1 - t_write, 3), **asdict(plan),
         })
         results.append(WaveResult(wave_id, wave_buckets, totals["n_docs"],
                                   totals["n_errors"], dt))
         if fail_after_wave is not None and len(results) >= fail_after_wave:
             raise RuntimeError(f"injected failure after wave {len(results)}")
     return results
+
+
+def _pending_sizes(store: SnapshotStore, manifest: dict,
+                   bucketed: DataFrame, pending: list[int]
+                   ) -> dict[int, tuple[int, int]]:
+    """``bucket -> (bytes, largest doc)`` for every pending bucket.
+
+    Read from the manifest's ``bucket_sizes`` when it has every pending
+    bucket; otherwise one :func:`bucket_sizes` pass, whose rows (empty
+    buckets as ``(0, 0)``) and seconds (``sizing_s``, one entry per pass)
+    go into the manifest in one atomic write before the first wave. The
+    rows only steer :func:`plan_wave`, never an output row."""
+    recorded = manifest.get("bucket_sizes", {})
+    if all(str(b) in recorded for b in pending):
+        return {b: tuple(recorded[str(b)]) for b in pending}
+    t0 = time.perf_counter()
+    sized = bucket_sizes(bucketed.where(F.col("bucket").isin(pending)))
+    sizes = {b: sized.get(b, (0, 0)) for b in pending}
+    manifest["bucket_sizes"] = {**recorded,
+                                **{str(b): list(v) for b, v in sizes.items()}}
+    manifest.setdefault("sizing_s", []).append(
+        round(time.perf_counter() - t0, 3))
+    store.write(manifest)
+    return sizes
 
 
 def _totals() -> list:
@@ -244,22 +301,14 @@ def job_stats(spark: SparkSession, out_dir: str
     """``(lineage, metrics)`` of the committed output, computed from it.
 
     Lineage has one row per output file (``lineage_table_ddl``'s columns);
-    each file is one task's share of one bucket, so it is the task-level
-    audit. Metrics has one row per wave × kind × status. A bucket's
-    ``wave`` is the manifest snapshot that committed it. Nothing here is
+    each file is one task's share of one wave, so it is the task-level
+    audit. Metrics has one row per wave × kind × status. A row's ``wave``
+    is read from its path: the snapshot that committed it. Nothing here is
     stored state, so a crash cannot make it count a wave twice and a reader
-    never sees a bucket before its commit; compaction only changes the
+    never sees a wave before its commit; compaction only changes the
     lineage's files.
     """
-    snaps = SnapshotStore(out_dir).read()["snapshots"]
-    waves = spark.createDataFrame(
-        [(b, i) for i, s in enumerate(snaps) for b in s["buckets"]],
-        "bucket int, wave int")
-    # the inner join keeps the buckets of the snapshots read here, even if
-    # a commit lands before read_output reads the manifest again
-    out = (read_output(spark, out_dir)
-           .withColumn("file", F.input_file_name())
-           .join(F.broadcast(waves), "bucket"))
+    out = read_output(spark, out_dir).withColumn("file", F.input_file_name())
     lineage = out.groupBy("wave", "file").agg(
         *_totals(), F.min("doc_id").alias("min_doc_id"),
         F.max("doc_id").alias("max_doc_id"))
@@ -291,47 +340,36 @@ def append_op_metrics(spark: SparkSession, out_dir: str, source: str,
      .write.mode("append").parquet(os.path.join(out_dir, "metrics_ops")))
 
 
-def _clean_uncommitted(out_dir: str, pending_buckets: list[int]) -> None:
-    """Remove the bucket partitions a wave that crashed before its manifest
-    commit left behind."""
-    base = os.path.join(out_dir, "out_spans")
-    for b in pending_buckets:
-        d = os.path.join(base, f"bucket={b}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-
-
 def compact_output(spark: SparkSession, out_dir: str,
                    target_file_bytes: int = 512 * 1024 * 1024) -> dict:
-    """Small-file compaction over committed buckets.
+    """Small-file compaction over committed waves.
 
-    Wave-committed output accumulates one file batch per (wave × task) in
-    every bucket partition; at 1000-executor scale that is millions of tiny
-    parquet files — scan planning and NameNode/object-store metadata become
-    the bottleneck, not bytes. This rewrites each committed bucket to
-    ``ceil(bucket_bytes / target_file_bytes)`` files (Iceberg's
+    A wave writes one file per task; at 1000-executor scale and many waves
+    that is millions of small parquet files — scan planning and
+    NameNode/object-store metadata become the bottleneck, not bytes. This
+    rewrites each committed wave directory to
+    ``ceil(wave_bytes / target_file_bytes)`` files (Iceberg's
     ``rewrite_data_files`` is the production twin — this is the parquet
     stand-in with the same swap-last atomicity).
 
-    Only COMMITTED buckets are touched. The swap is two renames (bucket dir
-    → saved old dir, compacted temp dir → bucket dir) and is therefore NOT
-    atomic: a crash between them leaves the bucket dir briefly absent. What
+    Only COMMITTED waves are touched. The swap is two renames (wave dir →
+    saved old dir, compacted temp dir → wave dir) and is therefore NOT
+    atomic: a crash between them leaves the wave dir briefly absent. What
     makes it safe is that (a) temp/old dirs live under ``out_dir/_compact``,
     OUTSIDE the ``out_spans`` partition-discovery root, so a concurrent or
-    post-crash ``spark.read.parquet`` can never mis-infer the bucket column
+    post-crash ``spark.read.parquet`` can never mis-infer the wave column
     or double-read, and (b) ``_recover_compaction`` — run at the start of
     both :func:`compact_output` and :func:`read_output` — restores the saved
-    old dir whenever the bucket dir is missing, so no committed data is ever
+    old dir whenever the wave dir is missing, so no committed data is ever
     lost and retries resume cleanly.
     """
     store = SnapshotStore(out_dir)
     _recover_compaction(out_dir, cleanup=True)
-    committed = sorted(store.committed_buckets())
-    base = os.path.join(out_dir, "out_spans")
+    n_waves = len(store.read()["snapshots"])
     scratch = os.path.join(out_dir, "_compact")
-    stats = {"buckets": 0, "files_before": 0, "files_after": 0}
-    for b in committed:
-        d = os.path.join(base, f"bucket={b}")
+    stats = {"waves": 0, "files_before": 0, "files_after": 0}
+    for k in range(n_waves):
+        d = wave_dir(out_dir, k)
         if not os.path.isdir(d):
             continue
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
@@ -340,12 +378,12 @@ def compact_output(spark: SparkSession, out_dir: str,
         if len(files) <= n_target:
             continue
         os.makedirs(scratch, exist_ok=True)
-        tmp = os.path.join(scratch, f"bucket={b}.tmp")
+        tmp = os.path.join(scratch, f"wave={k}.tmp")
         shutil.rmtree(tmp, ignore_errors=True)
         (spark.read.parquet(d)
          .coalesce(n_target)
          .write.mode("overwrite").parquet(tmp))
-        old = os.path.join(scratch, f"bucket={b}.old")
+        old = os.path.join(scratch, f"wave={k}.old")
         shutil.rmtree(old, ignore_errors=True)
         os.rename(d, old)
         try:
@@ -356,12 +394,12 @@ def compact_output(spark: SparkSession, out_dir: str,
                 # a concurrent read_output's recovery restored `old` back
                 # to the live dir between our two renames — the live dir
                 # again holds the original rows, so our saved copy is
-                # redundant; leave this bucket for the next pass
+                # redundant; leave this wave for the next pass
                 shutil.rmtree(old, ignore_errors=True)
             else:
                 # rename failed for some OTHER reason while the live dir
                 # is absent: `old` is now the only copy of a committed
-                # bucket — restore it, never delete it
+                # wave — restore it, never delete it
                 try:
                     os.rename(old, d)
                 except OSError:
@@ -370,7 +408,7 @@ def compact_output(spark: SparkSession, out_dir: str,
                     raise  # committed data unreachable — fail loudly
             continue
         shutil.rmtree(old, ignore_errors=True)
-        stats["buckets"] += 1
+        stats["waves"] += 1
         stats["files_before"] += len(files)
         stats["files_after"] += n_target
     return stats
@@ -379,10 +417,10 @@ def compact_output(spark: SparkSession, out_dir: str,
 def _recover_compaction(out_dir: str, cleanup: bool = False) -> None:
     """Repair a crash mid-compaction swap (see :func:`compact_output`).
 
-    A leftover ``_compact/bucket={b}.old`` with NO live bucket dir means the
+    A leftover ``_compact/wave={k}.old`` with NO live wave dir means the
     crash hit between the two swap renames — restore the old dir (the temp
     dir holds the same rows compacted; dropping it loses only compaction
-    work, never data). A leftover ``.old`` WITH a live bucket dir means the
+    work, never data). A leftover ``.old`` WITH a live wave dir means the
     swap completed — dropped only under ``cleanup=True``. Leftover ``.tmp``
     dirs are incomplete-or-superseded scratch — likewise ``cleanup`` only.
 
@@ -414,24 +452,24 @@ def _recover_compaction(out_dir: str, cleanup: bool = False) -> None:
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed output only (snapshot isolation: uncommitted bucket files
-    from a crashed wave are filtered out). Empty result — not an error —
-    when nothing has committed yet, or when the committed waves held no
-    document."""
+    """Committed output only, with its ``bucket`` and ``wave`` columns
+    (snapshot isolation: a wave directory no snapshot committed yet is
+    pruned). Empty result — not an error — when nothing has committed yet,
+    or when the committed waves held no document."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     from .schema import OUTPUT_SCHEMA
 
     store = SnapshotStore(out_dir)
     _recover_compaction(out_dir)
-    committed = sorted(store.committed_buckets())
+    n_waves = len(store.read()["snapshots"])
     path = os.path.join(out_dir, "out_spans")
     # copy: StructType.add would mutate the shared OUTPUT_SCHEMA. Given, not
-    # inferred: an output of empty waves has no file to infer it from
-    schema = StructType(
-        list(OUTPUT_SCHEMA.fields) + [StructField("bucket", IntegerType())]
-    )
-    if not committed or not os.path.isdir(path):
+    # inferred: a job that has not committed has no file to infer it from
+    schema = StructType(list(OUTPUT_SCHEMA.fields) + [
+        StructField("bucket", IntegerType()),
+        StructField("wave", IntegerType())])
+    if not n_waves or not os.path.isdir(path):
         return spark.createDataFrame([], schema)
     df = spark.read.schema(schema).parquet(path)
-    return df.where(F.col("bucket").isin(committed))
+    return df.where(F.col("wave") < n_waves)

@@ -19,7 +19,11 @@ import tarfile
 import time
 import zipfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# the Spark Python workers import marky_spark too: they inherit PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
 
 
 def _body(i: int) -> bytes:

@@ -55,7 +55,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--local", type=int, default=None,
                     help="run on local[N] (default: session from spark-submit)")
     ap.add_argument("--compact", action="store_true",
-                    help="after the run, compact committed buckets to "
+                    help="after the run, compact committed waves to "
                          "~512MB files (Iceberg rewrite_data_files twin)")
     args = ap.parse_args(argv)
 
@@ -121,10 +121,7 @@ def main(argv: list[str] | None = None) -> int:
         manifest = store.read()
         if manifest.get("job_config") is None:
             manifest["job_config"] = job_config
-            tmp = store.manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=1)
-            os.replace(tmp, store.manifest_path)
+            store.write(manifest)
 
         t0 = time.time()
         results = run_convert_job(spark, df, args.output,

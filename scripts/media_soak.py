@@ -11,9 +11,10 @@ prove the convert front door; this one proves the MEDIA path at scale:
   truncated mid-container) whose rows must surface as counted typed
   errors, never task failures.
 - job shape: the same bucketed wave-committed resume protocol as the
-  convert job (SnapshotStore manifests, uncommitted-file cleanup, one
-  INJECTED CRASH mid-run + resume), images through decode_pixels and
-  audio through audio_features.
+  convert job (SnapshotStore manifests, one ``out_spans/wave=<k>``
+  directory per snapshot, uncommitted-wave cleanup, one INJECTED CRASH
+  mid-run + resume), images through decode_pixels and audio through
+  audio_features.
 - verification: exactly-once (row count == distinct media_ref == the
   generated corpus size), ok/error split equals the planted poison
   count exactly, per-branch throughput reported.
@@ -34,6 +35,9 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the Spark Python workers import marky_spark too: they inherit PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
 
 POISON_EVERY = 997
 
@@ -61,7 +65,8 @@ def main() -> int:
     )
     from marky_spark.pipeline import (
         SnapshotStore,
-        _clean_uncommitted,
+        clean_uncommitted,
+        wave_dir,
         with_bucket,
     )
     from marky_spark.session import get_spark
@@ -123,16 +128,16 @@ def main() -> int:
                    for n in (n_png, n_gif, n_cmyk, n_bmp))
 
     n_buckets, waves = 32, 4
-    store = SnapshotStore(out_dir)
 
-    def run(tag: str, media, op, fail_after_wave=None):
+    def run(out: str, tag: str, media, op, fail_after_wave=None):
+        store = SnapshotStore(out)
         bucketed = with_bucket(
             media.withColumn("doc_id", F.regexp_extract(
                 "media_ref", r"(\d+)$", 1).cast("long")),
             n_buckets).persist(StorageLevel.MEMORY_AND_DISK)
-        committed = {b for b in store.committed_buckets()}
+        committed = store.committed_buckets()
         pending = [b for b in range(n_buckets) if b not in committed]
-        _clean_uncommitted(out_dir, pending)
+        wave_base = clean_uncommitted(out)
         per_wave = max(1, -(-len(pending) // waves))
         done = 0
         for w in range(0, len(pending), per_wave):
@@ -144,13 +149,17 @@ def main() -> int:
                     "media_ref", r"(\d+)$", 1).cast("long")),
                 n_buckets).drop("doc_id")
             (result.withColumn("branch", F.lit(tag))
-             .write.mode("append").partitionBy("bucket")
-             .parquet(os.path.join(out_dir, "out_spans")))
+             .write.parquet(wave_dir(out, wave_base + w // per_wave)))
             store.commit(wave_buckets, {"tag": tag})
             done += 1
             if fail_after_wave is not None and done >= fail_after_wave:
                 raise RuntimeError("injected failure")
         bucketed.unpersist()
+
+    def committed_rows(out: str):
+        n_waves = len(SnapshotStore(out).read()["snapshots"])
+        return (spark.read.parquet(os.path.join(out, "out_spans"))
+                .where(F.col("wave") < n_waves).drop("wave"))
 
     def decode_images(media):
         return decode_pixels(media).select(
@@ -176,77 +185,27 @@ def main() -> int:
     t0 = time.time()
     crashed = False
     try:
-        run("img", images, decode_images, fail_after_wave=2)
+        run(out_dir, "img", images, decode_images, fail_after_wave=2)
     except RuntimeError as exc:
         crashed = "injected" in str(exc)
     assert crashed, "crash injection did not fire"
-    run("img", images, decode_images)          # resume to completion
+    run(out_dir, "img", images, decode_images)  # resume to completion
     img_sec = time.time() - t0
     anim_out = out_dir + "_anim"
     shutil.rmtree(anim_out, ignore_errors=True)
-    store_anim = SnapshotStore(anim_out)
     t_anim = time.time()
-
-    def run_anims():
-        bucketed = with_bucket(
-            anims.withColumn("doc_id", F.regexp_extract(
-                "media_ref", r"(\d+)$", 1).cast("long")),
-            n_buckets).persist(StorageLevel.MEMORY_AND_DISK)
-        pending = [b for b in range(n_buckets)
-                   if b not in store_anim.committed_buckets()]
-        per_wave = max(1, -(-len(pending) // waves))
-        for w in range(0, len(pending), per_wave):
-            wave_buckets = pending[w:w + per_wave]
-            wave = bucketed.where(F.col("bucket").isin(wave_buckets))
-            result = with_bucket(
-                sample_anims(wave.select("media_ref", "mime", "payload"))
-                .withColumn("doc_id", F.regexp_extract(
-                    "media_ref", r"(\d+)$", 1).cast("long")),
-                n_buckets).drop("doc_id")
-            (result.withColumn("branch", F.lit("anim"))
-             .write.mode("append").partitionBy("bucket")
-             .parquet(os.path.join(anim_out, "out_spans")))
-            store_anim.commit(wave_buckets, {"tag": "anim"})
-        bucketed.unpersist()
-
-    run_anims()
+    run(anim_out, "anim", anims, sample_anims)
     anim_sec = time.time() - t_anim
     audio_out = out_dir + "_audio"
     shutil.rmtree(audio_out, ignore_errors=True)
-    store2 = SnapshotStore(audio_out)
     t1 = time.time()
-
-    def run_audio():
-        bucketed = with_bucket(
-            audio.withColumn("doc_id", F.regexp_extract(
-                "media_ref", r"(\d+)$", 1).cast("long")),
-            n_buckets).persist(StorageLevel.MEMORY_AND_DISK)
-        pending = [b for b in range(n_buckets)
-                   if b not in store2.committed_buckets()]
-        per_wave = max(1, -(-len(pending) // waves))
-        for w in range(0, len(pending), per_wave):
-            wave_buckets = pending[w:w + per_wave]
-            wave = bucketed.where(F.col("bucket").isin(wave_buckets))
-            result = with_bucket(
-                decode_audio(wave.select("media_ref", "mime", "payload"))
-                .withColumn("doc_id", F.regexp_extract(
-                    "media_ref", r"(\d+)$", 1).cast("long")),
-                n_buckets).drop("doc_id")
-            (result.withColumn("branch", F.lit("aud"))
-             .write.mode("append").partitionBy("bucket")
-             .parquet(os.path.join(audio_out, "out_spans")))
-            store2.commit(wave_buckets, {"tag": "aud"})
-        bucketed.unpersist()
-
-    run_audio()
+    run(audio_out, "aud", audio, decode_audio)
     audio_sec = time.time() - t1
     total_sec = time.time() - t0
 
     # exactly-once + accounting
-    img_rows = spark.read.parquet(os.path.join(out_dir, "out_spans"))
-    aud_rows = spark.read.parquet(os.path.join(audio_out, "out_spans"))
-    anim_rows = spark.read.parquet(os.path.join(anim_out, "out_spans"))
-    allr = img_rows.unionByName(aud_rows).unionByName(anim_rows)
+    allr = (committed_rows(out_dir).unionByName(committed_rows(audio_out))
+            .unionByName(committed_rows(anim_out)))
     agg = allr.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("media_ref").alias("d"),

@@ -28,6 +28,9 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the Spark Python workers import marky_spark too: they inherit PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
 
 _WORDS = ("the quick brown fox jumps over a lazy dog and then walks "
           "back home with many common english stopwords because this "

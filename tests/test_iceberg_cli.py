@@ -34,9 +34,18 @@ def test_write_routing_falls_back_to_parquet(spark, tmp_path):
     assert iceberg_available(spark) is False  # no Iceberg jar in sandbox
     df = spark.range(5).selectExpr("cast(id as string) as doc_id")
     out = str(tmp_path / "o")
-    mode = write_output(df, spark, out)
+    sc = spark.sparkContext
+    sc.setJobGroup("write-output", "write_output")
+    try:
+        mode = write_output(df, spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert mode == "parquet"
-    # fallback commits the pipeline layout: bucketed parquet + manifest
+    # the write returns the commit's totals: one Spark job, one wave dir
+    assert len(sc.statusTracker().getJobIdsForGroup("write-output")) == 1
+    assert os.listdir(out + "/out_spans") == ["wave=0"]
+    # fallback commits the pipeline layout: a wave of bucketed parquet +
+    # manifest
     written = spark.read.parquet(out + "/out_spans")
     assert written.count() == 5
     assert "bucket" in written.columns
@@ -73,8 +82,8 @@ def test_cli_driver_end_to_end(tmp_path):
     assert proc.returncode == 0, proc.stderr[-1500:]
     result = json.loads(proc.stdout.strip().splitlines()[-1])
     assert result["docs"] == 80 and result["errors"] == 0
-    # --compact rewrote the multi-file wave output down to one file/bucket
-    assert result["compaction"]["buckets"] >= 1
+    # --compact rewrote the multi-file wave output down to one file/wave
+    assert result["compaction"]["waves"] >= 1
     assert result["compaction"]["files_after"] < result["compaction"]["files_before"]
 
     # resume: second run is a no-op
@@ -97,7 +106,7 @@ def test_cli_driver_end_to_end(tmp_path):
         assert sum(pq.read_table(f"{out_dir}/{name}")
                    .column("n_docs").to_pylist()) == 80, name
     assert pq.read_table(f"{out_dir}/lineage").num_rows == len(
-        glob.glob(f"{out_dir}/out_spans/bucket=*/*.parquet"))
+        glob.glob(f"{out_dir}/out_spans/wave=*/*.parquet"))
 
 
 def test_cli_missing_input_exits_1():

@@ -1,5 +1,7 @@
 """Resumable bucketed job: crash → restart → complete, no dupes, no loss."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,11 +11,13 @@ from marky_spark.pipeline import (
     DOC_BYTES,
     SnapshotStore,
     bucket_sizes,
+    compact_output,
     job_stats,
     plan_wave,
     read_output,
     run_convert_job,
     skew_balanced,
+    wave_dir,
     with_bucket,
 )
 from marky_spark.schema import INPUT_SCHEMA
@@ -57,7 +61,7 @@ def test_crash_resume_completes_without_dupes(spark, tmp_path):
         assert stats["tasks"] == cores  # far under one task's byte budget
         assert stats["threshold_bytes"] == int(wave_bytes / cores / 4.0)
         assert stats["max_doc_bytes"] == max_doc
-        assert stats["seconds"] > 0
+        assert 0 < stats["write_s"] <= stats["seconds"]
 
 
 def test_rerun_on_complete_job_is_noop(spark, tmp_path):
@@ -103,6 +107,8 @@ def test_commit_crash_does_not_double_count_stats(spark, tmp_path,
         run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4)
     monkeypatch.undo()
     (snap,) = SnapshotStore(out_dir).read()["snapshots"]
+    # the crashed wave's files are on disk but pruned from every reader
+    assert os.listdir(wave_dir(out_dir, 1))
     lineage, metrics = job_stats(spark, out_dir)
     for stats in (lineage, metrics):
         assert stats.groupBy().sum("n_docs").collect()[0][0] == \
@@ -116,9 +122,11 @@ def test_commit_crash_does_not_double_count_stats(spark, tmp_path,
 
 
 def test_wave_is_one_spark_job(spark, tmp_path):
-    """One sizing aggregate per call (2 jobs); a wave is its parquet write,
+    """One sizing aggregate per job (2 jobs); a wave is its parquet write,
     which also returns the commit's totals (1 job). A wave that splits a
-    tail adds the tail's round-robin shuffle stage (1 job)."""
+    tail adds the tail's round-robin shuffle stage (1 job). The write puts
+    one file per non-empty task in the wave's directory: at most ``tasks``
+    files, and at most ``tasks`` more for a split tail."""
     corpus = spark_corpus(spark, 200, partitions=4).persist()
     corpus.count()
     out_dir = str(tmp_path / "jobs")
@@ -136,11 +144,45 @@ def test_wave_is_one_spark_job(spark, tmp_path):
                 for s in SnapshotStore(out_dir).read()["snapshots"])
     assert 0 < split < len(results)  # both kinds of wave are counted
     assert len(jobs) == 2 + len(results) + split, (len(jobs), split)
+    for k, snap in enumerate(SnapshotStore(out_dir).read()["snapshots"]):
+        stats = snap["stats"]
+        files = [f for f in os.listdir(wave_dir(out_dir, k))
+                 if f.endswith(".parquet")]
+        tail = stats["max_doc_bytes"] > stats["threshold_bytes"]
+        assert 0 < len(files) <= stats["tasks"] * (1 + tail)
+
+
+def test_resume_runs_no_sizing_job(spark, tmp_path):
+    """A resume whose pending buckets all have sizes in the manifest runs
+    one job per wave (plus one per split tail) and none to size them."""
+    corpus = spark_corpus(spark, 200, partitions=4).persist()
+    corpus.count()
+    out_dir = str(tmp_path / "resume_jobs")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4,
+                        fail_after_wave=1)
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-job-count", "run_convert_job")
+    try:
+        results = run_convert_job(spark, corpus, out_dir, n_buckets=8,
+                                  waves=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        corpus.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup("resume-job-count")
+    snaps = SnapshotStore(out_dir).read()["snapshots"][1:]
+    assert len(results) == len(snaps) == 3
+    split = sum(s["stats"]["max_doc_bytes"] > s["stats"]["threshold_bytes"]
+                for s in snaps)
+    assert len(jobs) == len(results) + split, (len(jobs), split)
 
 
 def test_sizing_aggregate_runs_once_per_call(spark, tmp_path, monkeypatch):
-    """Waves are planned from one sizing pass over the pending buckets,
-    however many waves the call runs."""
+    """A job's first call plans its waves from one sizing pass over the
+    pending buckets, however many waves it runs, and records every
+    bucket's row (an empty one too) and the pass's seconds in the
+    manifest. A resume plans from the recorded rows without sizing, unless
+    a pending bucket has no row: then it sizes once, as a first call."""
     corpus = spark_corpus(spark, 120, partitions=4)
     calls = []
 
@@ -151,10 +193,36 @@ def test_sizing_aggregate_runs_once_per_call(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(pipeline, "bucket_sizes", counting)
     for waves in (1, 4):
         calls.clear()
-        results = run_convert_job(spark, corpus, str(tmp_path / f"w{waves}"),
-                                  n_buckets=4, waves=waves)
+        out_dir = str(tmp_path / f"w{waves}")
+        results = run_convert_job(spark, corpus, out_dir, n_buckets=4,
+                                  waves=waves)
         assert len(results) == waves
         assert len(calls) == 1, (waves, len(calls))
+        manifest = SnapshotStore(out_dir).read()
+        assert sorted(manifest["bucket_sizes"]) == ["0", "1", "2", "3"]
+        assert len(manifest["sizing_s"]) == 1
+
+    out_dir = str(tmp_path / "resume")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4,
+                        fail_after_wave=1)
+    store = SnapshotStore(out_dir)
+    recorded = store.read()["bucket_sizes"]
+    assert sorted(map(int, recorded)) == list(range(8))  # empty ones too
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=3,
+                        fail_after_wave=1)
+    assert len(calls) == 2  # 1 per first call: the resume did not size
+    manifest = store.read()
+    del manifest["bucket_sizes"][str(max(
+        b for b in range(8) if b not in manifest["committed_buckets"]))]
+    store.write(manifest)
+    run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=2)
+    assert len(calls) == 3
+    manifest = store.read()
+    assert manifest["bucket_sizes"] == recorded
+    assert len(manifest["sizing_s"]) == 2
+    assert read_output(spark, out_dir).count() == 120
 
 
 def test_stats_tables_match_production_schema(spark, tmp_path):
@@ -224,50 +292,37 @@ def test_dense_tail_is_isolated(spark):
 
 def test_resume_cleans_orphans_from_mid_wave_crash(spark, tmp_path):
     """A wave that wrote files but died before its manifest commit must not
-    double its rows when the bucket is re-run after restart."""
-    import os
-
-    from marky_spark.corpus import spark_corpus
-    from marky_spark.pipeline import (
-        SnapshotStore,
-        read_output,
-        run_convert_job,
-        with_bucket,
-    )
+    double its rows when its buckets are re-run after restart: readers
+    prune its directory before the resume, and the resume deletes it."""
+    from marky_spark.convert import convert
 
     out_dir = str(tmp_path / "job")
     corpus = spark_corpus(spark, 200, partitions=4)
     n_input = corpus.count()
 
-    # simulate the crash: bucket files exist for EVERY bucket, but the
-    # manifest (written after the files in the real sequence) never landed
-    from marky_spark.convert import convert
-
+    # simulate the crash: wave 0 (every doc) and a later wave directory
+    # exist, but the manifest (written after the files in the real
+    # sequence) never landed
     pre = with_bucket(convert(corpus), 8)
-    (pre.write.mode("append").partitionBy("bucket")
-     .parquet(os.path.join(out_dir, "out_spans")))
-    SnapshotStore(out_dir)  # creates dir + empty manifest state
+    for k in (0, 3):
+        pre.write.parquet(wave_dir(out_dir, k))
     assert not SnapshotStore(out_dir).committed_buckets()
+    assert read_output(spark, out_dir).count() == 0
 
     run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=2)
-    total = read_output(spark, out_dir).count()
-    assert total == n_input  # orphans were cleaned, not duplicated
+    assert not os.path.isdir(wave_dir(out_dir, 3))
+    final = read_output(spark, out_dir)
+    assert final.count() == n_input  # orphans were cleaned, not duplicated
+    assert final.select("doc_id").distinct().count() == n_input
 
 
 def test_read_output_empty_before_first_commit(spark, tmp_path):
-    from marky_spark.pipeline import read_output
-
     df = read_output(spark, str(tmp_path / "never_ran"))
     assert df.count() == 0
-    assert "bucket" in df.columns
+    assert "bucket" in df.columns and "wave" in df.columns
 
 
 def test_compact_output_reduces_files_preserves_rows(spark, tmp_path):
-    import os
-
-    from marky_spark.corpus import spark_corpus
-    from marky_spark.pipeline import compact_output, read_output, run_convert_job
-
     out_dir = str(tmp_path / "compactjob")
     corpus = spark_corpus(spark, 400, partitions=8)
     run_convert_job(spark, corpus, out_dir, n_buckets=4, waves=4)
@@ -280,29 +335,27 @@ def test_compact_output_reduces_files_preserves_rows(spark, tmp_path):
         return sum(
             len([f for f in os.listdir(os.path.join(base, d))
                  if f.endswith(".parquet")])
-            for d in os.listdir(base) if d.startswith("bucket=")
+            for d in os.listdir(base) if d.startswith("wave=")
         )
 
     n_before = count_files()
     stats = compact_output(spark, out_dir, target_file_bytes=1 << 30)
     n_after = count_files()
-    assert stats["buckets"] == 4
+    assert stats["waves"] == 4
     assert n_after < n_before
-    assert n_after == 4  # one file per bucket at this tiny size
+    assert n_after == 4  # one file per wave at this tiny size
     # identical committed row set after the swap
     after = read_output(spark, out_dir)
     rows_after = sorted(r["doc_id"] for r in after.select("doc_id").collect())
     assert rows_after == rows_before
     # idempotent: second pass is a no-op
-    assert compact_output(spark, out_dir, target_file_bytes=1 << 30)["buckets"] == 0
+    assert compact_output(spark, out_dir, target_file_bytes=1 << 30)["waves"] == 0
 
 
 def test_job_stats_follow_compaction(spark, tmp_path):
     """The stats view reads the committed files as they are: after
     compaction its totals still equal the committed row count, and its
     lineage has one row per compacted file."""
-    from marky_spark.pipeline import compact_output
-
     out_dir = str(tmp_path / "statscompact")
     run_convert_job(spark, spark_corpus(spark, 200, partitions=4), out_dir,
                     n_buckets=4, waves=2)
@@ -312,21 +365,17 @@ def test_job_stats_follow_compaction(spark, tmp_path):
     assert rows == 200
     for stats in (lineage, metrics):
         assert stats.groupBy().sum("n_docs").collect()[0][0] == rows
-    assert lineage.count() == 4  # one file per bucket
-    assert sorted(r["wave"] for r in lineage.collect()) == [0, 0, 1, 1]
+    assert lineage.count() == 2  # one file per wave
+    assert sorted(r["wave"] for r in lineage.collect()) == [0, 1]
 
 
 def test_compact_crash_recovery_restores_bucket(spark, tmp_path):
-    """A crash between the two swap renames leaves the bucket dir absent and
+    """A crash between the two swap renames leaves the wave dir absent and
     the data saved under _compact/; read_output and compact_output must
     restore it before reading. Readers are restore-only (a reader must never
     delete scratch a concurrent compactor may be mid-swap on); stale-scratch
     cleanup belongs to compact_output, the single writer."""
-    import os
     import shutil
-
-    from marky_spark.corpus import spark_corpus
-    from marky_spark.pipeline import compact_output, read_output, run_convert_job
 
     out_dir = str(tmp_path / "crashcompact")
     run_convert_job(spark, spark_corpus(spark, 200, partitions=4),
@@ -334,28 +383,25 @@ def test_compact_crash_recovery_restores_bucket(spark, tmp_path):
     rows_before = sorted(
         r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
 
-    # simulate the mid-swap crash: bucket=0 moved to scratch, never replaced
+    # simulate the mid-swap crash: wave=0 moved to scratch, never replaced
     scratch = os.path.join(out_dir, "_compact")
     os.makedirs(scratch, exist_ok=True)
-    base = os.path.join(out_dir, "out_spans")
-    os.rename(os.path.join(base, "bucket=0"),
-              os.path.join(scratch, "bucket=0.old"))
-    os.makedirs(os.path.join(scratch, "bucket=1.tmp"))  # stale scratch too
+    os.rename(wave_dir(out_dir, 0), os.path.join(scratch, "wave=0.old"))
+    os.makedirs(os.path.join(scratch, "wave=1.tmp"))  # stale scratch too
 
     after = sorted(
         r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
-    assert after == rows_before  # bucket restored, nothing lost or doubled
-    assert os.path.isdir(os.path.join(base, "bucket=0"))
+    assert after == rows_before  # wave restored, nothing lost or doubled
+    assert os.path.isdir(wave_dir(out_dir, 0))
     # reader is restore-only: stale .tmp is left for the compactor
-    assert os.path.isdir(os.path.join(scratch, "bucket=1.tmp"))
+    assert os.path.isdir(os.path.join(scratch, "wave=1.tmp"))
 
     # a completed swap leaves only a stale .old: the compactor's cleanup
     # recovery drops it (and the stale .tmp)
-    shutil.copytree(os.path.join(base, "bucket=2"),
-                    os.path.join(scratch, "bucket=2.old"))
+    shutil.copytree(wave_dir(out_dir, 1), os.path.join(scratch, "wave=1.old"))
     compact_output(spark, out_dir, target_file_bytes=1 << 30)
-    assert not os.path.isdir(os.path.join(scratch, "bucket=2.old"))
-    assert not os.path.isdir(os.path.join(scratch, "bucket=1.tmp"))
+    assert not os.path.isdir(os.path.join(scratch, "wave=1.old"))
+    assert not os.path.isdir(os.path.join(scratch, "wave=1.tmp"))
     final = sorted(
         r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
     assert final == rows_before
@@ -363,13 +409,8 @@ def test_compact_crash_recovery_restores_bucket(spark, tmp_path):
 def test_compact_swap_failure_restores_not_deletes(spark, tmp_path, monkeypatch):
     """If the tmp→live rename fails for any reason OTHER than the reader
     race (live dir still absent), the saved .old dir is the only copy of a
-    committed bucket: compact_output must restore it, never rmtree it
+    committed wave: compact_output must restore it, never rmtree it
     (ADVICE r2: unconditional delete was permanent data loss)."""
-    import os
-
-    from marky_spark import pipeline
-    from marky_spark.pipeline import compact_output
-
     out_dir = str(tmp_path / "swapfail")
     run_convert_job(spark, spark_corpus(spark, 200, partitions=4),
                     out_dir, n_buckets=4, waves=2)
@@ -387,12 +428,12 @@ def test_compact_swap_failure_restores_not_deletes(spark, tmp_path, monkeypatch)
     stats = compact_output(spark, out_dir, target_file_bytes=1 << 30)
     monkeypatch.undo()
 
-    assert stats["buckets"] == 0  # every swap failed...
+    assert stats["waves"] == 0  # every swap failed...
     rows_after = sorted(
         r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
-    assert rows_after == rows_before  # ...but every bucket was restored
+    assert rows_after == rows_before  # ...but every wave was restored
     # and the next (unbroken) pass compacts normally
-    assert compact_output(spark, out_dir, target_file_bytes=1 << 30)["buckets"] == 4
+    assert compact_output(spark, out_dir, target_file_bytes=1 << 30)["waves"] == 2
     final = sorted(
         r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
     assert final == rows_before
@@ -400,10 +441,8 @@ def test_compact_swap_failure_restores_not_deletes(spark, tmp_path, monkeypatch)
 
 def test_resume_after_compaction_crash_exactly_once(spark, tmp_path):
     """Composed failure: job crashes between waves AND a compaction swap on a
-    committed bucket crashed mid-rename. Resuming run_convert_job and then
+    committed wave crashed mid-rename. Resuming run_convert_job and then
     read_output must still yield exactly-once output."""
-    import os
-
     out_dir = str(tmp_path / "composed")
     corpus = spark_corpus(spark, N_DOCS, partitions=4)
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -412,20 +451,17 @@ def test_resume_after_compaction_crash_exactly_once(spark, tmp_path):
     committed = sorted(SnapshotStore(out_dir).committed_buckets())
     assert committed and len(committed) < 8
 
-    # mid-compaction crash on a COMMITTED bucket: live dir moved to scratch
+    # mid-compaction crash on a COMMITTED wave: live dir moved to scratch
     scratch = os.path.join(out_dir, "_compact")
     os.makedirs(scratch, exist_ok=True)
-    base = os.path.join(out_dir, "out_spans")
-    b = committed[0]
-    os.rename(os.path.join(base, f"bucket={b}"),
-              os.path.join(scratch, f"bucket={b}.old"))
+    os.rename(wave_dir(out_dir, 0), os.path.join(scratch, "wave=0.old"))
 
     # resume the job (processes only pending buckets), then read
     run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4)
     final = read_output(spark, out_dir)
     assert final.count() == N_DOCS
     assert final.select("doc_id").distinct().count() == N_DOCS
-    assert os.path.isdir(os.path.join(base, f"bucket={b}"))
+    assert os.path.isdir(wave_dir(out_dir, 0))
 
 
 def test_ingest_drops_land_in_metrics_sink(spark, tmp_path):
@@ -502,9 +538,9 @@ def test_op_metrics_sink_carries_lsh_drop_stats(spark, tmp_path):
 
 
 def test_job_of_empty_waves_reads_back_empty(spark, tmp_path):
-    """A committed wave that held no document writes no data file; the
-    output and the stats view still read back empty, as they do before
-    the first commit."""
+    """A committed wave that held no document writes one file with no
+    rows; the output and the stats view still read back empty, as they do
+    before the first commit."""
     out_dir = str(tmp_path / "empty")
     assert [s.count() for s in job_stats(spark, out_dir)] == [0, 0]
     empty = spark.createDataFrame([], schema=INPUT_SCHEMA)
