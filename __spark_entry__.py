@@ -459,29 +459,35 @@ def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _null_cols(df: DataFrame):
+    """The comma list of a media row's null columns (all but ``media_ref``
+    and the status ``ok``): the typed-row oracles pin it, because the
+    sorted row-set comparison of tests/test_entry.py cannot hold a null."""
+    return F.concat_ws(",", *[F.when(F.col(c).isNull(), F.lit(c))
+                              for c in df.columns
+                              if c not in ("media_ref", "ok")])
+
+
 def _q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing, decode + resize MERGED (round-3 registry
-    consolidation: the driver caps CORRECTNESS rows at 50, and these two
-    ops pin the same digest-fake path over the same input — one row now
-    pins both). These payloads are text bytes (not PNGs), so the
-    signature-sniffing default decoder/resizer takes the deterministic
-    digest-fake path — the REAL codec paths are exercised by
-    png_decode/png_resize/gif_decode. The join is on the (unique)
-    media_ref key; both sides are the same 1:1 table."""
+    """Multimodal plumbing, decode + resize MERGED (one row pins both
+    ops). These payloads are text bytes, which no codec claims, so each
+    op gives a typed ``unsupported`` row: the row pins both statuses and
+    which columns are null (all but media_ref and the status). The REAL
+    codec paths are pinned by image_decode / scan_decode. The join is on
+    the (unique) media_ref key; both sides are the same 1:1 table."""
     from marky_spark.ops.multimodal import decode_media, resize_media
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     media = docs.select(
         F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("media_ref"),
-        F.lit("image/png").alias("mime"),
         F.col("text").cast("binary").alias("payload"),
     )
-    rez = resize_media(media, width=32, height=32).select(
-        "media_ref", "in_width", "in_height",
-        F.md5("payload").alias("out_md5"),
-        F.length("payload").cast("long").alias("out_bytes"),
-    )
-    return decode_media(media).join(rez, "media_ref")
+    dec = decode_media(media)
+    rez = resize_media(media, width=32, height=32)
+    return dec.select("media_ref", "ok", _null_cols(dec).alias("nulls")).join(
+        rez.select("media_ref", F.col("ok").alias("resize_ok"),
+                   _null_cols(rez).alias("resize_nulls")),
+        "media_ref")
 
 
 def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,10 +504,10 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     architectures, so the one oracle reconstructs the decoded samples as
     one repeated ASCII char with no AVI or JPEG library while pinning the
     progressive DC/AC spectral-selection + successive-approximation paths
-    too); branch 'b' = the
-    deterministic byte-slice stand-in for formats with no in-sandbox codec
-    (content_md5 = md5 of the slice, which the oracle recomputes from the
-    text bytes); branch 'aw' (round-5) = REAL animated WebP
+    too); branch 'b' = text payloads, which have no frames: one typed
+    ``unsupported`` row per blob with null frame fields (the frame
+    columns read -1 / '' there, and ``nulls`` names the null ones);
+    branch 'aw' (round-5) = REAL animated WebP
     (ops/webpcodec.webp_decode_frames: VP8X/ANIM/ANMF walk with
     full-canvas compositing) of VP8L lossless frames — the one oracle
     row pins the container walk, the VP8L decoder, the compositing
@@ -522,16 +528,20 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     media = docs.select(
         F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("media_ref"),
-        F.lit("video/fake").alias("mime"),
         F.col("text").cast("binary").alias("payload"),
     )
-    bytes_branch = frame_sample(media, n_frames=4).select(
+    unframed = frame_sample(media, n_frames=4)
+    bytes_branch = unframed.select(
         "media_ref",
         F.lit("b").alias("branch"),
-        F.col("frame_idx").cast("long").alias("frame_idx"),
-        F.col("frame_offset").cast("long").alias("frame_offset"),
-        F.length("frame_bytes").cast("long").alias("n_bytes"),
-        F.md5("frame_bytes").alias("content_md5"),
+        F.coalesce(F.col("frame_idx").cast("long"), F.lit(-1))
+        .alias("frame_idx"),
+        F.coalesce("frame_offset", F.lit(-1)).alias("frame_offset"),
+        F.coalesce(F.length("frame_bytes").cast("long"), F.lit(-1))
+        .alias("n_bytes"),
+        F.coalesce(F.md5("frame_bytes"), F.lit("")).alias("content_md5"),
+        "ok",
+        _null_cols(unframed).alias("nulls"),
     )
     sampled = frame_sample(synth_agif_media(docs), n_frames=4)
     # decode_pixels keeps only (media_ref, payload), so thread the frame
@@ -550,6 +560,8 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.getItem(2).cast("long").alias("frame_offset"),
         F.col("n_pixel_bytes").alias("n_bytes"),
         F.col("pixel_md5").alias("content_md5"),
+        "ok",
+        F.lit("").alias("nulls"),
     )
     avi_sampled = frame_sample(synth_avi_media(docs), n_frames=4)
     dec_v = decode_pixels(avi_sampled.select(
@@ -565,6 +577,8 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.getItem(2).cast("long").alias("frame_offset"),
         F.col("n_pixel_bytes").alias("n_bytes"),
         F.col("pixel_md5").alias("content_md5"),
+        "ok",
+        F.lit("").alias("nulls"),
     )
     aw_sampled = frame_sample(synth_awebp_media(docs), n_frames=4)
     dec_aw = decode_pixels(aw_sampled.select(
@@ -580,6 +594,8 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.getItem(2).cast("long").alias("frame_offset"),
         F.col("n_pixel_bytes").alias("n_bytes"),
         F.col("pixel_md5").alias("content_md5"),
+        "ok",
+        F.lit("").alias("nulls"),
     )
     ap_sampled = frame_sample(synth_apng_media(docs), n_frames=4)
     dec_ap = decode_pixels(ap_sampled.select(
@@ -595,6 +611,8 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.getItem(2).cast("long").alias("frame_offset"),
         F.col("n_pixel_bytes").alias("n_bytes"),
         F.col("pixel_md5").alias("content_md5"),
+        "ok",
+        F.lit("").alias("nulls"),
     )
     return (bytes_branch.unionByName(gif_branch)
             .unionByName(avi_branch).unionByName(aw_branch)
@@ -637,9 +655,10 @@ def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal feature extraction plumbing (digest-derived deterministic
-    fake embedding; re-expressed as exact byte values for the oracle)."""
-    from marky_spark.ops.multimodal import FEATURE_DIM, media_features
+    """Multimodal feature extraction plumbing over text payloads, which
+    no codec decodes: each blob is a typed ``unsupported`` row with a null
+    vector (the real image and audio vectors are pinned in tests)."""
+    from marky_spark.ops.multimodal import media_features
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     media = docs.select(
@@ -647,16 +666,7 @@ def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").cast("binary").alias("payload"),
     )
     feats = media_features(media)
-    # features[i] = (digest_byte - 128) / 128.0 exactly, so *128+128 recovers
-    # the integer byte with no float round-trip error
-    return feats.select(
-        "media_ref",
-        *[
-            F.round(F.element_at("features", i + 1) * 128 + 128)
-            .cast("long").alias(f"b{i}")
-            for i in range(FEATURE_DIM)
-        ],
-    )
+    return feats.select("media_ref", "ok", _null_cols(feats).alias("nulls"))
 
 
 def _q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1197,7 +1207,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # stats over real decoded pixels), embedded_media (extraction→
     # multimodal bridge), audio_features (real RIFF/WAVE PCM codec; its
     # slot came from merging media_decode + media_resize, which pin the
-    # same digest-fake path over the same input).
+    # same typed rows over the same input).
     return {
         "convert_csv": _q_convert_csv,
         "convert_html": _q_convert_html,
@@ -1549,25 +1559,15 @@ def oracle_sql() -> dict[str, str]:
             FROM r WHERE rank <= 5
         """,
         "media_decode": """
-            -- decode + resize merged (one row pins both ops).
-            -- COALESCE: the kernel hashes b'' for NULL payloads; the fake
-            -- resize payload is the md5 hex repeated to exactly 32*32
-            -- ASCII chars, so Spark's md5-over-binary == md5-over-varchar
-            WITH h AS (SELECT doc_id, md5(coalesce(text, '')) AS d,
-                              strlen(coalesce(text, '')) AS n
-                       FROM documents)
+            -- decode + resize merged (one row pins both ops). Text
+            -- payloads: no codec claims them, so each op gives a typed
+            -- unsupported row, null outside media_ref and the status
             SELECT 'm' || doc_id AS media_ref,
-                   'image/png' AS mime,
-                   CAST(16 + ('0x' || substr(d, 1, 2))::BIGINT % 64 AS INT) AS width,
-                   CAST(16 + ('0x' || substr(d, 3, 2))::BIGINT % 64 AS INT) AS height,
-                   CAST(1 + ('0x' || substr(d, 5, 2))::BIGINT % 3 AS INT) AS channels,
-                   CAST(n AS BIGINT) AS n_bytes,
-                   'ok' AS ok,
-                   CAST(16 + ('0x' || substr(d, 1, 2))::BIGINT % 64 AS INT) AS in_width,
-                   CAST(16 + ('0x' || substr(d, 3, 2))::BIGINT % 64 AS INT) AS in_height,
-                   md5(substr(repeat(d, 32), 1, 1024)) AS out_md5,
-                   CAST(1024 AS BIGINT) AS out_bytes
-            FROM h
+                   'unsupported' AS ok,
+                   'width,height,channels,n_bytes' AS nulls,
+                   'unsupported' AS resize_ok,
+                   'width,height,in_width,in_height,payload' AS resize_nulls
+            FROM documents
         """,
         "image_decode": """
             -- independent reconstruction of the decoded samples: pixel
@@ -2155,22 +2155,11 @@ def oracle_sql() -> dict[str, str]:
             FROM iagg a JOIN izc z USING (doc_id) JOIN ids d USING (doc_id)
         """,
         "frame_sample": """
-            -- branch 'b': byte-slice stand-in frames; the corpus text is
-            -- pure ASCII so VARCHAR substr == byte slicing and DuckDB's
-            -- md5(VARCHAR) matches Spark's md5 over the binary slice
-            WITH m AS (
-                SELECT doc_id, 'm' || doc_id AS media_ref, text,
-                       strlen(text) AS n
-                FROM documents WHERE strlen(text) > 0),
-            f AS (
-                SELECT media_ref, text, n, greatest(n // 4, 1) AS step,
-                       unnest(range(least(4, n))) AS i
-                FROM m),
             -- branch 'g': real animated-GIF sampling; frame k of doc i is
             -- md5('i:k') hex repeated over a w*h 256-gray canvas, so the
             -- decoded RGB stream is each hex char tripled — reconstructed
             -- here with no GIF or PNG library on the oracle side
-            g AS (
+            WITH g AS (
                 SELECT doc_id,
                        4 + doc_id % 9 AS w,
                        4 + doc_id % 6 AS h,
@@ -2213,21 +2202,27 @@ def oracle_sql() -> dict[str, str]:
                 SELECT doc_id, w, h, i, i * step AS fo,
                        (doc_id * 7 + (i * step) * 13) % 95 + 32 AS val
                 FROM vs)
-            SELECT media_ref,
+            -- branch 'b': text has no frames, so each blob is one typed
+            -- unsupported row whose frame fields are null (-1 / '' in
+            -- the projection)
+            SELECT 'm' || doc_id AS media_ref,
                    'b' AS branch,
-                   i AS frame_idx,
-                   i * step AS frame_offset,
-                   least(step, n - i * step) AS n_bytes,
-                   md5(substr(text, (i * step + 1)::INT,
-                              least(step, n - i * step)::INT)) AS content_md5
-            FROM f
+                   -1 AS frame_idx,
+                   -1 AS frame_offset,
+                   -1 AS n_bytes,
+                   '' AS content_md5,
+                   'unsupported' AS ok,
+                   'frame_idx,frame_offset,frame_bytes' AS nulls
+            FROM documents
             UNION ALL
             SELECT 'a' || doc_id AS media_ref,
                    'g' AS branch,
                    i AS frame_idx,
                    fo AS frame_offset,
                    CAST(w * h * 3 AS BIGINT) AS n_bytes,
-                   md5(rgb) AS content_md5
+                   md5(rgb) AS content_md5,
+                   'ok' AS ok,
+                   '' AS nulls
             FROM gr
             UNION ALL
             SELECT 'v' || doc_id AS media_ref,
@@ -2235,7 +2230,9 @@ def oracle_sql() -> dict[str, str]:
                    i AS frame_idx,
                    fo AS frame_offset,
                    CAST(w * h AS BIGINT) AS n_bytes,
-                   md5(repeat(chr(val::INT), (w * h)::INT)) AS content_md5
+                   md5(repeat(chr(val::INT), (w * h)::INT)) AS content_md5,
+                   'ok' AS ok,
+                   '' AS nulls
             FROM vp
             UNION ALL
             -- branch 'aw': real animated-WebP sampling (full-canvas
@@ -2250,7 +2247,9 @@ def oracle_sql() -> dict[str, str]:
                    md5(substr(repeat(md5(doc_id::VARCHAR || ':' ||
                                          fo::VARCHAR),
                                      ((w*h*3) // 32 + 1)::INT),
-                              1, (w*h*3)::INT)) AS content_md5
+                              1, (w*h*3)::INT)) AS content_md5,
+                   'ok' AS ok,
+                   '' AS nulls
             FROM (
                 SELECT doc_id, w, h, i, i * step AS fo
                 FROM (
@@ -2276,7 +2275,9 @@ def oracle_sql() -> dict[str, str]:
                    md5(substr(repeat(md5(doc_id::VARCHAR || ':' ||
                                          fo::VARCHAR),
                                      ((w*h*3) // 32 + 1)::INT),
-                              1, (w*h*3)::INT)) AS content_md5
+                              1, (w*h*3)::INT)) AS content_md5,
+                   'ok' AS ok,
+                   '' AS nulls
             FROM (
                 SELECT doc_id, w, h, i, i * step AS fo
                 FROM (
@@ -2291,11 +2292,11 @@ def oracle_sql() -> dict[str, str]:
                         FROM documents)))
         """,
         "media_features": """
+            -- text payloads: no codec decodes them, so each blob is a
+            -- typed unsupported row with a null vector
             SELECT 'm' || doc_id AS media_ref,
-                   """ + ", ".join(
-                       f"('0x' || substr(sha256(coalesce(text, '')), {1 + 2 * (i % 32)}, 2))::BIGINT AS b{i}"
-                       for i in range(16)
-                   ) + """
+                   'unsupported' AS ok,
+                   'features' AS nulls
             FROM documents
         """,
         "events_rollup": """

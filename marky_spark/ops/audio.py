@@ -19,7 +19,8 @@ Operators:
   doc ids (the test / bench corpus for the audio path).
 
 Scale shape: one ``mapInPandas`` stage, no shuffle, no driver collect —
-identical plumbing to the image operators in ops/multimodal.
+the same per-blob runner (ops/multimodal.map_blobs) as the image
+operators.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .multimodal import MEDIA_SCHEMA, codec_for
+from .multimodal import MEDIA_SCHEMA, codec_for, map_blobs
 
 AUDIO_FEATURES_SCHEMA = StructType([
     StructField("media_ref", StringType()),
@@ -72,62 +73,31 @@ def audio_features(media: DataFrame) -> DataFrame:
 
     WAV (PCM, G.711 mu/A-law, IMA ADPCM) and FLAC containers are claimed
     by their rows of the ops/multimodal codec table and really decoded;
-    other payloads and recognized-but-unimplemented
-    encodings (float, extensible, exotic FLAC depths) become
-    ``codec_unavailable`` rows; malformed containers isolate per blob into
-    ``error: ...`` rows (poison-pill contract). Arrow-batched
-    ``mapInPandas``: no shuffle, no driver collect."""
+    other payloads are ``unsupported`` rows, recognized-but-unimplemented
+    encodings (extensible, exotic FLAC depths) ``codec_unavailable`` rows
+    and malformed containers ``error: ...`` rows (the
+    :func:`~marky_spark.ops.multimodal.map_blobs` status rule)."""
     import numpy as np
 
-    from .flaccodec import FlacError
-    from .wavcodec import WavError, wav_resample_linear
+    from .wavcodec import wav_resample_linear
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                codec = codec_for(blob)
-                if codec is None or codec.samples is None:
-                    rows.append((ref,) + (None,) * 10
-                                + ("codec_unavailable",))
-                    continue
-                try:
-                    rate, ch, bits, samples = codec.samples(blob)
-                    ds = wav_resample_linear(samples, rate, max(rate // 2, 1))
-                except NotImplementedError:
-                    rows.append((ref,) + (None,) * 10
-                                + ("codec_unavailable",))
-                    continue
-                except (WavError, FlacError) as exc:
-                    rows.append((ref,) + (None,) * 10 + (f"error: {exc}",))
-                    continue
-                except Exception as exc:  # noqa: BLE001 — poison isolation:
-                    # the codec's contract is WavError-only, but a decoder
-                    # escape must never become a task failure
-                    rows.append((ref,) + (None,) * 10
-                                + (f"error: {type(exc).__name__}: {exc}",))
-                    continue
-                c0 = samples[:, 0].astype(np.int64)
-                rows.append((
-                    ref, rate, ch, bits, samples.shape[0],
-                    int(c0.sum()),
-                    int(samples[:, 1].astype(np.int64).sum())
-                    if ch > 1 else None,
-                    int(np.count_nonzero(c0[:-1] * c0[1:] < 0)),
-                    int(np.abs(samples.astype(np.int64)).max())
-                    if samples.size else 0,
-                    ds.shape[0],
-                    int(ds[:, 0].astype(np.int64).sum()),
-                    "ok",
-                ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-            )
+    def stats(blob: bytes):
+        codec = codec_for(blob)
+        if codec is None or codec.samples is None:
+            return None
+        rate, ch, bits, samples = codec.samples(blob)
+        ds = wav_resample_linear(samples, rate, max(rate // 2, 1))
+        c0 = samples[:, 0].astype(np.int64)
+        return (
+            rate, ch, bits, samples.shape[0], int(c0.sum()),
+            int(samples[:, 1].astype(np.int64).sum()) if ch > 1 else None,
+            int(np.count_nonzero(c0[:-1] * c0[1:] < 0)),
+            int(np.abs(samples.astype(np.int64)).max())
+            if samples.size else 0,
+            ds.shape[0], int(ds[:, 0].astype(np.int64).sum()),
+        )
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=AUDIO_FEATURES_SCHEMA
-    )
+    return map_blobs(media, AUDIO_FEATURES_SCHEMA, stats)
 
 
 def wav_feature_vec(blob: bytes, dim: int = 16) -> list[float] | None:
@@ -142,9 +112,9 @@ def wav_feature_vec(blob: bytes, dim: int = 16) -> list[float] | None:
     the (rate, channels, bits, samples) convention), so a WAV and a FLAC
     encoding of the same signal embed identically — container-invariance.
 
-    Returns ``None`` for non-audio payloads (caller falls through to the
-    next format / the digest stand-in); raises the codecs' typed errors
-    for audio-shaped-but-bad payloads (caller isolates per blob)."""
+    Returns ``None`` for non-audio payloads (media_features then gives an
+    ``unsupported`` row); raises the codecs' typed errors for
+    audio-shaped-but-bad payloads (the runner isolates them per blob)."""
     import numpy as np
 
     codec = codec_for(blob)

@@ -14,8 +14,8 @@ format; BMP is the other format that appears there uncompressed).
 bit depth, compression and dimensions must all be plausible — because
 the codec table in :mod:`marky_spark.ops.multimodal` sniffs arbitrary
 binary payloads (including document text bytes that may happen to start
-with "BM") and must never reroute a non-BMP blob away from the
-deterministic fake path.
+with "BM") and must never claim a non-BMP blob, which stays an
+``unsupported`` row.
 """
 
 from __future__ import annotations

@@ -18,8 +18,8 @@ per-row error instead of failing the task.
 
 ``looks_like_gif`` is strict (signature + version + plausible descriptor)
 because the codec table in :mod:`marky_spark.ops.multimodal` sniffs
-arbitrary binary payloads and must never reroute a non-GIF blob off the
-fake path.
+arbitrary binary payloads and must never claim a non-GIF blob, which
+stays an ``unsupported`` row.
 """
 
 from __future__ import annotations

@@ -315,38 +315,21 @@ META_SCHEMA = StructType([
 def audio_meta(media: DataFrame) -> DataFrame:
     """MP3/Ogg payloads → one metadata row each. Curation filters
     (duration/rate/channel/tag) run on these columns without any sample
-    decode — the 100 TB audio-triage path."""
+    decode — the 100 TB audio-triage path. Other payloads are
+    ``unsupported`` rows."""
+    from .multimodal import map_blobs
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    if blob[:4] == b"OggS":
-                        m = ogg_meta(blob)
-                    elif blob[:3] == b"ID3" or (
-                            len(blob) > 1 and blob[0] == 0xFF
-                            and blob[1] >> 5 == 7):
-                        m = mp3_meta(blob)
-                    else:
-                        rows.append((ref,) + (None,) * 8 + ("not_audio",))
-                        continue
-                except LossyAudioError as exc:
-                    rows.append((ref,) + (None,) * 8 + (f"error: {exc}",))
-                    continue
-                except Exception as exc:  # noqa: BLE001 — poison isolation
-                    rows.append((ref,) + (None,) * 8
-                                + (f"error: {type(exc).__name__}: {exc}",))
-                    continue
-                rows.append((ref, m["container"], m["sample_rate"],
-                             m["channels"], m["n_units"], m["duration_ms"],
-                             m["bitrate_kbps"], m["vbr"], m["title"], "ok"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in META_SCHEMA.fields])
+    def meta(blob: bytes):
+        if blob[:4] == b"OggS":
+            m = ogg_meta(blob)
+        elif blob[:3] == b"ID3" or (
+                len(blob) > 1 and blob[0] == 0xFF and blob[1] >> 5 == 7):
+            m = mp3_meta(blob)
+        else:
+            return None
+        return tuple(m[f.name] for f in META_SCHEMA.fields[1:-1])
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=META_SCHEMA)
+    return map_blobs(media, META_SCHEMA, meta)
 
 
 def build_mp3(n_frames: int, rate_idx: int, bitrate_idx: int,

@@ -137,33 +137,20 @@ def strip_metadata(media: DataFrame) -> DataFrame:
     """Binary payloads → metadata-free payloads + removed-byte counts.
     Pixels are untouched (lossless segment surgery), so downstream
     dedup/content-addressing keys stay stable across the strip."""
+    from .multimodal import map_blobs
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    if blob[:2] == b"\xff\xd8":
-                        out, n = strip_jpeg(blob)
-                    elif blob.startswith(b"\x89PNG\r\n\x1a\n"):
-                        out, n = strip_png(blob)
-                    elif blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
-                        out, n = strip_webp(blob)
-                    else:
-                        out, n = blob, 0
-                    rows.append((ref, out, len(out), n, "ok"))
-                except MetaStripError as exc:
-                    rows.append((ref, None, len(blob), None,
-                                 f"error: {exc}"))
-                except Exception as exc:  # noqa: BLE001 — poison isolation
-                    rows.append((ref, None, len(blob), None,
-                                 f"error: {type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in STRIP_SCHEMA.fields])
+    def strip(blob: bytes):
+        if blob[:2] == b"\xff\xd8":
+            out, n = strip_jpeg(blob)
+        elif blob.startswith(b"\x89PNG\r\n\x1a\n"):
+            out, n = strip_png(blob)
+        elif blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
+            out, n = strip_webp(blob)
+        else:
+            out, n = blob, 0
+        return out, len(out), n
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=STRIP_SCHEMA)
+    return map_blobs(media, STRIP_SCHEMA, strip)
 
 
 def synth_tagged_media(docs: DataFrame) -> DataFrame:

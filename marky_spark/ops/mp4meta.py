@@ -191,36 +191,14 @@ def video_meta(media: DataFrame) -> DataFrame:
     """MP4 / Matroska / WebM payloads → one triage row each (no sample
     decode — the 100 TB video-curation first pass; container dispatch
     by magic, Matroska via ops/mkvmeta's EBML walk)."""
-    from .mkvmeta import MkvError, looks_like_mkv, mkv_meta
+    from .mkvmeta import looks_like_mkv, mkv_meta
+    from .multimodal import map_blobs
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    if looks_like_mkv(blob):
-                        m = mkv_meta(blob)
-                    else:
-                        m = mp4_meta(blob)
-                except (Mp4Error, MkvError) as exc:
-                    rows.append((ref, None, None, None, None, None,
-                                 None, None, f"error: {exc}"))
-                    continue
-                except Exception as exc:  # noqa: BLE001 — poison isolation
-                    rows.append((ref, None, None, None, None, None,
-                                 None, None,
-                                 f"error: {type(exc).__name__}: {exc}"))
-                    continue
-                rows.append((ref, m["brand"], m["duration_ms"],
-                             m["n_tracks"], m["video_codec"],
-                             m["audio_codec"], m["width"], m["height"],
-                             "ok"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_META_SCHEMA.fields])
+    def meta(blob: bytes):
+        m = mkv_meta(blob) if looks_like_mkv(blob) else mp4_meta(blob)
+        return tuple(m[f.name] for f in VIDEO_META_SCHEMA.fields[1:-1])
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=VIDEO_META_SCHEMA)
+    return map_blobs(media, VIDEO_META_SCHEMA, meta)
 
 
 # ------------------------------------------------------------- builder

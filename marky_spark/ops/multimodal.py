@@ -1,9 +1,11 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 The Spark-side plumbing is real and tested — schema, partitioning, Arrow
-batch shape, ``mapInPandas`` signatures. The codec layer is one ordered
-table (:func:`codec_table`) that every media operator here and in
-ops/audio routes through:
+batch shape, ``mapInPandas`` signatures. Every per-blob media operator
+here and in ops/audio, ops/lossy_audio, ops/metastrip, ops/mp4meta and
+ops/pdfmedia maps through one runner (:func:`map_blobs`), and the pixel
+and sample operators route through one ordered codec table
+(:func:`codec_table`):
 
 - **PNG, BMP, GIF, JPEG (baseline + progressive), TIFF, Netpbm, WebP and
   ICO are real image codecs** (ops/pngcodec, ops/bmpcodec, ops/gifcodec,
@@ -13,20 +15,22 @@ ops/audio routes through:
   ops/avicodec: MJPEG). Each row holds one format's signature/structure
   sniff and decoder, plus an optional resize encoder and frame walker;
   the sniffs check distinct magics, so at most one row claims a payload.
-- Payloads no row claims (lossy compressed audio, MP4, text) keep the
-  deterministic digest-derived stand-ins (``fake_decode`` /
-  ``fake_resize``), and so does an operator whose hook a row leaves
-  empty; recognized-but-unimplemented modes (arithmetic JPEG, interlaced
-  APNG, lossy VP8 WebP) classify as ``codec_unavailable`` rows (each
-  codec's Unsupported error is a NotImplementedError).
+- Every value an operator emits comes from a real decode. Each blob's
+  ``ok`` column holds one status from one rule (:func:`map_blobs`):
+  ``ok``; ``unsupported`` when no codec (or no hook of the claiming
+  row) handles the payload, e.g. MP3, MP4 or text; ``codec_unavailable``
+  for a recognized-but-unimplemented mode (arithmetic JPEG, interlaced
+  APNG, lossy VP8 WebP — each codec's Unsupported error is a
+  NotImplementedError); ``error: <msg>`` for a malformed payload. Every
+  column of a non-``ok`` row but ``media_ref`` and the status is null.
 
 Operators:
 - ``attach_media``      — documents × media side-table join (broadcast)
-- ``decode_media``      — binary → (width, height, channels, ok) per blob
+- ``decode_media``      — binary → (width, height, channels, n_bytes)
 - ``decode_pixels``     — decodable image → dims + md5 of decoded samples
 - ``pixel_features``    — exact-integer pixel statistics (oracle-checkable)
 - ``resize_media``      — binary → target-dim payload + source dims
-- ``frame_sample``      — "video" payloads → N evenly-spaced frame rows
+- ``frame_sample``      — moving images → N evenly spaced frame rows
 - ``media_features``    — fixed-width float feature vector per blob
 """
 
@@ -57,9 +61,59 @@ MEDIA_SCHEMA = StructType([
     StructField("payload", BinaryType()),
 ])
 
+
+def _blob_rows(fn: Callable, blob: bytes, width: int) -> list[tuple]:
+    """One blob's rows (without ``media_ref``) under the status rule of
+    :func:`map_blobs`."""
+    try:
+        got = fn(blob)
+    except NotImplementedError:
+        status = "codec_unavailable"
+    except Exception as exc:  # noqa: BLE001 — poison isolation
+        typed = type(exc).__module__.startswith("marky_spark.")
+        status = f"error: {exc}" if typed else \
+            f"error: {type(exc).__name__}: {exc}"
+    else:
+        if got is None:
+            status = "unsupported"
+        else:
+            return [row if len(row) == width - 1 else (*row, "ok")
+                    for row in (got if isinstance(got, list) else [got])]
+    return [(None,) * (width - 2) + (status,)]
+
+
+def map_blobs(media: DataFrame, schema: StructType,
+              fn: Callable) -> DataFrame:
+    """The one per-blob runner of the media operators: an Arrow-batched
+    ``mapInPandas`` over ``(media_ref, payload)`` whose rows are
+    ``schema`` (``media_ref`` first, the status column ``ok`` last).
+
+    ``fn(blob)`` gets the payload as bytes (a null payload is ``b""``)
+    and returns the row's values between ``media_ref`` and the status, a
+    list of such rows (a fan-out; an empty list emits nothing), or None.
+    The status rule: a row is ``ok`` (a fan-out row that fills the status
+    column itself keeps it, as pdf_media's per-image skips do); None is
+    ``unsupported``; a NotImplementedError is ``codec_unavailable``; an
+    error class of this package is ``error: <msg>``; any other exception
+    is ``error: <Type>: <msg>``. A non-``ok`` row is null outside
+    ``media_ref`` and the status."""
+    names = [f.name for f in schema.fields]
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
+                blob = bytes(payload) if payload is not None else b""
+                rows += [(ref, *row)
+                         for row in _blob_rows(fn, blob, len(names))]
+            yield pd.DataFrame(rows, columns=names)
+
+    return media.select("media_ref", "payload").mapInPandas(
+        batches, schema=schema)
+
+
 DECODED_SCHEMA = StructType([
     StructField("media_ref", StringType()),
-    StructField("mime", StringType()),
     StructField("width", IntegerType()),
     StructField("height", IntegerType()),
     StructField("channels", IntegerType()),
@@ -70,20 +124,18 @@ DECODED_SCHEMA = StructType([
 
 class Codec(NamedTuple):
     """One row of the codec table. ``pixels`` → (width, height, channels,
-    samples) or None; ``samples`` → (rate, channels, bits, int array);
-    ``resize`` → (source width, source height, resized payload);
-    ``frames`` → [(frame index, frame payload)] for up to n evenly spaced
-    frames. An operator whose hook is None takes its stand-in for the
-    row's format. ``still`` is False when ``pixels`` is the first frame
-    of a moving image: only the pixel operators see it, while
-    decode_media keeps the digest stand-in."""
+    samples) or None (a moving image gives its first frame);
+    ``samples`` → (rate, channels, bits, int array); ``resize`` →
+    (source width, source height, resized payload); ``frames`` → [(frame
+    index, frame payload)] for up to n evenly spaced frames, empty for a
+    still. An operator whose hook is None gives an ``unsupported`` row
+    for the row's format."""
     name: str
     sniff: Callable[[bytes], bool]
     pixels: Callable | None = None
     samples: Callable | None = None
     resize: Callable | None = None
     frames: Callable | None = None
-    still: bool = True
 
 
 def _nearest(pixels: bytes, in_w: int, in_h: int, channels: int,
@@ -181,6 +233,11 @@ def codec_table() -> tuple[Codec, ...]:
     def apng(blob: bytes):
         return png_decode_frames(blob) if looks_like_apng(blob) else (0, 0, [])
 
+    def awebp(blob: bytes):
+        # the animation flag is bit 1 of the VP8X chunk, always the first
+        animated = blob[12:16] == b"VP8X" and len(blob) > 20 and blob[20] & 2
+        return webp_decode_frames(blob) if animated else (0, 0, [])
+
     return (
         Codec("png", lambda b: b.startswith(PNG_SIGNATURE), png_decode,
               resize=_resampler(png_decode, png_encode),
@@ -198,9 +255,8 @@ def codec_table() -> tuple[Codec, ...]:
               resize=_resampler(jpeg_decode, jpeg_encode)),
         Codec("webp", looks_like_webp, webp_decode,
               resize=_resampler(webp_decode, webp_encode),
-              frames=_canvas_frames(webp_decode_frames)),
-        Codec("avi", looks_like_avi, _avi_first_frame, frames=_avi_frames,
-              still=False),
+              frames=_canvas_frames(awebp)),
+        Codec("avi", looks_like_avi, _avi_first_frame, frames=_avi_frames),
         Codec("ico", looks_like_ico, ico_decode),
         Codec("wav", looks_like_wav, samples=wav_decode),
         Codec("flac", looks_like_flac, samples=flac_decode),
@@ -219,53 +275,16 @@ def decode_image(blob: bytes):
     return codec.pixels(blob) if codec and codec.pixels else None
 
 
-def fake_decode(payload: bytes, mime: str) -> tuple[int, int, int]:
-    """Deterministic stand-in: metadata derived from a payload digest."""
-    digest = hashlib.md5(payload or b"").digest()
-    width = 16 + digest[0] % 64
-    height = 16 + digest[1] % 64
-    channels = 1 + digest[2] % 3
-    return width, height, channels
-
-
-def fake_resize(payload: bytes, mime: str, width: int, height: int) -> bytes:
-    """Deterministic stand-in: an ASCII pseudo-bitmap of exactly
-    width×height bytes derived from the payload digest (content-addressed,
-    so downstream dedup/caching over resized media behaves realistically,
-    and the construction is reproducible in ANSI SQL for the oracle)."""
-    h = hashlib.md5(payload or b"").hexdigest()
-    n = width * height
-    return (h * (-(-n // len(h))))[:n].encode("ascii")
-
-
 def decode_media(media: DataFrame) -> DataFrame:
-    """Arrow-batched decode: binary column in, typed metadata out. Still
-    images decode for real; everything else takes ``fake_decode``."""
+    """Arrow-batched decode: binary column in, the claiming row's decoded
+    (width, height, channels) and the payload size out; an MJPEG AVI
+    gives its first frame's dims."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, mime, payload in zip(pdf["media_ref"], pdf["mime"],
-                                          pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    codec = codec_for(blob)
-                    if codec and codec.pixels and codec.still:
-                        w, h, c, _ = codec.pixels(blob)
-                    else:
-                        w, h, c = fake_decode(blob, mime or "")
-                    rows.append((ref, mime, w, h, c, len(blob), "ok"))
-                except NotImplementedError:
-                    rows.append((ref, mime, None, None, None, len(blob),
-                                 "codec_unavailable"))
-                except Exception as exc:  # noqa: BLE001 — poison isolation
-                    rows.append((ref, mime, None, None, None, len(blob),
-                                 f"error: {exc}"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DECODED_SCHEMA.fields]
-            )
+    def decode(blob: bytes):
+        decoded = decode_image(blob)
+        return None if decoded is None else (*decoded[:3], len(blob))
 
-    return media.mapInPandas(batches, schema=DECODED_SCHEMA)
+    return map_blobs(media, DECODED_SCHEMA, decode)
 
 
 FRAME_SCHEMA = StructType([
@@ -273,53 +292,32 @@ FRAME_SCHEMA = StructType([
     StructField("frame_idx", IntegerType()),
     StructField("frame_offset", LongType()),
     StructField("frame_bytes", BinaryType()),
+    StructField("ok", StringType()),
 ])
 
 
 def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """Moving-image payloads → N evenly spaced frame records (one input row
     fans out to ≤N output rows — the mapInPandas shape a real ffmpeg
-    sampler has).
+    sampler has), with ``frame_offset`` = the frame's index in the
+    animation: animated GIF (LZW decode + per-frame compositing with
+    disposal/transparency), animated PNG (acTL/fcTL/fdAT walk,
+    dispose/blend compositing) and animated WebP (VP8X/ANIM/ANMF walk,
+    per-frame VP8L decode) emit each sampled canvas as a standalone PNG;
+    MJPEG AVI (RIFF LIST walk to the ``movi`` members) emits each sampled
+    frame's standalone baseline-JPEG payload, which decode_pixels then
+    really decodes. A payload with no frames (a still PNG or WebP, an
+    empty AVI, text) is one ``unsupported`` row with null frame fields;
+    a failed walk is one ``error: …`` row."""
 
-    Rows with a frame walker sample FOR REAL, with ``frame_offset`` = the
-    frame's index in the animation: animated GIF (LZW decode + per-frame
-    compositing with disposal/transparency), animated PNG (acTL/fcTL/fdAT
-    walk, dispose/blend compositing) and animated WebP (VP8X/ANIM/ANMF
-    walk, per-frame VP8L decode) emit each sampled canvas as a
-    standalone PNG; MJPEG AVI (RIFF LIST walk to the ``movi`` members)
-    emits each sampled frame's standalone baseline-JPEG payload, which
-    decode_pixels then really decodes. Everything else — and any walk
-    that fails or finds no frames — keeps the deterministic byte-slice
-    stand-in (same fan-out shape; frame_offset = byte offset)."""
+    def frames(blob: bytes):
+        codec = codec_for(blob)
+        picked = codec.frames(blob, n_frames) \
+            if codec and codec.frames else None
+        return [(i, k, out) for i, (k, out) in enumerate(picked)] \
+            if picked else None
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                if not blob:
-                    continue
-                codec = codec_for(blob)
-                try:
-                    picked = codec.frames(blob, n_frames) \
-                        if codec and codec.frames else None
-                except Exception:  # noqa: BLE001 — stills / malformed
-                    picked = None  # fall back to the byte-slice path
-                if picked:
-                    rows += [(ref, i, k, out)
-                             for i, (k, out) in enumerate(picked)]
-                    continue
-                step = max(len(blob) // n_frames, 1)
-                for i in range(min(n_frames, len(blob))):
-                    off = i * step
-                    rows.append((ref, i, off, blob[off:off + step]))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_SCHEMA.fields]
-            )
-
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=FRAME_SCHEMA
-    )
+    return map_blobs(media, FRAME_SCHEMA, frames)
 
 
 RESIZED_SCHEMA = StructType([
@@ -337,34 +335,15 @@ def resize_media(media: DataFrame, width: int = 32,
                  height: int = 32) -> DataFrame:
     """Arrow-batched resize: binary payload in, (target-dim payload +
     source dims) out, through the claiming row's resize encoder (one
-    decode per blob); rows without one take the digest stand-ins. Codec
-    failures isolate per blob (ok column)."""
+    decode per blob, re-encoded in the source format)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, mime, payload in zip(pdf["media_ref"], pdf["mime"],
-                                          pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    codec = codec_for(blob)
-                    if codec and codec.resize:
-                        in_w, in_h, out = codec.resize(blob, width, height)
-                    else:
-                        in_w, in_h, _ = fake_decode(blob, mime or "")
-                        out = fake_resize(blob, mime or "", width, height)
-                    rows.append((ref, width, height, in_w, in_h, out, "ok"))
-                except NotImplementedError:
-                    rows.append((ref, width, height, None, None, None,
-                                 "codec_unavailable"))
-                except Exception as exc:  # noqa: BLE001 — poison isolation
-                    rows.append((ref, width, height, None, None, None,
-                                 f"error: {exc}"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZED_SCHEMA.fields]
-            )
+    def resize(blob: bytes):
+        codec = codec_for(blob)
+        if codec is None or codec.resize is None:
+            return None
+        return (width, height, *codec.resize(blob, width, height))
 
-    return media.mapInPandas(batches, schema=RESIZED_SCHEMA)
+    return map_blobs(media, RESIZED_SCHEMA, resize)
 
 
 PIXELS_SCHEMA = StructType([
@@ -385,50 +364,20 @@ def decode_pixels(media: DataFrame) -> DataFrame:
     keys on — two differently-compressed PNGs of the same pixels collide
     here, while byte-level md5 of the files would not — and a BMP and a
     PNG of the same pixels collide too, since the digest is over the
-    decoded samples). Arrow-batched; per-blob failures isolate into the
-    ``ok`` column."""
-    from .pngcodec import PngError, png_decode
+    decoded samples)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    decoded = decode_image(blob)
-                    if decoded is None:
-                        # no pixel decoder claims the blob: run the PNG
-                        # decoder anyway for its diagnostic PngError
-                        decoded = png_decode(blob)
-                    w, h, c, px = decoded
-                    # pixel_dec_md5: the samples rendered as 3-digit
-                    # decimals — the NUL-free content digest a pure-SQL
-                    # oracle can reconstruct (same trick scan_features
-                    # uses), since VARCHAR md5 can't hold 0x00 bytes
-                    dec_md5 = hashlib.md5(_dec3(px)).hexdigest()
-                    rows.append((ref, w, h, c, len(px),
-                                 hashlib.md5(px).hexdigest(), dec_md5,
-                                 "ok"))
-                except NotImplementedError:
-                    # recognized format, unimplemented mode (e.g.
-                    # arithmetic-coded JPEG) — the payload is fine
-                    rows.append((ref, None, None, None, None, None, None,
-                                 "codec_unavailable"))
-                except PngError as exc:
-                    rows.append((ref, None, None, None, None, None, None,
-                                 f"error: {exc}"))
-                except Exception as exc:  # noqa: BLE001 — poison isolation:
-                    # the codec's contract is PngError-only, but a decoder
-                    # escape must never become a task failure
-                    rows.append((ref, None, None, None, None, None, None,
-                                 f"error: {type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PIXELS_SCHEMA.fields]
-            )
+    def digest(blob: bytes):
+        decoded = decode_image(blob)
+        if decoded is None:
+            return None
+        w, h, c, px = decoded
+        # pixel_dec_md5: the samples rendered as 3-digit decimals — the
+        # NUL-free content digest a pure-SQL oracle can reconstruct (same
+        # trick scan_features uses), since VARCHAR md5 can't hold 0x00
+        return (w, h, c, len(px), hashlib.md5(px).hexdigest(),
+                hashlib.md5(_dec3(px)).hexdigest())
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=PIXELS_SCHEMA
-    )
+    return map_blobs(media, PIXELS_SCHEMA, digest)
 
 
 FEATURE_DIM = 16
@@ -436,57 +385,37 @@ FEATURE_DIM = 16
 FEATURES_SCHEMA = StructType([
     StructField("media_ref", StringType()),
     StructField("features", ArrayType(FloatType())),
+    StructField("ok", StringType()),
 ])
 
 
 def media_features(media: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
-    """Fixed-width feature vector per blob.
-
-    For payloads a table row decodes, the vector is computed from the
-    DECODED CONTENT — images (an MJPEG AVI via its first frame): [w/1024,
-    h/1024, ch/4, global mean/255, 4 per-channel means/255 (zero-padded),
-    8 brightness-histogram fractions]; audio (WAV, FLAC): the mirrored
+    """Fixed-width feature vector per blob, computed from the DECODED
+    CONTENT — images (an MJPEG AVI via its first frame): [w/1024, h/1024,
+    ch/4, global mean/255, 4 per-channel means/255 (zero-padded), 8
+    brightness-histogram fractions]; audio (WAV, FLAC): the mirrored
     layout over full-scale-normalized samples (ops/audio.wav_feature_vec)
     — a real, content-derived signal (two encodings of the same
-    pixels/samples embed identically). Everything else, including
-    payloads whose decode fails, keeps the deterministic digest-based
-    stand-in (production swaps in a real embedding model via the same
-    batch shape)."""
+    pixels/samples embed identically). Production swaps in a real
+    embedding model via the same batch shape."""
     import numpy as np
 
     from .audio import wav_feature_vec
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    decoded = decode_image(blob)
-                    vec = None if decoded else wav_feature_vec(blob, dim)
-                except Exception:  # noqa: BLE001 — poison isolation
-                    decoded = vec = None
-                if decoded is not None:
-                    w, h, ch, px = decoded
-                    arr = np.frombuffer(px, dtype=np.uint8)
-                    means = [float(arr[c::ch].mean()) / 255.0
-                             for c in range(ch)]
-                    hist = np.bincount(arr >> 5, minlength=8) / arr.size
-                    vec = ([w / 1024.0, h / 1024.0, ch / 4.0,
-                            float(arr.mean()) / 255.0]
-                           + (means + [0.0] * 4)[:4] + hist.tolist())
-                    vec = (vec + [0.0] * dim)[:dim]
-                if vec is None:
-                    digest = hashlib.sha256(blob).digest()
-                    vec = [(digest[i % 32] - 128) / 128.0 for i in range(dim)]
-                rows.append((ref, vec))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURES_SCHEMA.fields]
-            )
+    def features(blob: bytes):
+        decoded = decode_image(blob)
+        if decoded is None:
+            vec = wav_feature_vec(blob, dim)
+            return None if vec is None else (vec,)
+        w, h, ch, px = decoded
+        arr = np.frombuffer(px, dtype=np.uint8)
+        means = [float(arr[c::ch].mean()) / 255.0 for c in range(ch)]
+        hist = np.bincount(arr >> 5, minlength=8) / arr.size
+        vec = ([w / 1024.0, h / 1024.0, ch / 4.0, float(arr.mean()) / 255.0]
+               + (means + [0.0] * 4)[:4] + hist.tolist())
+        return ((vec + [0.0] * dim)[:dim],)
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=FEATURES_SCHEMA
-    )
+    return map_blobs(media, FEATURES_SCHEMA, features)
 
 
 PIXEL_FEATURES_SCHEMA = StructType([
@@ -512,41 +441,20 @@ def pixel_features(media: DataFrame) -> DataFrame:
     (sample >> 6). Everything is integer arithmetic over the REAL decoded
     samples, so an independent engine that can reconstruct the expected
     pixels (the driver oracle does, from doc_id arithmetic for the synthetic
-    corpus) can verify the whole decode path bit-exactly. Non-decodable or
-    malformed payloads isolate into the ``ok`` column."""
+    corpus) can verify the whole decode path bit-exactly."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    decoded = decode_image(blob)
-                except NotImplementedError:
-                    decoded = None
-                except Exception as exc:  # noqa: BLE001 — poison isolation
-                    rows.append((ref,) + (None,) * 11
-                                + (f"error: {exc}",))
-                    continue
-                if decoded is None:
-                    rows.append((ref,) + (None,) * 11
-                                + ("codec_unavailable",))
-                    continue
-                w, h, ch, px = decoded
-                arr = np.frombuffer(px, dtype=np.uint8)
-                sums = [int(arr[c::ch].sum()) if c < ch else None
-                        for c in range(4)]
-                hist = np.bincount(arr >> 6, minlength=4)
-                rows.append((ref, w, h, ch, *sums,
-                             *(int(x) for x in hist), "ok"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PIXEL_FEATURES_SCHEMA.fields]
-            )
+    def stats(blob: bytes):
+        decoded = decode_image(blob)
+        if decoded is None:
+            return None
+        w, h, ch, px = decoded
+        arr = np.frombuffer(px, dtype=np.uint8)
+        sums = [int(arr[c::ch].sum()) if c < ch else None for c in range(4)]
+        hist = np.bincount(arr >> 6, minlength=4)
+        return (w, h, ch, *sums, *(int(x) for x in hist))
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=PIXEL_FEATURES_SCHEMA
-    )
+    return map_blobs(media, PIXEL_FEATURES_SCHEMA, stats)
 
 
 def extract_embedded_media(docs_out: DataFrame) -> DataFrame:
@@ -826,33 +734,21 @@ def scan_features(media: DataFrame) -> DataFrame:
     (the driver oracle rebuilds the decimal stream from doc_id
     arithmetic), so a real CCITT G4/MH/G3 bit walk or a real JPEG-in-TIFF
     entropy decode must be spec-correct for the hashes to line up.
-    Vectorized (uint8 → 'S3' table lookup), poison-isolated."""
+    Vectorized (uint8 → 'S3' table lookup); a non-TIFF payload is an
+    ``unsupported`` row."""
     import numpy as np
 
-    from .tiffcodec import TiffUnsupportedError, tiff_decode
+    from .tiffcodec import looks_like_tiff, tiff_decode
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                try:
-                    w, h, ch, px = tiff_decode(blob)
-                    arr = np.frombuffer(px, dtype=np.uint8)
-                    rows.append((ref, w, h, ch, arr.size,
-                                 hashlib.md5(_dec3(px)).hexdigest(),
-                                 int((arr == 0).sum()), "ok"))
-                except TiffUnsupportedError:
-                    rows.append((ref, None, None, None, None, "", None,
-                                 "codec_unavailable"))
-                except Exception as exc:  # noqa: BLE001 — poison isolation
-                    rows.append((ref, None, None, None, None, "", None,
-                                 f"error: {exc}"))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SCAN_SCHEMA.fields])
+    def stats(blob: bytes):
+        if not looks_like_tiff(blob):
+            return None
+        w, h, ch, px = tiff_decode(blob)
+        arr = np.frombuffer(px, dtype=np.uint8)
+        return (w, h, ch, arr.size, hashlib.md5(_dec3(px)).hexdigest(),
+                int((arr == 0).sum()))
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=SCAN_SCHEMA)
+    return map_blobs(media, SCAN_SCHEMA, stats)
 
 
 def synth_scan_media(docs: DataFrame) -> DataFrame:

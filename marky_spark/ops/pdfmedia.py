@@ -354,40 +354,18 @@ def pdf_media(media: DataFrame) -> DataFrame:
     extract_embedded_media's fan-out): DCTDecode images as standalone
     JPEGs, Flate RGB/Gray as PNGs — both of which decode_pixels then
     REALLY decodes — and every undecodable image as a metadata row with
-    its skip/error reason. ``mapInPandas``, no shuffle, no driver
-    collect; hostile PDFs isolate per blob."""
+    its own skip/error reason. A non-PDF payload is one ``unsupported``
+    row, a PDF with no images none. ``mapInPandas``, no shuffle, no
+    driver collect; hostile PDFs isolate per blob."""
+    from .multimodal import map_blobs
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in it:
-            rows = []
-            for ref, payload in zip(pdf_batch["media_ref"],
-                                    pdf_batch["payload"]):
-                blob = bytes(payload) if payload is not None else b""
-                if not blob.startswith(b"%PDF-"):
-                    rows.append((ref, None, None, None, None, None, None,
-                                 None, None, None, None, "not_pdf"))
-                    continue
-                try:
-                    images = extract_pdf_images(blob)
-                except PdfMediaError as exc:
-                    rows.append((ref, None, None, None, None, None, None,
-                                 None, None, None, None, f"error: {exc}"))
-                    continue
-                except Exception as exc:  # noqa: BLE001 — poison isolation
-                    rows.append((ref, None, None, None, None, None, None,
-                                 None, None, None, None,
-                                 f"error: {type(exc).__name__}: {exc}"))
-                    continue
-                for idx, rec in enumerate(images):
-                    rows.append((
-                        ref, idx, rec["obj_num"], rec["width"],
-                        rec["height"], rec["bits"], rec["colorspace"],
-                        rec["pdf_filter"], rec["mime"], rec["payload"],
-                        len(rec["payload"]) if rec["payload"] else None,
-                        rec["ok"],
-                    ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PDF_IMAGE_SCHEMA.fields])
+    def images(blob: bytes):
+        if not blob.startswith(b"%PDF-"):
+            return None
+        return [(idx, rec["obj_num"], rec["width"], rec["height"],
+                 rec["bits"], rec["colorspace"], rec["pdf_filter"],
+                 rec["mime"], rec["payload"],
+                 len(rec["payload"]) if rec["payload"] else None, rec["ok"])
+                for idx, rec in enumerate(extract_pdf_images(blob))]
 
-    return media.select("media_ref", "payload").mapInPandas(
-        batches, schema=PDF_IMAGE_SCHEMA)
+    return map_blobs(media, PDF_IMAGE_SCHEMA, images)

@@ -22,7 +22,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# a --local run's Spark Python workers import marky_spark too: they inherit
+# PYTHONPATH, not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
 
 
 def _is_local_path(p: str) -> bool:

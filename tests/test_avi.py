@@ -3,8 +3,8 @@
 Round-trips, RIFF LIST-walk details (JUNK/idx1 skipping, word alignment),
 typed hostile-input rejection, structure-aware mutation fuzzing, the
 exhaustive uniform-JPEG exactness sweep the synthetic-corpus oracle relies
-on, and the Spark frame_sample integration (real frames out, byte-slice
-fallback for malformed payloads).
+on, and the Spark frame_sample integration (real frames out, a typed
+error row for a malformed payload).
 """
 
 import random
@@ -137,7 +137,8 @@ def test_avi_mutations_stay_typed():
 
 def test_frame_sample_avi_spark(spark):
     """Spark integration: real AVI fans out to 4 evenly spaced REAL JPEG
-    frames; a truncated AVI falls back to the byte-slice stand-in."""
+    frames; a truncated AVI is one typed error row with null frame
+    fields."""
     from marky_spark.ops.multimodal import frame_sample
 
     frames = _mjpeg(list(range(100, 110)))  # 10 frames, step 2
@@ -154,7 +155,9 @@ def test_frame_sample_avi_spark(spark):
         _, _, _, px = jpeg_decode(bytes(r["frame_bytes"]))
         assert set(px) == {100 + r["frame_offset"]}
     cuts = [r for r in rows if r["media_ref"] == "cut"]
-    assert cuts and all(len(bytes(r["frame_bytes"])) > 0 for r in cuts)
+    assert len(cuts) == 1 and cuts[0]["ok"].startswith("error: ")
+    assert (cuts[0]["frame_idx"], cuts[0]["frame_offset"],
+            cuts[0]["frame_bytes"]) == (None, None, None)
 
 
 def test_synth_avi_media_matches_oracle_arithmetic(spark):

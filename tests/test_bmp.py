@@ -55,7 +55,7 @@ def test_row_padding():
 def test_sniff_rejects_text_and_garbage():
     """Strict structural sniff: text starting with 'BM' (a real risk — the
     media_decode query feeds document text bytes) and random blobs must
-    stay on the fake-decode path."""
+    stay unclaimed (typed unsupported rows)."""
     assert not looks_like_bmp(b"BM is a stock ticker, not a bitmap " * 4)
     assert not looks_like_bmp(b"")
     assert not looks_like_bmp(b"BM" + b"\x00" * 52)  # header size 0

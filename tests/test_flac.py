@@ -338,8 +338,8 @@ def test_wav_feature_vec_container_invariant():
 
 
 def test_audio_features_routes_flac(spark):
-    """audio_features really decodes FLAC payloads (not codec_unavailable)
-    and isolates malformed FLAC per blob."""
+    """audio_features really decodes FLAC payloads and isolates malformed
+    FLAC per blob; text, which no codec claims, is unsupported."""
     from marky_spark.ops.audio import audio_features
 
     sig = np.array([[i % 40 - 20] for i in range(64)], dtype=np.int64)
@@ -353,7 +353,7 @@ def test_audio_features_routes_flac(spark):
     assert rows["f"]["n_frames"] == 64
     assert rows["f"]["sum_c0"] == int(sig[:, 0].sum())
     assert rows["cut"]["ok"].startswith("error:")
-    assert rows["txt"]["ok"] == "codec_unavailable"
+    assert rows["txt"]["ok"] == "unsupported"
 
 
 def test_divergent_predictor_is_typed_not_overflow():

@@ -148,8 +148,8 @@ def test_resize_preserves_palette():
 def test_spark_routing_decode_resize_features(spark):
     """One GIF through the whole multimodal surface: decode_media (real
     dims), decode_pixels (format-agnostic digest vs the same pixels as
-    PNG), resize_media (stays a GIF), media_features (pixel statistics,
-    not digest fake), pixel_features (exact integers)."""
+    PNG), resize_media (stays a GIF), media_features (pixel statistics
+    of the decoded content), pixel_features (exact integers)."""
     from pyspark.sql import Row
 
     from marky_spark.ops.gifcodec import gif_decode as gd
@@ -202,21 +202,23 @@ def test_spark_routing_decode_resize_features(spark):
         assert pf[ref]["hist_0"] == int((arr >> 6 == 0).sum())
 
 
-def test_media_features_fake_path_unchanged_for_non_images(spark):
-    """Non-decodable payloads keep the digest-derived vector (the driver
-    oracle for media_features reconstructs exactly this)."""
+def test_media_features_typed_rows_for_non_images(spark):
+    """Non-decodable payloads are typed rows with a null vector (the
+    media_features oracle in __spark_entry__ pins exactly this): text is
+    unsupported, and a GIF whose decode fails is an error row."""
     from pyspark.sql import Row
 
     from marky_spark.ops.multimodal import MEDIA_SCHEMA, media_features
 
-    blob = b"just some document text, not an image"
     media = spark.createDataFrame(
-        [Row(media_ref="t1", mime="text/plain", payload=blob)],
+        [Row(media_ref="t1", mime="text/plain",
+             payload=b"just some document text, not an image"),
+         Row(media_ref="g1", mime="image/gif", payload=b"GIF89a\x04\x00\x04\x00\x80\x00\x00")],
         schema=MEDIA_SCHEMA)
-    got = media_features(media).collect()[0]["features"]
-    digest = hashlib.sha256(blob).digest()
-    want = [(digest[i % 32] - 128) / 128.0 for i in range(16)]
-    assert got == pytest.approx(want)
+    got = {r["media_ref"]: r for r in media_features(media).collect()}
+    assert (got["t1"]["ok"], got["t1"]["features"]) == ("unsupported", None)
+    assert got["g1"]["ok"].startswith("error: ")
+    assert got["g1"]["features"] is None
 
 
 # Real-world pins: every GIF embedded in the reference's own test.epub
@@ -300,8 +302,8 @@ def test_animated_frames_compositing():
 
 def test_frame_sample_real_gif_frames(spark):
     """frame_sample emits REAL evenly-spaced animation frames for GIF
-    payloads — PNG-encoded full-canvas composites — while non-GIF
-    payloads keep the deterministic byte-slice stand-in."""
+    payloads — PNG-encoded full-canvas composites — while a payload with
+    no frames is one typed unsupported row."""
     from pyspark.sql import Row
 
     from marky_spark.ops.gifcodec import gif_decode_frames, gif_encode_animated
@@ -325,8 +327,10 @@ def test_frame_sample_real_gif_frames(spark):
         w, h, c, px = png_decode(bytes(row["frame_bytes"]))
         assert (w, h, c) == (4, 3, 3)
         assert px == expect[fi]
-    # non-GIF: byte slices unchanged
-    assert bytes(rows[("blob", 0)]["frame_bytes"]) == b"0123"
+    # non-GIF: one unsupported row, null frame fields
+    assert [(k, r["frame_offset"], r["frame_bytes"], r["ok"])
+            for k, r in rows.items() if k[0] == "blob"] == \
+        [(("blob", None), None, None, "unsupported")]
 
 
 def test_animated_frame_bomb_bounded():

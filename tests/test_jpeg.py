@@ -301,10 +301,10 @@ def test_real_pptx_embedded_jpeg_end_to_end(spark):
         schema=INPUT_SCHEMA)
     out = convert(docs)
     media = extract_embedded_media(out)
+    assert media.collect()[0]["mime"] == "image/png"  # the (wrong) label
     rows = decode_media(media).collect()
     assert len(rows) == 1
     got = rows[0]
-    assert got["mime"] == "image/png"  # the (wrong) label carried through
     assert (got["width"], got["height"], got["channels"], got["ok"]) == \
         (631, 768, 3, "ok")  # ...but the sniff decoded the actual JPEG
 

@@ -126,7 +126,8 @@ def test_spark_audio_meta_operator(spark):
     assert rows["a"]["container"] == "mp3" and rows["a"]["channels"] == 1
     assert rows["a"]["duration_ms"] == 20 * 1152 * 1000 // 44100
     assert rows["b"]["title"] == "B" and rows["b"]["duration_ms"] == 200
-    assert rows["c"]["ok"] == "not_audio"
+    assert rows["c"]["ok"] == "unsupported"
+    assert (rows["c"]["container"], rows["d"]["container"]) == (None, None)
     assert rows["d"]["ok"].startswith("error:")
     plan = audio_meta(media)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

@@ -299,38 +299,68 @@ def test_media_operator_imports_leave_codecs_unloaded():
     assert out.strip() == "[]"
 
 
-def test_decode_media_fake_and_stub(spark):
-    from marky_spark.ops.multimodal import decode_media, fake_decode
+def _with_png(spark, media):
+    from marky_spark.ops.pngcodec import png_encode
 
-    media = _media_df(spark)
+    png = png_encode(bytes(range(5 * 4 * 3)), 5, 4, 3)
+    return media.unionByName(spark.createDataFrame(
+        [("png", "image/png", bytearray(png))], schema=media.schema)), png
+
+
+def test_decode_media_typed_rows(spark):
+    """A payload no codec claims is a typed unsupported row with null
+    dims and size; a real PNG decodes with its payload size."""
+    from marky_spark.ops.multimodal import decode_media
+
+    media, png = _with_png(spark, _media_df(spark))
     got = {r["media_ref"]: r for r in decode_media(media).collect()}
-    w, h, c = fake_decode(b"PNGBYTES-1", "image/png")
-    assert (got["m1"]["width"], got["m1"]["height"], got["m1"]["channels"]) == (w, h, c)
-    assert got["m1"]["ok"] == "ok"
-    assert got["m2"]["n_bytes"] == 12
+    assert sorted(got) == ["m1", "m2", "m3", "png"]
+    for ref in ("m1", "m2", "m3"):
+        assert got[ref]["ok"] == "unsupported"
+        assert (got[ref]["width"], got[ref]["height"], got[ref]["channels"],
+                got[ref]["n_bytes"]) == (None, None, None, None)
+    assert (got["png"]["width"], got["png"]["height"], got["png"]["channels"],
+            got["png"]["n_bytes"], got["png"]["ok"]) == (5, 4, 3, len(png), "ok")
 
 
 def test_frame_sample_fanout(spark):
+    """An animation fans out to evenly spaced frame rows; a payload with
+    no frames is one unsupported row with null frame fields."""
+    from marky_spark.ops.gifcodec import gif_encode_animated
     from marky_spark.ops.multimodal import frame_sample
 
-    got = frame_sample(_media_df(spark), n_frames=4).collect()
+    gif = gif_encode_animated(2, 2, bytes(range(12)),
+                              [(bytes([i % 4] * 4), 0, 0, 2, 2)
+                               for i in range(8)])
+    media = _media_df(spark).unionByName(spark.createDataFrame(
+        [("anim", "image/gif", bytearray(gif))],
+        schema=_media_df(spark).schema))
     by_ref = {}
-    for r in got:
+    for r in frame_sample(media, n_frames=4).collect():
         by_ref.setdefault(r["media_ref"], []).append(r)
-    assert len(by_ref["m3"]) == 4
-    assert [r["frame_idx"] for r in sorted(by_ref["m3"],
-                                           key=lambda r: r["frame_idx"])] == [0, 1, 2, 3]
-    assert by_ref["m3"][0]["frame_bytes"] is not None
+    anim = sorted(by_ref.pop("anim"), key=lambda r: r["frame_idx"])
+    assert [r["frame_idx"] for r in anim] == [0, 1, 2, 3]
+    assert [r["frame_offset"] for r in anim] == [0, 2, 4, 6]
+    assert all(r["ok"] == "ok" and r["frame_bytes"] for r in anim)
+    assert sorted(by_ref) == ["m1", "m2", "m3"]
+    for rows in by_ref.values():
+        assert [(r["frame_idx"], r["frame_offset"], r["frame_bytes"], r["ok"])
+                for r in rows] == [(None, None, None, "unsupported")]
 
 
 def test_media_features_shape(spark):
     from marky_spark.ops.multimodal import FEATURE_DIM, media_features
 
-    rows = media_features(_media_df(spark)).collect()
-    assert all(len(r["features"]) == FEATURE_DIM for r in rows)
+    media, _ = _with_png(spark, _media_df(spark))
+    got = media_features(media).collect()
+    rows = {r["media_ref"]: r for r in got}
+    assert rows["png"]["ok"] == "ok"
+    assert len(rows["png"]["features"]) == FEATURE_DIM
+    for ref in ("m1", "m2", "m3"):
+        assert (rows[ref]["ok"], rows[ref]["features"]) == ("unsupported", None)
     # deterministic
-    again = media_features(_media_df(spark)).collect()
-    assert sorted(map(str, rows)) == sorted(map(str, again))
+    again = media_features(media).collect()
+    assert sorted(map(str, got)) == sorted(map(str, again))
 
 
 def test_attach_media_join(spark):
@@ -552,9 +582,9 @@ def test_knn_join_ivf_recall(spark, emb):
         assert 1 <= r["rank"] <= 3
 
 
-def test_resize_media_fake_and_stub(spark):
-    import hashlib
-
+def test_resize_media_typed_rows(spark):
+    """Text and null payloads have no resize encoder: typed unsupported
+    rows, null outside media_ref and the status."""
     from marky_spark.ops.multimodal import resize_media
 
     media = spark.createDataFrame(
@@ -564,13 +594,11 @@ def test_resize_media_fake_and_stub(spark):
     )
     rows = {r["media_ref"]: r for r in
             resize_media(media, width=8, height=4).collect()}
-    r1 = rows["m1"]
-    assert (r1["width"], r1["height"]) == (8, 4)
-    assert len(r1["payload"]) == 32  # exactly width*height bytes
-    h = hashlib.md5(b"payload-bytes").hexdigest()
-    assert bytes(r1["payload"]) == (h * 1)[:32].encode()
-    assert r1["ok"] == "ok" and r1["in_width"] is not None
-    assert rows["m2"]["ok"] == "ok"  # empty payload still resizes
+    assert sorted(rows) == ["m1", "m2"]
+    for r in rows.values():
+        assert r["ok"] == "unsupported"
+        assert (r["width"], r["height"], r["in_width"], r["in_height"],
+                r["payload"]) == (None,) * 5
 
 
 def test_rolling_hashes_match_pure_python(spark, docs):

@@ -163,7 +163,7 @@ def test_spark_pdf_media_feeds_real_decoders(spark):
         "media_ref string, payload binary")
     rows = {(r["media_ref"], r["image_idx"]): r
             for r in pdf_media(media).collect()}
-    assert rows[("txt", None)]["ok"] == "not_pdf"
+    assert rows[("txt", None)]["ok"] == "unsupported"
     assert rows[("doc", 0)]["mime"] == "image/jpeg"
     assert rows[("doc", 1)]["mime"] == "image/png"
     ok = pdf_media(media).where("ok = 'ok'")

@@ -119,8 +119,9 @@ def test_resize_nearest_mapping(spark):
 
 def test_decode_media_auto_uses_real_codec(spark):
     """decode_media's default decoder sniffs the PNG signature: real dims
-    for PNG payloads, digest-fake for everything else, in the same batch."""
-    from marky_spark.ops.multimodal import MEDIA_SCHEMA, decode_media, fake_decode
+    for PNG payloads, a typed unsupported row with null dims for bytes no
+    codec claims, in the same batch."""
+    from marky_spark.ops.multimodal import MEDIA_SCHEMA, decode_media
 
     real = png_encode(bytes(range(60)), 5, 4, 3)
     rows = [("png", "image/png", bytearray(real)),
@@ -129,9 +130,9 @@ def test_decode_media_auto_uses_real_codec(spark):
     got = {r["media_ref"]: r for r in decode_media(media).collect()}
     assert (got["png"]["width"], got["png"]["height"],
             got["png"]["channels"]) == (5, 4, 3)
-    fw, fh, fc = fake_decode(b"JPEGISH-BYTES", "image/jpeg")
     assert (got["jpg"]["width"], got["jpg"]["height"],
-            got["jpg"]["channels"]) == (fw, fh, fc)
+            got["jpg"]["channels"], got["jpg"]["n_bytes"],
+            got["jpg"]["ok"]) == (None, None, None, None, "unsupported")
 
 
 def test_resize_media_auto_real_png(spark):

@@ -20,3 +20,21 @@ def test_soak_runs_outside_the_repo(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     result = json.loads(proc.stdout.strip().splitlines()[-1])
     assert result["exactly_once"] and result["n_docs"] == 300
+
+
+def test_convert_job_runs_outside_the_repo(tmp_path):
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    (corpus / "a.html").write_text("<h1>Title</h1><p>body</p>")
+    (corpus / "b.csv").write_text("x,y\n1,2\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "convert_job.py"),
+         "--input", str(corpus), "--input-format", "binary",
+         "--output", str(tmp_path / "out"), "--buckets", "2", "--waves", "1",
+         "--local", "2"],
+        capture_output=True, text=True, cwd=tmp_path, env=env, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    with open(tmp_path / "out" / "manifest.json") as f:
+        manifest = json.load(f)
+    assert manifest["committed_buckets"] and manifest["snapshots"]

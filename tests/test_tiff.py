@@ -231,7 +231,7 @@ def test_spark_routing_tiff(spark):
     assert (dec["t"]["width"], dec["t"]["height"], dec["t"]["channels"],
             dec["t"]["ok"]) == (20, 10, 3, "ok")
     assert dec["x"]["ok"].startswith("error:")   # hostile TIFF isolates
-    assert dec["s"]["ok"] == "ok"                # fake path, not an error
+    assert (dec["s"]["ok"], dec["s"]["width"]) == ("unsupported", None)
     pix = {r["media_ref"]: r for r in decode_pixels(
         media.where("media_ref = 't'")).collect()}
     import hashlib

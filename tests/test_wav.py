@@ -319,11 +319,14 @@ def test_audio_features_poison_isolation(spark):
         "media_ref string, mime string, payload binary",
     )).collect()}
     assert rows["ok"]["ok"] == "ok" and rows["ok"]["n_frames"] == 2
-    assert rows["txt"]["ok"] == "codec_unavailable"
+    assert rows["txt"]["ok"] == "unsupported"  # no codec claims text
     assert rows["bad"]["ok"].startswith("error: bad channel count")
     # tag 3 with a PCM16 bit width is malformed (real float is decoded)
     assert rows["flt"]["ok"].startswith("error: IEEE-float")
-    assert rows["nul"]["ok"] == "codec_unavailable"
+    assert rows["nul"]["ok"] == "unsupported"
+    for ref in ("txt", "bad", "flt", "nul"):
+        assert (rows[ref]["sample_rate"], rows[ref]["n_frames"],
+                rows[ref]["peak"]) == (None, None, None)
 
 
 def test_wav_feature_vec_content_derived():
@@ -365,28 +368,27 @@ def test_wav_feature_vec_depth_invariant():
 
 
 def test_media_features_routes_wav(spark):
-    """media_features computes the audio vector for WAV payloads, keeps
-    the digest stand-in for undecodable bytes, and a truncated WAV falls
-    back to the digest path (poison isolation, no task failure)."""
+    """media_features computes the audio vector for WAV payloads; text no
+    codec claims is an unsupported row and a truncated WAV an error row,
+    both with a null vector (poison isolation, no task failure)."""
     from marky_spark.ops.audio import wav_feature_vec
     from marky_spark.ops.multimodal import media_features
 
     good = wav_encode([[i * 100 - 500] for i in range(32)], 8000, bits=16)
-    rows = {r["media_ref"]: list(r["features"])
+    rows = {r["media_ref"]: r
             for r in media_features(spark.createDataFrame(
                 [("wav", "audio/wav", bytearray(good)),
                  ("txt", "text/plain", bytearray(b"some text")),
                  ("cut", "audio/wav", bytearray(good[:20]))],
                 "media_ref string, mime string, payload binary",
             )).collect()}
-    assert rows["wav"] == pytest.approx(wav_feature_vec(good))
-    import hashlib
-    digest = hashlib.sha256(b"some text").digest()
-    assert rows["txt"] == pytest.approx(
-        [(digest[i % 32] - 128) / 128.0 for i in range(16)])
-    cut_digest = hashlib.sha256(good[:20]).digest()
-    assert rows["cut"] == pytest.approx(
-        [(cut_digest[i % 32] - 128) / 128.0 for i in range(16)])
+    assert rows["wav"]["ok"] == "ok"
+    assert list(rows["wav"]["features"]) == pytest.approx(
+        wav_feature_vec(good))
+    assert (rows["txt"]["ok"], rows["txt"]["features"]) == \
+        ("unsupported", None)
+    assert rows["cut"]["ok"].startswith("error: ")
+    assert rows["cut"]["features"] is None
 
 
 def test_zero_frame_wav_rejected_not_nan():

@@ -510,7 +510,8 @@ def test_lossy_routes_and_animated_is_codec_unavailable(spark):
     """Lossy VP8 is a typed unsupported mode, never pixels: webp_decode /
     decode_image raise WebpUnsupportedError, decode_pixels and
     pixel_features give codec_unavailable rows with null dims, and
-    frame_sample falls back to its byte-slice rows."""
+    frame_sample gives one typed row per blob: unsupported for the stills
+    (no frames) and codec_unavailable for the animation."""
     from marky_spark.ops.multimodal import (
         MEDIA_SCHEMA,
         decode_image,
@@ -541,12 +542,11 @@ def test_lossy_routes_and_animated_is_codec_unavailable(spark):
             assert r["ok"] == "codec_unavailable", (op.__name__, r)
             assert r["width"] is None and r["height"] is None
     got = sorted((r["media_ref"], r["frame_idx"], r["frame_offset"],
-                  bytes(r["frame_bytes"]))
+                  r["frame_bytes"], r["ok"])
                  for r in frame_sample(media, n_frames=4).collect())
-    step = {ref: len(blob) // 4 for ref, blob in blobs.items()}
-    assert got == sorted((ref, i, i * step[ref],
-                          blob[i * step[ref]:(i + 1) * step[ref]])
-                         for ref, blob in blobs.items() for i in range(4))
+    assert got == [("alph_still", None, None, None, "unsupported"),
+                   ("anim", None, None, None, "codec_unavailable"),
+                   ("still", None, None, None, "unsupported")]
 
 
 def test_vp8x_container_walks_to_vp8l():
@@ -724,8 +724,8 @@ def test_animated_webp_hostile_is_typed():
 
     with pytest.raises(WebpError):
         webp_decode_frames(b"RIFF\x04\x00\x00\x00WEBP")
-    # a still (non-animated) WebP raises WebpError so frame_sample falls
-    # back to the byte-slice path
+    # a still (non-animated) WebP is no animation: frame_sample's walker
+    # never hands it here (an unsupported row), and a direct call raises
     still = webp_encode(bytes(8 * 8 * 3), 8, 8, 3)
     with pytest.raises(WebpError):
         webp_decode_frames(still)
