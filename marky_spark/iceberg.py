@@ -8,9 +8,9 @@ has no Iceberg runtime jar (SURVEY.md §7.0), so this module:
   is the only missing piece;
 - detects at runtime whether an Iceberg catalog is configured and routes
   writes to ``writeTo(...).append()`` (Iceberg, atomic snapshot) or to the
-  parquet + JSON-manifest stand-in (pipeline.SnapshotStore, same resume
-  semantics — committed buckets are the snapshot, and each snapshot's
-  files are one ``out_spans/wave=<k>`` directory, one file per task).
+  parquet + JSON snapshot-log stand-in (pipeline.SnapshotStore, same
+  resume semantics — committed buckets are the snapshot, and each
+  snapshot names the one ``out_spans`` directory that holds its files).
 """
 
 from __future__ import annotations
@@ -94,34 +94,25 @@ def iceberg_available(spark: SparkSession) -> bool:
 def write_output(df: DataFrame, spark: SparkSession, out: str,
                  n_buckets: int = 64) -> str:
     """Route to Iceberg (atomic snapshot append) or the local parquet +
-    manifest stand-in. Returns the mode used ('iceberg' | 'parquet').
+    snapshot-log stand-in. Returns the mode used ('iceberg' | 'parquet').
 
-    The fallback writes the SAME layout the pipeline commits — the next
-    ``out/out_spans/wave=<k>`` directory with a ``bucket`` column, then a
-    SnapshotStore manifest commit — so ``pipeline.read_output`` and resume
-    semantics work identically on both paths. The commit's bucket list and
-    row count come from an ``Observation`` on the write: one Spark job."""
+    The fallback is a pipeline wave: the same writer
+    (``pipeline.write_wave``) and the same put-if-absent commit of the
+    next snapshot, with a ``bucket`` column, so ``pipeline.read_output``
+    and resume semantics work identically on both paths. The commit's
+    bucket list and row count come from the write: one Spark job."""
     if iceberg_available(spark):
         df.writeTo(out).append()
         return "iceberg"
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from .pipeline import (
-        SnapshotStore,
-        clean_uncommitted,
-        wave_dir,
-        with_bucket,
-    )
+    from .pipeline import SnapshotStore, with_bucket, write_wave
 
     store = SnapshotStore(out)
-    wave = clean_uncommitted(out)
     bucketed = df if "bucket" in df.columns else with_bucket(df, n_buckets)
-    observed = Observation()
-    (bucketed.observe(observed, F.count(F.lit(1)).alias("n_docs"),
-                      F.collect_set("bucket").alias("buckets"))
-     .write.parquet(wave_dir(out, wave)))
-    got = observed.get
+    got = write_wave(store, bucketed, len(store.read()["snapshots"]),
+                     F.count(F.lit(1)).alias("n_docs"),
+                     F.collect_set("bucket").alias("buckets"))
     store.commit(sorted(got["buckets"]),
                  {"n_docs": got["n_docs"], "writer": "write_output"})
     return "parquet"

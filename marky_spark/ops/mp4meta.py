@@ -195,6 +195,8 @@ def video_meta(media: DataFrame) -> DataFrame:
     from .multimodal import map_blobs
 
     def meta(blob: bytes):
+        if not (looks_like_mkv(blob) or looks_like_mp4(blob)):
+            return None  # no container claims the payload: not video
         m = mkv_meta(blob) if looks_like_mkv(blob) else mp4_meta(blob)
         return tuple(m[f.name] for f in VIDEO_META_SCHEMA.fields[1:-1])
 

@@ -168,11 +168,14 @@ def _picks(total: int, n: int) -> list[int]:
 
 def _canvas_frames(walk):
     """Frame walker over an animation decoder → (w, h, [RGB canvas]):
-    each sampled frame re-encoded as a standalone PNG."""
+    each sampled frame re-encoded as a standalone PNG; a still (one
+    canvas) has no frames, whatever its format."""
     def frames(blob: bytes, n: int):
         from .pngcodec import png_encode
 
         w, h, canvases = walk(blob)
+        if len(canvases) < 2:
+            return []
         return [(k, png_encode(canvases[k], w, h, 3))
                 for k in _picks(len(canvases), n)]
     return frames

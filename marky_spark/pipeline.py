@@ -6,17 +6,18 @@ over 10^12 documents, evidenced locally:
 - **Bucketing**: documents hash into ``n_buckets`` stable buckets
   (``pmod(xxhash64(doc_id), B)``), kept as the output's ``bucket``
   column. In production this is an Iceberg table with a
-  ``bucket(B, doc_id)`` partition transform; locally a parquet dir + a
-  JSON manifest plays the snapshot role (same resume logic either way —
-  §7.0).
+  ``bucket(B, doc_id)`` partition transform; locally parquet directories
+  + a JSON snapshot log play the snapshot role (same resume logic either
+  way — §7.0).
 - **Waves + snapshot commit**: buckets are processed in waves. Wave ``k``
-  (the index of the snapshot that commits it) is one unpartitioned parquet
-  write to ``out_spans/wave=<k>/``, one file per task; after the files are
-  durably written the manifest commit makes the wave visible (atomic
-  rename). Readers prune to ``wave <`` the snapshot count, so a wave that
-  crashed before its commit is invisible even before a resume deletes its
-  directory. Restart skips committed buckets — resume costs one metadata
-  read + a bucket filter, NOT an anti-join against 10^12 output rows.
+  is one unpartitioned parquet write, with ``wave`` as a column, to a
+  directory of its writer's own (:func:`write_wave`), one file per task;
+  its commit creates ``_snapshots/<k>.json`` naming that directory unless
+  another writer created it first (put-if-absent, as Delta Lake's
+  ``_delta_log/<version>.json``; the loser gets :class:`StaleWriter`).
+  Readers read exactly the named directories. Restart skips committed
+  buckets — resume costs one read of the snapshot records + a bucket
+  filter, NOT an anti-join against 10^12 output rows.
 - **Skew**: the first call of a job sizes every pending bucket with one
   JVM-side aggregate (payload bytes and largest doc, from
   ``aggregate(spans, ...)``) and records the rows in the manifest before
@@ -30,9 +31,9 @@ over 10^12 documents, evidenced locally:
 - **Lineage + metrics**: a view over the committed output, not stored
   state (:func:`job_stats`): per-file lineage (each output file is one
   task's share of one wave) and per-kind metrics, each row's wave read
-  from its path. Built from committed waves only, they are exactly-once
-  across crash + resume by construction. A commit's totals come from an
-  ``Observation`` on the wave's own write: one Spark job.
+  from its ``wave`` column. Built from committed waves only, they are
+  exactly-once across crash + resume by construction. A commit's totals
+  come from an ``Observation`` on the wave's own write: one Spark job.
 """
 
 from __future__ import annotations
@@ -41,75 +42,163 @@ import json
 import os
 import shutil
 import time
+import uuid
 from collections.abc import Iterable
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .convert import convert
 
 
-class SnapshotStore:
-    """Manifest-based local snapshot (Iceberg-semantics stand-in).
+class StaleWriter(RuntimeError):
+    """Another writer committed the snapshot index this writer claimed."""
 
-    ``manifest.json`` holds the committed bucket list and one snapshot per
-    committed wave; every manifest write is atomic (:meth:`write`).
+
+class SnapshotStore:
+    """Snapshot log of a job directory (Iceberg-semantics stand-in).
+
+    Snapshot ``k`` is ``_snapshots/<k>.json``, created once: it names the
+    directory under ``out_spans`` that holds its rows, its buckets, its
+    stats and the token of the writer that committed it. ``manifest.json``
+    holds only the job's planning state (``job_config``, ``bucket_sizes``,
+    ``sizing_s``). :meth:`read` joins the two. A store's token is unique
+    to the store, so each call that writes gets directories of its own.
     """
+
+    _JOB_KEYS = ("job_config", "bucket_sizes", "sizing_s")
 
     def __init__(self, out_dir: str):
         self.out_dir = out_dir
         self.manifest_path = os.path.join(out_dir, "manifest.json")
-        os.makedirs(out_dir, exist_ok=True)
+        self.token = uuid.uuid4().hex[:12]
+        self._staged: tuple[int, str] | None = None
+        os.makedirs(os.path.join(out_dir, "_snapshots"), exist_ok=True)
 
     def read(self) -> dict:
-        if not os.path.exists(self.manifest_path):
-            return {"committed_buckets": [], "snapshots": []}
-        with open(self.manifest_path) as f:
-            return json.load(f)
+        """The manifest's keys plus ``snapshots`` (each snapshot's record,
+        in index order) and ``committed_buckets``."""
+        manifest = {}
+        if os.path.exists(self.manifest_path):
+            with open(self.manifest_path) as f:
+                manifest = json.load(f)
+        snaps = []
+        # a writer claims index k only after k - 1 committed: no gaps
+        while os.path.exists(self._record(len(snaps))):
+            with open(self._record(len(snaps))) as f:
+                snaps.append(json.load(f))
+        return {**manifest, "snapshots": snaps, "committed_buckets": sorted(
+            {b for s in snaps for b in s["buckets"]})}
 
     def committed_buckets(self) -> set[int]:
         return set(self.read()["committed_buckets"])
 
+    def committed_dirs(self) -> list[str]:
+        """The directories the snapshots name, in snapshot order."""
+        return [self.path(s["dir"]) for s in self.read()["snapshots"]]
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.out_dir, "out_spans", name)
+
+    def dirs_at(self, wave: int) -> list[str]:
+        """Names of every directory written for snapshot index ``wave``."""
+        base = self.path("")
+        names = os.listdir(base) if os.path.isdir(base) else []
+        return sorted(n for n in names if n.startswith(f"wave={wave}-"))
+
     def write(self, manifest: dict) -> None:
-        """Replace the manifest atomically: write-to-temp + ``os.replace``."""
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self.manifest_path)
+        """Replace the manifest's planning keys atomically (write-to-temp +
+        ``os.replace``); the snapshots are not the manifest's to write."""
+        os.replace(self._temp(self.manifest_path, {
+            k: manifest[k] for k in self._JOB_KEYS if k in manifest}),
+            self.manifest_path)
+
+    def stage(self, wave: int) -> str:
+        """The directory this store writes snapshot ``wave``'s rows to,
+        ``out_spans/wave=<k>-<token>``; :meth:`commit` publishes it."""
+        self._staged = (wave, f"wave={wave}-{self.token}")
+        return self.path(self._staged[1])
 
     def commit(self, bucket_ids: list[int], stats: dict) -> None:
-        manifest = self.read()
-        manifest["committed_buckets"] = sorted(
-            set(manifest["committed_buckets"]) | set(bucket_ids)
-        )
-        manifest["snapshots"].append(
-            {"buckets": sorted(bucket_ids), "stats": stats}
-        )
-        self.write(manifest)
+        """Commit the staged directory as snapshot ``k``, put-if-absent:
+        the record is written whole to a temp file and hard-linked to
+        ``_snapshots/<k>.json``, which fails if any writer got there first.
+        The loser deletes its directory and raises :class:`StaleWriter`;
+        the winner deletes every other directory at index ``k``, since
+        none of them can commit now."""
+        (wave, name), self._staged = self._staged, None
+        record = {"dir": name, "buckets": sorted(bucket_ids),
+                  "stats": stats, "token": self.token}
+        tmp = self._temp(self._record(wave), record)
+        try:
+            os.link(tmp, self._record(wave))
+        except FileExistsError:
+            shutil.rmtree(self.path(name), ignore_errors=True)
+            raise StaleWriter(f"snapshot {wave} was committed by another "
+                              f"writer; {name} is deleted") from None
+        finally:
+            os.unlink(tmp)
+        self.drop_unnamed(wave, name)
+
+    def publish(self, wave: int, record: dict) -> None:
+        """Replace committed snapshot ``wave``'s record with one ``os.replace``
+        (compaction: the same rows in another directory)."""
+        os.replace(self._temp(self._record(wave), record), self._record(wave))
+
+    def drop_unnamed(self, wave: int, name: str) -> None:
+        """Delete the directories at committed index ``wave`` other than
+        ``name``, the one its snapshot names: none can ever be read."""
+        for other in self.dirs_at(wave):
+            if other != name:
+                shutil.rmtree(self.path(other), ignore_errors=True)
+
+    def _record(self, wave: int) -> str:
+        return os.path.join(self.out_dir, "_snapshots", f"{wave}.json")
+
+    def _temp(self, path: str, obj: dict) -> str:
+        """Write ``obj`` whole to a temp file next to ``path``."""
+        tmp = f"{path}.{self.token}.tmp"
+        with open(tmp, "w") as f:
+            json.dump(obj, f, indent=1)
+        return tmp
 
 
 def wave_dir(out_dir: str, wave: int) -> str:
-    """The directory of wave ``wave``: the files snapshot ``wave`` commits."""
-    return os.path.join(out_dir, "out_spans", f"wave={wave}")
+    """The directory snapshot ``wave`` names; before that snapshot
+    commits, the first directory a writer left at its index."""
+    store = SnapshotStore(out_dir)
+    snaps = store.read()["snapshots"]
+    return store.path(snaps[wave]["dir"] if wave < len(snaps)
+                      else store.dirs_at(wave)[0])
 
 
-def clean_uncommitted(out_dir: str) -> int:
-    """Delete the wave directories no snapshot committed: files a wave
-    wrote before a crash kept it from its commit. Returns the next wave's
-    index, the snapshot count.
+def write_wave(store: SnapshotStore, df: DataFrame, wave: int,
+               *observe: Column) -> dict:
+    """Write ``df`` as snapshot ``wave``'s rows, with ``wave`` as a
+    column, to the directory :meth:`SnapshotStore.stage` gives; the
+    caller's :meth:`SnapshotStore.commit` then publishes it. Every writer
+    of a job directory goes through here. Returns ``observe``'s aggregates
+    over the written rows, computed by the write itself: one Spark job."""
+    df = df.withColumn("wave", F.lit(wave))
+    observed = Observation()
+    if observe:
+        df = df.observe(observed, *observe)
+    df.write.parquet(store.stage(wave))
+    return observed.get if observe else {}
 
-    Iceberg needs no equivalent (uncommitted files are invisible to the
-    snapshot); readers of the stand-in already prune them, and this frees
-    the directory for the wave that re-runs those buckets."""
-    n_waves = len(SnapshotStore(out_dir).read()["snapshots"])
-    base = os.path.join(out_dir, "out_spans")
-    if os.path.isdir(base):
-        for name in os.listdir(base):
-            key, _, k = name.partition("=")
-            if key == "wave" and int(k) >= n_waves:
-                shutil.rmtree(os.path.join(base, name))
-    return n_waves
+
+def pending_waves(manifest: dict, n_buckets: int, waves: int
+                  ) -> list[tuple[int, list[int]]]:
+    """``(snapshot index, buckets)`` of each wave over the buckets no
+    snapshot of ``manifest`` (:meth:`SnapshotStore.read`) committed:
+    ``waves`` even slices, indexed on from the snapshot count."""
+    committed = set(manifest["committed_buckets"])
+    pending = [b for b in range(n_buckets) if b not in committed]
+    per_wave = max(1, -(-len(pending) // waves))
+    base = len(manifest["snapshots"])
+    return [(base + i, pending[w:w + per_wave])
+            for i, w in enumerate(range(0, len(pending), per_wave))]
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -215,39 +304,30 @@ def run_convert_job(
     every pending bucket has one, and sizes once otherwise. Every wave is
     planned from those rows (:func:`plan_wave`); each wave filters
     ``input_df`` again, so callers persist an input that is costly to
-    recompute. ``fail_after_wave`` injects a crash after N committed waves
-    (tests the resume contract).
+    recompute. The call's waves commit the snapshot indexes after the last
+    one it read (:func:`pending_waves`); if another writer commits one of
+    them first, the call raises :class:`StaleWriter` and a resume picks up
+    what is still pending. ``fail_after_wave`` injects a crash after N
+    committed waves (tests the resume contract).
     """
     store = SnapshotStore(out_dir)
     manifest = store.read()
-    committed = set(manifest["committed_buckets"])
-
+    todo = pending_waves(manifest, n_buckets, waves)
+    if not todo:
+        return []
     bucketed = with_bucket(input_df, n_buckets)
-    pending = [b for b in range(n_buckets) if b not in committed]
+    sizes = _pending_sizes(store, manifest, bucketed,
+                           [b for _, bs in todo for b in bs])
+
     results: list[WaveResult] = []
-    if not pending:
-        return results
-
-    # exactly-once across crash+resume: a wave that wrote files but died
-    # before its manifest commit left an orphan wave directory, which the
-    # wave that re-runs its buckets writes afresh
-    wave_base = clean_uncommitted(out_dir)
-    sizes = _pending_sizes(store, manifest, bucketed, pending)
-
-    per_wave = max(1, -(-len(pending) // waves))
-    for w in range(0, len(pending), per_wave):
-        wave_buckets = pending[w:w + per_wave]
-        wave_id = wave_base + w // per_wave
+    for wave_id, wave_buckets in todo:
         t0 = time.perf_counter()
         plan = plan_wave(spark, [sizes[b] for b in wave_buckets], skew_factor)
         wave_df = bucketed.where(F.col("bucket").isin(wave_buckets))
         out = convert(skew_balanced(wave_df.drop("bucket"), plan))
-        # the commit's totals come back with the write: one Spark job
-        observed = Observation()
         t_write = time.perf_counter()
-        (with_bucket(out, n_buckets).observe(observed, *_totals())
-         .write.parquet(wave_dir(out_dir, wave_id)))
-        totals = observed.get
+        totals = write_wave(store, with_bucket(out, n_buckets), wave_id,
+                            *_totals())
         t1 = time.perf_counter()
         dt = t1 - t0
         store.commit(wave_buckets, {
@@ -303,7 +383,7 @@ def job_stats(spark: SparkSession, out_dir: str
     Lineage has one row per output file (``lineage_table_ddl``'s columns);
     each file is one task's share of one wave, so it is the task-level
     audit. Metrics has one row per wave × kind × status. A row's ``wave``
-    is read from its path: the snapshot that committed it. Nothing here is
+    is the index of the snapshot that committed it. Nothing here is
     stored state, so a crash cannot make it count a wave twice and a reader
     never sees a wave before its commit; compaction only changes the
     lineage's files.
@@ -342,134 +422,56 @@ def append_op_metrics(spark: SparkSession, out_dir: str, source: str,
 
 def compact_output(spark: SparkSession, out_dir: str,
                    target_file_bytes: int = 512 * 1024 * 1024) -> dict:
-    """Small-file compaction over committed waves.
+    """Small-file compaction over committed snapshots.
 
     A wave writes one file per task; at 1000-executor scale and many waves
     that is millions of small parquet files — scan planning and
     NameNode/object-store metadata become the bottleneck, not bytes. This
-    rewrites each committed wave directory to
-    ``ceil(wave_bytes / target_file_bytes)`` files (Iceberg's
-    ``rewrite_data_files`` is the production twin — this is the parquet
-    stand-in with the same swap-last atomicity).
-
-    Only COMMITTED waves are touched. The swap is two renames (wave dir →
-    saved old dir, compacted temp dir → wave dir) and is therefore NOT
-    atomic: a crash between them leaves the wave dir briefly absent. What
-    makes it safe is that (a) temp/old dirs live under ``out_dir/_compact``,
-    OUTSIDE the ``out_spans`` partition-discovery root, so a concurrent or
-    post-crash ``spark.read.parquet`` can never mis-infer the wave column
-    or double-read, and (b) ``_recover_compaction`` — run at the start of
-    both :func:`compact_output` and :func:`read_output` — restores the saved
-    old dir whenever the wave dir is missing, so no committed data is ever
-    lost and retries resume cleanly.
+    rewrites each committed snapshot's directory to
+    ``ceil(bytes / target_file_bytes)`` files in a fresh directory, points
+    the snapshot at it with one ``os.replace`` of its record
+    (:meth:`SnapshotStore.publish`) and deletes the old directory
+    (Iceberg's ``rewrite_data_files`` is the production twin). Readers read
+    the directory the record names, so a crash at any point leaves them one
+    copy of the rows; the next pass deletes the unnamed leftover, as a
+    commit deletes a losing writer's directory.
     """
     store = SnapshotStore(out_dir)
-    _recover_compaction(out_dir, cleanup=True)
-    n_waves = len(store.read()["snapshots"])
-    scratch = os.path.join(out_dir, "_compact")
     stats = {"waves": 0, "files_before": 0, "files_after": 0}
-    for k in range(n_waves):
-        d = wave_dir(out_dir, k)
-        if not os.path.isdir(d):
-            continue
+    for k, snap in enumerate(store.read()["snapshots"]):
+        store.drop_unnamed(k, snap["dir"])
+        d = store.path(snap["dir"])
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
         n_bytes = sum(os.path.getsize(os.path.join(d, f)) for f in files)
         n_target = max(1, -(-n_bytes // target_file_bytes))
         if len(files) <= n_target:
             continue
-        os.makedirs(scratch, exist_ok=True)
-        tmp = os.path.join(scratch, f"wave={k}.tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        (spark.read.parquet(d)
-         .coalesce(n_target)
-         .write.mode("overwrite").parquet(tmp))
-        old = os.path.join(scratch, f"wave={k}.old")
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(d, old)
-        try:
-            os.rename(tmp, d)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if os.path.isdir(d):
-                # a concurrent read_output's recovery restored `old` back
-                # to the live dir between our two renames — the live dir
-                # again holds the original rows, so our saved copy is
-                # redundant; leave this wave for the next pass
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                # rename failed for some OTHER reason while the live dir
-                # is absent: `old` is now the only copy of a committed
-                # wave — restore it, never delete it
-                try:
-                    os.rename(old, d)
-                except OSError:
-                    pass  # a concurrent recovery won the restore race
-                if not os.path.isdir(d):
-                    raise  # committed data unreachable — fail loudly
-            continue
-        shutil.rmtree(old, ignore_errors=True)
+        new = store.stage(k)
+        spark.read.parquet(d).coalesce(n_target).write.parquet(new)
+        store.publish(k, {**snap, "dir": os.path.basename(new)})
+        shutil.rmtree(d)
         stats["waves"] += 1
         stats["files_before"] += len(files)
         stats["files_after"] += n_target
     return stats
 
 
-def _recover_compaction(out_dir: str, cleanup: bool = False) -> None:
-    """Repair a crash mid-compaction swap (see :func:`compact_output`).
-
-    A leftover ``_compact/wave={k}.old`` with NO live wave dir means the
-    crash hit between the two swap renames — restore the old dir (the temp
-    dir holds the same rows compacted; dropping it loses only compaction
-    work, never data). A leftover ``.old`` WITH a live wave dir means the
-    swap completed — dropped only under ``cleanup=True``. Leftover ``.tmp``
-    dirs are incomplete-or-superseded scratch — likewise ``cleanup`` only.
-
-    ``cleanup=False`` (the :func:`read_output` mode) is restore-only and
-    race-tolerant: a reader never deletes scratch a concurrently running
-    :func:`compact_output` may still be mid-swap on, and a restore that
-    loses the rename race (live dir reappeared) is simply skipped.
-    :func:`compact_output` itself runs ``cleanup=True`` — it is the single
-    writer, and its swap handles the one reader-vs-writer rename race.
-    """
-    scratch = os.path.join(out_dir, "_compact")
-    if not os.path.isdir(scratch):
-        return
-    base = os.path.join(out_dir, "out_spans")
-    for name in os.listdir(scratch):
-        p = os.path.join(scratch, name)
-        if name.endswith(".old"):
-            live = os.path.join(base, name[:-len(".old")])
-            if os.path.isdir(live):
-                if cleanup:
-                    shutil.rmtree(p, ignore_errors=True)
-            else:
-                try:
-                    os.rename(p, live)
-                except OSError:
-                    pass  # concurrent swap completed or another recovery won
-        elif name.endswith(".tmp") and cleanup:
-            shutil.rmtree(p, ignore_errors=True)
-
-
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed output only, with its ``bucket`` and ``wave`` columns
-    (snapshot isolation: a wave directory no snapshot committed yet is
-    pruned). Empty result — not an error — when nothing has committed yet,
-    or when the committed waves held no document."""
+    """Committed output only, with its ``bucket`` and ``wave`` columns:
+    exactly the directories the snapshots name (snapshot isolation: a
+    directory no snapshot names is never read). Empty result — not an
+    error — when nothing has committed yet, or when the committed waves
+    held no document."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     from .schema import OUTPUT_SCHEMA
 
-    store = SnapshotStore(out_dir)
-    _recover_compaction(out_dir)
-    n_waves = len(store.read()["snapshots"])
-    path = os.path.join(out_dir, "out_spans")
     # copy: StructType.add would mutate the shared OUTPUT_SCHEMA. Given, not
     # inferred: a job that has not committed has no file to infer it from
     schema = StructType(list(OUTPUT_SCHEMA.fields) + [
         StructField("bucket", IntegerType()),
         StructField("wave", IntegerType())])
-    if not n_waves or not os.path.isdir(path):
+    dirs = SnapshotStore(out_dir).committed_dirs()
+    if not dirs:
         return spark.createDataFrame([], schema)
-    df = spark.read.schema(schema).parquet(path)
-    return df.where(F.col("wave") < n_waves)
+    return spark.read.schema(schema).parquet(*dirs)

@@ -7,10 +7,10 @@ re-shaped for a cluster: one job over a table, not one process per file).
         --buckets 64 --waves 4 [--kinds html,pdf] [--local N]
 
 Resumable: rerunning with the same --output skips committed buckets
-(manifest snapshot; see marky_spark/pipeline.py). Each run ends by
+(committed snapshots; see marky_spark/pipeline.py). Each run ends by
 rewriting lineage/ and metrics/ from the committed output
 (pipeline.job_stats), so they describe exactly what is committed. The
-manifest pins the job configuration (--kinds, --buckets): resuming with
+manifest.json pins the job configuration (--kinds, --buckets): resuming with
 different values is an error, not a silent partial conversion.
 """
 

@@ -10,11 +10,12 @@ prove the convert front door; this one proves the MEDIA path at scale:
   — all real encoders — plus a PLANTED poison slice (every 997th image
   truncated mid-container) whose rows must surface as counted typed
   errors, never task failures.
-- job shape: the same bucketed wave-committed resume protocol as the
-  convert job (SnapshotStore manifests, one ``out_spans/wave=<k>``
-  directory per snapshot, uncommitted-wave cleanup, one INJECTED CRASH
-  mid-run + resume), images through decode_pixels and audio through
-  audio_features.
+- job shape: the convert job's bucketed wave-committed resume protocol,
+  through the same pipeline calls (``pending_waves`` plans the waves,
+  ``write_wave`` + ``SnapshotStore.commit`` write and commit each one,
+  and the committed rows are read from the directories the snapshots
+  name), with one INJECTED CRASH mid-run + resume; images through
+  decode_pixels and audio through audio_features.
 - verification: exactly-once (row count == distinct media_ref == the
   generated corpus size), ok/error split equals the planted poison
   count exactly, per-branch throughput reported.
@@ -65,9 +66,9 @@ def main() -> int:
     )
     from marky_spark.pipeline import (
         SnapshotStore,
-        clean_uncommitted,
-        wave_dir,
+        pending_waves,
         with_bucket,
+        write_wave,
     )
     from marky_spark.session import get_spark
 
@@ -135,21 +136,15 @@ def main() -> int:
             media.withColumn("doc_id", F.regexp_extract(
                 "media_ref", r"(\d+)$", 1).cast("long")),
             n_buckets).persist(StorageLevel.MEMORY_AND_DISK)
-        committed = store.committed_buckets()
-        pending = [b for b in range(n_buckets) if b not in committed]
-        wave_base = clean_uncommitted(out)
-        per_wave = max(1, -(-len(pending) // waves))
         done = 0
-        for w in range(0, len(pending), per_wave):
-            wave_buckets = pending[w:w + per_wave]
+        for k, wave_buckets in pending_waves(store.read(), n_buckets, waves):
             wave = bucketed.where(F.col("bucket").isin(wave_buckets))
             result = with_bucket(
                 op(wave.select("media_ref", "mime", "payload"))
                 .withColumn("doc_id", F.regexp_extract(
                     "media_ref", r"(\d+)$", 1).cast("long")),
                 n_buckets).drop("doc_id")
-            (result.withColumn("branch", F.lit(tag))
-             .write.parquet(wave_dir(out, wave_base + w // per_wave)))
+            write_wave(store, result.withColumn("branch", F.lit(tag)), k)
             store.commit(wave_buckets, {"tag": tag})
             done += 1
             if fail_after_wave is not None and done >= fail_after_wave:
@@ -157,9 +152,7 @@ def main() -> int:
         bucketed.unpersist()
 
     def committed_rows(out: str):
-        n_waves = len(SnapshotStore(out).read()["snapshots"])
-        return (spark.read.parquet(os.path.join(out, "out_spans"))
-                .where(F.col("wave") < n_waves).drop("wave"))
+        return spark.read.parquet(*SnapshotStore(out).committed_dirs())
 
     def decode_images(media):
         return decode_pixels(media).select(

@@ -43,14 +43,15 @@ def test_write_routing_falls_back_to_parquet(spark, tmp_path):
     assert mode == "parquet"
     # the write returns the commit's totals: one Spark job, one wave dir
     assert len(sc.statusTracker().getJobIdsForGroup("write-output")) == 1
-    assert os.listdir(out + "/out_spans") == ["wave=0"]
+    store = SnapshotStore(out)
+    manifest = store.read()
+    (wave,) = store.committed_dirs()
     # fallback commits the pipeline layout: a wave of bucketed parquet +
-    # manifest
-    written = spark.read.parquet(out + "/out_spans")
+    # its snapshot
+    written = spark.read.parquet(wave)
     assert written.count() == 5
     assert "bucket" in written.columns
-    # the manifest commits exactly the written buckets and their row count
-    manifest = SnapshotStore(out).read()
+    # the snapshot commits exactly the written buckets and their row count
     assert manifest["committed_buckets"] == sorted(
         r["bucket"] for r in written.select("bucket").distinct().collect())
     assert manifest["snapshots"][-1]["stats"] == {"n_docs": 5,
@@ -105,8 +106,11 @@ def test_cli_driver_end_to_end(tmp_path):
     for name in ("lineage", "metrics"):
         assert sum(pq.read_table(f"{out_dir}/{name}")
                    .column("n_docs").to_pylist()) == 80, name
-    assert pq.read_table(f"{out_dir}/lineage").num_rows == len(
-        glob.glob(f"{out_dir}/out_spans/wave=*/*.parquet"))
+    from marky_spark.pipeline import SnapshotStore
+
+    assert pq.read_table(f"{out_dir}/lineage").num_rows == sum(
+        len(glob.glob(f"{d}/*.parquet"))
+        for d in SnapshotStore(out_dir).committed_dirs())
 
 
 def test_cli_missing_input_exits_1():

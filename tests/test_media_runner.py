@@ -8,8 +8,11 @@ import pathlib
 import pytest
 
 from marky_spark import fixtures as fx
+from marky_spark.ops.gifcodec import gif_encode
+from marky_spark.ops.mp4meta import build_mp4
 from marky_spark.ops.pngcodec import png_encode
 from marky_spark.ops.wavcodec import wav_encode
+from marky_spark.ops.webpcodec import webp_encode
 
 _PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "marky_spark"
 
@@ -22,7 +25,12 @@ _PAYLOADS = {
     "truncated_png": _PNG[:40],
     "valid": _PNG,
     "imageless_pdf": fx.pdf_bytes([[(72, 700, "only text")]]),
+    # an ftyp box, then a moov box cut short
+    "truncated_mp4": build_mp4(tracks=[("vide", "avc1", 64, 48)])[:40],
+    "still_gif": gif_encode(bytes(12), 4, 3, bytes(range(12))),
+    "still_webp": webp_encode(bytes(range(4 * 3 * 3)), 4, 3, 3),
 }
+_STILLS = ("valid", "still_gif", "still_webp")  # "valid" is a still PNG
 
 
 def _operators():
@@ -70,6 +78,13 @@ def test_every_operator_yields_typed_rows(spark, op, payload):
         if status != "ok":
             assert [k for k, v in r.asDict().items()
                     if v is not None] == ["media_ref", "ok"], r
+    statuses = [r["ok"] for r in rows]
+    if op == "video_meta" and payload == "truncated_mp4":
+        assert statuses[0].startswith("error: "), statuses
+    elif op == "video_meta":  # a payload no container claims is not video
+        assert statuses == ["unsupported"], statuses
+    if op == "frame_sample" and payload in _STILLS:  # a still has no frames
+        assert statuses == ["unsupported"], statuses
     if payload == "valid":
         assert all(r["ok"] == "ok" for r in rows) or op in (
             "scan_features", "audio_meta", "video_meta", "pdf_media",

@@ -1,6 +1,7 @@
 """Resumable bucketed job: crash → restart → complete, no dupes, no loss."""
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from marky_spark.pipeline import (
     skew_balanced,
     wave_dir,
     with_bucket,
+    write_wave,
 )
 from marky_spark.schema import INPUT_SCHEMA
 
@@ -291,29 +293,141 @@ def test_dense_tail_is_isolated(spark):
 
 
 def test_resume_cleans_orphans_from_mid_wave_crash(spark, tmp_path):
-    """A wave that wrote files but died before its manifest commit must not
-    double its rows when its buckets are re-run after restart: readers
-    prune its directory before the resume, and the resume deletes it."""
+    """Waves that wrote files but died before their commit are never read:
+    not before the resume, not after it. The orphan at index 0 is deleted
+    when snapshot 0 commits; the one at index 3, past the snapshot count,
+    is left alone, since it may belong to a writer still running."""
     from marky_spark.convert import convert
 
     out_dir = str(tmp_path / "job")
     corpus = spark_corpus(spark, 200, partitions=4)
     n_input = corpus.count()
 
-    # simulate the crash: wave 0 (every doc) and a later wave directory
-    # exist, but the manifest (written after the files in the real
-    # sequence) never landed
+    # simulate the crash: a writer wrote wave 0 (every doc) and wave 3, and
+    # died before either commit
+    crashed = SnapshotStore(out_dir)
     pre = with_bucket(convert(corpus), 8)
+    orphans = {}
     for k in (0, 3):
-        pre.write.parquet(wave_dir(out_dir, k))
+        write_wave(crashed, pre, k)
+        orphans[k] = wave_dir(out_dir, k)
     assert not SnapshotStore(out_dir).committed_buckets()
     assert read_output(spark, out_dir).count() == 0
 
     run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=2)
-    assert not os.path.isdir(wave_dir(out_dir, 3))
+    assert len(SnapshotStore(out_dir).read()["snapshots"]) == 2
+    assert not os.path.isdir(orphans[0])
+    assert os.listdir(orphans[3])
     final = read_output(spark, out_dir)
-    assert final.count() == n_input  # orphans were cleaned, not duplicated
+    assert final.count() == n_input  # orphans were not read, not duplicated
     assert final.select("doc_id").distinct().count() == n_input
+
+
+def test_zombie_driver_loses_its_commit_not_committed_work(spark, tmp_path,
+                                                           monkeypatch):
+    """Two drivers on one job directory. A (2 waves) is held between its
+    wave-1 write and its commit; B (4 waves, crashing after 1) reads the
+    snapshots while A is held, then A commits. B's first wave claims the
+    index A took: B raises StaleWriter and deletes its directory, and a
+    resume finds every bucket committed with every doc exactly once."""
+    out_dir = str(tmp_path / "zombie")
+    corpus = spark_corpus(spark, 400, partitions=4).persist()
+    corpus.count()
+    a_held, b_planned = threading.Event(), threading.Event()
+    go_a, go_b = threading.Event(), threading.Event()
+    real_commit, real_split = SnapshotStore.commit, pipeline.skew_balanced
+    a_commits = []
+
+    def commit(self, bucket_ids, stats):
+        if threading.current_thread().name == "A":
+            a_commits.append(bucket_ids)
+            if len(a_commits) == 2:
+                a_held.set()
+                assert go_a.wait(120)
+        return real_commit(self, bucket_ids, stats)
+
+    def split(df, plan):
+        if threading.current_thread().name == "B":
+            b_planned.set()
+            assert go_b.wait(120)
+        return real_split(df, plan)
+
+    monkeypatch.setattr(SnapshotStore, "commit", commit)
+    monkeypatch.setattr(pipeline, "skew_balanced", split)
+    errors = {}
+
+    def driver(name, **kw):
+        try:
+            run_convert_job(spark, corpus, out_dir, n_buckets=16, **kw)
+        except Exception as exc:  # noqa: BLE001 - the test reads it
+            errors[name] = exc
+
+    a = threading.Thread(target=driver, name="A", args=("A",),
+                         kwargs={"waves": 2})
+    b = threading.Thread(target=driver, name="B", args=("B",),
+                         kwargs={"waves": 4, "fail_after_wave": 1})
+    a.start()
+    assert a_held.wait(120)
+    b.start()
+    assert b_planned.wait(120)
+    go_a.set()
+    a.join(120)
+    go_b.set()
+    b.join(120)
+    monkeypatch.undo()
+
+    assert "A" not in errors
+    assert isinstance(errors["B"], pipeline.StaleWriter), errors
+    snaps = SnapshotStore(out_dir).read()["snapshots"]
+    assert [s["buckets"] for s in snaps] == [list(range(8)),
+                                             list(range(8, 16))]
+    assert sorted(os.listdir(os.path.join(out_dir, "out_spans"))) == [
+        s["dir"] for s in snaps]
+    assert run_convert_job(spark, corpus, out_dir, n_buckets=16) == []
+    final = read_output(spark, out_dir)
+    assert final.count() == 400
+    assert final.select("doc_id").distinct().count() == 400
+    corpus.unpersist()
+
+
+def test_racing_commits_one_wins_loser_dir_gone(spark, tmp_path,
+                                                monkeypatch):
+    """Two write_output calls both claim snapshot 0 and commit at once:
+    exactly one wins, the other raises StaleWriter, and only the winner's
+    directory is left."""
+    from marky_spark.iceberg import write_output
+
+    out = str(tmp_path / "race")
+    df = spark.range(5).selectExpr("cast(id as string) as doc_id")
+    both_written = threading.Barrier(2, timeout=120)
+    real_commit = SnapshotStore.commit
+
+    def commit(self, bucket_ids, stats):
+        both_written.wait()
+        return real_commit(self, bucket_ids, stats)
+
+    monkeypatch.setattr(SnapshotStore, "commit", commit)
+    outcomes = []
+
+    def writer():
+        try:
+            outcomes.append(write_output(df, spark, out))
+        except Exception as exc:  # noqa: BLE001 - the test reads it
+            outcomes.append(exc)
+
+    threads = [threading.Thread(target=writer) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(180)
+    monkeypatch.undo()
+
+    assert sorted(type(o).__name__ for o in outcomes) == [
+        "StaleWriter", "str"], outcomes
+    store = SnapshotStore(out)
+    (snap,) = store.read()["snapshots"]
+    assert os.listdir(os.path.join(out, "out_spans")) == [snap["dir"]]
+    assert spark.read.parquet(*store.committed_dirs()).count() == 5
 
 
 def test_read_output_empty_before_first_commit(spark, tmp_path):
@@ -369,99 +483,47 @@ def test_job_stats_follow_compaction(spark, tmp_path):
     assert sorted(r["wave"] for r in lineage.collect()) == [0, 1]
 
 
-def test_compact_crash_recovery_restores_bucket(spark, tmp_path):
-    """A crash between the two swap renames leaves the wave dir absent and
-    the data saved under _compact/; read_output and compact_output must
-    restore it before reading. Readers are restore-only (a reader must never
-    delete scratch a concurrent compactor may be mid-swap on); stale-scratch
-    cleanup belongs to compact_output, the single writer."""
-    import shutil
-
+@pytest.mark.parametrize("crash", ["before_publish", "after_publish"])
+def test_compaction_crash_reads_exactly_once(spark, tmp_path, monkeypatch,
+                                             crash):
+    """A compaction that dies before it publishes a snapshot's new
+    directory, or after the publish but before it deletes the old one,
+    leaves one directory the snapshot does not name. No step repairs it:
+    read_output reads the named directory, the job resumes exactly once,
+    and the next compaction deletes the leftover as a commit would."""
     out_dir = str(tmp_path / "crashcompact")
-    run_convert_job(spark, spark_corpus(spark, 200, partitions=4),
-                    out_dir, n_buckets=4, waves=2)
-    rows_before = sorted(
-        r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
-
-    # simulate the mid-swap crash: wave=0 moved to scratch, never replaced
-    scratch = os.path.join(out_dir, "_compact")
-    os.makedirs(scratch, exist_ok=True)
-    os.rename(wave_dir(out_dir, 0), os.path.join(scratch, "wave=0.old"))
-    os.makedirs(os.path.join(scratch, "wave=1.tmp"))  # stale scratch too
-
-    after = sorted(
-        r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
-    assert after == rows_before  # wave restored, nothing lost or doubled
-    assert os.path.isdir(wave_dir(out_dir, 0))
-    # reader is restore-only: stale .tmp is left for the compactor
-    assert os.path.isdir(os.path.join(scratch, "wave=1.tmp"))
-
-    # a completed swap leaves only a stale .old: the compactor's cleanup
-    # recovery drops it (and the stale .tmp)
-    shutil.copytree(wave_dir(out_dir, 1), os.path.join(scratch, "wave=1.old"))
-    compact_output(spark, out_dir, target_file_bytes=1 << 30)
-    assert not os.path.isdir(os.path.join(scratch, "wave=1.old"))
-    assert not os.path.isdir(os.path.join(scratch, "wave=1.tmp"))
-    final = sorted(
-        r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
-    assert final == rows_before
-
-def test_compact_swap_failure_restores_not_deletes(spark, tmp_path, monkeypatch):
-    """If the tmp→live rename fails for any reason OTHER than the reader
-    race (live dir still absent), the saved .old dir is the only copy of a
-    committed wave: compact_output must restore it, never rmtree it
-    (ADVICE r2: unconditional delete was permanent data loss)."""
-    out_dir = str(tmp_path / "swapfail")
-    run_convert_job(spark, spark_corpus(spark, 200, partitions=4),
-                    out_dir, n_buckets=4, waves=2)
-    rows_before = sorted(
-        r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
-
-    real_rename = os.rename
-
-    def failing_rename(src, dst):
-        if src.endswith(".tmp"):  # the tmp→live swap rename only
-            raise OSError("injected transient I/O failure")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(pipeline.os, "rename", failing_rename)
-    stats = compact_output(spark, out_dir, target_file_bytes=1 << 30)
-    monkeypatch.undo()
-
-    assert stats["waves"] == 0  # every swap failed...
-    rows_after = sorted(
-        r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
-    assert rows_after == rows_before  # ...but every wave was restored
-    # and the next (unbroken) pass compacts normally
-    assert compact_output(spark, out_dir, target_file_bytes=1 << 30)["waves"] == 2
-    final = sorted(
-        r["doc_id"] for r in read_output(spark, out_dir).select("doc_id").collect())
-    assert final == rows_before
-
-
-def test_resume_after_compaction_crash_exactly_once(spark, tmp_path):
-    """Composed failure: job crashes between waves AND a compaction swap on a
-    committed wave crashed mid-rename. Resuming run_convert_job and then
-    read_output must still yield exactly-once output."""
-    out_dir = str(tmp_path / "composed")
     corpus = spark_corpus(spark, N_DOCS, partitions=4)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4,
                         fail_after_wave=2)
-    committed = sorted(SnapshotStore(out_dir).committed_buckets())
-    assert committed and len(committed) < 8
+    def doc_ids():
+        return sorted(r["doc_id"] for r in
+                      read_output(spark, out_dir).select("doc_id").collect())
 
-    # mid-compaction crash on a COMMITTED wave: live dir moved to scratch
-    scratch = os.path.join(out_dir, "_compact")
-    os.makedirs(scratch, exist_ok=True)
-    os.rename(wave_dir(out_dir, 0), os.path.join(scratch, "wave=0.old"))
+    rows_before = doc_ids()
+    real_publish = SnapshotStore.publish
 
-    # resume the job (processes only pending buckets), then read
+    def publish(self, wave, record):
+        if crash == "after_publish":
+            real_publish(self, wave, record)
+        raise RuntimeError("injected compaction crash")
+
+    monkeypatch.setattr(SnapshotStore, "publish", publish)
+    with pytest.raises(RuntimeError, match="injected compaction crash"):
+        compact_output(spark, out_dir, target_file_bytes=1 << 30)
+    monkeypatch.undo()
+    store = SnapshotStore(out_dir)
+    assert len(store.dirs_at(0)) == 2  # the leftover is on disk, unread
+    assert doc_ids() == rows_before
+
     run_convert_job(spark, corpus, out_dir, n_buckets=8, waves=4)
     final = read_output(spark, out_dir)
     assert final.count() == N_DOCS
     assert final.select("doc_id").distinct().count() == N_DOCS
-    assert os.path.isdir(wave_dir(out_dir, 0))
+    compact_output(spark, out_dir, target_file_bytes=1 << 30)
+    assert sorted(os.listdir(os.path.join(out_dir, "out_spans"))) == sorted(
+        os.path.basename(d) for d in store.committed_dirs())
+    assert read_output(spark, out_dir).count() == N_DOCS
 
 
 def test_ingest_drops_land_in_metrics_sink(spark, tmp_path):

@@ -22,6 +22,22 @@ def test_soak_runs_outside_the_repo(tmp_path):
     assert result["exactly_once"] and result["n_docs"] == 300
 
 
+def test_media_soak_runs_outside_the_repo(tmp_path):
+    """A small media soak: the crash + resume of its image branch and its
+    two other outputs read back each blob exactly once, and the error rows
+    are exactly the planted poison."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(MEDIA_SOAK_OUT=str(tmp_path / "media"))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "media_soak.py"),
+         "300", "2"],
+        capture_output=True, text=True, cwd=tmp_path, env=env, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result["exactly_once"] and result["n_blobs"] == 300
+    assert result["n_error_rows"] == result["n_poison_planted"] > 0
+
+
 def test_convert_job_runs_outside_the_repo(tmp_path):
     corpus = tmp_path / "corpus"
     corpus.mkdir()
@@ -35,6 +51,7 @@ def test_convert_job_runs_outside_the_repo(tmp_path):
          "--local", "2"],
         capture_output=True, text=True, cwd=tmp_path, env=env, timeout=600)
     assert proc.returncode == 0, proc.stderr[-2000:]
-    with open(tmp_path / "out" / "manifest.json") as f:
-        manifest = json.load(f)
+    from marky_spark.pipeline import SnapshotStore
+
+    manifest = SnapshotStore(str(tmp_path / "out")).read()
     assert manifest["committed_buckets"] and manifest["snapshots"]
