@@ -336,3 +336,170 @@ def test_real_script_style_elements_never_leak_under_soup():
             "<p>x</p><script>ZZSECRETZZ</script>" + post
         out = "".join(s[1] for s in convert_html(doc))
         assert "ZZSECRETZZ" not in out, doc
+
+
+# --- output pins over the shapes the frozen goldens miss ---
+#
+# The 2000-doc frozen goldens carry no mega html doc and no link. Each row
+# below is the md5 of every ``convert_html`` segment over one generated
+# shape: the durable benchmark shape's html docs (mega docs included),
+# link-dense pages that density pruning cuts (and pages that fall back to
+# the blacklist-only tree), pages with images, entity/rawtext/unclosed-tag
+# soup, and the same pages under ``strip="blacklist"``.
+
+import hashlib
+import random
+
+_PIN_WORDS = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+              "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+
+
+def _pin_words(rng, n):
+    return " ".join(rng.choice(_PIN_WORDS) for _ in range(n))
+
+
+def _pin_durable_docs():
+    from marky_spark.corpus import _pick_kind, make_synth_doc
+
+    return [make_synth_doc(i, mega_every=50, mega_factor=100)["spans"][0]["text"]
+            for i in range(2000) if _pick_kind(i) == "html"]
+
+
+def _pin_link_block(rng, tag, n_links, words=1):
+    links = " ".join(f'<a href="/u{rng.randint(0, 99)}?a=1&amp;b=2">'
+                     f"{_pin_words(rng, words)}</a>" for _ in range(n_links))
+    if tag in ("ul", "ol", "menu"):
+        return f"<{tag}>" + "".join(f"<li>{links}</li>" for _ in range(2)) \
+            + f"</{tag}>"
+    if tag == "table":
+        return f"<table><tr><td>{links}</td><td>x</td></tr></table>"
+    return f"<{tag} class='c'>{links}</{tag}>"
+
+
+def _pin_link_pages():
+    rng = random.Random(17)
+    pages = []
+    for k in range(300):
+        parts = ["<html><head><title>t</title><script>var s=1;</script>"
+                 "</head><body>"]
+        if rng.random() < 0.5:
+            parts.append(_pin_link_block(rng, "nav", 4))
+        for _ in range(rng.randint(1, 6)):
+            r = rng.random()
+            if r < 0.4:
+                tag = rng.choice(["div", "section", "header", "ul", "ol",
+                                  "table", "menu"])
+                parts.append(_pin_link_block(rng, tag, rng.randint(1, 12),
+                                             rng.randint(1, 3)))
+            elif r < 0.8:
+                inner = _pin_words(rng, rng.randint(3, 60))
+                if rng.random() < 0.5:
+                    inner += f' <a href="https://e.x/{k}">{_pin_words(rng, 2)}</a>'
+                wrap = rng.choice(["p", "div", "article", "section"])
+                parts.append(f"<{wrap}><p>{inner}</p></{wrap}>")
+            else:
+                parts.append(f"<div><div>{_pin_link_block(rng, 'div', 3)}"
+                             f"<p>{_pin_words(rng, rng.randint(0, 8))}</p>"
+                             "</div></div>")
+        if rng.random() < 0.3:
+            parts.append("<footer><a href='/tos'>Terms</a></footer>")
+        parts.append("</body></html>")
+        pages.append("".join(parts))
+    # all text inside link-dense containers: pruning empties the page and
+    # the blacklist-only fallback is what is emitted
+    links = "<a href='u'>link</a>" * 9
+    for n in range(1, 6):
+        pages.append("<html><body><script>var secret=1;</script>"
+                     + "".join("<div>" + links + "</div>" for _ in range(n))
+                     + "</body></html>")
+        pages.append("<section>" + "<ul><li><a href='#'>a</a></li>"
+                     "<li><a href='#'>b</a></li></ul>" * n + "</section>")
+    return pages
+
+
+def _pin_image_pages():
+    rng = random.Random(23)
+    shapes = [
+        '<p><img src="{s}" alt="{a}"></p>',
+        '<p>{w} <img alt=" {a}  x " src="{s}"> {w}</p>',
+        '<a href="/l"><img src="{s}" alt="{a}"></a>',
+        '<ul><li>{w} <img src="{s}"></li><li><img src="{s}" alt="{a}"></li></ul>',
+        '<blockquote><p>{w}</p><img src="{s}" alt="{a}">\n{w}</blockquote>',
+        '<table><tr><td><img src="{s}" alt="{a}"></td><td>{w}</td></tr></table>',
+        '<h2>{w} <img src="{s}" alt="{a}"></h2>',
+        '<div><img src="{s}"><img src="{s}" alt="{a}"></div>{w}',
+        '<em><img src="{s}" alt="{a}"></em> <strong>{w}<img src="{s}"></strong>',
+        '<img src="{s}" alt="&amp;{a}&lt;">',
+        '<p>   <img src="{s}">   </p><p> </p>',
+        '<a><img src="{s}"></a><a href="">  </a>',
+    ]
+    pages = []
+    for k in range(200):
+        body = "".join(
+            rng.choice(shapes).format(s=f"img/{k}-{j}.png",
+                                      a=_pin_words(rng, rng.randint(0, 3)),
+                                      w=_pin_words(rng, rng.randint(0, 5)))
+            for j in range(rng.randint(1, 5)))
+        pages.append(f"<html><body>{body}</body></html>")
+    return pages
+
+
+def _pin_soup_pages():
+    rng = random.Random(29)
+    noise = [
+        "<p>", "</p>", "<div>", "</div>", "<b>", "</b>", "<em>", "</i>",
+        "<li>", "<ul>", "</ul>", "<ol>", "<table>", "<tr>", "<td>", "<th>",
+        "</table>", "<br>", "<br/>", "<hr>", "<h3>", "</h3>", "<pre>",
+        "</pre>", "<code>", "</code>", "<blockquote>", "</blockquote>",
+        "<a href='x&amp;y'>", "</a>", "<a>", "<", ">", "</", "<!--",
+        "-->", "<!DOCTYPE html>", "<?php x ?>", "<![CDATA[c]]>",
+        "<script>if (a<b) {}</script>", "<style>p>a{}</style>",
+        "<script>never closed", "<STYLE>x</style >", "<p class=a b='c'>",
+        "&amp;", "&lt;", "&gt;", "&quot;", "&#39;", "&#x1F600;", "&nbsp;",
+        "&bogus;", "&amp", "&#0;", "&copy", " ", "  \n\t ", "\n", "word",
+        "中文", "😀", "<del>", "</del>", "<dl><dt>t<dd>d</dl>",
+        "<img src=q.png alt='a&amp;b'>", "<input>", "<nav>", "</nav>",
+        "<span title='&#39;'>", "</span>", "<P>", "<DiV>",
+    ]
+    pages = []
+    for _ in range(400):
+        pages.append("".join(rng.choice(noise)
+                             for _ in range(rng.randint(1, 60))))
+    return pages
+
+
+def _pin_md5(pages, strip=True):
+    h = hashlib.md5()
+    for page in pages:
+        h.update(repr(convert_html(page, strip=strip)).encode(
+            "utf-8", "surrogatepass"))
+        h.update(b"\x00")
+    return h.hexdigest()
+
+
+HTML_PINS = {
+    "durable_synth": "7eb4fea8894a92df874c11bc5696bd9b",
+    "link_dense": "1322fd1584dcb86639036e716a5be7a7",
+    "images": "a731bb951bb5ecc6054da93e594162e9",
+    "soup": "8b6a274e6fac60b7288557df269ab2b7",
+    "blacklist_link_dense": "607b7a5c48f2283175ae0c0116c5edf8",
+    "blacklist_soup": "cb6d6e362a5a5196e4e909f7ef216d00",
+}
+
+
+def _pin_cases():
+    link, imgs, soup = _pin_link_pages(), _pin_image_pages(), _pin_soup_pages()
+    return {
+        "durable_synth": (_pin_durable_docs(), True),
+        "link_dense": (link, True),
+        "images": (imgs, True),
+        "soup": (soup, True),
+        "blacklist_link_dense": (link, "blacklist"),
+        "blacklist_soup": (soup, "blacklist"),
+    }
+
+
+def test_html_output_pins():
+    got = {name: _pin_md5(pages, strip)
+           for name, (pages, strip) in _pin_cases().items()}
+    assert got == HTML_PINS
