@@ -4,9 +4,10 @@ Replaces the reference's html-to-markdown v2 dependency (html.go:26-38) with
 a three-stage stdlib pipeline, per the north rule ("tokenize HTML
 byte-streams, strip boilerplate via DOM-tree heuristics"):
 
-1. **Tokenize → DOM**: tolerant ``html.parser.HTMLParser`` subclass builds a
-   lightweight element tree (malformed HTML never errors —
-   html_test.go:260-286 contract).
+1. **Tokenize → DOM**: one regex pass builds a lightweight element tree
+   (malformed HTML never errors — html_test.go:260-286 contract). Each
+   element's subtree text statistics are folded in when the tokenizer
+   closes it, so the strip stage never walks the tree to measure it.
 2. **Boilerplate strip**: hard tag blacklist (script/style/head/nav/footer/
    aside/form/svg/…) plus link-density pruning of container blocks
    (Kohlschütter et al., WSDM 2010 shallow-text-features lineage): a
@@ -27,7 +28,7 @@ import re
 from html import unescape as _html_unescape
 from html.parser import HTMLParser
 
-from .base import Segment, image, md, merge_markdown
+from .base import ConvertError, Segment, image, md
 
 # ---------------------------------------------------------------------------
 # Stage 1 — tolerant DOM builder
@@ -54,14 +55,58 @@ _IMPLIED_CLOSE = {
     "option": {"option"},
 }
 
+_DROP_TAGS = frozenset(
+    (
+        "script style noscript template head title meta link base nav footer "
+        "aside form button svg iframe object embed canvas select input "
+        "textarea audio video dialog"
+    ).split()
+)
+
 
 class Element:
-    __slots__ = ("tag", "attrs", "children")
+    """One element. ``stats`` is ``[text, linked, links, elements, drops]``
+    of its subtree, complete once the tokenizer has closed it: collapsed
+    text length, the part of it inside links, ``<a>`` count, element count
+    (blacklisted subtrees count as one element and nothing else) and the
+    number of blacklisted subtrees."""
+
+    __slots__ = ("tag", "attrs", "children", "stats")
 
     def __init__(self, tag: str, attrs: dict[str, str]):
         self.tag = tag
         self.attrs = attrs
         self.children: list[Element | str] = []
+        self.stats = [0, 0, 0, 1, 0]
+
+
+def _text_len(text: str) -> int:
+    # collapsed-and-stripped length; split() is whitespace-identical to \s+
+    return len(" ".join(text.split()))
+
+
+def _fold(el: Element, into: list[int]) -> None:
+    """Add closed element ``el``'s subtree stats to its parent's."""
+    if el.tag in _DROP_TAGS:
+        into[3] += 1
+        into[4] += 1
+        return
+    s = el.stats
+    if el.tag == "a":
+        s[1] = s[0]
+        s[2] += 1
+    into[0] += s[0]
+    into[1] += s[1]
+    into[2] += s[2]
+    into[3] += s[3]
+    into[4] += s[4]
+
+
+def _close(stack: list[Element], i: int) -> None:
+    """Close the open elements ``stack[i:]``, innermost first."""
+    for j in range(len(stack) - 1, i - 1, -1):
+        _fold(stack[j], stack[j - 1].stats)
+    del stack[i:]
 
 
 class _DomBuilder(HTMLParser):
@@ -71,28 +116,36 @@ class _DomBuilder(HTMLParser):
         self.stack = [self.root]
 
     def handle_starttag(self, tag: str, attrs) -> None:
+        stack = self.stack
         closes = _IMPLIED_CLOSE.get(tag)
-        while closes and len(self.stack) > 1 and self.stack[-1].tag in closes:
-            self.stack.pop()
+        i = len(stack)
+        while closes and i > 1 and stack[i - 1].tag in closes:
+            i -= 1
+        _close(stack, i)
         el = Element(tag, {k: (v or "") for k, v in attrs})
-        self.stack[-1].children.append(el)
-        if tag not in _VOID_TAGS and len(self.stack) < _MAX_DEPTH:
-            self.stack.append(el)
+        stack[-1].children.append(el)
+        if tag not in _VOID_TAGS and len(stack) < _MAX_DEPTH:
+            stack.append(el)
+        else:
+            _fold(el, stack[-1].stats)
 
     def handle_startendtag(self, tag: str, attrs) -> None:
         el = Element(tag, {k: (v or "") for k, v in attrs})
         self.stack[-1].children.append(el)
+        _fold(el, self.stack[-1].stats)
 
     def handle_endtag(self, tag: str) -> None:
         # close the nearest matching open element; ignore stray end tags
         for i in range(len(self.stack) - 1, 0, -1):
             if self.stack[i].tag == tag:
-                del self.stack[i:]
+                _close(self.stack, i)
                 return
 
     def handle_data(self, data: str) -> None:
         if data:
-            self.stack[-1].children.append(data)
+            top = self.stack[-1]
+            top.children.append(data)
+            top.stats[0] += _text_len(data)
 
 
 def parse_html_stdlib(text: str) -> Element:
@@ -102,6 +155,7 @@ def parse_html_stdlib(text: str) -> Element:
     builder = _DomBuilder()
     builder.feed(text)
     builder.close()
+    _close(builder.stack, 1)
     return builder.root
 
 
@@ -140,13 +194,11 @@ _RAWTEXT_CLOSE = {
     t: re.compile(rf"</\s*{t}\s*>", re.IGNORECASE) for t in _RAWTEXT_TAGS
 }
 
-_AMP = "&"
-
 
 def _decode(text: str) -> str:
     """Entity decode only when an ampersand is present (html.unescape is
     surprisingly expensive on entity-free text)."""
-    if _AMP in text:
+    if "&" in text:
         return _html_unescape(text)
     return text
 
@@ -159,62 +211,76 @@ def parse_html(text: str) -> Element:
     subset we emit from (verified differentially in tests/test_html.py)."""
     root = Element("#root", {})
     stack = [root]
+    kids, stats = root.children, root.stats
     pos = 0
     n = len(text)
-
-    def flush(upto: int, start: int) -> None:
-        if start < upto:
-            chunk = text[start:upto]
-            stack[-1].children.append(_decode(chunk))
-
     while pos < n:
-        m = _TOKEN_RE.search(text, pos)
-        if m is None:
-            flush(n, pos)
+        # restarted only after a rawtext element, whose body is skipped
+        for m in _TOKEN_RE.finditer(text, pos):
+            start, end = m.span()
+            if pos < start:
+                # _decode and _text_len, inlined: the loop's hottest lines
+                chunk = text[pos:start]
+                if "&" in chunk:
+                    chunk = _html_unescape(chunk)
+                kids.append(chunk)
+                stats[0] += len(" ".join(chunk.split()))
+            pos = end
+            end_tag, start_tag, raw_attrs, slash = m.groups()
+            if end_tag is not None:
+                tag = end_tag.lower()
+                top = stack[-1]
+                if top.tag == tag and len(stack) > 1:
+                    del stack[-1]
+                    kids, stats = stack[-1].children, stack[-1].stats
+                    _fold(top, stats)
+                    continue
+                for i in range(len(stack) - 2, 0, -1):
+                    if stack[i].tag == tag:
+                        _close(stack, i)
+                        kids, stats = stack[-1].children, stack[-1].stats
+                        break
+                continue
+            if start_tag is None:
+                continue  # comment / doctype / PI
+            tag = start_tag.lower()
+            attrs: dict[str, str] = {}
+            if raw_attrs:
+                for name, value in _ATTR_RE.findall(raw_attrs):
+                    if len(value) >= 2 and value[0] in "\"'" and value[0] == value[-1]:
+                        value = value[1:-1]
+                    attrs[name.lower()] = _decode(value)
+
+            closes = _IMPLIED_CLOSE.get(tag)
+            if closes and stack[-1].tag in closes:
+                i = len(stack) - 1
+                while i > 1 and stack[i - 1].tag in closes:
+                    i -= 1
+                _close(stack, i)
+                kids, stats = stack[-1].children, stack[-1].stats
+            el = Element(tag, attrs)
+            kids.append(el)
+            if slash or tag in _VOID_TAGS or len(stack) >= _MAX_DEPTH:
+                _fold(el, stats)
+            elif tag in _RAWTEXT_TAGS:
+                cm = _RAWTEXT_CLOSE[tag].search(text, pos)
+                raw_end = cm.start() if cm else n
+                if raw_end > pos:
+                    el.children.append(text[pos:raw_end])
+                pos = cm.end() if cm else n
+                _fold(el, stats)
+                break
+            else:
+                stack.append(el)
+                kids, stats = el.children, el.stats
+        else:
+            if pos < n:
+                chunk = _decode(text[pos:])
+                kids.append(chunk)
+                stats[0] += _text_len(chunk)
             break
-        flush(m.start(), pos)
-        pos = m.end()
-        end_tag, start_tag = m.group(1), m.group(2)
-        if end_tag is not None:
-            tag = end_tag.lower()
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    del stack[i:]
-                    break
-            continue
-        if start_tag is None:
-            continue  # comment / doctype / PI
-        tag = start_tag.lower()
-        attrs: dict[str, str] = {}
-        raw_attrs = m.group(3)
-        if raw_attrs:
-            for am in _ATTR_RE.finditer(raw_attrs):
-                name = am.group(1).lower()
-                value = am.group(2)
-                if value is None:
-                    attrs[name] = ""
-                elif value[:1] in "\"'" and value[:1] == value[-1:] and len(value) >= 2:
-                    attrs[name] = _decode(value[1:-1])
-                else:
-                    attrs[name] = _decode(value)
-        self_closing = m.group(4) == "/"
 
-        closes = _IMPLIED_CLOSE.get(tag)
-        while closes and len(stack) > 1 and stack[-1].tag in closes:
-            stack.pop()
-        el = Element(tag, attrs)
-        stack[-1].children.append(el)
-        if self_closing or tag in _VOID_TAGS or len(stack) >= _MAX_DEPTH:
-            continue
-        if tag in _RAWTEXT_TAGS:
-            cm = _RAWTEXT_CLOSE[tag].search(text, pos)
-            raw_end = cm.start() if cm else n
-            if raw_end > pos:
-                el.children.append(text[pos:raw_end])
-            pos = cm.end() if cm else n
-            continue
-        stack.append(el)
-
+    _close(stack, 1)
     return root
 
 
@@ -222,84 +288,38 @@ def parse_html(text: str) -> Element:
 # Stage 2 — boilerplate strip
 # ---------------------------------------------------------------------------
 
-_DROP_TAGS = frozenset(
-    (
-        "script style noscript template head title meta link base nav footer "
-        "aside form button svg iframe object embed canvas select input "
-        "textarea audio video dialog"
-    ).split()
-)
-
 _PRUNE_CANDIDATES = frozenset("div section header ul ol table menu".split())
-
-_WS_RE = re.compile(r"\s+")
-
-
-def _text_stats(node: Element | str, in_link: bool = False,
-                memo: dict[int, tuple[int, int, int, int]] | None = None
-                ) -> tuple[int, int, int, int]:
-    """(total_text_chars, linked_text_chars, n_links, n_elements) of a
-    subtree.
-
-    One bottom-up pass with per-element memoization — strip_boilerplate
-    queries stats for every candidate container, which without the memo is
-    quadratic in tree depth (measured: ~40% of the whole HTML kernel)."""
-    if isinstance(node, str):
-        # collapsed-and-stripped length; split() is whitespace-identical to
-        # \s+ (verified over the BMP) and ~1.6x cheaper than regex sub
-        words = node.split()
-        n = sum(len(w) for w in words) + len(words) - 1 if words else 0
-        return n, n if in_link else 0, 0, 0
-    if memo is not None and not in_link:
-        cached = memo.get(id(node))
-        if cached is not None:
-            return cached
-    if node.tag in _DROP_TAGS:
-        return 0, 0, 0, 1
-    total = linked = links = 0
-    elements = 1
-    is_link = in_link or node.tag == "a"
-    if node.tag == "a":
-        links += 1
-    for child in node.children:
-        t, l, k, e = _text_stats(child, is_link, memo)
-        total += t
-        linked += l
-        links += k
-        elements += e
-    if memo is not None and not in_link:
-        memo[id(node)] = (total, linked, links, elements)
-    return total, linked, links, elements
 
 
 def strip_boilerplate(root: Element) -> Element:
-    memo: dict[int, tuple[int, int, int, int]] = {}
-    doc_text, _, _, _ = _text_stats(root, memo=memo)
+    doc_text = root.stats[0]
+    cut = 0  # text of the pruned containers
 
     def prune(node: Element) -> Element | None:
         """Non-destructive: returns the ORIGINAL node when its subtree is
-        untouched (no allocation, memo stays valid), a rebuilt copy only on
-        the path to a dropped descendant — the original tree stays intact so
-        the safety net below can genuinely fall back to it."""
+        untouched, a rebuilt copy only on the path to a dropped descendant
+        — the original tree stays intact so the safety net below can
+        genuinely fall back to it."""
+        nonlocal cut
         if node.tag in _DROP_TAGS:
             return None
+        total, linked, links, elements, drops = node.stats
+        # neither density rule fires below 2 links: nothing here changes
+        if not drops and links < 2:
+            return node
         if node.tag in _PRUNE_CANDIDATES and doc_text > 0:
-            total, linked, links, elements = _text_stats(node, memo=memo)
             small_share = total <= 0.4 * doc_text
             link_density = linked / total if total else 1.0
             # shallow-text-feature scoring (Kohlschütter WSDM'10 lineage):
-            # (a) link-dominated block: most of its text is anchor text
-            if total > 0 and links >= 2 and link_density >= 0.66 and small_share:
-                return None
+            # (a) link-dominated block: most of its text is anchor text, or
             # (b) low text density + substantial link share: markup-heavy
             # chrome (menus, tag clouds, pagination) — few chars per element
-            text_density = total / elements if elements else 0.0
-            if (
-                links >= 3
-                and link_density >= 0.5
-                and text_density < 12.0
-                and small_share
+            if small_share and (
+                (total > 0 and links >= 2 and link_density >= 0.66)
+                or (links >= 3 and link_density >= 0.5
+                    and total / elements < 12.0)
             ):
+                cut += total
                 return None
         changed = False
         kept: list[Element | str] = []
@@ -319,9 +339,7 @@ def strip_boilerplate(root: Element) -> Element:
         return new
 
     pruned = prune(root)
-    # safety-net check reuses the memo: shared (unchanged) subtrees resolve
-    # instantly, only rebuilt spine nodes are re-walked
-    if pruned is None or (doc_text > 0 and _text_stats(pruned, memo=memo)[0] == 0):
+    if pruned is None or (doc_text > 0 and cut == doc_text):
         # density pruning nuked everything — fall back to the original tree
         # minus the hard-blacklist subtrees (script/style/nav/... must never
         # leak into output, even on the safety path)
@@ -330,6 +348,8 @@ def strip_boilerplate(root: Element) -> Element:
 
 
 def _drop_tags_only(node: Element) -> Element:
+    if not node.stats[4]:
+        return node
     new = Element(node.tag, node.attrs)
     new.children = [
         (_drop_tags_only(c) if isinstance(c, Element) else c)
@@ -342,177 +362,175 @@ def _drop_tags_only(node: Element) -> Element:
 # ---------------------------------------------------------------------------
 # Stage 3 — Markdown emitter
 # ---------------------------------------------------------------------------
-
-# parts: str = markdown text, tuple = ('img', alt, src)
-_Part = str | tuple[str, str, str]
+#
+# Every emit step works on plain strings. An image travels inside them as
+# the code ``<sent><index><sent>``, where ``sent`` is a lone surrogate the
+# document does not contain: entity decoding never yields one, so no text
+# or attribute of the tree holds it, and no whitespace rule touches it.
+# ``convert_html`` splits the codes out into image segments at the end.
 
 _BLOCK_TAGS = frozenset(
     (
         "p h1 h2 h3 h4 h5 h6 ul ol table pre blockquote hr div section "
         "article main body html figure figcaption address details summary "
-        "center dl dd dt li tr"
+        "center dl dd dt li tr #root"
     ).split()
 )
 
-_HEADINGS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
+_HEADINGS = {"h1": "# ", "h2": "## ", "h3": "### ", "h4": "#### ",
+             "h5": "##### ", "h6": "###### "}
+
+_WRAPS = {"em": "*", "i": "*", "strong": "**", "b": "**",
+          "del": "~~", "s": "~~", "strike": "~~"}
+
+_SENT = "\udfff"
+
+
+def _sentinel(text: str) -> str:
+    """The image-code delimiter for a document: a lone surrogate that
+    ``text`` does not contain."""
+    if _SENT not in text:
+        return _SENT
+    for cp in range(0xDFFE, 0xD7FF, -1):
+        if chr(cp) not in text:
+            return chr(cp)
+    raise ConvertError("document holds every lone surrogate")
 
 
 def _collapse(text: str) -> str:
-    return _WS_RE.sub(" ", text)
+    """Each whitespace run → one space, as ``re.sub(r"\\s+", " ", text)``."""
+    if "  " not in text and text.isprintable():
+        return text  # its only whitespace is single spaces
+    words = text.split()
+    if not words:
+        return " " if text else ""
+    out = " ".join(words)
+    if text[0].isspace():
+        out = " " + out
+    if text[-1].isspace():
+        out += " "
+    return out
 
 
 def _raw_text(node: Element | str) -> str:
     """Verbatim text content (for <pre>/<code>)."""
     if isinstance(node, str):
         return node
-    return "".join(_raw_text(c) for c in node.children)
+    return "".join([_raw_text(c) for c in node.children])
 
 
 class _Emitter:
-    def __init__(self) -> None:
-        self.blocks: list[list[_Part]] = []
+    def __init__(self, sent: str = _SENT,
+                 images: list[tuple[str, str]] | None = None) -> None:
+        self.blocks: list[str] = []
+        self.sent = sent
+        self.images = [] if images is None else images
 
     # -- inline ------------------------------------------------------------
 
-    def inline(self, node: Element | str) -> list[_Part]:
+    def inline(self, node: Element | str) -> str:
         if isinstance(node, str):
-            return [_collapse(node)]
+            return _collapse(node)
         tag = node.tag
-        if tag == "br":
-            return ["\n"]
-        if tag == "img":
-            alt = _collapse(node.attrs.get("alt", "")).strip()
-            src = node.attrs.get("src", "")
-            return [("img", alt, src)]
-        if tag in ("em", "i"):
-            return self._wrap(node, "*")
-        if tag in ("strong", "b"):
-            return self._wrap(node, "**")
-        if tag in ("del", "s", "strike"):
-            return self._wrap(node, "~~")
-        if tag == "code":
-            return [f"`{_raw_text(node)}`"]
+        marker = _WRAPS.get(tag)
+        if marker is not None:
+            text = self._children_inline(node).strip()
+            return f"{marker}{text}{marker}" if text else ""
         if tag == "a":
-            parts = self._children_inline(node)
-            text = _parts_strip(parts)
+            text = self._children_inline(node).strip()
             href = node.attrs.get("href", "")
-            if not _parts_text(text).strip() and not href:
-                return []
-            if href:
-                return ["["] + text + [f"]({href})"]
-            return text
+            return f"[{text}]({href})" if href else text
+        if tag == "br":
+            return "\n"
+        if tag == "img":
+            self.images.append((_collapse(node.attrs.get("alt", "")).strip(),
+                                node.attrs.get("src", "")))
+            return f"{self.sent}{len(self.images) - 1}{self.sent}"
+        if tag == "code":
+            return f"`{_raw_text(node)}`"
         return self._children_inline(node)
 
-    def _wrap(self, node: Element, marker: str) -> list[_Part]:
-        parts = _parts_strip(self._children_inline(node))
-        if not _parts_text(parts):
-            return []
-        return [marker] + parts + [marker]
-
-    def _children_inline(self, node: Element) -> list[_Part]:
-        out: list[_Part] = []
-        for child in node.children:
-            out.extend(self.inline(child))
-        return out
+    def _children_inline(self, node: Element) -> str:
+        return "".join([
+            _collapse(c) if isinstance(c, str) else self.inline(c)
+            for c in node.children
+        ])
 
     # -- blocks ------------------------------------------------------------
 
-    def block(self, node: Element | str) -> None:
-        if isinstance(node, str):
-            if node.strip():
-                self._add([_collapse(node)])
-            return
+    def block(self, node: Element) -> None:
         tag = node.tag
-        if tag in _HEADINGS:
-            parts = _parts_strip(self._children_inline(node))
-            if parts:
-                self._add(["#" * _HEADINGS[tag] + " "] + parts)
-            return
         if tag == "p":
-            parts = _parts_strip(self._children_inline(node))
-            if parts:
-                self._add(parts)
+            self._add(self._children_inline(node).strip())
+            return
+        if tag in _HEADINGS:
+            text = self._children_inline(node).strip()
+            if text:
+                self.blocks.append(_HEADINGS[tag] + text)
+            return
+        if tag in ("ul", "ol"):
+            self._add(self._list(node, depth=0))
             return
         if tag == "hr":
-            self._add(["---"])
+            self.blocks.append("---")
             return
         if tag == "pre":
             body = _raw_text(node).strip("\n")
-            self._add([f"```\n{body}\n```"])
-            return
-        if tag in ("ul", "ol"):
-            parts = self._list(node, depth=0)
-            if parts:
-                self._add(parts)
+            self.blocks.append(f"```\n{body}\n```")
             return
         if tag == "table":
             self._table(node)
             return
         if tag == "blockquote":
-            sub = _Emitter()
+            sub = _Emitter(self.sent, self.images)
             for child in node.children:
                 sub.dispatch(child)
-            parts = _blocks_join(sub.blocks)
-            if parts:
-                self._add(_quote(parts))
+            if sub.blocks:
+                self.blocks.append(_quote(_blocks_join(sub.blocks)))
             return
         # generic containers: recurse block-wise, flushing inline runs
-        self._container(node)
-
-    def _container(self, node: Element) -> None:
-        run: list[_Part] = []
-
-        def flush() -> None:
-            nonlocal run
-            parts = _parts_strip(run)
-            if parts:
-                self._add(parts)
-            run = []
-
+        run: list[str] = []
         for child in node.children:
-            if isinstance(child, Element) and (
-                child.tag in _BLOCK_TAGS or child.tag in ("#root",)
-            ):
-                flush()
-                self.dispatch(child)
+            if isinstance(child, str):
+                run.append(_collapse(child))
+            elif child.tag in _BLOCK_TAGS:
+                if run:
+                    self._add("".join(run).strip())
+                    run = []
+                self.block(child)
             else:
-                run.extend(self.inline(child))
-        flush()
+                run.append(self.inline(child))
+        if run:
+            self._add("".join(run).strip())
 
     def dispatch(self, node: Element | str) -> None:
         if isinstance(node, str):
             if node.strip():
-                self._add([_collapse(node).strip()])
+                self.blocks.append(_collapse(node).strip())
             return
         self.block(node)
 
     # -- list / table helpers ------------------------------------------------
 
-    def _list(self, node: Element, depth: int) -> list[_Part]:
+    def _list(self, node: Element, depth: int) -> str:
         ordered = node.tag == "ol"
-        out: list[_Part] = []
-        counter = 0
+        indent = "  " * depth
+        items: list[str] = []
         for child in node.children:
-            if not (isinstance(child, Element) and child.tag == "li"):
+            if isinstance(child, str) or child.tag != "li":
                 continue
-            counter += 1
-            marker = f"{counter}. " if ordered else "* "
-            item: list[_Part] = []
-            nested: list[_Part] = []
+            marker = f"{len(items) + 1}. " if ordered else "* "
+            line: list[str] = []
+            nested: list[str] = []
             for sub in child.children:
-                if isinstance(sub, Element) and sub.tag in ("ul", "ol"):
-                    nested.extend(self._list(sub, depth + 1))
+                if not isinstance(sub, str) and sub.tag in ("ul", "ol"):
+                    nested.append(self._list(sub, depth + 1))
                 else:
-                    item.extend(self.inline(sub))
-            line = _parts_strip(item)
-            if out:
-                out.append("\n")
-            out.append("  " * depth + marker)
-            out.extend(line)
-            if nested:
-                out.append("\n")
-                out.extend(nested)
-        return out
+                    line.append(self.inline(sub))
+            item = indent + marker + "".join(line).strip()
+            sub_lists = "".join(nested)
+            items.append(f"{item}\n{sub_lists}" if sub_lists else item)
+        return "\n".join(items)
 
     def _table(self, node: Element) -> None:
         from .mdtable import to_markdown_table
@@ -521,14 +539,14 @@ class _Emitter:
 
         def walk_rows(el: Element) -> None:
             for child in el.children:
-                if not isinstance(child, Element):
+                if isinstance(child, str):
                     continue
                 if child.tag == "tr":
                     cells = [
-                        _parts_text(self._children_inline(c))
+                        self.render(self._children_inline(c))
                         .replace("\n", " ").strip()
                         for c in child.children
-                        if isinstance(c, Element) and c.tag in ("td", "th")
+                        if not isinstance(c, str) and c.tag in ("td", "th")
                     ]
                     if cells:
                         rows.append(cells)
@@ -536,60 +554,35 @@ class _Emitter:
                     walk_rows(child)
 
         walk_rows(node)
-        table = to_markdown_table(rows).rstrip("\n")
-        if table:
-            self._add([table])
+        self._add(to_markdown_table(rows).rstrip("\n"))
 
-    def _add(self, parts: list[_Part]) -> None:
-        if parts:
-            self.blocks.append(parts)
+    def _add(self, text: str) -> None:
+        if text:
+            self.blocks.append(text)
 
-
-def _parts_text(parts: list[_Part]) -> str:
-    return "".join(
-        p if isinstance(p, str) else f"![{p[1]}]({p[2]})" for p in parts
-    )
+    def render(self, text: str) -> str:
+        """``text`` with each image code replaced by its ``![alt](src)``."""
+        return _parts_text(text, self.images, self.sent)
 
 
-def _parts_strip(parts: list[_Part]) -> list[_Part]:
-    """Trim leading/trailing whitespace across part boundaries; drop empties."""
-    out = [p for p in parts if not (isinstance(p, str) and p == "")]
-    while out and isinstance(out[0], str) and not out[0].strip():
-        out.pop(0)
-    while out and isinstance(out[-1], str) and not out[-1].strip():
-        out.pop()
-    if out and isinstance(out[0], str):
-        out[0] = out[0].lstrip()
-    if out and isinstance(out[-1], str):
-        out[-1] = out[-1].rstrip()
-    # merge adjacent string parts created by tag boundaries
-    merged: list[_Part] = []
-    for p in out:
-        if isinstance(p, str) and merged and isinstance(merged[-1], str):
-            merged[-1] += p
-        else:
-            merged.append(p)
-    return merged
+def _parts_text(text: str, images: list[tuple[str, str]] = (),
+                sent: str = _SENT) -> str:
+    if sent not in text:
+        return text
+    parts = text.split(sent)
+    for i in range(1, len(parts), 2):
+        alt, src = images[int(parts[i])]
+        parts[i] = f"![{alt}]({src})"
+    return "".join(parts)
 
 
-def _blocks_join(blocks: list[list[_Part]]) -> list[_Part]:
-    out: list[_Part] = []
-    for i, b in enumerate(blocks):
-        if i:
-            out.append("\n\n")
-        out.extend(b)
-    return out
+def _blocks_join(blocks: list[str]) -> str:
+    return "\n\n".join(blocks)
 
 
-def _quote(parts: list[_Part]) -> list[_Part]:
+def _quote(text: str) -> str:
     """Prefix every line with '> ' (images kept inline on their line)."""
-    out: list[_Part] = ["> "]
-    for p in parts:
-        if isinstance(p, str):
-            out.append(p.replace("\n", "\n> ").replace("> \n", ">\n"))
-        else:
-            out.append(p)
-    return out
+    return "> " + text.replace("\n", "\n> ").replace("> \n", ">\n")
 
 
 # ---------------------------------------------------------------------------
@@ -613,18 +606,20 @@ def convert_html(text: str,
         root = _drop_tags_only(root)
     elif strip:
         root = strip_boilerplate(root)
-    emitter = _Emitter()
+    emitter = _Emitter(_sentinel(text))
     emitter.dispatch(root)
-    parts = _blocks_join(emitter.blocks)
+    out = _blocks_join(emitter.blocks)
+    if not emitter.images:
+        return [md(out)] if out else []
 
     segments: list[Segment] = []
-    for p in parts:
-        if isinstance(p, str):
-            segments.append(md(p))
-        else:
-            _, alt, src = p
+    for i, part in enumerate(out.split(emitter.sent)):
+        if i % 2:
+            alt, src = emitter.images[int(part)]
             segments.append(image(f"![{alt}]({src})", src))
-    return merge_markdown(segments)
+        elif part:
+            segments.append(md(part))
+    return segments
 
 
 def html_to_markdown(text: str, strip: bool = True) -> str:
