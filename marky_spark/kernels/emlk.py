@@ -29,14 +29,33 @@ Hostile input (no RFC-5322 header block at all) raises
 from __future__ import annotations
 
 import base64
-from email import policy
 from email.parser import Parser
+from email.policy import EmailPolicy
 
 from .base import ConvertError, Segment, image, md, merge_markdown
 from .htmlk import convert_html
 
 _HEADER_LINES = ("from:", "to:", "subject:", "date:", "received:",
                  "mime-version:", "return-path:", "message-id:")
+
+
+# stdlib's structured-header parser splits the rest of a field once per
+# RFC 2047 encoded word, so its time grows with the square of the field
+# (a 448 KB Subject took 16 s); every header it parses is fetched here
+_MAX_HEADER_CHARS = 65536
+
+
+class _BoundedPolicy(EmailPolicy):
+    """``email.policy.default`` that refuses to parse an over-long field."""
+
+    def header_fetch_parse(self, name, value):
+        if len(value) > _MAX_HEADER_CHARS:
+            raise ConvertError(f"header {name[:64]!r} is longer than "
+                               f"{_MAX_HEADER_CHARS} characters")
+        return super().header_fetch_parse(name, value)
+
+
+_POLICY = _BoundedPolicy()
 
 
 def looks_like_eml(text: str) -> bool:
@@ -109,7 +128,9 @@ def convert_eml(text: str) -> list[Segment]:
     if not looks_like_eml(text):
         raise ConvertError("not an email (no RFC 5322 header block)")
     try:
-        msg = Parser(policy=policy.default).parsestr(text)
+        msg = Parser(policy=_POLICY).parsestr(text)
+    except ConvertError:
+        raise
     except Exception as exc:  # noqa: BLE001 — stdlib parser edge cases
         raise ConvertError(f"failed to parse message: {exc}") from exc
 

@@ -76,6 +76,26 @@ class TestEml:
         with pytest.raises(ConvertError, match="email"):
             convert_eml("just a plain paragraph of text")
 
+    def test_encoded_word_subject_renders_decoded(self):
+        words = " ".join(f"=?utf-8?q?w=C3=A9{i}?=" for i in range(400))
+        out = _eml_md(f"From: a@b.c\nSubject: {words}\n\nbody\n")
+        assert out.startswith("# " + "".join(f"wé{i}" for i in range(400)))
+
+    @pytest.mark.parametrize("header", ["Subject: ", "To: ",
+                                        "Content-Type: text/plain; name="])
+    def test_over_long_header_is_typed(self, header):
+        """stdlib's header parser is quadratic in a field's encoded words;
+        a field over the cap is refused before it is parsed, whether the
+        kernel renders it or the MIME walk reads it."""
+        words = " ".join(f"=?utf-8?q?w=C3=A9{i}?=" for i in range(5000))
+        eml = (f"From: a@b.c\nSubject: s\nMIME-Version: 1.0\n"
+               f"Content-Type: multipart/mixed; boundary=X\n\n"
+               f"--X\n{header}{words}\n\nbody\n--X--\n")
+        if header != "Content-Type: text/plain; name=":
+            eml = f"{header}{words}\n" + eml
+        with pytest.raises(ConvertError, match="longer than 65536"):
+            convert_eml(eml)
+
 
 class TestFeed:
     def test_rss_items_render_through_html_kernel(self):
