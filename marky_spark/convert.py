@@ -24,7 +24,13 @@ from pyspark.sql import functions as F
 
 from .kernels import MEDIA_KINDS, REGISTRY, ConvertError, image
 from .kernels.base import merge_markdown
-from .schema import OUTPUT_SCHEMA, STATUS_ERROR, STATUS_OK, STATUS_UNSUPPORTED
+from .schema import (
+    ERROR_TOO_DEEP,
+    OUTPUT_SCHEMA,
+    STATUS_ERROR,
+    STATUS_OK,
+    STATUS_UNSUPPORTED,
+)
 
 _COLUMNS = [f.name for f in OUTPUT_SCHEMA.fields]
 
@@ -84,6 +90,8 @@ def convert_document(doc_id: str, spans: Any) -> dict[str, Any]:
             chunks.append("".join(s[1] for s in segs))
     except ConvertError as exc:
         return _row(doc_id, conv_kind, STATUS_ERROR, str(exc), n_in, [], "")
+    except RecursionError:
+        return _row(doc_id, conv_kind, STATUS_ERROR, ERROR_TOO_DEEP, n_in, [], "")
     except Exception as exc:  # noqa: BLE001 — poison-pill isolation
         return _row(doc_id, conv_kind, STATUS_ERROR,
                     f"{type(exc).__name__}: {exc}", n_in, [], "")

@@ -55,6 +55,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..schema import ERROR_TOO_DEEP
+
 MEDIA_SCHEMA = StructType([
     StructField("media_ref", StringType()),
     StructField("mime", StringType()),
@@ -69,6 +71,8 @@ def _blob_rows(fn: Callable, blob: bytes, width: int) -> list[tuple]:
         got = fn(blob)
     except NotImplementedError:
         status = "codec_unavailable"
+    except RecursionError:
+        status = f"error: {ERROR_TOO_DEEP}"
     except Exception as exc:  # noqa: BLE001 — poison isolation
         typed = type(exc).__module__.startswith("marky_spark.")
         status = f"error: {exc}" if typed else \
@@ -94,8 +98,9 @@ def map_blobs(media: DataFrame, schema: StructType,
     The status rule: a row is ``ok`` (a fan-out row that fills the status
     column itself keeps it, as pdf_media's per-image skips do); None is
     ``unsupported``; a NotImplementedError is ``codec_unavailable``; an
-    error class of this package is ``error: <msg>``; any other exception
-    is ``error: <Type>: <msg>``. A non-``ok`` row is null outside
+    error class of this package is ``error: <msg>``; a RecursionError is
+    ``error: `` + ``schema.ERROR_TOO_DEEP``; any other exception is
+    ``error: <Type>: <msg>``. A non-``ok`` row is null outside
     ``media_ref`` and the status."""
     names = [f.name for f in schema.fields]
 

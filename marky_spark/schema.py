@@ -50,3 +50,7 @@ OUTPUT_SCHEMA = StructType(
 STATUS_OK = "ok"
 STATUS_ERROR = "error"
 STATUS_UNSUPPORTED = "unsupported"
+
+#: the error text of a document or media blob whose conversion exhausted
+#: Python's recursion limit (a RecursionError anywhere in its kernel)
+ERROR_TOO_DEEP = "nesting exceeds the recursion limit"

@@ -126,3 +126,16 @@ def test_drop_marker_spans_become_error_rows():
     assert r["conv_kind"] == "_drop_warc"
     assert r["error"] == "error: records exceed the cap"
     assert r["markdown"] == "" and r["out_spans"] == []
+
+
+def test_recursion_limit_is_one_typed_error():
+    """A document whose nesting exhausts the recursion limit is an error
+    row with one stable text, not the RecursionError's own message."""
+    from marky_spark.convert import convert_document
+
+    deep = '{"nbformat": 4, "cells": ' + "[" * 2000 + "]" * 2000 + "}"
+    r = convert_document("deep", [
+        {"kind": "ipynb", "text": deep, "media_ref": "", "offset": 0}])
+    assert (r["status"], r["conv_kind"]) == ("error", "ipynb")
+    assert r["error"] == "nesting exceeds the recursion limit"
+    assert r["markdown"] == "" and r["out_spans"] == []

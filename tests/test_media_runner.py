@@ -115,6 +115,16 @@ def test_status_rule_types_foreign_and_package_errors():
     assert _blob_rows(lambda b: [], b"", 4) == []
 
 
+def test_status_rule_types_recursion_limit():
+    from marky_spark.ops.multimodal import _blob_rows
+
+    def nest(blob, depth=0):
+        return nest(blob, depth + 1)
+
+    assert _blob_rows(nest, b"x", 4) == [
+        (None, None, "error: nesting exceeds the recursion limit")]
+
+
 # the streamed ingest walks carry the member index in their error rows
 _EXEMPT = {("multimodal.py", "map_blobs"), ("archive.py", "explode_archive"),
            ("warc.py", "warc_records")}
