@@ -543,8 +543,8 @@ class _Emitter:
                     continue
                 if child.tag == "tr":
                     cells = [
-                        self.render(self._children_inline(c))
-                        .replace("\n", " ").strip()
+                        _parts_text(self._children_inline(c), self.images,
+                                    self.sent).replace("\n", " ").strip()
                         for c in child.children
                         if not isinstance(c, str) and c.tag in ("td", "th")
                     ]
@@ -560,13 +560,10 @@ class _Emitter:
         if text:
             self.blocks.append(text)
 
-    def render(self, text: str) -> str:
-        """``text`` with each image code replaced by its ``![alt](src)``."""
-        return _parts_text(text, self.images, self.sent)
-
 
 def _parts_text(text: str, images: list[tuple[str, str]] = (),
                 sent: str = _SENT) -> str:
+    """``text`` with each image code replaced by its ``![alt](src)``."""
     if sent not in text:
         return text
     parts = text.split(sent)
