@@ -230,7 +230,7 @@ def parse_html(text: str) -> Element:
             if end_tag is not None:
                 tag = end_tag.lower()
                 top = stack[-1]
-                if top.tag == tag and len(stack) > 1:
+                if top.tag == tag and len(stack) > 1:  # the usual case
                     del stack[-1]
                     kids, stats = stack[-1].children, stack[-1].stats
                     _fold(top, stats)
