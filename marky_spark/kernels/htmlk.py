@@ -69,7 +69,8 @@ class Element:
     of its subtree, complete once the tokenizer has closed it: collapsed
     text length, the part of it inside links, ``<a>`` count, element count
     (blacklisted subtrees count as one element and nothing else) and the
-    number of blacklisted subtrees."""
+    number of blacklisted subtrees. The strip stage's rebuilt copies do not
+    carry them: only a tokenizer's tree does."""
 
     __slots__ = ("tag", "attrs", "children", "stats")
 
