@@ -105,9 +105,9 @@ def _fold(el: Element, into: list[int]) -> None:
 
 def _close(stack: list[Element], i: int) -> None:
     """Close the open elements ``stack[i:]``, innermost first."""
-    for j in range(len(stack) - 1, i - 1, -1):
-        _fold(stack[j], stack[j - 1].stats)
-    del stack[i:]
+    while len(stack) > i:
+        el = stack.pop()
+        _fold(el, stack[-1].stats)
 
 
 class _DomBuilder(HTMLParser):
@@ -220,27 +220,19 @@ def parse_html(text: str) -> Element:
         for m in _TOKEN_RE.finditer(text, pos):
             start, end = m.span()
             if pos < start:
-                # _decode and _text_len, inlined: the loop's hottest lines
-                chunk = text[pos:start]
-                if "&" in chunk:
-                    chunk = _html_unescape(chunk)
+                chunk = _decode(text[pos:start])
                 kids.append(chunk)
-                stats[0] += len(" ".join(chunk.split()))
+                stats[0] += _text_len(chunk)
             pos = end
             end_tag, start_tag, raw_attrs, slash = m.groups()
             if end_tag is not None:
                 tag = end_tag.lower()
-                top = stack[-1]
-                if top.tag == tag and len(stack) > 1:  # the usual case
-                    del stack[-1]
+                i = len(stack) - 1
+                while i and stack[i].tag != tag:
+                    i -= 1
+                if i:
+                    _close(stack, i)
                     kids, stats = stack[-1].children, stack[-1].stats
-                    _fold(top, stats)
-                    continue
-                for i in range(len(stack) - 2, 0, -1):
-                    if stack[i].tag == tag:
-                        _close(stack, i)
-                        kids, stats = stack[-1].children, stack[-1].stats
-                        break
                 continue
             if start_tag is None:
                 continue  # comment / doctype / PI
@@ -364,11 +356,14 @@ def _drop_tags_only(node: Element) -> Element:
 # Stage 3 — Markdown emitter
 # ---------------------------------------------------------------------------
 #
-# Every emit step works on plain strings. An image travels inside them as
-# the code ``<sent><index><sent>``, where ``sent`` is a lone surrogate the
-# document does not contain: entity decoding never yields one, so no text
-# or attribute of the tree holds it, and no whitespace rule touches it.
+# Every emit step works on plain strings. ``convert_html`` gives the emitter
+# a sentinel: then an image travels inside the strings as the code
+# ``<sent><index><sent>``, where ``sent`` is a lone surrogate the document
+# does not contain (entity decoding never yields one, so no text or
+# attribute of the tree holds it, and no whitespace rule touches it), and
 # ``convert_html`` splits the codes out into image segments at the end.
+# An emitter without a sentinel writes each image as ``![alt](src)`` in
+# place, so its blocks are the document's whole text.
 
 _BLOCK_TAGS = frozenset(
     (
@@ -421,7 +416,7 @@ def _raw_text(node: Element | str) -> str:
 
 
 class _Emitter:
-    def __init__(self, sent: str = _SENT,
+    def __init__(self, sent: str | None = None,
                  images: list[tuple[str, str]] | None = None) -> None:
         self.blocks: list[str] = []
         self.sent = sent
@@ -444,8 +439,11 @@ class _Emitter:
         if tag == "br":
             return "\n"
         if tag == "img":
-            self.images.append((_collapse(node.attrs.get("alt", "")).strip(),
-                                node.attrs.get("src", "")))
+            alt = _collapse(node.attrs.get("alt", "")).strip()
+            src = node.attrs.get("src", "")
+            if self.sent is None:
+                return f"![{alt}]({src})"
+            self.images.append((alt, src))
             return f"{self.sent}{len(self.images) - 1}{self.sent}"
         if tag == "code":
             return f"`{_raw_text(node)}`"
@@ -563,9 +561,10 @@ class _Emitter:
 
 
 def _parts_text(text: str, images: list[tuple[str, str]] = (),
-                sent: str = _SENT) -> str:
-    """``text`` with each image code replaced by its ``![alt](src)``."""
-    if sent not in text:
+                sent: str | None = None) -> str:
+    """``text`` with each image code replaced by its ``![alt](src)``
+    (unchanged when it was emitted without a sentinel)."""
+    if sent is None or sent not in text:
         return text
     parts = text.split(sent)
     for i in range(1, len(parts), 2):

@@ -96,6 +96,21 @@ class TestEml:
         with pytest.raises(ConvertError, match="longer than 65536"):
             convert_eml(eml)
 
+    def test_long_plain_address_list_is_refused_over_the_cap(self):
+        """The cap holds for any field, not only encoded words: a plain
+        To list over 65,536 characters makes the whole message an error
+        (stdlib takes about 1 s on 87 KB of plain addresses), while one
+        just under the cap still renders."""
+        def eml(n):
+            to = ", ".join(f"user{i}@example.com" for i in range(n))
+            return f"From: a@b.c\nTo: {to}\nSubject: s\n\nbody\n"
+
+        under, over = eml(3000), eml(3200)
+        assert len(under) < 65536 < len(over)
+        assert "user2999@example.com" in _eml_md(under)
+        with pytest.raises(ConvertError, match="header 'To' is longer than"):
+            convert_eml(over)
+
 
 class TestFeed:
     def test_rss_items_render_through_html_kernel(self):
