@@ -27,7 +27,7 @@ walking pPr children twice, docx.go:299-313); we wrap the paragraph content
 from __future__ import annotations
 
 import base64
-import fnmatch
+import re
 from xml.etree import ElementTree as ET
 
 from .base import ConvertError, Segment, decode_binary_payload, image, md, merge_markdown
@@ -39,12 +39,11 @@ from .mdtable import _escape, docx_table
 _Part = str | tuple[str, str, str]
 
 
-
-
-
 def _attr(el: ET.Element, name: str) -> str | None:
+    """The first attribute whose local name is ``name``, in any namespace."""
+    suffix = "}" + name
     for k, v in el.attrib.items():
-        if _local(k) == name:
+        if k == name or k.endswith(suffix):
             return v
     return None
 
@@ -54,6 +53,17 @@ def _parse_xml(data: bytes) -> ET.Element:
         return ET.fromstring(data)
     except ET.ParseError as exc:
         raise ConvertError(f"invalid XML: {exc}") from exc
+
+
+# A cell holds its inner table's rows on one line, padded to the widest,
+# so each level of nesting triples the markdown: 8 levels turn one
+# character into 36 KB, 20 would take gigabytes.
+_MAX_TABLE_DEPTH = 8
+
+
+class _TablesTooDeep(ConvertError):
+    """Tables nested deeper than ``_MAX_TABLE_DEPTH``: the whole document
+    is an error row, not an empty cell."""
 
 
 class _NumberingLevel:
@@ -66,7 +76,11 @@ class _NumberingLevel:
 
 
 class _DocxFile:
-    """Per-document conversion state (reference `file` struct, docx.go:143-149)."""
+    """Per-document conversion state (reference `file` struct, docx.go:143-149).
+
+    The walk appends every part to one list, ``self.out``; an element
+    that wraps or rewrites its children's parts (run, hyperlink, table
+    cell, text box) works on its own tail of that list."""
 
     def __init__(self, zf):
         self.zf = zf
@@ -75,6 +89,11 @@ class _DocxFile:
         self.num_map: dict[str, str] = {}
         self.abstract: dict[str, dict[str, _NumberingLevel]] = {}
         self.list_counters: dict[str, int] = {}
+        self.out: list[_Part] = []
+        self.images = 0  # image parts appended to out
+        self.table_depth = 0
+        # tag ('{ns}local') → handler, filled from _HANDLERS by local name
+        self.handlers: dict[str, object] = {}
 
     # -- preamble (O11) ------------------------------------------------------
 
@@ -134,47 +153,58 @@ class _DocxFile:
 
     # -- walk (O12) ----------------------------------------------------------
 
-    def walk(self, node: ET.Element) -> list[_Part]:
-        name = _local(node.tag)
-        if name == "hyperlink":
-            return self._hyperlink(node)
-        if name == "t":
-            return ["".join(node.itertext())]
-        if name == "tbl":
-            return self._table(node)
-        if name == "r":
-            return self._run(node)
-        if name == "p":
-            return self._paragraph(node)
-        if name == "blip":
-            return self._blip(node)
-        if name == "Fallback":
-            return []
-        if name == "txbxContent":
-            inner = _parts_text(self._walk_children(node))
-            return [f"\n```\n{inner}```\n"]
-        return self._walk_children(node)
+    def walk(self, node: ET.Element) -> None:
+        """Append ``node``'s parts to ``self.out``: dispatch on its local
+        name, and walk the children of an element with no handler."""
+        (self.handlers.get(node.tag) or self._handler(node.tag))(self, node)
 
-    def _walk_children(self, node: ET.Element) -> list[_Part]:
-        out: list[_Part] = []
+    def walk_children(self, node: ET.Element) -> None:
+        handlers = self.handlers
         for child in node:
-            out.extend(self.walk(child))
-        return out
+            (handlers.get(child.tag) or self._handler(child.tag))(self, child)
+
+    def _handler(self, tag: str):
+        handler = self.handlers[tag] = _HANDLERS.get(
+            _local(tag), _DocxFile.walk_children)
+        return handler
+
+    def _text(self, node: ET.Element) -> None:
+        self.out.append("".join(node.itertext()) if len(node)
+                        else node.text or "")
+
+    def _fallback(self, node: ET.Element) -> None:
+        pass
+
+    def _textbox(self, node: ET.Element) -> None:
+        self.out.append(f"\n```\n{self._detached_text(node)}```\n")
+
+    def _detached_text(self, node: ET.Element) -> str:
+        """The text of ``node``'s children, taken back off ``self.out``."""
+        out = self.out
+        start = len(out)
+        try:
+            self.walk_children(node)
+            return _parts_text(out[start:])
+        finally:
+            del out[start:]
 
     # -- paragraph + pPr (O15, O16) -------------------------------------------
 
-    def _paragraph(self, node: ET.Element) -> list[_Part]:
+    def _paragraph(self, node: ET.Element) -> None:
+        out = self.out
+        start = len(out)
         prefix: list[str] = []
-        body: list[_Part] = []
         code = False
         for child in node:
             if _local(child.tag) == "pPr":
                 code = self._ppr(child, prefix) or code
             else:
-                body.extend(self.walk(child))
+                self.walk(child)
         if code:
-            body = ["`"] + body + ["`"]
-        return prefix + body + ["\n"]
+            prefix.append("`")
+            out.append("`")
+        out[start:start] = prefix
+        out.append("\n")
 
     def _ppr(self, node: ET.Element, out: list[str]) -> bool:
         code = False
@@ -240,42 +270,49 @@ class _DocxFile:
 
     # -- runs (O13) ------------------------------------------------------------
 
-    def _run(self, node: ET.Element) -> list[_Part]:
+    def _run(self, node: ET.Element) -> None:
         bold = italic = strike = False
+        out = self.out
+        start = len(out)
         for child in node:
-            if _local(child.tag) != "rPr":
-                continue
-            for prop in child:
-                pname = _local(prop.tag)
-                if pname == "b":
-                    bold = True
-                elif pname == "i":
-                    italic = True
-                elif pname == "strike":
-                    strike = True
-        inner = self._walk_children(node)
+            if _local(child.tag) == "rPr":
+                for prop in child:
+                    pname = _local(prop.tag)
+                    if pname == "b":
+                        bold = True
+                    elif pname == "i":
+                        italic = True
+                    elif pname == "strike":
+                        strike = True
+            self.walk(child)
         # escape set *~\ applies to text content only (docx.go:599)
-        inner = [_escape(p, "*~\\") if isinstance(p, str) else p for p in inner]
+        _escape_tail(out, start, _RUN_ESCAPE)
         open_marks = ("~~" if strike else "") + ("**" if bold else "") + ("*" if italic else "")
-        close_marks = ("*" if italic else "") + ("**" if bold else "") + ("~~" if strike else "")
         if open_marks:
-            return [open_marks, *inner, close_marks]
-        return inner
+            out.insert(start, open_marks)
+            out.append(("*" if italic else "") + ("**" if bold else "") + ("~~" if strike else ""))
 
     # -- hyperlink (O14) --------------------------------------------------------
 
-    def _hyperlink(self, node: ET.Element) -> list[_Part]:
-        inner = self._walk_children(node)
-        inner = [_escape(p, "[]") if isinstance(p, str) else p for p in inner]
+    def _hyperlink(self, node: ET.Element) -> None:
+        out = self.out
+        start = len(out)
+        self.walk_children(node)
+        _escape_tail(out, start, _LINK_ESCAPE)
         target = ""
         rid = _attr(node, "id")
         if rid and rid in self.rels:
             target = _escape(self.rels[rid], "()")
-        return ["[", *inner, f"]({target})"]
+        out.insert(start, "[")
+        out.append(f"]({target})")
 
     # -- table (O17) -------------------------------------------------------------
 
-    def _table(self, node: ET.Element) -> list[_Part]:
+    def _table(self, node: ET.Element) -> None:
+        if self.table_depth == _MAX_TABLE_DEPTH:
+            raise _TablesTooDeep(
+                f"tables nested deeper than {_MAX_TABLE_DEPTH}")
+        self.table_depth += 1
         rows: list[list[str]] = []
         for tr in node:
             if _local(tr.tag) != "tr":
@@ -285,39 +322,68 @@ class _DocxFile:
                 if _local(tc.tag) != "tc":
                     continue
                 try:
-                    text = _parts_text(self.walk(tc))
+                    text = self._detached_text(tc)
+                except _TablesTooDeep:
+                    raise
                 except ConvertError:
                     text = ""  # continue on cell failure (docx.go:484-488)
                 cols.append(text.replace("\n", ""))
             if cols:
                 rows.append(cols)
-        if not rows:
-            return []
-        return [docx_table(rows)]
+        self.table_depth -= 1
+        if rows:
+            self.out.append(docx_table(rows))
 
     # -- image (O18) ---------------------------------------------------------------
 
-    def _blip(self, node: ET.Element) -> list[_Part]:
+    def _blip(self, node: ET.Element) -> None:
         rid = _attr(node, "embed")
         if not rid or rid not in self.rels:
-            return []
+            return
         target = self.rels[rid]
         member = f"word/{target}"
         try:
             blob = self.zf.read(member)
         except KeyError:
-            return []
+            return
         b64 = base64.b64encode(blob).decode("ascii")
-        return [("img", f"![](data:image/png;base64,{b64})", member)]
+        self.images += 1
+        self.out.append(("img", f"![](data:image/png;base64,{b64})", member))
+
+
+_HANDLERS = {
+    "hyperlink": _DocxFile._hyperlink,
+    "t": _DocxFile._text,
+    "tbl": _DocxFile._table,
+    "r": _DocxFile._run,
+    "p": _DocxFile._paragraph,
+    "blip": _DocxFile._blip,
+    "Fallback": _DocxFile._fallback,
+    "txbxContent": _DocxFile._textbox,
+}
+
+_RUN_ESCAPE = re.compile(r"([*~\\])")
+_LINK_ESCAPE = re.compile(r"([\[\]])")
+
+
+def _escape_tail(out: list[_Part], start: int, chars: re.Pattern) -> None:
+    """Backslash-escape ``chars`` in the text parts of ``out[start:]``
+    (one pass: an inserted backslash is never escaped again)."""
+    for i in range(start, len(out)):
+        p = out[i]
+        if p.__class__ is str and chars.search(p):
+            out[i] = chars.sub(r"\\\1", p)
 
 
 def _parts_text(parts: list[_Part]) -> str:
     return "".join(p if isinstance(p, str) else p[1] for p in parts)
 
 
-def _find_member(names: list[str], pattern: str) -> str | None:
+def _document_member(names: list[str]) -> str | None:
+    """The first member matching ``word/document*.xml``."""
     for n in names:
-        if fnmatch.fnmatch(n, pattern):
+        if n.startswith("word/document") and n.endswith(".xml") \
+                and len(n) >= 17:
             return n
     return None
 
@@ -332,16 +398,23 @@ def convert_docx(text: str) -> list[Segment]:
     with zf:
         doc = _DocxFile(zf)
         doc.load_preamble()
-        member = _find_member(zf.namelist(), "word/document*.xml")
+        member = _document_member(zf.namelist())
         if member is None:
             raise ConvertError("incorrect document")
-        root = _parse_xml(zf.read(member))
-        parts = doc.walk(root)
+        doc.walk(_parse_xml(zf.read(member)))
 
+    if not doc.images:
+        return merge_markdown([md("".join(doc.out))])
     segments: list[Segment] = []
-    for p in parts:
-        if isinstance(p, str):
-            segments.append(md(p))
-        else:
-            segments.append(image(p[1], p[2]))
+    text: list[str] = []
+    for p in doc.out:
+        if p.__class__ is str:
+            text.append(p)
+            continue
+        if text:
+            segments.append(md("".join(text)))
+            text = []
+        segments.append(image(p[1], p[2]))
+    if text:
+        segments.append(md("".join(text)))
     return merge_markdown(segments)

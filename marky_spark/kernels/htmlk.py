@@ -131,6 +131,10 @@ class _DomBuilder(HTMLParser):
             _fold(el, stack[-1].stats)
 
     def handle_startendtag(self, tag: str, attrs) -> None:
+        if tag not in _VOID_TAGS and tag not in _RAWTEXT_TAGS:
+            # HTML5 ignores the self-closing flag on a non-void element
+            self.handle_starttag(tag, attrs)
+            return
         el = Element(tag, {k: (v or "") for k, v in attrs})
         self.stack[-1].children.append(el)
         _fold(el, self.stack[-1].stats)
@@ -253,7 +257,11 @@ def parse_html(text: str) -> Element:
                 kids, stats = stack[-1].children, stack[-1].stats
             el = Element(tag, attrs)
             kids.append(el)
-            if slash or tag in _VOID_TAGS or len(stack) >= _MAX_DEPTH:
+            # HTML5 ignores the self-closing flag on a non-void element;
+            # a self-closed script or style stays empty, as in the stdlib
+            # tokenizer, which reads no raw text after one
+            if tag in _VOID_TAGS or len(stack) >= _MAX_DEPTH or (
+                    slash and tag in _RAWTEXT_TAGS):
                 _fold(el, stats)
             elif tag in _RAWTEXT_TAGS:
                 cm = _RAWTEXT_CLOSE[tag].search(text, pos)
@@ -482,12 +490,15 @@ class _Emitter:
             return
         if tag == "blockquote":
             sub = _Emitter(self.sent, self.images)
-            for child in node.children:
-                sub.dispatch(child)
+            sub._container(node)
             if sub.blocks:
                 self.blocks.append(_quote(_blocks_join(sub.blocks)))
             return
-        # generic containers: recurse block-wise, flushing inline runs
+        self._container(node)
+
+    def _container(self, node: Element) -> None:
+        """Children block-wise; each run of inline children is one
+        paragraph, rendered as a ``<p>`` renders its children."""
         run: list[str] = []
         for child in node.children:
             if isinstance(child, str):

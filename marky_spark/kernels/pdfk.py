@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import re
 import zlib
+from itertools import repeat
+from struct import unpack_from
 
 from ..ops.bitio import lzw_decode
 from .base import ConvertError, Segment, decode_binary_payload, md
@@ -35,12 +37,26 @@ _XREF_HEAD_RE = re.compile(rb"(\d+)\s+(\d+)")
 _XREF_ENTRY_RE = re.compile(rb"(\d{10})\s+(\d{5})\s+([nf])")
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
 # C-level scans for the object lexer's hottest paths (each was a per-byte
 # Python loop; the regex engine does the same scan ~3x faster):
 _WS_SKIP_RE = re.compile(rb"[\x00\t\n\x0c\r ]*(?:%[^\r\n]*[\x00\t\n\x0c\r ]*)*")
-_REGULAR_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*"
+# the next object token after whitespace and comments: exactly one group
+# names its kind; the regular run (6, possibly empty) is a keyword, a
+# number, the start of a reference, or a bad token
+# (atomic: a failed match must not backtrack into a comment)
+_OBJ_TOKEN_RE = re.compile(
+    rb"(?>" + _WS_SKIP_RE.pattern + rb")(?:/(" + _REGULAR
+    + rb")|(<<)|(\[)|(\()|(<)|(" + _REGULAR + rb"))")
+_DICT_KEY_RE = re.compile(
+    rb"(?>" + _WS_SKIP_RE.pattern + rb")(?:(>>)|/(" + _REGULAR + rb"))")
+
+
+def _name(raw: bytes) -> str:
+    if b"#" in raw:  # #xx hex escapes in names (rare)
+        raw = _NAME_HEX_RE.sub(_name_unhex, raw)
+    return "/" + raw.decode("latin-1")
 
 
 class _Lexer:
@@ -59,62 +75,77 @@ class _Lexer:
         self.pos = _WS_SKIP_RE.match(self.data, self.pos).end()
 
     def parse_object(self):
-        self._skip_ws()
         d = self.data
-        if self.pos >= len(d):
-            raise ConvertError("unexpected end of PDF object stream")
-        c = d[self.pos]
-        if d.startswith(b"<<", self.pos):
+        m = _OBJ_TOKEN_RE.match(d, self.pos)
+        g = m.lastindex
+        if g == 1:
+            self.pos = m.end()
+            return _name(m.group(1))
+        if g == 2:
+            self.pos = m.end()
             return self._parse_dict()
-        if c == ord("<"):
-            return self._parse_hex_string()
-        if c == ord("("):
-            return self._parse_literal_string()
-        if c == ord("["):
+        if g == 3:
+            self.pos = m.end()
             return self._parse_array()
-        if c == ord("/"):
-            return self._parse_name()
-        if d.startswith(b"true", self.pos):
+        self.pos = m.start(g)
+        if g == 4:
+            return self._parse_literal_string()
+        if g == 5:
+            return self._parse_hex_string()
+        tok = m.group(6)
+        if not tok and self.pos >= len(d):
+            raise ConvertError("unexpected end of PDF object stream")
+        if tok.startswith(b"true"):
             self.pos += 4
             return True
-        if d.startswith(b"false", self.pos):
+        if tok.startswith(b"false"):
             self.pos += 5
             return False
-        if d.startswith(b"null", self.pos):
+        if tok.startswith(b"null"):
             self.pos += 4
             return None
-        return self._parse_number_or_ref()
+        self.pos = m.end()
+        try:
+            num = int(tok)
+        except ValueError:
+            try:
+                return float(tok)
+            except ValueError as exc:
+                raise ConvertError(f"bad PDF token {tok!r}") from exc
+        if not self.refs:
+            return num
+        # lookahead for "gen R" (indirect reference)
+        p = _WS_SKIP_RE.match(d, self.pos).end()
+        m = _REF_RE.match(d, p, p + 24)
+        if m:
+            self.pos = m.end()
+            return _Ref(num, int(m.group(1)))
+        return num
 
     def _parse_dict(self):
-        self.pos += 2
+        d = self.data
         out = {}
         while True:
-            self._skip_ws()
-            if self.data.startswith(b">>", self.pos):
-                self.pos += 2
+            m = _DICT_KEY_RE.match(d, self.pos)
+            if m is None:
+                self._skip_ws()
+                if self.pos >= len(d):
+                    raise IndexError("index out of range")
+                raise ConvertError("expected PDF name")
+            self.pos = m.end()
+            if m.lastindex == 1:
                 return out
-            key = self._parse_name()
-            out[key] = self.parse_object()
+            out[_name(m.group(2))] = self.parse_object()
 
     def _parse_array(self):
-        self.pos += 1
+        d = self.data
         out = []
         while True:
-            self._skip_ws()
-            if self.pos < len(self.data) and self.data[self.pos] == ord("]"):
+            self.pos = _WS_SKIP_RE.match(d, self.pos).end()
+            if d.startswith(b"]", self.pos):
                 self.pos += 1
                 return out
             out.append(self.parse_object())
-
-    def _parse_name(self) -> str:
-        if self.data[self.pos] != ord("/"):
-            raise ConvertError("expected PDF name")
-        m = _REGULAR_RE.match(self.data, self.pos + 1)
-        self.pos = m.end()
-        raw = m.group()
-        if b"#" in raw:  # #xx hex escapes in names (rare)
-            raw = _NAME_HEX_RE.sub(_name_unhex, raw)
-        return "/" + raw.decode("latin-1")
 
     def _parse_literal_string(self) -> bytes:
         d = self.data
@@ -179,30 +210,6 @@ class _Lexer:
             hexs += b"0"
         return bytes.fromhex(hexs.decode("ascii"))
 
-    def _parse_number_or_ref(self):
-        d = self.data
-        m = _REGULAR_RE.match(d, self.pos)
-        self.pos = m.end()
-        tok = m.group()
-        save = self.pos
-        try:
-            num = int(tok)
-        except ValueError:
-            try:
-                return float(tok)
-            except ValueError as exc:
-                raise ConvertError(f"bad PDF token {tok!r}") from exc
-        if not self.refs:
-            return num
-        # lookahead for "gen R" (indirect reference)
-        self._skip_ws()
-        m = _REF_RE.match(d, self.pos, self.pos + 24)
-        if m:
-            self.pos = m.end()
-            return _Ref(num, int(m.group(1)))
-        self.pos = save
-        return num
-
 
 class _Ref:
     __slots__ = ("num", "gen")
@@ -222,6 +229,7 @@ class _Pdf:
         self._crypt_exempt: set[int] = set()
         self._budget = _MAX_DECODED_BYTES  # decoded stream bytes still allowed
         self._charged: dict[_Stream, int] = {}  # budget each stream holds
+        self.fonts: dict[int, tuple] = {}  # id(font dict) → (dict, decoder)
         self._load_xref()
         enc = self.trailer.get("/Encrypt")
         if enc is not None:
@@ -521,6 +529,11 @@ def _decode_pdf_text(raw: bytes) -> str:
         return raw.decode("latin-1")
 
 
+# one byte at a time: the 1-byte font table's default for codes its CMap
+# and /Encoding leave open
+_FALLBACK_TABLE = tuple(_decode_pdf_text(bytes([b])) for b in range(256))
+
+
 # ---------------------------------------------------------------------------
 # per-font character decoding: ToUnicode CMaps and /Encoding tables
 # (SURVEY.md §2.3; PDF 32000-1 §9.6.6, §9.10.3 — subset-embedded fonts
@@ -796,42 +809,12 @@ def _parse_tounicode(data: bytes) -> tuple[dict[int, str], int]:
     return cmap, (nbytes or 1)
 
 
-class _FontDecoder:
-    """Per-font string decoding: ToUnicode CMap first (authoritative for
-    subset fonts), then the /Encoding table, then the cp1252 fallback."""
-
-    __slots__ = ("nbytes", "cmap", "table")
-
-    def __init__(self, nbytes: int, cmap: dict[int, str] | None,
-                 table: tuple[str, ...] | None):
-        self.nbytes = nbytes
-        self.cmap = cmap
-        self.table = table
-
-    def decode(self, raw: bytes) -> str:
-        if self.nbytes == 2:
-            out = []
-            for i in range(0, len(raw) - 1, 2):
-                code = (raw[i] << 8) | raw[i + 1]
-                s = self.cmap.get(code) if self.cmap else None
-                out.append("�" if s is None else s)
-            if len(raw) % 2:
-                out.append("�")
-            return "".join(out)
-        if self.cmap is None and self.table is None:
-            return _decode_pdf_text(raw)
-        out = []
-        for b in raw:
-            s = self.cmap.get(b) if self.cmap else None
-            if s is None and self.table is not None:
-                s = self.table[b]
-            if s is None:
-                s = _decode_pdf_text(bytes([b]))
-            out.append(s)
-        return "".join(out)
-
-
-def _font_decoder(pdf: "_Pdf", font: dict) -> _FontDecoder:
+def _font_decoder(pdf: "_Pdf", font: dict):
+    """The font's string decoder, ``bytes -> str``: ToUnicode CMap first
+    (authoritative for subset fonts), then the /Encoding table, then the
+    cp1252 fallback. A 1-byte font folds all three into one 256-entry
+    table for ``str.translate``; a font with neither CMap nor table keeps
+    the whole-string fallback of :func:`_decode_pdf_text`."""
     cmap = None
     nbytes = 2 if font.get("/Subtype") == "/Type0" else 1
     tu = pdf.resolve(font.get("/ToUnicode"))
@@ -863,166 +846,176 @@ def _font_decoder(pdf: "_Pdf", font: dict) -> _FontDecoder:
                         t[code] = _glyph_to_unicode(item[1:])
                     code += 1
         table = tuple(t)
-    return _FontDecoder(nbytes, cmap, table)
+    if nbytes == 2:
+        get = (cmap or {}).get
+
+        def decode2(raw: bytes) -> str:
+            n = len(raw) >> 1
+            text = "".join(map(get, unpack_from(f">{n}H", raw),
+                               repeat("�", n)))
+            return text + "�" if len(raw) & 1 else text
+        return decode2
+    if cmap is None and table is None:
+        return _decode_pdf_text
+    per_byte = table or _FALLBACK_TABLE
+    if cmap:
+        per_byte = list(per_byte)
+        for code, text in cmap.items():
+            if code < 256:
+                per_byte[code] = text
+    return lambda raw: raw.decode("latin-1").translate(per_byte)
 
 
-def _page_fonts(pdf: "_Pdf", page: dict) -> dict[str, _FontDecoder]:
+def _page_fonts(pdf: "_Pdf", page: dict) -> dict:
+    """Resource name (/F1 ...) → decoder for the page's fonts. A font
+    object shared by several pages is built once per document."""
     res = pdf.resolve(page.get("/Resources"))
     if not isinstance(res, dict):
         return {}
     fonts = pdf.resolve(res.get("/Font"))
-    out: dict[str, _FontDecoder] = {}
+    out = {}
     if isinstance(fonts, dict):
+        built = pdf.fonts
         for name, ref in fonts.items():
             fd = pdf.resolve(ref)
             if isinstance(fd, dict):
-                try:
-                    out[name] = _font_decoder(pdf, fd)
-                except Exception:  # noqa: BLE001 — a bad font never kills
-                    continue      # the page; its strings use the fallback
+                key = id(fd)
+                if key not in built:
+                    try:
+                        built[key] = (fd, _font_decoder(pdf, fd))
+                    except Exception:  # noqa: BLE001 — a bad font never kills
+                        built[key] = (fd, None)  # the page; its strings use
+                dec = built[key][1]             # the fallback
+                if dec is not None:
+                    out[name] = dec
     return out
 
 
 # content-stream tokenizer: one regex pass instead of a Python-level
 # parse_object call per operand (the interpreter's measured hot path).
-# Groups: 1=number 2=hex-string 3=name 4=punct([ ] << >>) 5=operator;
-# '(' literal strings are delegated to _Lexer (escape/nesting rules).
+# Exactly one alternative matches at each token: a group's number names
+# its kind; comments, ``<< >> { }`` and stray bytes match no group. A
+# literal string with an escape or a nested '(' is left to _Lexer.
 _CONTENT_TOKEN_RE = re.compile(
     rb"[\x00\t\n\x0c\r ]*(?:"
-    rb"([-+]?(?:\d+\.?\d*|\.\d+))"       # number
-    rb"|<([0-9A-Fa-f\s]*)>"              # hex string
-    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # name
-    rb"|(\[|\]|<<|>>|\{|\})"             # structural punct
-    rb"|%[^\r\n]*"                        # comment
-    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"   # operator / keyword
+    rb"([-+]?(?:\d+\.?\d*|\.\d+))"          # 1 number
+    rb"|\(([^()\\]*)\)"                      # 2 plain literal string
+    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"   # 3 operator / keyword
+    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 4 name
+    rb"|<([0-9A-Fa-f\s]*)>"                  # 5 hex string
+    rb"|(\[|\])"                             # 6 array bracket
+    rb"|(\()"                                # 7 literal string, _Lexer rules
+    rb"|%[^\r\n]*|<<|>>|[\s\S]"              # comment, dict punct, stray
     rb")"
 )
 
 
 def _extract_page_runs(
-        content: bytes,
-        fonts: dict[str, _FontDecoder] | None = None,
+        content: bytes, fonts: dict | None = None,
 ) -> list[tuple[float, float, str]]:
     """Interpret text operators, yielding (x, y, text) runs. ``fonts``
-    maps resource names (/F1 ...) to per-font decoders; ``Tf`` switches
+    maps resource names (/F1 ...) to string decoders; ``Tf`` switches
     the active one (text state persists across BT/ET per spec)."""
     runs: list[tuple[float, float, str]] = []
-    stack: list = []
+    stack: list = []     # operands since the last operator
+    arrs: list[list] = []  # open [ ... ] operands; nesting preserved
+    push = stack.append  # appends to the innermost open array, else stack
     x = y = 0.0          # text-line matrix translation
     lx = ly = 0.0        # line start (for T*/TD)
     leading = 0.0
-    cur_font: _FontDecoder | None = None
-
-    def dec(raw: bytes) -> str:
-        return cur_font.decode(raw) if cur_font else _decode_pdf_text(raw)
+    dec = _decode_pdf_text
+    tokens = _CONTENT_TOKEN_RE.finditer
     pos = 0
-    n = len(content)
-    arr_stack: list[list] = []  # open [ ... ] operand(s); nesting preserved
-    token_match = _CONTENT_TOKEN_RE.match
-    while pos < n:
-        m = token_match(content, pos)
-        if m is None or m.end() == pos:
-            c = content[pos]
-            if c == 0x28:  # '(' literal string — full escape/nesting rules
-                lex = _Lexer(content, pos, refs=False)
-                s = lex._parse_literal_string()
+    while True:
+        for m in tokens(content, pos):
+            g = m.lastindex
+            if g == 1:
+                num = m.group(1)
+                try:
+                    push(int(num) if b"." not in num else float(num))
+                except ValueError:
+                    push(float(num))
+            elif g == 2:
+                push(m.group(2))
+            elif g == 3:
+                op = m.group(3)
+                if arrs:  # an operator closes any malformed open array
+                    arrs.clear()
+                    push = stack.append
+                try:
+                    if op == b"Tm":
+                        lx, ly = float(stack[-2]), float(stack[-1])
+                        x, y = lx, ly
+                    elif op == b"Tj":
+                        if stack and isinstance(stack[-1], bytes):
+                            runs.append((x, y, dec(stack[-1])))
+                    elif op == b"TJ":
+                        if stack and isinstance(stack[-1], list):
+                            parts: list[str] = []
+                            for item in stack[-1]:
+                                if isinstance(item, bytes):
+                                    parts.append(dec(item))
+                                elif isinstance(item, (int, float)) \
+                                        and item < _KERN_SPACE:
+                                    parts.append(" ")
+                            runs.append((x, y, "".join(parts)))
+                    elif op == b"Td" or op == b"TD":
+                        tx, ty = float(stack[-2]), float(stack[-1])
+                        if op == b"TD":
+                            leading = -ty
+                        lx, ly = lx + tx, ly + ty
+                        x, y = lx, ly
+                    elif op == b"T*":
+                        ly -= leading
+                        x, y = lx, ly
+                    elif op == b"TL":
+                        leading = float(stack[-1])
+                    elif op == b"'" or op == b'"':
+                        ly -= leading
+                        x, y = lx, ly
+                        if stack and isinstance(stack[-1], bytes):
+                            runs.append((x, y, dec(stack[-1])))
+                    elif op == b"Tf":
+                        if fonts and len(stack) >= 2 \
+                                and isinstance(stack[-2], str):
+                            dec = fonts.get(stack[-2], dec)
+                    elif op == b"BT":
+                        x = y = lx = ly = 0.0
+                        leading = 0.0
+                except (IndexError, ValueError, TypeError):
+                    pass
+                stack.clear()  # operands always precede their operator
+            elif g == 4:  # name operand (e.g. /F1 for Tf)
+                push("/" + m.group(4).decode("latin-1"))
+            elif g == 5:
+                h = m.group(5).translate(None, _WS)
+                if len(h) % 2:
+                    h += b"0"
+                try:
+                    push(bytes.fromhex(h.decode("ascii")))
+                except ValueError:
+                    push(b"")
+            elif g == 6:
+                if m.group(6) == b"[":
+                    # nested arrays become items of their parent
+                    # (parse_object parity): TJ ignores non-bytes/number
+                    inner: list = []
+                    if arrs:
+                        push(inner)
+                    arrs.append(inner)
+                    push = inner.append
+                elif arrs:
+                    done = arrs.pop()
+                    push = arrs[-1].append if arrs else stack.append
+                    if not arrs:
+                        push(done)
+            elif g == 7:
+                lex = _Lexer(content, m.end() - 1, refs=False)
+                push(lex._parse_literal_string())
                 pos = lex.pos
-                (arr_stack[-1] if arr_stack else stack).append(s)
-            else:
-                pos += 1  # stray delimiter byte
-            continue
-        pos = m.end()
-        g = m.lastindex  # alternation: exactly one group matched (None=comment)
-        if g == 1:
-            num = m.group(1)
-            try:
-                val = int(num) if b"." not in num else float(num)
-            except ValueError:
-                val = float(num)
-            (arr_stack[-1] if arr_stack else stack).append(val)
-            continue
-        if g == 2:
-            h = m.group(2).translate(None, _WS)
-            if len(h) % 2:
-                h += b"0"
-            try:
-                s = bytes.fromhex(h.decode("ascii"))
-            except ValueError:
-                s = b""
-            (arr_stack[-1] if arr_stack else stack).append(s)
-            continue
-        if g == 3:  # name operand (e.g. /F1 for Tf)
-            (arr_stack[-1] if arr_stack else stack).append("/" + m.group(3).decode("latin-1"))
-            continue
-        if g == 4:
-            punct = m.group(4)
-            if punct == b"[":
-                # nested arrays become items of their parent (parse_object
-                # parity): TJ ignores non-bytes/non-number items
-                inner: list = []
-                if arr_stack:
-                    arr_stack[-1].append(inner)
-                arr_stack.append(inner)
-            elif punct == b"]":
-                if arr_stack:
-                    done = arr_stack.pop()
-                    if not arr_stack:
-                        stack.append(done)
-            continue
-        if g != 5:
-            continue  # comment
-        op = m.group(5)
-        arr_stack.clear()  # an operator closes any malformed open array
-        try:
-            if op == b"Td":
-                tx, ty = float(stack[-2]), float(stack[-1])
-                lx, ly = lx + tx, ly + ty
-                x, y = lx, ly
-            elif op == b"TD":
-                tx, ty = float(stack[-2]), float(stack[-1])
-                leading = -ty
-                lx, ly = lx + tx, ly + ty
-                x, y = lx, ly
-            elif op == b"Tm":
-                lx, ly = float(stack[-2]), float(stack[-1])
-                x, y = lx, ly
-            elif op == b"T*":
-                ly -= leading
-                x, y = lx, ly
-            elif op == b"TL":
-                leading = float(stack[-1])
-            elif op == b"Tj":
-                if stack and isinstance(stack[-1], bytes):
-                    runs.append((x, y, dec(stack[-1])))
-            elif op == b"'":
-                ly -= leading
-                x, y = lx, ly
-                if stack and isinstance(stack[-1], bytes):
-                    runs.append((x, y, dec(stack[-1])))
-            elif op == b'"':
-                ly -= leading
-                x, y = lx, ly
-                if stack and isinstance(stack[-1], bytes):
-                    runs.append((x, y, dec(stack[-1])))
-            elif op == b"TJ":
-                if stack and isinstance(stack[-1], list):
-                    parts: list[str] = []
-                    for item in stack[-1]:
-                        if isinstance(item, bytes):
-                            parts.append(dec(item))
-                        elif isinstance(item, (int, float)) and item < _KERN_SPACE:
-                            parts.append(" ")
-                    runs.append((x, y, "".join(parts)))
-            elif op == b"Tf":
-                if fonts and len(stack) >= 2 and isinstance(stack[-2], str):
-                    cur_font = fonts.get(stack[-2], cur_font)
-            elif op == b"BT":
-                x = y = lx = ly = 0.0
-                leading = 0.0
-        except (IndexError, ValueError, TypeError):
-            pass
-        stack.clear()  # operands always precede their operator
-    return runs
+                break
+        else:
+            return runs
 
 
 def _page_text(runs: list[tuple[float, float, str]]) -> str:

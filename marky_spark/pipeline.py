@@ -174,13 +174,17 @@ def wave_dir(out_dir: str, wave: int) -> str:
 
 
 def write_wave(store: SnapshotStore, df: DataFrame, wave: int,
-               *observe: Column) -> dict:
+               *observe: Column, bucket: Column | None = None) -> dict:
     """Write ``df`` as snapshot ``wave``'s rows, with ``wave`` as a
-    column, to the directory :meth:`SnapshotStore.stage` gives; the
-    caller's :meth:`SnapshotStore.commit` then publishes it. Every writer
-    of a job directory goes through here. Returns ``observe``'s aggregates
-    over the written rows, computed by the write itself: one Spark job."""
-    df = df.withColumn("wave", F.lit(wave))
+    column (and ``bucket``, when given), to the directory
+    :meth:`SnapshotStore.stage` gives; the caller's
+    :meth:`SnapshotStore.commit` then publishes it. Every writer of a job
+    directory goes through here. Returns ``observe``'s aggregates over the
+    written rows, computed by the write itself: one Spark job."""
+    cols = {"wave": F.lit(wave)}
+    if bucket is not None:
+        cols = {"bucket": bucket, **cols}
+    df = df.withColumns(cols)  # one projection: each call re-analyses the plan
     observed = Observation()
     if observe:
         df = df.observe(observed, *observe)
@@ -201,10 +205,13 @@ def pending_waves(manifest: dict, n_buckets: int, waves: int
             for i, w in enumerate(range(0, len(pending), per_wave))]
 
 
+def bucket_of(n_buckets: int) -> Column:
+    """A document's bucket: ``pmod(xxhash64(doc_id), n_buckets)``."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", bucket_of(n_buckets))
 
 
 #: per-doc payload bytes, evaluated JVM-side. A SQL string, not a module-level
@@ -250,7 +257,8 @@ def plan_wave(spark: SparkSession, sizes: Iterable[tuple[int, int]],
                     max((m for _, m in sizes), default=0))
 
 
-def skew_balanced(df: DataFrame, plan: WavePlan) -> DataFrame:
+def skew_balanced(df: DataFrame, plan: WavePlan,
+                  in_parts: int | None = None) -> DataFrame:
     """Lay ``df`` over ``plan.tasks`` partitions, splitting the tail off the
     bulk WITHOUT shuffling the bulk.
 
@@ -263,9 +271,11 @@ def skew_balanced(df: DataFrame, plan: WavePlan) -> DataFrame:
     itself the bottleneck: measured locally, the bulk shuffle capped
     4→16-core scaling efficiency at ~0.37, vs ≥0.8 with the tail-only
     shuffle. A wave whose largest doc is under the threshold plans with no
-    filter, ``Union`` or ``Exchange``.
+    filter, ``Union`` or ``Exchange``. ``in_parts`` is ``df``'s partition
+    count when the caller knows it (reading it plans ``df`` on the driver).
     """
-    in_parts = df.rdd.getNumPartitions()
+    if in_parts is None:
+        in_parts = df.rdd.getNumPartitions()
 
     def bulk(d: DataFrame) -> DataFrame:
         if in_parts > plan.tasks:
@@ -315,19 +325,21 @@ def run_convert_job(
     todo = pending_waves(manifest, n_buckets, waves)
     if not todo:
         return []
-    bucketed = with_bucket(input_df, n_buckets)
-    sizes = _pending_sizes(store, manifest, bucketed,
+    bucket = bucket_of(n_buckets)
+    sizes = _pending_sizes(store, manifest, input_df, bucket,
                            [b for _, bs in todo for b in bs])
+    # a filter keeps the partitioning, so every wave's input has as many
+    # partitions as input_df
+    in_parts = input_df.rdd.getNumPartitions()
 
     results: list[WaveResult] = []
     for wave_id, wave_buckets in todo:
         t0 = time.perf_counter()
         plan = plan_wave(spark, [sizes[b] for b in wave_buckets], skew_factor)
-        wave_df = bucketed.where(F.col("bucket").isin(wave_buckets))
-        out = convert(skew_balanced(wave_df.drop("bucket"), plan))
+        wave_df = input_df.where(bucket.isin(wave_buckets))
+        out = convert(skew_balanced(wave_df, plan, in_parts))
         t_write = time.perf_counter()
-        totals = write_wave(store, with_bucket(out, n_buckets), wave_id,
-                            *_totals())
+        totals = write_wave(store, out, wave_id, *_totals(), bucket=bucket)
         t1 = time.perf_counter()
         dt = t1 - t0
         store.commit(wave_buckets, {
@@ -342,7 +354,7 @@ def run_convert_job(
 
 
 def _pending_sizes(store: SnapshotStore, manifest: dict,
-                   bucketed: DataFrame, pending: list[int]
+                   input_df: DataFrame, bucket: Column, pending: list[int]
                    ) -> dict[int, tuple[int, int]]:
     """``bucket -> (bytes, largest doc)`` for every pending bucket.
 
@@ -355,7 +367,8 @@ def _pending_sizes(store: SnapshotStore, manifest: dict,
     if all(str(b) in recorded for b in pending):
         return {b: tuple(recorded[str(b)]) for b in pending}
     t0 = time.perf_counter()
-    sized = bucket_sizes(bucketed.where(F.col("bucket").isin(pending)))
+    sized = bucket_sizes(input_df.where(bucket.isin(pending))
+                         .withColumn("bucket", bucket))
     sizes = {b: sized.get(b, (0, 0)) for b in pending}
     manifest["bucket_sizes"] = {**recorded,
                                 **{str(b): list(v) for b, v in sizes.items()}}

@@ -71,6 +71,35 @@ def test_blockquote():
     assert got == "> quoted text"
 
 
+def test_blockquote_inline_children_are_one_paragraph():
+    """Consecutive inline children of a blockquote render as a <p> does."""
+    got = convert_html("<blockquote><em>x</em> y <a href=u>l</a></blockquote>",
+                       strip=False)
+    assert got == [("markdown", "> *x* y [l](u)", "")]
+    img = convert_html("<blockquote><img src=q alt=b></blockquote>",
+                       strip=False)
+    assert img == convert_html(
+        "<blockquote><p><img src=q alt=b></p></blockquote>", strip=False)
+    assert img == [("markdown", "> ", ""), ("image", "![b](q)", "q")]
+    mixed = "<blockquote>t <b>u</b><p>p</p>v</blockquote>"
+    assert html_to_markdown(mixed, strip=False) == "> t **u**\n>\n> p\n>\n> v"
+
+
+def test_self_closed_non_void_element_opens():
+    """HTML5 ignores the self-closing flag on a non-void element: the
+    text after ``<li/>`` belongs to that item, in both tokenizers."""
+    from marky_spark.kernels.htmlk import parse_html, parse_html_stdlib
+
+    snippet = "<ul><li>a<li/>b</ul>"
+    assert html_to_markdown(snippet, strip=False) == "* a\n* b"
+    for parse in (parse_html, parse_html_stdlib):
+        ul = parse(snippet).children[0]
+        assert [li.children for li in ul.children] == [["a"], ["b"]]
+    # a void element stays empty, and so does a self-closed script
+    assert html_to_markdown("<p>a<br/>b</p><script/>c", strip=False) \
+        == "a\nb\n\nc"
+
+
 def test_hr_and_br():
     assert html_to_markdown("<p>a<br>b</p><hr>") == "a\nb\n\n---"
 
@@ -169,6 +198,7 @@ TRICKY_SNIPPETS = [
     "<div a b=2 c='3'>attr soup</div>",
     "<p>trailing <",
     "<>< p>< /p>",
+    "<ul><li>a<li/>b</ul>",                           # self-closed non-void
 ]
 
 
@@ -480,10 +510,13 @@ def _pin_md5(pages, strip=True):
 HTML_PINS = {
     "durable_synth": "7eb4fea8894a92df874c11bc5696bd9b",
     "link_dense": "1322fd1584dcb86639036e716a5be7a7",
-    "images": "a731bb951bb5ecc6054da93e594162e9",
-    "soup": "8b6a274e6fac60b7288557df269ab2b7",
+    # images, soup, blacklist_soup: blockquotes with inline children now
+    # render as one paragraph (their pages hold such blockquotes); the
+    # parent's values were a731bb95…, 8b6a274e… and cb6d6e36…
+    "images": "516f6e0585f248d8ca8098236ccb6916",
+    "soup": "57e1db5e3365b2214fdea6e284495dfb",
     "blacklist_link_dense": "607b7a5c48f2283175ae0c0116c5edf8",
-    "blacklist_soup": "cb6d6e362a5a5196e4e909f7ef216d00",
+    "blacklist_soup": "b89ef2d1c6ba032c2e67259ad758dafd",
 }
 
 

@@ -12,6 +12,7 @@ import time
 
 import pytest
 
+from marky_spark import fixtures as fx
 from marky_spark.convert import convert_document
 
 _WORDS = "alpha beta gamma delta epsilon zeta eta theta"
@@ -46,6 +47,78 @@ def _eml_encoded_subject(k):
     return f"From: a@b.c\nTo: d@e.f\nSubject: {words}\n\nbody\n"
 
 
+def _pdf(content: bytes, n_pages: int = 1) -> str:
+    """A classic-xref PDF whose pages share one content stream and one
+    WinAnsi font object."""
+    kids = " ".join(f"{4 + i} 0 R" for i in range(n_pages))
+    objects = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode(),
+        3: (f"<< /Length {len(content)} >>".encode() + b"\nstream\n"
+            + content + b"\nendstream"),
+        4 + n_pages: (b"<< /Type /Font /Subtype /Type1 "
+                      b"/Encoding /WinAnsiEncoding >>"),
+    }
+    for i in range(n_pages):
+        objects[4 + i] = (
+            f"<< /Type /Page /Parent 2 0 R /Contents 3 0 R /Resources "
+            f"<< /Font << /F1 {4 + n_pages} 0 R >> >> >>").encode()
+    return fx.b64(fx.pdf_assemble(objects))
+
+
+def _pdf_text(body: bytes) -> bytes:
+    return b"BT /F1 12 Tf 72 700 Td " + body + b" ET"
+
+
+def _pdf_tj_plain_strings(k):
+    return _pdf(_pdf_text(b"[" + b" (word)" * k + b"] TJ"))
+
+
+def _pdf_escaped_strings(k):
+    return _pdf(_pdf_text(b"(a\\(b\\\\c\\222d) Tj " * k))
+
+
+def _pdf_nested_parens(k):
+    return _pdf(_pdf_text(b"(" * k + b"x" + b")" * k + b" Tj"))
+
+
+def _pdf_nested_arrays(k):
+    return _pdf(_pdf_text(b"[" * k + b"(x)" + b"]" * k + b" TJ"))
+
+
+def _pdf_pages_one_font(k):
+    return _pdf(_pdf_text(b"(one line of page text) Tj"), n_pages=k)
+
+
+# docx payloads are deflated: each unit carries its own scrambled word,
+# so the compression ratio, and with it the time per payload byte, does
+# not drift with k
+def _word(i):
+    return "".join(f"{(i * 4 + j) * 2654435761 % 4294967291:08x}"
+                   for j in range(4))
+
+
+def _docx_runs_in_one_paragraph(k):
+    return fx.b64(fx.docx_zip("<w:p>" + "".join(
+        f"<w:r><w:rPr><w:b/></w:rPr><w:t>{_word(i)}*</w:t></w:r>"
+        for i in range(k)) + "</w:p>"))
+
+
+def _docx_numbered_paragraphs(k):
+    return fx.b64(fx.docx_zip(
+        "".join(fx.docx_list_paragraph(_word(i), num_id=1, ilvl=i % 3)
+                for i in range(k)),
+        numbering_xml=fx.docx_numbering()))
+
+
+def _docx_nested_tables(k):
+    # each level triples the markdown; past kernels/docxk._MAX_TABLE_DEPTH
+    # the document is an error row instead of a blow-up
+    return fx.b64(fx.docx_zip("".join(
+        f"<w:tbl><w:tr><w:tc><w:p><w:r><w:t>{_word(i)}</w:t></w:r></w:p>"
+        for i in range(k)) + "</w:tc></w:tr></w:tbl>" * k))
+
+
 # (kind, shape, n): n repetitions of the unit take a few ms or more
 SHAPES = [
     ("html", _nested_div, 2000),
@@ -55,6 +128,14 @@ SHAPES = [
     ("html", _link_nav, 500),
     # 28 KB at n: the stdlib header parser is quadratic in encoded words
     ("eml", _eml_encoded_subject, 1200),
+    ("pdf", _pdf_tj_plain_strings, 2000),
+    ("pdf", _pdf_escaped_strings, 500),
+    ("pdf", _pdf_nested_parens, 2000),
+    ("pdf", _pdf_nested_arrays, 2000),
+    ("pdf", _pdf_pages_one_font, 100),
+    ("docx", _docx_runs_in_one_paragraph, 500),
+    ("docx", _docx_numbered_paragraphs, 200),
+    ("docx", _docx_nested_tables, 40),
 ]
 
 

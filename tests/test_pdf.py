@@ -350,3 +350,94 @@ def _b64(blob: bytes) -> str:
     import base64
 
     return base64.b64encode(blob).decode()
+
+
+# ---------------------------------------------------------------------------
+# content tokenizer edge cases: results captured from the tokenizer this one
+# replaced (a _Lexer per literal string, per-byte font decoding), pinned
+# ---------------------------------------------------------------------------
+
+_TOKENIZER_CASES = [
+    ('escapes', b'BT 1 2 Td (a\\(b\\)c\\\\d\\n\\t\\r\\b\\f) Tj ET',
+     [(1.0, 2.0, 'a(b)c\\d\n\t\r\x08\x0c')]),
+    ('octal', b'BT (\\101\\1012\\7\\0053\\777) Tj ET',
+     [(0.0, 0.0, 'AA2\x07\x053ÿ')]),
+    ('line continuation', b'BT (ab\\\ncd\\\r\nef\\\rgh) Tj ET',
+     [(0.0, 0.0, 'abcdefgh')]),
+    ('unknown escape', b'BT (\\q\\8) Tj ET',
+     [(0.0, 0.0, 'q8')]),
+    ('nested parens', b'BT ((a(b)c)d) Tj ET',
+     [(0.0, 0.0, '(a(b)c)d')]),
+    ('hex whitespace', b'BT <48 65\n6C\t6C 6F> Tj ET',
+     [(0.0, 0.0, 'Hello')]),
+    ('hex odd length', b'BT <486> Tj ET',
+     [(0.0, 0.0, 'H`')]),
+    ('hex invalid', b'BT <4G> Tj ET',
+     []),
+    ('comments between operands', b'BT 1 % one\n2 %two\nTd (x) % s\nTj ET',
+     [(1.0, 2.0, 'x')]),
+    ('stray close paren', b'BT ) (a) ) Tj ET',
+     [(0.0, 0.0, 'a')]),
+    ('stray angle and brace', b'BT > { 3 4 } Td (a) > Tj ET',
+     [(3.0, 4.0, 'a')]),
+    ('string open at EOF', b'BT 1 2 Td (open (nested',
+     []),
+    ('string open at EOF, escape', b'BT (tail\\',
+     []),
+    ('nested arrays', b'BT 5 6 Td [(a) [(x) -200] (b) -300 (c)] TJ ET',
+     [(5.0, 6.0, 'ab c')]),
+    ('unbalanced open array', b'BT [(a) (b) Tj (c) Tj ET',
+     [(0.0, 0.0, 'c')]),
+    ('unbalanced close array', b'BT (a) ] ] Tj ET',
+     [(0.0, 0.0, 'a')]),
+    ('kerning', b'BT [(w) -100 (x) -101 (y) -100.5 (z)] TJ ET',
+     [(0.0, 0.0, 'wx y z')]),
+    ('numbers', b'BT 1. .5 Td (a) Tj +2 -3 Td (b) Tj 007 1.2.3 Td (c) Tj ET',
+     [(1.0, 0.5, 'a'), (3.0, -2.5, 'b'), (4.2, -2.2, 'c')]),
+    ('leading', b'BT 14 TL 0 700 Td (a) Tj T* (b) Tj (c) \' 1 2 (d) " 0 -20 TD (e) Tj T* (f) Tj ET',
+     [(0.0, 700.0, 'a'), (0.0, 686.0, 'b'), (0.0, 672.0, 'c'), (0.0, 658.0, 'd'), (0.0, 638.0, 'e'), (0.0, 618.0, 'f')]),
+    ('operator glued to number', b'BT 1 2Td (a)Tj 3 4Tm(b)Tj ET',
+     [(1.0, 2.0, 'a'), (3.0, 4.0, 'b')]),
+    ('string operands to Td', b'BT (1) (2) Td (a) Tj ET',
+     [(1.0, 2.0, 'a')]),
+    ('cp1252 undefined byte, no font', b'BT (\x93q\x94) Tj (\x81\x93) Tj ET',
+     [(0.0, 0.0, '“q”'), (0.0, 0.0, '\x81\x93')]),
+]
+
+
+@pytest.mark.parametrize("content,runs", [c[1:] for c in _TOKENIZER_CASES],
+                         ids=[c[0] for c in _TOKENIZER_CASES])
+def test_content_tokenizer_edge_cases(content, runs):
+    from marky_spark.kernels.pdfk import _extract_page_runs
+
+    assert _extract_page_runs(content) == runs
+
+
+_EDGE_CMAP = (b"/CIDInit /ProcSet findresource begin\n1 begincodespacerange\n"
+              b"<00> <FF>\nendcodespacerange\n2 beginbfchar\n<41> <0058>\n"
+              b"<81> <00E9>\nendbfchar\nendcmap\n")
+
+# the show string (AB\x81\x93) under 1-byte fonts: a table font decodes
+# byte by byte (a CMap code first, then the /Encoding table, then cp1252,
+# whose undefined 0x81 is U+FFFD in the WinAnsi table); a font with neither
+# keeps the no-font fallback, which retries the WHOLE string as latin-1
+_FONT_CASES = [
+    ('partial ToUnicode over WinAnsi', b'<< /Type /Font /Subtype /Type1 /Encoding /WinAnsiEncoding /ToUnicode 6 0 R >>',
+     'XBé“'),
+    ('partial ToUnicode, no encoding', b'<< /Type /Font /Subtype /Type1 /ToUnicode 6 0 R >>',
+     'XBé“'),
+    ('Differences over WinAnsi', b'<< /Type /Font /Subtype /Type1 /Encoding << /BaseEncoding /WinAnsiEncoding /Differences [ 65 /bullet 129 /Scaron ] >> >>',
+     '•BŠ“'),
+    ('WinAnsi table', b'<< /Type /Font /Subtype /Type1 /Encoding /WinAnsiEncoding >>',
+     'AB�“'),
+    ('font without CMap or encoding', b'<< /Type /Font /Subtype /Type1 >>',
+     'AB\x81\x93'),
+]
+
+
+@pytest.mark.parametrize("font,text", [c[1:] for c in _FONT_CASES],
+                         ids=[c[0] for c in _FONT_CASES])
+def test_one_byte_font_decoding_edge_cases(font, text):
+    content = b"BT /F1 12 Tf 1 0 0 1 72 700 Tm (AB\x81\x93) Tj ET"
+    blob = _one_page_pdf(content, font, extra={6: _stream_obj(_EDGE_CMAP)})
+    assert extract_pdf_text(blob) == text

@@ -346,11 +346,11 @@ def test_zombie_driver_loses_its_commit_not_committed_work(spark, tmp_path,
                 assert go_a.wait(120)
         return real_commit(self, bucket_ids, stats)
 
-    def split(df, plan):
+    def split(df, plan, *args):
         if threading.current_thread().name == "B":
             b_planned.set()
             assert go_b.wait(120)
-        return real_split(df, plan)
+        return real_split(df, plan, *args)
 
     monkeypatch.setattr(SnapshotStore, "commit", commit)
     monkeypatch.setattr(pipeline, "skew_balanced", split)
