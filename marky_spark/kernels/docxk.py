@@ -195,11 +195,13 @@ class _DocxFile:
         start = len(out)
         prefix: list[str] = []
         code = False
+        handlers = self.handlers
         for child in node:
-            if _local(child.tag) == "pPr":
+            tag = child.tag
+            if _local(tag) == "pPr":
                 code = self._ppr(child, prefix) or code
             else:
-                self.walk(child)
+                (handlers.get(tag) or self._handler(tag))(self, child)
         if code:
             prefix.append("`")
             out.append("`")
@@ -274,8 +276,10 @@ class _DocxFile:
         bold = italic = strike = False
         out = self.out
         start = len(out)
+        handlers = self.handlers
         for child in node:
-            if _local(child.tag) == "rPr":
+            tag = child.tag
+            if _local(tag) == "rPr":
                 for prop in child:
                     pname = _local(prop.tag)
                     if pname == "b":
@@ -284,7 +288,7 @@ class _DocxFile:
                         italic = True
                     elif pname == "strike":
                         strike = True
-            self.walk(child)
+            (handlers.get(tag) or self._handler(tag))(self, child)
         # escape set *~\ applies to text content only (docx.go:599)
         _escape_tail(out, start, _RUN_ESCAPE)
         open_marks = ("~~" if strike else "") + ("**" if bold else "") + ("*" if italic else "")
