@@ -27,7 +27,6 @@ walking pPr children twice, docx.go:299-313); we wrap the paragraph content
 from __future__ import annotations
 
 import base64
-import re
 from xml.etree import ElementTree as ET
 
 from .base import ConvertError, Segment, decode_binary_payload, image, md, merge_markdown
@@ -290,7 +289,7 @@ class _DocxFile:
                         strike = True
             (handlers.get(tag) or self._handler(tag))(self, child)
         # escape set *~\ applies to text content only (docx.go:599)
-        _escape_tail(out, start, _RUN_ESCAPE)
+        _escape_tail(out, start, "*~\\")
         open_marks = ("~~" if strike else "") + ("**" if bold else "") + ("*" if italic else "")
         if open_marks:
             out.insert(start, open_marks)
@@ -302,7 +301,7 @@ class _DocxFile:
         out = self.out
         start = len(out)
         self.walk_children(node)
-        _escape_tail(out, start, _LINK_ESCAPE)
+        _escape_tail(out, start, "[]")
         target = ""
         rid = _attr(node, "id")
         if rid and rid in self.rels:
@@ -366,17 +365,11 @@ _HANDLERS = {
     "txbxContent": _DocxFile._textbox,
 }
 
-_RUN_ESCAPE = re.compile(r"([*~\\])")
-_LINK_ESCAPE = re.compile(r"([\[\]])")
-
-
-def _escape_tail(out: list[_Part], start: int, chars: re.Pattern) -> None:
-    """Backslash-escape ``chars`` in the text parts of ``out[start:]``
-    (one pass: an inserted backslash is never escaped again)."""
+def _escape_tail(out: list[_Part], start: int, charset: str) -> None:
+    """Backslash-escape ``charset`` in the text parts of ``out[start:]``."""
     for i in range(start, len(out)):
-        p = out[i]
-        if p.__class__ is str and chars.search(p):
-            out[i] = chars.sub(r"\\\1", p)
+        if out[i].__class__ is str:
+            out[i] = _escape(out[i], charset)
 
 
 def _parts_text(parts: list[_Part]) -> str:

@@ -60,16 +60,11 @@ def _name(raw: bytes) -> str:
 
 
 class _Lexer:
-    """Minimal PDF object lexer/parser over a bytes buffer.
+    """Minimal PDF object lexer/parser over a bytes buffer."""
 
-    ``refs=False`` disables the indirect-reference lookahead ("N G R") —
-    content streams cannot contain refs, and the per-number regex lookahead
-    was the content interpreter's hottest path."""
-
-    def __init__(self, data: bytes, pos: int = 0, refs: bool = True):
+    def __init__(self, data: bytes, pos: int = 0):
         self.data = data
         self.pos = pos
-        self.refs = refs
 
     def _skip_ws(self) -> None:
         self.pos = _WS_SKIP_RE.match(self.data, self.pos).end()
@@ -112,8 +107,6 @@ class _Lexer:
                 return float(tok)
             except ValueError as exc:
                 raise ConvertError(f"bad PDF token {tok!r}") from exc
-        if not self.refs:
-            return num
         # lookahead for "gen R" (indirect reference)
         p = _WS_SKIP_RE.match(d, self.pos).end()
         m = _REF_RE.match(d, p, p + 24)
@@ -1010,7 +1003,7 @@ def _extract_page_runs(
                     if not arrs:
                         push(done)
             elif g == 7:
-                lex = _Lexer(content, m.end() - 1, refs=False)
+                lex = _Lexer(content, m.end() - 1)
                 push(lex._parse_literal_string())
                 pos = lex.pos
                 break
