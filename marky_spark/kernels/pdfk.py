@@ -24,6 +24,10 @@ from ..ops.bitio import lzw_decode
 from .base import ConvertError, Segment, decode_binary_payload, md
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+# the brute scan's search never starts inside a digit run: a match there
+# would end where one from the run's first digit ends, and trying every
+# start made the scan quadratic in the run's length
+_OBJ_SCAN_RE = re.compile(rb"(?<!\d)(\d+)\s+(\d+)\s+obj\b")
 
 _NAME_HEX_RE = re.compile(rb"#([0-9A-Fa-f]{2})")
 
@@ -335,7 +339,7 @@ class _Pdf:
                 lex._skip_ws()
 
     def _brute_scan(self) -> None:
-        for m in _OBJ_RE.finditer(self.data):
+        for m in _OBJ_SCAN_RE.finditer(self.data):
             # later definitions win (incremental update semantics)
             self.offsets[int(m.group(1))] = m.start()
 

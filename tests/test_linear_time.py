@@ -86,6 +86,11 @@ def _pdf_nested_arrays(k):
     return _pdf(_pdf_text(b"[" * k + b"(x)" + b"]" * k + b" TJ"))
 
 
+def _pdf_digit_run(k):
+    # no xref: the object scan runs over one long run of digits
+    return fx.b64(b"%PDF-1.4\n" + b"1234567890" * k + b"\n")
+
+
 def _pdf_pages_one_font(k):
     return _pdf(_pdf_text(b"(one line of page text) Tj"), n_pages=k)
 
@@ -133,6 +138,7 @@ SHAPES = [
     ("pdf", _pdf_nested_parens, 2000),
     ("pdf", _pdf_nested_arrays, 2000),
     ("pdf", _pdf_pages_one_font, 100),
+    ("pdf", _pdf_digit_run, 2000),
     ("docx", _docx_runs_in_one_paragraph, 500),
     ("docx", _docx_numbered_paragraphs, 200),
     ("docx", _docx_nested_tables, 40),
