@@ -54,15 +54,16 @@ def _parse_xml(data: bytes) -> ET.Element:
         raise ConvertError(f"invalid XML: {exc}") from exc
 
 
-# A cell holds its inner table's rows on one line, padded to the widest,
-# so each level of nesting triples the markdown: 8 levels turn one
-# character into 36 KB, 20 would take gigabytes.
-_MAX_TABLE_DEPTH = 8
+# A cell holds its inner table's rows on one line, and every row is padded
+# to its columns' widest cells, so a table's markdown can be far larger
+# than its XML (each level of nesting triples it). The tables of one
+# document may write about this many characters.
+_MAX_TABLE_CHARS = 1 << 25
 
 
-class _TablesTooDeep(ConvertError):
-    """Tables nested deeper than ``_MAX_TABLE_DEPTH``: the whole document
-    is an error row, not an empty cell."""
+class _TablesTooLarge(ConvertError):
+    """The tables' markdown is over ``_MAX_TABLE_CHARS``: the whole
+    document is an error row, not an empty cell."""
 
 
 class _NumberingLevel:
@@ -75,11 +76,7 @@ class _NumberingLevel:
 
 
 class _DocxFile:
-    """Per-document conversion state (reference `file` struct, docx.go:143-149).
-
-    The walk appends every part to one list, ``self.out``; an element
-    that wraps or rewrites its children's parts (run, hyperlink, table
-    cell, text box) works on its own tail of that list."""
+    """Per-document conversion state (reference `file` struct, docx.go:143-149)."""
 
     def __init__(self, zf):
         self.zf = zf
@@ -88,11 +85,7 @@ class _DocxFile:
         self.num_map: dict[str, str] = {}
         self.abstract: dict[str, dict[str, _NumberingLevel]] = {}
         self.list_counters: dict[str, int] = {}
-        self.out: list[_Part] = []
-        self.images = 0  # image parts appended to out
-        self.table_depth = 0
-        # tag ('{ns}local') → handler, filled from _HANDLERS by local name
-        self.handlers: dict[str, object] = {}
+        self.table_chars = 0  # markdown the tables have written
 
     # -- preamble (O11) ------------------------------------------------------
 
@@ -152,60 +145,47 @@ class _DocxFile:
 
     # -- walk (O12) ----------------------------------------------------------
 
-    def walk(self, node: ET.Element) -> None:
-        """Append ``node``'s parts to ``self.out``: dispatch on its local
-        name, and walk the children of an element with no handler."""
-        (self.handlers.get(node.tag) or self._handler(node.tag))(self, node)
+    def walk(self, node: ET.Element) -> list[_Part]:
+        name = _local(node.tag)
+        if name == "hyperlink":
+            return self._hyperlink(node)
+        if name == "t":
+            return ["".join(node.itertext())]
+        if name == "tbl":
+            return self._table(node)
+        if name == "r":
+            return self._run(node)
+        if name == "p":
+            return self._paragraph(node)
+        if name == "blip":
+            return self._blip(node)
+        if name == "Fallback":
+            return []
+        if name == "txbxContent":
+            inner = _parts_text(self._walk_children(node))
+            return [f"\n```\n{inner}```\n"]
+        return self._walk_children(node)
 
-    def walk_children(self, node: ET.Element) -> None:
-        handlers = self.handlers
+    def _walk_children(self, node: ET.Element) -> list[_Part]:
+        out: list[_Part] = []
         for child in node:
-            (handlers.get(child.tag) or self._handler(child.tag))(self, child)
-
-    def _handler(self, tag: str):
-        handler = self.handlers[tag] = _HANDLERS.get(
-            _local(tag), _DocxFile.walk_children)
-        return handler
-
-    def _text(self, node: ET.Element) -> None:
-        self.out.append("".join(node.itertext()) if len(node)
-                        else node.text or "")
-
-    def _fallback(self, node: ET.Element) -> None:
-        pass
-
-    def _textbox(self, node: ET.Element) -> None:
-        self.out.append(f"\n```\n{self._detached_text(node)}```\n")
-
-    def _detached_text(self, node: ET.Element) -> str:
-        """The text of ``node``'s children, taken back off ``self.out``."""
-        out = self.out
-        start = len(out)
-        try:
-            self.walk_children(node)
-            return _parts_text(out[start:])
-        finally:
-            del out[start:]
+            out.extend(self.walk(child))
+        return out
 
     # -- paragraph + pPr (O15, O16) -------------------------------------------
 
-    def _paragraph(self, node: ET.Element) -> None:
-        out = self.out
-        start = len(out)
+    def _paragraph(self, node: ET.Element) -> list[_Part]:
         prefix: list[str] = []
+        body: list[_Part] = []
         code = False
-        handlers = self.handlers
         for child in node:
-            tag = child.tag
-            if _local(tag) == "pPr":
+            if _local(child.tag) == "pPr":
                 code = self._ppr(child, prefix) or code
             else:
-                (handlers.get(tag) or self._handler(tag))(self, child)
+                body.extend(self.walk(child))
         if code:
-            prefix.append("`")
-            out.append("`")
-        out[start:start] = prefix
-        out.append("\n")
+            body = ["`"] + body + ["`"]
+        return prefix + body + ["\n"]
 
     def _ppr(self, node: ET.Element, out: list[str]) -> bool:
         code = False
@@ -271,51 +251,42 @@ class _DocxFile:
 
     # -- runs (O13) ------------------------------------------------------------
 
-    def _run(self, node: ET.Element) -> None:
+    def _run(self, node: ET.Element) -> list[_Part]:
         bold = italic = strike = False
-        out = self.out
-        start = len(out)
-        handlers = self.handlers
         for child in node:
-            tag = child.tag
-            if _local(tag) == "rPr":
-                for prop in child:
-                    pname = _local(prop.tag)
-                    if pname == "b":
-                        bold = True
-                    elif pname == "i":
-                        italic = True
-                    elif pname == "strike":
-                        strike = True
-            (handlers.get(tag) or self._handler(tag))(self, child)
+            if _local(child.tag) != "rPr":
+                continue
+            for prop in child:
+                pname = _local(prop.tag)
+                if pname == "b":
+                    bold = True
+                elif pname == "i":
+                    italic = True
+                elif pname == "strike":
+                    strike = True
+        inner = self._walk_children(node)
         # escape set *~\ applies to text content only (docx.go:599)
-        _escape_tail(out, start, "*~\\")
+        inner = [_escape(p, "*~\\") if isinstance(p, str) else p for p in inner]
         open_marks = ("~~" if strike else "") + ("**" if bold else "") + ("*" if italic else "")
+        close_marks = ("*" if italic else "") + ("**" if bold else "") + ("~~" if strike else "")
         if open_marks:
-            out.insert(start, open_marks)
-            out.append(("*" if italic else "") + ("**" if bold else "") + ("~~" if strike else ""))
+            return [open_marks, *inner, close_marks]
+        return inner
 
     # -- hyperlink (O14) --------------------------------------------------------
 
-    def _hyperlink(self, node: ET.Element) -> None:
-        out = self.out
-        start = len(out)
-        self.walk_children(node)
-        _escape_tail(out, start, "[]")
+    def _hyperlink(self, node: ET.Element) -> list[_Part]:
+        inner = self._walk_children(node)
+        inner = [_escape(p, "[]") if isinstance(p, str) else p for p in inner]
         target = ""
         rid = _attr(node, "id")
         if rid and rid in self.rels:
             target = _escape(self.rels[rid], "()")
-        out.insert(start, "[")
-        out.append(f"]({target})")
+        return ["[", *inner, f"]({target})"]
 
     # -- table (O17) -------------------------------------------------------------
 
-    def _table(self, node: ET.Element) -> None:
-        if self.table_depth == _MAX_TABLE_DEPTH:
-            raise _TablesTooDeep(
-                f"tables nested deeper than {_MAX_TABLE_DEPTH}")
-        self.table_depth += 1
+    def _table(self, node: ET.Element) -> list[_Part]:
         rows: list[list[str]] = []
         for tr in node:
             if _local(tr.tag) != "tr":
@@ -325,51 +296,42 @@ class _DocxFile:
                 if _local(tc.tag) != "tc":
                     continue
                 try:
-                    text = self._detached_text(tc)
-                except _TablesTooDeep:
+                    text = _parts_text(self.walk(tc))
+                except _TablesTooLarge:
                     raise
                 except ConvertError:
                     text = ""  # continue on cell failure (docx.go:484-488)
                 cols.append(text.replace("\n", ""))
             if cols:
                 rows.append(cols)
-        self.table_depth -= 1
-        if rows:
-            self.out.append(docx_table(rows))
+        if not rows:
+            return []
+        # every row is as wide as the longest cells of its columns
+        longest = [0] * max(map(len, rows))
+        for cols in rows:
+            for j, text in enumerate(cols):
+                if len(text) > longest[j]:
+                    longest[j] = len(text)
+        self.table_chars += (len(rows) + 2) * (sum(longest) + len(longest) + 1)
+        if self.table_chars > _MAX_TABLE_CHARS:
+            raise _TablesTooLarge(
+                f"tables longer than {_MAX_TABLE_CHARS} characters")
+        return [docx_table(rows)]
 
     # -- image (O18) ---------------------------------------------------------------
 
-    def _blip(self, node: ET.Element) -> None:
+    def _blip(self, node: ET.Element) -> list[_Part]:
         rid = _attr(node, "embed")
         if not rid or rid not in self.rels:
-            return
+            return []
         target = self.rels[rid]
         member = f"word/{target}"
         try:
             blob = self.zf.read(member)
         except KeyError:
-            return
+            return []
         b64 = base64.b64encode(blob).decode("ascii")
-        self.images += 1
-        self.out.append(("img", f"![](data:image/png;base64,{b64})", member))
-
-
-_HANDLERS = {
-    "hyperlink": _DocxFile._hyperlink,
-    "t": _DocxFile._text,
-    "tbl": _DocxFile._table,
-    "r": _DocxFile._run,
-    "p": _DocxFile._paragraph,
-    "blip": _DocxFile._blip,
-    "Fallback": _DocxFile._fallback,
-    "txbxContent": _DocxFile._textbox,
-}
-
-def _escape_tail(out: list[_Part], start: int, charset: str) -> None:
-    """Backslash-escape ``charset`` in the text parts of ``out[start:]``."""
-    for i in range(start, len(out)):
-        if out[i].__class__ is str:
-            out[i] = _escape(out[i], charset)
+        return [("img", f"![](data:image/png;base64,{b64})", member)]
 
 
 def _parts_text(parts: list[_Part]) -> str:
@@ -398,20 +360,13 @@ def convert_docx(text: str) -> list[Segment]:
         member = _document_member(zf.namelist())
         if member is None:
             raise ConvertError("incorrect document")
-        doc.walk(_parse_xml(zf.read(member)))
+        root = _parse_xml(zf.read(member))
+        parts = doc.walk(root)
 
-    if not doc.images:
-        return merge_markdown([md("".join(doc.out))])
     segments: list[Segment] = []
-    text: list[str] = []
-    for p in doc.out:
-        if p.__class__ is str:
-            text.append(p)
-            continue
-        if text:
-            segments.append(md("".join(text)))
-            text = []
-        segments.append(image(p[1], p[2]))
-    if text:
-        segments.append(md("".join(text)))
+    for p in parts:
+        if isinstance(p, str):
+            segments.append(md(p))
+        else:
+            segments.append(image(p[1], p[2]))
     return merge_markdown(segments)

@@ -137,8 +137,10 @@ def convert_epub(text: str) -> list[Segment]:
                     # pruning would drop legitimate link-dense pages (TOC,
                     # index, title page), which the reference's
                     # html-to-markdown keeps (epub.go:134-162 applies the
-                    # plain HTML converter); script/style/nav still drop
-                    segs = convert_html(chapter, strip="blacklist")
+                    # plain HTML converter); script/style/nav still drop.
+                    # A chapter is XHTML: a self-closed element is empty
+                    segs = convert_html(chapter, strip="blacklist",
+                                        xhtml=True)
                 except Exception:  # noqa: BLE001 — skip broken chapters
                     continue
                 if "".join(s[1] for s in segs).strip():

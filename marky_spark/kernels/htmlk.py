@@ -111,12 +111,13 @@ def _close(stack: list[Element], i: int) -> None:
 
 
 class _DomBuilder(HTMLParser):
-    def __init__(self) -> None:
+    def __init__(self, xhtml: bool) -> None:
         super().__init__(convert_charrefs=True)
         self.root = Element("#root", {})
         self.stack = [self.root]
+        self.xhtml = xhtml
 
-    def handle_starttag(self, tag: str, attrs) -> None:
+    def handle_starttag(self, tag: str, attrs, empty: bool = False) -> None:
         stack = self.stack
         closes = _IMPLIED_CLOSE.get(tag)
         i = len(stack)
@@ -125,19 +126,15 @@ class _DomBuilder(HTMLParser):
         _close(stack, i)
         el = Element(tag, {k: (v or "") for k, v in attrs})
         stack[-1].children.append(el)
-        if tag not in _VOID_TAGS and len(stack) < _MAX_DEPTH:
+        if not empty and tag not in _VOID_TAGS and len(stack) < _MAX_DEPTH:
             stack.append(el)
         else:
             _fold(el, stack[-1].stats)
 
     def handle_startendtag(self, tag: str, attrs) -> None:
-        if tag not in _VOID_TAGS and tag not in _RAWTEXT_TAGS:
-            # HTML5 ignores the self-closing flag on a non-void element
-            self.handle_starttag(tag, attrs)
-            return
-        el = Element(tag, {k: (v or "") for k, v in attrs})
-        self.stack[-1].children.append(el)
-        _fold(el, self.stack[-1].stats)
+        # a self-closed script or style stays empty: html.parser reads no
+        # raw text after one
+        self.handle_starttag(tag, attrs, self.xhtml or tag in _RAWTEXT_TAGS)
 
     def handle_endtag(self, tag: str) -> None:
         # close the nearest matching open element; ignore stray end tags
@@ -153,11 +150,12 @@ class _DomBuilder(HTMLParser):
             top.stats[0] += _text_len(data)
 
 
-def parse_html_stdlib(text: str) -> Element:
+def parse_html_stdlib(text: str, xhtml: bool | None = None) -> Element:
     """Reference tokenizer: stdlib html.parser (kept as the differential
     baseline for the fast tokenizer below; tests assert identical output on
-    goldens, real pages, and a tricky-snippet corpus)."""
-    builder = _DomBuilder()
+    goldens, real pages, and a tricky-snippet corpus). ``xhtml`` as in
+    :func:`parse_html`."""
+    builder = _DomBuilder(_is_xhtml(text) if xhtml is None else xhtml)
     builder.feed(text)
     builder.close()
     _close(builder.stack, 1)
@@ -200,6 +198,15 @@ _RAWTEXT_CLOSE = {
 }
 
 
+_XHTML_NS = "http://www.w3.org/1999/xhtml"
+_XHTML_NS_RE = re.compile(r"""xmlns\s*=\s*["']?http://www\.w3\.org/1999/xhtml""")
+
+
+def _is_xhtml(text: str) -> bool:
+    """True when ``text`` declares the XHTML namespace."""
+    return _XHTML_NS in text and _XHTML_NS_RE.search(text) is not None
+
+
 def _decode(text: str) -> str:
     """Entity decode only when an ampersand is present (html.unescape is
     surprisingly expensive on entity-free text)."""
@@ -208,12 +215,19 @@ def _decode(text: str) -> str:
     return text
 
 
-def parse_html(text: str) -> Element:
+def parse_html(text: str, xhtml: bool | None = None) -> Element:
     """Fast tolerant tokenizer → same DOM as :func:`parse_html_stdlib`.
 
     html.parser's pure-Python goahead() was ~45% of the HTML kernel; this
     single-regex scanner produces the same Element tree for the tolerant
-    subset we emit from (verified differentially in tests/test_html.py)."""
+    subset we emit from (verified differentially in tests/test_html.py).
+
+    ``xhtml``: a self-closed element is empty, as XML reads ``<a/>``;
+    otherwise (text/html) HTML5 ignores the self-closing flag on a
+    non-void element, so ``<li/>b`` puts ``b`` in that item. None: XHTML
+    when the text declares the XHTML namespace."""
+    if xhtml is None:
+        xhtml = _is_xhtml(text)
     root = Element("#root", {})
     stack = [root]
     kids, stats = root.children, root.stats
@@ -257,11 +271,10 @@ def parse_html(text: str) -> Element:
                 kids, stats = stack[-1].children, stack[-1].stats
             el = Element(tag, attrs)
             kids.append(el)
-            # HTML5 ignores the self-closing flag on a non-void element;
             # a self-closed script or style stays empty, as in the stdlib
             # tokenizer, which reads no raw text after one
             if tag in _VOID_TAGS or len(stack) >= _MAX_DEPTH or (
-                    slash and tag in _RAWTEXT_TAGS):
+                    slash and (xhtml or tag in _RAWTEXT_TAGS)):
                 _fold(el, stats)
             elif tag in _RAWTEXT_TAGS:
                 cm = _RAWTEXT_CLOSE[tag].search(text, pos)
@@ -598,8 +611,8 @@ def _quote(text: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def convert_html(text: str,
-                 strip: bool | str = True) -> list[Segment]:
+def convert_html(text: str, strip: bool | str = True,
+                 xhtml: bool | None = None) -> list[Segment]:
     """Full HTML→Markdown conversion to ordered segments.
 
     ``strip``: True → blacklist + density/link-density pruning (web pages,
@@ -607,9 +620,10 @@ def convert_html(text: str,
     the hard-blacklist subtrees (script/style/nav/…) without density
     pruning — for trusted book-like content (EPUB chapters) where a
     link-dense page IS the content (TOC, index) and the reference's
-    html-to-markdown keeps it; False → raw tree (tests only).
+    html-to-markdown keeps it; False → raw tree (tests only). ``xhtml`` as
+    in :func:`parse_html`: True for input known to be XHTML (EPUB chapters).
     """
-    root = parse_html(text)
+    root = parse_html(text, xhtml)
     if strip == "blacklist":
         root = _drop_tags_only(root)
     elif strip:

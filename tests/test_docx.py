@@ -149,3 +149,33 @@ def test_zip_without_document_errors():
         zf.writestr("other.txt", "x")
     with pytest.raises(ConvertError, match="incorrect document"):
         convert_docx(fx.b64(buf.getvalue()))
+
+
+def _cell(text):
+    return f"<w:tc><w:p><w:r><w:t>{text}</w:t></w:r></w:p></w:tc>"
+
+
+def test_tables_nested_8_deep_convert():
+    """Each level of nesting triples the markdown; 8 levels of one word
+    stay well inside the tables' budget."""
+    body = "<w:tbl><w:tr><w:tc>" * 8 + fx.docx_paragraph("w") \
+        + "</w:tc></w:tr></w:tbl>" * 8
+    got = md_of(body)
+    assert "w" in got and len(got) > 3 ** 8
+
+
+@pytest.mark.parametrize("body", [
+    # 2,002 padded rows of a 20,000-character column: about 40 M characters
+    "<w:tbl><w:tr>" + _cell("y" * 20_000) + "</w:tr>"
+    + ("<w:tr>" + _cell("a") + "</w:tr>") * 2_000 + "</w:tbl>",
+    # one character tripled by each of 20 levels
+    "<w:tbl><w:tr><w:tc>" * 20 + fx.docx_paragraph("w")
+    + "</w:tc></w:tr></w:tbl>" * 20,
+], ids=["padded_rows", "nested_20_deep"])
+def test_tables_over_the_budget_are_an_error(body):
+    """A table's markdown can be far larger than its XML: past
+    ``_MAX_TABLE_CHARS`` the whole document is one typed error, not an
+    empty cell of the table around it."""
+    with pytest.raises(ConvertError, match="^tables longer than 33554432 "
+                                           "characters$"):
+        md_of(body)

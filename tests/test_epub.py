@@ -35,6 +35,15 @@ def test_no_metadata_only_chapters():
     assert segments_text(convert_epub(fx.b64(book))) == "body"
 
 
+def test_self_closed_element_in_a_chapter_is_empty():
+    """A chapter is XHTML: ``<a id="c1"/>`` is an empty anchor, not an
+    element that takes in the heading and paragraph after it."""
+    book = fx.epub_zip(chapters=[
+        ("c.xhtml", '<a id="c1"/><h1>T</h1><p>b <i/>c</p><ul><li>x<li/>y</ul>'),
+    ])
+    assert segments_text(convert_epub(fx.b64(book))) == "# T\n\nb c\n\n* x\n* "
+
+
 def test_all_metadata_fields():
     book = fx.epub_zip(
         chapters=[],

@@ -100,6 +100,26 @@ def test_self_closed_non_void_element_opens():
         == "a\nb\n\nc"
 
 
+def test_xhtml_self_closed_element_is_empty():
+    """A page that declares the XHTML namespace reads ``<a id=x/>`` as an
+    empty element, as XML does: the heading and paragraph after it keep
+    their blocks, in both tokenizers and under every strip mode."""
+    from marky_spark.kernels.htmlk import parse_html, parse_html_stdlib
+
+    page = ('<html xmlns="http://www.w3.org/1999/xhtml"><body>'
+            '<a id="x"/><h1>T</h1><p>b <b/>c</p><ul><li>a<li/>d</ul>'
+            '</body></html>')
+    for strip in (True, "blacklist", False):
+        assert html_to_markdown(page, strip=strip) == "# T\n\nb c\n\n* a\n* "
+    for parse in (parse_html, parse_html_stdlib):
+        body = parse(page).children[0].children[0]
+        assert [c.tag for c in body.children] == ["a", "h1", "p", "ul"]
+        assert body.children[0].children == []
+    # the same markup in text/html: the flag is ignored on a non-void element
+    assert parse_html(page, xhtml=False).children[0].children[0] \
+        .children[0].children[0].tag == "h1"
+
+
 def test_hr_and_br():
     assert html_to_markdown("<p>a<br>b</p><hr>") == "a\nb\n\n---"
 
@@ -199,6 +219,8 @@ TRICKY_SNIPPETS = [
     "<p>trailing <",
     "<>< p>< /p>",
     "<ul><li>a<li/>b</ul>",                           # self-closed non-void
+    '<html xmlns="http://www.w3.org/1999/xhtml">'    # … and in XHTML
+    "<ul><li>a<li/>b</ul><p>c<p/>d<a id=x/><h1>e</h1></html>",
 ]
 
 

@@ -117,11 +117,13 @@ def _docx_numbered_paragraphs(k):
 
 
 def _docx_nested_tables(k):
-    # each level triples the markdown; past kernels/docxk._MAX_TABLE_DEPTH
-    # the document is an error row instead of a blow-up
-    return fx.b64(fx.docx_zip("".join(
-        f"<w:tbl><w:tr><w:tc><w:p><w:r><w:t>{_word(i)}</w:t></w:r></w:p>"
-        for i in range(k)) + "</w:tc></w:tr></w:tbl>" * k))
+    # tables nested 5 deep around a cell of k words: each level triples
+    # the markdown, so the output is 243 times the cell, well inside
+    # kernels/docxk._MAX_TABLE_CHARS at 16n
+    return fx.b64(fx.docx_zip(
+        "<w:tbl><w:tr><w:tc>" * 5 + "<w:p><w:r><w:t>"
+        + " ".join(_word(i) for i in range(k))
+        + "</w:t></w:r></w:p>" + "</w:tc></w:tr></w:tbl>" * 5))
 
 
 # (kind, shape, n): n repetitions of the unit take a few ms or more
