@@ -676,7 +676,7 @@ def _q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit + tiles + Deflate / PPM rotating by doc_id%5, %7, %11,
     ops/pngcodec + tiffcodec + pnmcodec) UNIONs the former gif_decode
     branch (real LZW, ops/gifcodec) and the former png_resize branch
-    (decode → nearest-neighbor resample → re-encode → decode again,
+    (decode → nearest-neighbor resample → PNG → decode again,
     media_ref prefixed 'r'). All three oracles reconstruct the decoded
     samples from doc_id arithmetic WITHOUT an imaging library, so every
     container walk, inflate/unfilter/deinterlace, LZW decode, palette

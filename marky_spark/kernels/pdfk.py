@@ -63,6 +63,11 @@ def _name(raw: bytes) -> str:
     return "/" + raw.decode("latin-1")
 
 
+# a literal string's one-character escapes (ISO 32000-1 Table 3)
+_ESCAPES = {ord("n"): 10, ord("r"): 13, ord("t"): 9, ord("b"): 8,
+            ord("f"): 12, ord("("): 40, ord(")"): 41, ord("\\"): 92}
+
+
 class _Lexer:
     """Minimal PDF object lexer/parser over a bytes buffer."""
 
@@ -163,11 +168,8 @@ class _Lexer:
                 if self.pos >= len(d):
                     break
                 e = d[self.pos]
-                mapping = {ord("n"): 10, ord("r"): 13, ord("t"): 9,
-                           ord("b"): 8, ord("f"): 12, ord("("): 40,
-                           ord(")"): 41, ord("\\"): 92}
-                if e in mapping:
-                    out.append(mapping[e])
+                if e in _ESCAPES:
+                    out.append(_ESCAPES[e])
                     self.pos += 1
                 elif 0x30 <= e <= 0x37:  # octal
                     oct_digits = bytearray()
@@ -728,9 +730,27 @@ def _glyph_to_unicode(name: str) -> str:
     return "�"
 
 
-_CMAP_SECTION_RE = re.compile(
-    rb"begin(bfchar|bfrange|codespacerange)(.*?)end\1", re.DOTALL)
+_CMAP_BEGIN_RE = re.compile(rb"begin(bfchar|bfrange|codespacerange)")
 _CMAP_HEX_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>|\[|\]")
+
+
+def _cmap_sections(data: bytes):
+    """Yield (kind, body) per ``begin<kind> … end<kind>`` section, in
+    order; a ``begin`` with no ``end`` of its kind after it is skipped.
+    Each ``end`` is one ``find``, and a kind whose ``end`` is missing
+    is never searched for again (no later ``begin`` of it can close), so
+    unclosed sections cost linear time."""
+    unclosed = set()
+    pos = 0
+    while m := _CMAP_BEGIN_RE.search(data, pos):
+        kind = m.group(1)
+        end = -1 if kind in unclosed else data.find(b"end" + kind, m.end())
+        if end < 0:
+            unclosed.add(kind)
+            pos = m.start() + 1
+            continue
+        yield kind, data[m.end():end]
+        pos = end + 3 + len(kind)
 
 
 def _parse_tounicode(data: bytes) -> tuple[dict[int, str], int]:
@@ -753,8 +773,7 @@ def _parse_tounicode(data: bytes) -> tuple[dict[int, str], int]:
                     m.group(1).translate(None, b" \t\r\n").decode("ascii")))
         return toks
 
-    for sec in _CMAP_SECTION_RE.finditer(data):
-        kind, body = sec.group(1), sec.group(2)
+    for kind, body in _cmap_sections(data):
         toks = hexes(body)
         if kind == b"codespacerange":
             if toks and isinstance(toks[0], bytes) and toks[0]:

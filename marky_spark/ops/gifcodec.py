@@ -72,7 +72,7 @@ def _iter_frames(data: bytes):
     """Walk the block stream yielding one tuple per image frame:
     ``(left, top, w, h, idx ndarray rows top-down, table bytes,
     disposal, transparent_index_or_None)`` — the shared scanner behind
-    :func:`gif_decode_indexed` (first frame) and
+    :func:`gif_decode` (first frame) and
     :func:`gif_decode_frames` (animation compositing)."""
     import numpy as np
 
@@ -162,16 +162,6 @@ def _iter_frames(data: bytes):
         transparent = None
 
 
-def gif_decode_indexed(data: bytes) -> tuple[int, int, bytes, bytes]:
-    """GIF bytes → (width, height, palette indices rows top-down,
-    RGB color table) of the first frame — the palette-domain form
-    :func:`gif_resize_indexed` resamples in (index resampling cannot
-    invent colors, so the original palette stays valid)."""
-    for _left, _top, w, h, idx, table, _disp, _tr in _iter_frames(data):
-        return w, h, idx.tobytes(), table
-    raise GifError("no image descriptor in GIF")
-
-
 def gif_decode_frames(data: bytes,
                       max_frames: int = 64) -> tuple[int, int, list[bytes]]:
     """Animated GIF → (screen_w, screen_h, list of composited RGB frames,
@@ -238,29 +228,10 @@ def gif_decode(data: bytes) -> tuple[int, int, int, bytes]:
     color)."""
     import numpy as np
 
-    w, h, indices, table = gif_decode_indexed(data)
-    idx = np.frombuffer(indices, dtype=np.uint8)
-    pal = np.frombuffer(table, dtype=np.uint8).reshape(len(table) // 3, 3)
-    return w, h, 3, pal[idx].tobytes()
-
-
-def gif_resize_indexed(data: bytes, out_w: int,
-                       out_h: int) -> tuple[int, int, bytes]:
-    """Nearest-neighbor resample in the palette-index domain → (source
-    width, source height, GIF bytes with the ORIGINAL color table — no
-    color quantization needed). The source dims come free from the single
-    decode, which is why the GIF row of the multimodal codec table uses
-    this form as its resize encoder."""
-    import numpy as np
-
-    w, h, indices, table = gif_decode_indexed(data)
-    if not (0 < out_w <= 65535 and 0 < out_h <= 65535) \
-            or out_w * out_h > MAX_PIXELS:
-        raise GifError(f"bad target dimensions {out_w}x{out_h}")
-    idx = np.frombuffer(indices, dtype=np.uint8).reshape(h, w)
-    ys = np.arange(out_h) * h // out_h
-    xs = np.arange(out_w) * w // out_w
-    return w, h, gif_encode(idx[ys][:, xs].tobytes(), out_w, out_h, table)
+    for _left, _top, w, h, idx, table, _disp, _tr in _iter_frames(data):
+        pal = np.frombuffer(table, dtype=np.uint8).reshape(-1, 3)
+        return w, h, 3, pal[idx].tobytes()
+    raise GifError("no image descriptor in GIF")
 
 
 def gif_encode_animated(screen_w: int, screen_h: int, palette: bytes,

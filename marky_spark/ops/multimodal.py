@@ -13,8 +13,12 @@ and sample operators route through one ordered codec table
   ops/icocodec — all pure stdlib+numpy), and the audio/video side is
   real too (ops/wavcodec: PCM + G.711 + IMA ADPCM; ops/flaccodec;
   ops/avicodec: MJPEG). Each row holds one format's signature/structure
-  sniff and decoder, plus an optional resize encoder and frame walker;
-  the sniffs check distinct magics, so at most one row claims a payload.
+  sniff and decoder, plus an optional frame walker; the sniffs check
+  distinct magics, so at most one row claims a payload.
+- Every image an operator encodes is a PNG (``png_encode``): resized
+  images, sampled animation canvases and pdf_media's decoded images,
+  whatever the source format. A stored JPEG (an AVI frame, a PDF's
+  DCTDecode image) passes through as it is.
 - Every value an operator emits comes from a real decode. Each blob's
   ``ok`` column holds one status from one rule (:func:`map_blobs`):
   ``ok``; ``unsupported`` when no codec (or no hook of the claiming
@@ -29,7 +33,7 @@ Operators:
 - ``decode_media``      — binary → (width, height, channels, n_bytes)
 - ``decode_pixels``     — decodable image → dims + md5 of decoded samples
 - ``pixel_features``    — exact-integer pixel statistics (oracle-checkable)
-- ``resize_media``      — binary → target-dim payload + source dims
+- ``resize_media``      — decodable image → target-dim PNG + source dims
 - ``frame_sample``      — moving images → N evenly spaced frame rows
 - ``media_features``    — fixed-width float feature vector per blob
 """
@@ -130,8 +134,7 @@ DECODED_SCHEMA = StructType([
 class Codec(NamedTuple):
     """One row of the codec table. ``pixels`` → (width, height, channels,
     samples) or None (a moving image gives its first frame);
-    ``samples`` → (rate, channels, bits, int array); ``resize`` →
-    (source width, source height, resized payload); ``frames`` → [(frame
+    ``samples`` → (rate, channels, bits, int array); ``frames`` → [(frame
     index, frame payload)] for up to n evenly spaced frames, empty for a
     still. An operator whose hook is None gives an ``unsupported`` row
     for the row's format."""
@@ -139,7 +142,6 @@ class Codec(NamedTuple):
     sniff: Callable[[bytes], bool]
     pixels: Callable | None = None
     samples: Callable | None = None
-    resize: Callable | None = None
     frames: Callable | None = None
 
 
@@ -154,16 +156,6 @@ def _nearest(pixels: bytes, in_w: int, in_h: int, channels: int,
     ys = np.arange(out_h) * in_h // out_h
     xs = np.arange(out_w) * in_w // out_w
     return arr[ys][:, xs].tobytes()
-
-
-def _resampler(decode, encode):
-    """Resize encoder: one decode feeds both the source dims and the
-    nearest-neighbor resample, re-encoded in the SOURCE format."""
-    def resize(blob: bytes, width: int, height: int):
-        in_w, in_h, ch, px = decode(blob)
-        return in_w, in_h, encode(_nearest(px, in_w, in_h, ch, width, height),
-                                  width, height, ch)
-    return resize
 
 
 def _picks(total: int, n: int) -> list[int]:
@@ -211,32 +203,21 @@ def codec_table() -> tuple[Codec, ...]:
     pins this) and the order only decides which sniffs run first. Codec
     modules import on first use, not with this module."""
     from .avicodec import looks_like_avi
-    from .bmpcodec import bmp_decode, bmp_encode, looks_like_bmp
+    from .bmpcodec import bmp_decode, looks_like_bmp
     from .flaccodec import flac_decode, looks_like_flac
-    from .gifcodec import (
-        gif_decode,
-        gif_decode_frames,
-        gif_resize_indexed,
-        looks_like_gif,
-    )
+    from .gifcodec import gif_decode, gif_decode_frames, looks_like_gif
     from .icocodec import ico_decode, looks_like_ico
-    from .jpegcodec import jpeg_decode, jpeg_encode, looks_like_jpeg
+    from .jpegcodec import jpeg_decode, looks_like_jpeg
     from .pngcodec import (
         PNG_SIGNATURE,
         looks_like_apng,
         png_decode,
         png_decode_frames,
-        png_encode,
     )
-    from .pnmcodec import looks_like_pnm, pnm_decode, pnm_encode
-    from .tiffcodec import looks_like_tiff, tiff_decode, tiff_encode
+    from .pnmcodec import looks_like_pnm, pnm_decode
+    from .tiffcodec import looks_like_tiff, tiff_decode
     from .wavcodec import looks_like_wav, wav_decode
-    from .webpcodec import (
-        looks_like_webp,
-        webp_decode,
-        webp_decode_frames,
-        webp_encode,
-    )
+    from .webpcodec import looks_like_webp, webp_decode, webp_decode_frames
 
     def apng(blob: bytes):
         return png_decode_frames(blob) if looks_like_apng(blob) else (0, 0, [])
@@ -248,21 +229,14 @@ def codec_table() -> tuple[Codec, ...]:
 
     return (
         Codec("png", lambda b: b.startswith(PNG_SIGNATURE), png_decode,
-              resize=_resampler(png_decode, png_encode),
               frames=_canvas_frames(apng)),
-        Codec("tiff", looks_like_tiff, tiff_decode,
-              resize=_resampler(tiff_decode, tiff_encode)),
-        # P4 bitmaps resize on the expanded gray grid and re-emit as PGM
-        Codec("pnm", looks_like_pnm, pnm_decode,
-              resize=_resampler(pnm_decode, pnm_encode)),
-        Codec("bmp", looks_like_bmp, bmp_decode,
-              resize=_resampler(bmp_decode, bmp_encode)),
-        Codec("gif", looks_like_gif, gif_decode, resize=gif_resize_indexed,
+        Codec("tiff", looks_like_tiff, tiff_decode),
+        Codec("pnm", looks_like_pnm, pnm_decode),
+        Codec("bmp", looks_like_bmp, bmp_decode),
+        Codec("gif", looks_like_gif, gif_decode,
               frames=_canvas_frames(gif_decode_frames)),
-        Codec("jpeg", looks_like_jpeg, jpeg_decode,
-              resize=_resampler(jpeg_decode, jpeg_encode)),
+        Codec("jpeg", looks_like_jpeg, jpeg_decode),
         Codec("webp", looks_like_webp, webp_decode,
-              resize=_resampler(webp_decode, webp_encode),
               frames=_canvas_frames(awebp)),
         Codec("avi", looks_like_avi, _avi_first_frame, frames=_avi_frames),
         Codec("ico", looks_like_ico, ico_decode),
@@ -341,15 +315,25 @@ RESIZED_SCHEMA = StructType([
 
 def resize_media(media: DataFrame, width: int = 32,
                  height: int = 32) -> DataFrame:
-    """Arrow-batched resize: binary payload in, (target-dim payload +
-    source dims) out, through the claiming row's resize encoder (one
-    decode per blob, re-encoded in the source format)."""
+    """Arrow-batched resize: image payload in, (target dims, source dims,
+    PNG of the nearest-neighbour resample) out, whatever the source
+    format: one decode per blob through the claiming row's pixel decoder
+    (an MJPEG AVI resizes its first frame), and a GIF's palette comes
+    back as RGB. The target size is checked once, before any blob:
+    ValueError unless ``0 < width``, ``0 < height`` and
+    ``width * height <= pngcodec.MAX_PIXELS``."""
+    from .pngcodec import MAX_PIXELS, png_encode
+
+    if not (0 < width and 0 < height and width * height <= MAX_PIXELS):
+        raise ValueError(f"bad target dimensions {width}x{height}")
 
     def resize(blob: bytes):
-        codec = codec_for(blob)
-        if codec is None or codec.resize is None:
+        decoded = decode_image(blob)
+        if decoded is None:
             return None
-        return (width, height, *codec.resize(blob, width, height))
+        in_w, in_h, ch, px = decoded
+        return (width, height, in_w, in_h, png_encode(
+            _nearest(px, in_w, in_h, ch, width, height), width, height, ch))
 
     return map_blobs(media, RESIZED_SCHEMA, resize)
 

@@ -2,7 +2,7 @@
 
 Real-LZW round-trips (dictionary growth, code widening, clear-on-overflow),
 interlaced row order, local color tables, the strict payload sniff, hostile
-inputs, palette-domain resize, and the Spark-side routing through
+inputs, and the Spark-side routing through
 decode_media / decode_pixels / resize_media / media_features /
 pixel_features.
 """
@@ -17,9 +17,7 @@ import pytest
 from marky_spark.ops.gifcodec import (
     GifError,
     gif_decode,
-    gif_decode_indexed,
     gif_encode,
-    gif_resize_indexed,
     looks_like_gif,
 )
 
@@ -126,33 +124,14 @@ def test_lzw_bomb_is_bounded():
     assert (w, h, len(px)) == (2, 2, 2 * 2 * 3)
 
 
-def test_resize_preserves_palette():
-    w, h, nc = 8, 6, 7
-    rng = random.Random(3)
-    palette = bytes(rng.randrange(256) for _ in range(nc * 3))
-    idx = bytes(rng.randrange(nc) for _ in range(w * h))
-    src_w, src_h, small = gif_resize_indexed(
-        gif_encode(idx, w, h, palette), 4, 3)
-    assert (src_w, src_h) == (w, h)
-    sw, sh, sidx, spal = gif_decode_indexed(small)
-    assert (sw, sh) == (4, 3)
-    # stored tables are zero-padded to a power-of-two entry count
-    assert spal[:len(palette)] == palette
-    assert not any(spal[len(palette):])
-    grid = np.frombuffer(idx, np.uint8).reshape(h, w)
-    ys = np.arange(3) * h // 3
-    xs = np.arange(4) * w // 4
-    assert sidx == grid[ys][:, xs].tobytes()
-
-
 def test_spark_routing_decode_resize_features(spark):
     """One GIF through the whole multimodal surface: decode_media (real
     dims), decode_pixels (format-agnostic digest vs the same pixels as
-    PNG), resize_media (stays a GIF), media_features (pixel statistics
+    PNG), resize_media (a PNG of the nearest-neighbour RGB samples),
+    media_features (pixel statistics
     of the decoded content), pixel_features (exact integers)."""
     from pyspark.sql import Row
 
-    from marky_spark.ops.gifcodec import gif_decode as gd
     from marky_spark.ops.multimodal import (
         MEDIA_SCHEMA,
         decode_media,
@@ -161,7 +140,7 @@ def test_spark_routing_decode_resize_features(spark):
         pixel_features,
         resize_media,
     )
-    from marky_spark.ops.pngcodec import png_encode
+    from marky_spark.ops.pngcodec import png_decode, png_encode
 
     w, h, nc = 6, 4, 8
     rng = random.Random(5)
@@ -185,7 +164,9 @@ def test_spark_routing_decode_resize_features(spark):
     res = {r["media_ref"]: r for r in
            resize_media(media, width=3, height=2).collect()}
     assert (res["g1"]["in_width"], res["g1"]["in_height"]) == (w, h)
-    assert gd(bytes(res["g1"]["payload"]))[:3] == (3, 2, 3)
+    grid = np.frombuffer(px, np.uint8).reshape(h, w, 3)
+    near = grid[np.arange(2) * h // 2][:, np.arange(3) * w // 3].tobytes()
+    assert png_decode(bytes(res["g1"]["payload"])) == (3, 2, 3, near)
 
     feats = {r["media_ref"]: r["features"] for r in
              media_features(media).collect()}
@@ -267,11 +248,8 @@ def test_real_world_gifs_decode_pinned():
         assert hashlib.md5(px).hexdigest() == md5, name
 
 
-def test_encode_and_resize_u16_dimension_guard():
+def test_encode_u16_dimension_guard():
     palette = bytes(range(12))
-    good = gif_encode(bytes([0, 1, 2, 3]), 2, 2, palette)
-    with pytest.raises(GifError, match="dimensions"):
-        gif_resize_indexed(good, 70000, 1)
     with pytest.raises(GifError, match="u16"):
         gif_encode(bytes(70000), 70000, 1, palette)
 

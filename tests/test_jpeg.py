@@ -222,7 +222,8 @@ def test_real_world_jpeg_self_consistency():
 
 def test_spark_routing_jpeg(spark):
     """JPEG through the multimodal surface: real dims from decode_media,
-    decoded-pixel digest from decode_pixels, resize stays a JPEG, and
+    decoded-pixel digest from decode_pixels, resize gives a PNG of the
+    nearest-neighbour decoded samples (no second lossy encode), and
     media_features derives from pixels (matches the PNG vector for the
     same content up to JPEG loss)."""
     from pyspark.sql import Row
@@ -234,6 +235,7 @@ def test_spark_routing_jpeg(spark):
         pixel_features,
         resize_media,
     )
+    from marky_spark.ops.pngcodec import png_decode
 
     w, h = 24, 16
     img = _gradient(w, h)
@@ -253,7 +255,9 @@ def test_spark_routing_jpeg(spark):
 
     res = resize_media(media, width=6, height=4).collect()[0]
     assert (res["in_width"], res["in_height"]) == (w, h)
-    assert jpeg_decode(bytes(res["payload"]))[:3] == (6, 4, 3)
+    grid = np.frombuffer(exp_px, np.uint8).reshape(h, w, 3)
+    near = grid[np.arange(4) * h // 4][:, np.arange(6) * w // 6].tobytes()
+    assert png_decode(bytes(res["payload"])) == (6, 4, 3, near)
 
     pf = pixel_features(media).collect()[0]
     arr = np.frombuffer(exp_px, np.uint8)

@@ -95,6 +95,46 @@ def _pdf_pages_one_font(k):
     return _pdf(_pdf_text(b"(one line of page text) Tj"), n_pages=k)
 
 
+def _pdf_unclosed_cmap(k):
+    # a font whose ToUnicode stream holds k sections with no end
+    cmap = b"beginbfchar <41> <42> " * k
+    content = _pdf_text(b"(AAAA) Tj")
+    return fx.b64(fx.pdf_assemble({
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [4 0 R] /Count 1 >>",
+        3: (f"<< /Length {len(content)} >>".encode() + b"\nstream\n"
+            + content + b"\nendstream"),
+        4: (b"<< /Type /Page /Parent 2 0 R /Contents 3 0 R /Resources "
+            b"<< /Font << /F1 5 0 R >> >> >>"),
+        5: b"<< /Type /Font /Subtype /Type1 /ToUnicode 6 0 R >>",
+        6: (f"<< /Length {len(cmap)} >>".encode() + b"\nstream\n"
+            + cmap + b"\nendstream"),
+    }))
+
+
+def _csv_wide_row(k):
+    return (",".join(f"h{i}" for i in range(k)) + "\n"
+            + ",".join(f"v{i}" for i in range(k)) + "\n")
+
+
+def _csv_quote_runs(k):
+    # one quoted field of k escaped quotes, then rows of quoted fields
+    return ('a,b\n"' + '""' * k + '",x\n'
+            + "".join(f'"q""{i}""","r ""{i}"""\n' for i in range(k)))
+
+
+def _rtf_nested_groups(k):
+    return "{\\rtf1 " + "{\\b " * k + "deep text" + "}" * k + "\\par}"
+
+
+def _feed_entity_runs(k):
+    # an item description of entity-escaped HTML, a title of bare entities
+    return ('<?xml version="1.0"?><rss version="2.0"><channel><title>'
+            + "&amp;&lt;&gt;" * k + "</title><item><title>i</title>"
+            "<description>" + "&lt;p&gt;a &amp;amp; b&lt;/p&gt;" * k
+            + "</description></item></channel></rss>")
+
+
 # docx payloads are deflated: each unit carries its own scrambled word,
 # so the compression ratio, and with it the time per payload byte, does
 # not drift with k
@@ -141,9 +181,14 @@ SHAPES = [
     ("pdf", _pdf_nested_arrays, 2000),
     ("pdf", _pdf_pages_one_font, 100),
     ("pdf", _pdf_digit_run, 2000),
+    ("pdf", _pdf_unclosed_cmap, 1000),
     ("docx", _docx_runs_in_one_paragraph, 500),
     ("docx", _docx_numbered_paragraphs, 200),
     ("docx", _docx_nested_tables, 40),
+    ("csv", _csv_wide_row, 2000),
+    ("csv", _csv_quote_runs, 500),
+    ("rtf", _rtf_nested_groups, 1000),
+    ("feed", _feed_entity_runs, 500),
 ]
 
 

@@ -151,3 +151,48 @@ def test_no_ops_module_but_the_runner_maps_blobs():
                     _maps_blobs(n) for n in ast.walk(fn)):
                 found.add((path.name, fn.name))
     assert found == _EXEMPT
+
+
+# the image codec modules: every encoder they define but png_encode builds
+# test and bench corpora, since every image the engine derives is a PNG
+_IMAGE_CODECS = {f"{c}codec" for c in (
+    "avi", "bmp", "fax", "gif", "ico", "jpeg", "png", "pnm", "tiff", "webp")}
+
+
+def _image_encoders() -> set[str]:
+    names = set()
+    for codec in _IMAGE_CODECS:
+        tree = ast.parse((_PACKAGE / "ops" / f"{codec}.py").read_text(
+            encoding="utf-8"))
+        names |= {fn.name for fn in tree.body
+                  if isinstance(fn, ast.FunctionDef) and "encode" in fn.name
+                  and not fn.name.startswith("_")}
+    return names - {"png_encode"}
+
+
+def _names(node: ast.AST):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name
+
+
+def test_no_engine_function_names_an_image_encoder_but_png():
+    """Outside a ``synth_*`` builder, only an encoder in its codec module
+    may name an image encoder other than ``png_encode``."""
+    encoders = _image_encoders()
+    assert {"gif_encode", "jpeg_encode", "tiff_encode"} <= encoders
+    found = set()
+    for path in sorted([*(_PACKAGE / "ops").glob("*.py"),
+                        *(_PACKAGE / "kernels").glob("*.py")]):
+        codec = path.stem in _IMAGE_CODECS
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            name = getattr(node, "name", "<module>")
+            if name.startswith("synth_") or (codec and "encode" in name):
+                continue
+            found |= {(path.name, name, n) for n in _names(node)
+                      if n in encoders}
+    assert found == set()

@@ -242,12 +242,14 @@ _ROW_FOR_MIME = {
 
 def test_codec_table_routing(spark):
     """Every synthetic corpus payload is claimed by exactly one codec table
-    row (the sniffs are disjoint, so their order never decides), and for
-    each row with a resize encoder decode_media, decode_pixels and
-    resize_media agree on the source dims."""
+    row (the sniffs are disjoint, so their order never decides), and every
+    row with a pixel decoder resizes: decode_media, decode_pixels and
+    resize_media agree on the source dims, and the resized payload is a
+    PNG of the nearest-neighbour resample of decode_image's samples."""
     from marky_spark.ops import multimodal as mm
     from marky_spark.ops.audio import synth_wav_media
     from marky_spark.ops.icocodec import ico_encode
+    from marky_spark.ops.pngcodec import png_decode
 
     ids = spark.range(0, 20).withColumnRenamed("id", "doc_id")
     gens = [mm.synth_png_media, mm.synth_gif_media, mm.synth_agif_media,
@@ -271,18 +273,42 @@ def test_codec_table_routing(spark):
     dec = {r["media_ref"]: r for r in mm.decode_media(media).collect()}
     pix = {r["media_ref"]: r for r in mm.decode_pixels(media).collect()}
     rsz = {r["media_ref"]: r for r in mm.resize_media(media, 5, 3).collect()}
-    resizable = [ref for ref, c in claimed.items() if c.resize]
+    resizable = [ref for ref, c in claimed.items() if c.pixels]
     assert {claimed[ref].name for ref in resizable} == {
-        "png", "tiff", "pnm", "bmp", "gif", "jpeg", "webp"}
-    n_ok = 0
+        "png", "tiff", "pnm", "bmp", "gif", "jpeg", "webp", "avi", "ico"}
+    ok_rows = set()
+    blobs = {ref: blob for ref, _, blob in rows}
     for ref in resizable:
         d, p, r = dec[ref], pix[ref], rsz[ref]
         assert d["ok"] == p["ok"] == r["ok"], (ref, d["ok"], p["ok"])
         if d["ok"] == "ok":
-            n_ok += 1
+            ok_rows.add(claimed[ref].name)
             assert (d["width"], d["height"]) == (p["width"], p["height"]) \
                 == (r["in_width"], r["in_height"]), ref
-    assert n_ok > len(resizable) // 2
+            w, h, ch, samples = mm.decode_image(blobs[ref])
+            assert (r["width"], r["height"]) == (5, 3)
+            assert png_decode(bytes(r["payload"])) == (
+                5, 3, ch, mm._nearest(samples, w, h, ch, 5, 3)), ref
+    assert ok_rows == {claimed[ref].name for ref in resizable}
+    for ref, c in claimed.items():
+        if not c.pixels:
+            assert rsz[ref]["ok"] == "unsupported", ref
+
+
+def test_resize_media_checks_the_target_size(spark):
+    """The target size is checked when the operator is called, before any
+    blob: each side positive, the area within the PNG pixel cap."""
+    from marky_spark.ops.multimodal import MEDIA_SCHEMA, resize_media
+    from marky_spark.ops.pngcodec import MAX_PIXELS, png_encode
+
+    media = spark.createDataFrame(
+        [("m", "image/png", bytearray(png_encode(bytes(12), 2, 2, 3)))],
+        schema=MEDIA_SCHEMA)
+    for w, h in ((0, 4), (4, 0), (-1, 4), (4, -3), (MAX_PIXELS, 2)):
+        with pytest.raises(ValueError, match="target dimensions"):
+            resize_media(media, w, h)
+    row = resize_media(media, 70000, 1).collect()[0]
+    assert (row["ok"], row["width"], row["height"]) == ("ok", 70000, 1)
 
 
 def test_media_operator_imports_leave_codecs_unloaded():

@@ -1,6 +1,8 @@
 """PDF kernel contracts (pdf.go semantics; self-generated classic-xref
 fixtures per FIXTURES.md §3 / SURVEY.md §2.3)."""
 
+import re
+
 import pytest
 
 from marky_spark import fixtures as fx
@@ -224,6 +226,53 @@ def test_hostile_cmaps_stay_bounded():
     garbage = b"\x00\xffnot a cmap at all <zz> beginbfchar <1"
     blob = _one_page_pdf(content, font, extra={6: _stream_obj(garbage)})
     extract_pdf_text(blob)  # no crash is the assertion
+
+
+# the section regex _parse_tounicode used before its linear scan: lazy, it
+# scans to the end of the stream from every unclosed begin
+_SECTION_RE = re.compile(
+    rb"begin(bfchar|bfrange|codespacerange)(.*?)end\1", re.DOTALL)
+_CHAR = b" <41> <0042> "
+_RANGE = b" <50> <52> <0061> "
+_SPACE = b" <00> <ff> "
+
+_CMAP_SECTIONS = {
+    "closed": _CMAP,
+    "unclosed_char": b"beginbfchar" + _CHAR * 3,
+    "unclosed_then_closed": (b"beginbfchar" + _CHAR + b"beginbfrange"
+                             + _RANGE + b"endbfrange"),
+    "closed_then_unclosed": (b"beginbfchar" + _CHAR + b"endbfchar "
+                             b"beginbfrange" + _RANGE),
+    "unclosed_runs": (b"beginbfchar <41> <42> " * 20
+                      + b"begincodespacerange" + _SPACE
+                      + b"endcodespacerange"),
+    "nested_same_kind": (b"beginbfchar <41> <42> beginbfchar <43> <44> "
+                         b"endbfchar <45> <46> endbfchar"),
+    "interleaved": (b"beginbfchar" + _CHAR + b"beginbfrange" + _RANGE
+                    + b"endbfchar" + _RANGE + b"endbfrange"),
+    "end_before_begin": (b"endbfchar beginbfchar" + _CHAR + b"endbfchar"
+                         + b"endbfrange"),
+    "mixed_unclosed": (b"beginbfrange" + _RANGE + b"begincodespacerange"
+                       + _SPACE + b"beginbfchar" + _CHAR + b"endbfchar"
+                       + b"begincodespacerange" + _SPACE),
+    "glued": b"beginbfcharendbfcharbeginbfchar<41><42>endbfchar",
+    "begin_in_a_word": b"xbeginbfchar" + _CHAR + b"endbfcharx",
+    "empty": b"",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CMAP_SECTIONS))
+def test_cmap_sections_match_the_regex(name, monkeypatch):
+    """The linear section scan gives the same (cmap, nbytes) as the
+    lazy regex it replaced, over closed, unclosed, mixed and interleaved
+    sections."""
+    from marky_spark.kernels import pdfk
+
+    data = _CMAP_SECTIONS[name]
+    got = pdfk._parse_tounicode(data)
+    monkeypatch.setattr(pdfk, "_cmap_sections", lambda d: (
+        m.groups() for m in _SECTION_RE.finditer(d)))
+    assert got == pdfk._parse_tounicode(data)
 
 
 # ---------------------------------------------------------------------------

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 
 from marky_spark.ops.pnmcodec import (
@@ -150,7 +151,7 @@ def test_spark_routing_pnm(spark):
         decode_pixels,
         resize_media,
     )
-    from marky_spark.ops.pnmcodec import looks_like_pnm as sniff
+    from marky_spark.ops.pngcodec import png_decode
 
     px = bytes((i * 11) % 256 for i in range(12 * 6 * 3))
     blob = pnm_encode(px, 12, 6, 3)
@@ -168,8 +169,9 @@ def test_spark_routing_pnm(spark):
     assert pix["pixel_md5"] == hashlib.md5(px).hexdigest()
     rez = resize_media(media.where("media_ref = 'p'"),
                        width=4, height=3).collect()[0]
-    out = bytes(rez["payload"])
-    assert sniff(out) and pnm_decode(out)[:3] == (4, 3, 3)
+    grid = np.frombuffer(px, np.uint8).reshape(6, 12, 3)
+    near = grid[np.arange(3) * 6 // 3][:, np.arange(4) * 12 // 4].tobytes()
+    assert png_decode(bytes(rez["payload"])) == (4, 3, 3, near)
 
 
 def test_synth_corpus_mixes_ppm(spark):

@@ -219,6 +219,7 @@ def test_spark_routing_tiff(spark):
         media_features,
         resize_media,
     )
+    from marky_spark.ops.pngcodec import png_decode
 
     px = bytes((i * 7) % 256 for i in range(20 * 10 * 3))
     blob = tiff_encode(px, 20, 10, 3, compression="lzw", predictor=2)
@@ -238,9 +239,9 @@ def test_spark_routing_tiff(spark):
     assert pix["t"]["pixel_md5"] == hashlib.md5(px).hexdigest()
     rez = {r["media_ref"]: r for r in resize_media(
         media.where("media_ref = 't'"), width=5, height=5).collect()}
-    out = bytes(rez["t"]["payload"])
-    assert looks_like_tiff(out)                  # TIFF stays TIFF
-    assert tiff_decode(out)[:3] == (5, 5, 3)
+    grid = np.frombuffer(px, np.uint8).reshape(10, 20, 3)
+    near = grid[np.arange(5) * 10 // 5][:, np.arange(5) * 20 // 5].tobytes()
+    assert png_decode(bytes(rez["t"]["payload"])) == (5, 5, 3, near)
     feats = {r["media_ref"]: list(r["features"]) for r in media_features(
         media.where("media_ref = 't'")).collect()}
     arr = np.frombuffer(px, dtype=np.uint8)
